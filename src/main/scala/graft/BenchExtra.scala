@@ -18,6 +18,23 @@ import org.apache.spark.sql.functions._
   */
 object BenchExtra {
 
+  /** Print each Spark job's wall time and description as it ends. A job
+    * whose start was never recorded (it started before the listener was
+    * registered) is skipped rather than failing the listener thread.
+    */
+  private def traceJobs(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.put(js.jobId, (System.nanoTime(),
+          Option(js.properties.getProperty("spark.job.description")).getOrElse("")))
+      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        Option(starts.remove(je.jobId)).foreach { case (t0, d) =>
+          println(f"[extra] job ${je.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%7.3f s  ${d.take(60)}")
+        }
+    })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -67,23 +84,6 @@ object BenchExtra {
           val st = Bench.pipelinePass(spark, "/dev/shm/graft-fixtures/images_bench", n)
           println(f"[extra] pipeline[$i] ${st.nImages} images in ${st.sec}%.2f s = ${st.imagesPerSec}%.0f img/s = ${st.mbPerSec}%.2f MB/s (load1@start=$l%.1f)")
         }
-      case "jsonlab" =>
-        // pinParsed A/B over the bench-shaped workflow, load-gated
-        val n = rest.headOption.map(_.toInt).getOrElse(50000)
-        val inDir = s"/dev/shm/graft-fixtures/jsonl-in-$n"
-        val bytes = graft.sources.JsonlGen.writeTree(spark, inDir, n)
-        (1 to runs).foreach { i =>
-          for (pin <- Seq(true, false)) {
-            val l = Bench.awaitQuiet(threshold = 4.0, maxWaitSec = 240)
-            val t0 = System.nanoTime()
-            val res = JsonlDedupJob.run(spark, inDir,
-              s"/dev/shm/graft-fixtures/jsonl-ab-out-$n", minLen = 500,
-              mode = "annotate", compression = "gzip", pinParsed = pin)
-            val files = res.written.count()
-            val sec = (System.nanoTime() - t0) / 1e9
-            println(f"[extra] jsonlab[$i] pin=$pin ${bytes / 1e6}%.1f MB, $files files in $sec%.2f s = ${bytes / 1e6 / sec}%.2f MB/s (load1@start=$l%.1f)")
-          }
-        }
       case "substrab" =>
         // verifyPrune A/B on the pipeline's caption corpus, load-gated
         val n = rest.headOption.map(_.toInt).getOrElse(150000)
@@ -104,16 +104,7 @@ object BenchExtra {
       case "queryjobs" =>
         // job-level trace of one named query's execution (guide §1: find
         // which scheduled job inside a multi-job operator eats the time)
-        val starts2 = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            starts2.put(js.jobId, (System.nanoTime(),
-              Option(js.properties.getProperty("spark.job.description")).getOrElse("")))
-          override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val (t0, d) = starts2.get(je.jobId)
-            println(f"[extra] job ${je.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%7.3f s  ${d.take(60)}")
-          }
-        })
+        traceJobs(spark)
         spark.read.parquet(s"$sfDir/lineitem.parquet").count()
         SparkEntry.queries("q1_agg")(spark, sfDir).count()
         matching(rest).foreach { case (name, fn) =>
@@ -126,16 +117,7 @@ object BenchExtra {
         }
       case "pipejobs" =>
         // job-level trace of DedupPipeline.run's eager part (the id map)
-        val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            starts.put(js.jobId, (System.nanoTime(),
-              Option(js.properties.getProperty("spark.job.description")).getOrElse("")))
-          override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val (t0, d) = starts.get(je.jobId)
-            println(f"[extra] job ${je.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%7.3f s  $d")
-          }
-        })
+        traceJobs(spark)
         val n = rest.headOption.map(_.toInt).getOrElse(150000)
         val images = graft.sources.ImagesGen.writeFixture(
           spark, s"/dev/shm/graft-fixtures/images_bench-$n-p40", n, period = 40)

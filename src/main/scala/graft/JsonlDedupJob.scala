@@ -364,8 +364,7 @@ object JsonlDedupJob {
           minLen: Int, mode: String = "annotate",
           compression: String = "gzip",
           stageDir: Option[String] = None,
-          unit: String = "bytes", reversed: Boolean = false,
-          pinParsed: Boolean = false): Result = {
+          unit: String = "bytes", reversed: Boolean = false): Result = {
     require(mode == "annotate" || mode == "remove", s"unknown mode $mode")
     require(unit == "bytes" || unit == "tokens" || unit == "ids",
       s"unknown unit $unit")
@@ -373,24 +372,9 @@ object JsonlDedupJob {
     // strip the input's compression extension: the sink appends the one
     // matching the CHOSEN output compression, so the tree mirrors exactly
     // when in/out codecs agree and stays honest when they differ
-    val keyed0 = readTree(spark, inDir,
+    val keyed = readTree(spark, inDir,
       requiredField = if (unit == "ids") "tokens" else "text")
       .withColumn("path", regexp_replace(col("path"), "\\.(gz|zst)$", ""))
-    // `pinParsed` would materialize the parsed corpus once for the
-    // workflow's three consumers (window generation, candidate
-    // verification, annotate/writeback join) instead of three
-    // decompress+parse scans -- the reference's doc/offset-sidecar
-    // pattern. MEASURED NEGATIVE at the bench shape (round 6, 330 MB
-    // gzip tree, local[32], load-gated alternating A/B, min-of-3):
-    // pin=false 23.9 s vs pin=true 25.1 s best, and pinned runs degrade
-    // sharply across repeats in one JVM (90-101 s) as each ~400 MB
-    // pinned corpus accumulates in the block manager -- the semi-join
-    // prune (verifyPrune=true below) already removes most of the second
-    // scan's downstream cost, and gzip inflate + from_json are cheaper
-    // than a full corpus round-trip through block storage. Default off;
-    // the knob remains for parse-dominated trees (heavy zstd, very wide
-    // JSON) where one materialization can beat three parses.
-    val keyed = if (pinParsed) keyed0.localCheckpoint(true) else keyed0
 
     // stage name carries the unit/orientation: the (k,s,e) schema is
     // identical across bytes/tokens/reversed runs, so a resume pointed at
@@ -421,14 +405,18 @@ object JsonlDedupJob {
                   encode(col("text"), "UTF-8"), col("sa_remove_ranges")))
               .drop("sa_remove_ranges")
         }
-      case "tokens" =>
-        val ranges0 = staged(SubstringDedup.removeRangesTokens(keyed, minLen,
-          reversed = reversed, verifyPrune = true))
+      case _ =>
+        // token units: whitespace tokens of `text`, or pre-tokenized
+        // `tokens: array<int>` ids (the reference's production shape);
+        // minLen counts units and ranges are unit offsets
+        val u = if (unit == "tokens") SubstringDedup.Tokens(reversed)
+          else SubstringDedup.Ids(reversed)
+        val ranges0 = staged(SubstringDedup.removeRanges(keyed, u,
+          SubstringDedup.Config(minLen, verifyPrune = true)))
         // reversed-stream offsets -> original orientation: [s,e) over the
         // mirrored stream covers original tokens [n-e, n-s)
         val ranges = if (!reversed) ranges0 else {
-          val nTok = keyed.select(col("k"),
-            size(filter(split(col("text"), " "), x => x =!= "")).cast("long").as("_n"))
+          val nTok = keyed.select(col("k"), size(u.seq).cast("long").as("_n"))
           ranges0.join(nTok, "k")
             .select(col("k"), (col("_n") - col("e")).as("_s2"), (col("_n") - col("s")).as("_e2"))
             .select(col("k"), col("_s2").as("s"), col("_e2").as("e"))
@@ -443,39 +431,12 @@ object JsonlDedupJob {
         mode match {
           case "annotate" => annotated
           case "remove" =>
-            val toks = filter(split(col("text"), " "), x => x =!= "")
-            annotated
-              .withColumn("text", concat_ws(" ",
-                filter(toks, (_, i) => !exists(col("sa_remove_ranges_tokens"),
-                  r => i >= r("s") && i < r("e")))))
-              .drop("sa_remove_ranges_tokens")
-        }
-      case "ids" =>
-        // pre-tokenized corpora (the reference's production shape): the
-        // record carries `tokens: array<int>`; minLen counts ids, ranges
-        // are id offsets, remove mode drops the duplicated id spans
-        val ranges0 = staged(SubstringDedup.removeRangesIds(keyed, minLen,
-          reversed = reversed, verifyPrune = true))
-        val ranges = if (!reversed) ranges0 else {
-          val nTok = keyed.select(col("k"), size(col("tokens")).cast("long").as("_n"))
-          ranges0.join(nTok, "k")
-            .select(col("k"), (col("_n") - col("e")).as("_s2"), (col("_n") - col("s")).as("_e2"))
-            .select(col("k"), col("_s2").as("s"), col("_e2").as("e"))
-        }
-        val agg = ranges.groupBy("k")
-          .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("raw"))
-        val annotated = keyed
-          .join(agg, Seq("k"), "left")
-          .withColumn("sa_remove_ranges_tokens",
-            coalesce(col("raw"), array().cast("array<struct<s:bigint,e:bigint>>")))
-          .drop("raw")
-        mode match {
-          case "annotate" => annotated
-          case "remove" =>
-            annotated
-              .withColumn("tokens",
-                filter(col("tokens"), (_, i) => !exists(col("sa_remove_ranges_tokens"),
-                  r => i >= r("s") && i < r("e"))))
+            // drop the duplicated spans; surviving whitespace tokens are
+            // re-joined with single spaces
+            val kept = filter(u.seq, (_, i) => !exists(col("sa_remove_ranges_tokens"),
+              r => i >= r("s") && i < r("e")))
+            (if (unit == "tokens") annotated.withColumn("text", concat_ws(" ", kept))
+             else annotated.withColumn("tokens", kept))
               .drop("sa_remove_ranges_tokens")
         }
     }

@@ -226,14 +226,15 @@ object SparkEntry {
 
     // A1 + A4 + E1: production remove-ranges plan (sort-scan keeper
     // detection + byte verification of every candidate). Differential vs
-    // a2's bare hash-trusted sort-scan; the hash-aggregate plan is the
-    // third differential sibling, exercised in SubstringDedupSpec.
+    // a2's bare hash-trusted sort-scan.
     "a1_remove_ranges" -> ((s, dir) =>
       SubstringDedup.removeRanges(docsWithDups(s, dir), SubstringDedup.Config(MinLen))),
 
-    // A2 + F1: sort-scan substring dedup (differential plan, same oracle).
+    // A2 + F1: sort-scan substring dedup trusting the 122-bit window hash
+    // (no byte verification; differential plan, same oracle).
     "a2_remove_ranges_sortscan" -> ((s, dir) =>
-      SubstringDedup.removeRangesSortScan(docsWithDups(s, dir), MinLen)),
+      SubstringDedup.removeRanges(docsWithDups(s, dir),
+        SubstringDedup.Config(MinLen, verifyBytes = false))),
 
     // A8 full-fidelity sibling: remove-ranges answered from the ONE-TIME
     // prefix-doubling suffix index (build once, query any minLen <=

@@ -100,14 +100,20 @@ object NativeKernels {
   * `SpecificInternalRow` (primitive setters, zero per-row allocation) and
   * keeps the scan -> generate -> exchange pipeline in one visible plan.
   *
-  * Input modes, keyed by child type (mirroring the three window paths):
-  *  - binary: byte windows (SubstringDedup.windows)
+  * Input modes, keyed by child type (the three SubstringDedup window
+  * units, all generated at its one `unitWindows` call site):
+  *  - binary: byte windows (unit Bytes)
   *  - array<string>: whitespace tokens, each token 61-bit-hashed to a
-  *    digit (SubstringDedup.tokenWindows; `reversed` mirrors the stream)
-  *  - array<long>: pre-tokenized ids as digits
-  *    (SubstringDedup.idWindows; `reversed` mirrors the stream)
-  * Null input (null text / null token array) generates nothing, matching
-  * the typed paths' null handling.
+  *    digit (unit Tokens; `reversed` mirrors the stream)
+  *  - array<long>: pre-tokenized ids as digits (unit Ids; `reversed`
+  *    mirrors the stream)
+  * Null input (null text / null token array) generates nothing. A null
+  * ELEMENT of an array input is malformed data and fails the task with an
+  * IllegalArgumentException naming the element index: it has no digit
+  * (a null id is not id 0), and dropping it would shift every later
+  * window offset. Arrays typed containsNull=true are still accepted at
+  * analysis time -- `cast("array<long>")` of a JSON-inferred id array
+  * yields that type even when no element is null.
   */
 case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
                           withBytes: Boolean = false)
@@ -149,6 +155,16 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
     case ArrayType(LongType, _) => 2
   }
 
+  /** Array index of the i-th stream element (mirrored when `reversed`),
+    * rejecting a null element.
+    */
+  private def element(a: ArrayData, n: Int, i: Int): Int = {
+    val j = if (reversed) n - 1 - i else i
+    if (a.isNullAt(j)) throw new IllegalArgumentException(
+      s"$prettyName: null array element at index $j")
+    j
+  }
+
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Iterator.empty
@@ -161,7 +177,7 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
         val digits = new Array[Long](n)
         var i = 0
         while (i < n) {
-          val b = a.getUTF8String(if (reversed) n - 1 - i else i).getBytes
+          val b = a.getUTF8String(element(a, n, i)).getBytes
           digits(i) = PolyHash.hash(b, 0, b.length, PolyHash.B1)
           i += 1
         }
@@ -172,7 +188,7 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
         val digits = new Array[Long](n)
         var i = 0
         while (i < n) {
-          digits(i) = a.getLong(if (reversed) n - 1 - i else i)
+          digits(i) = a.getLong(element(a, n, i))
           i += 1
         }
         PolyHash.windowHashesLongs2(digits, winLen)

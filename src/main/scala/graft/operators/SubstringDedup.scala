@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import graft.functions.{PolyHash, Utf8}
+import graft.functions.{GraftFunctions, Utf8}
 
 /** Exact-substring duplicate removal, Spark-first.
   *
@@ -21,18 +20,23 @@ import graft.functions.{PolyHash, Utf8}
   * for shared minLen prefixes. A maximal same-prefix SA run IS the equality
   * class of positions with identical minLen-byte windows, so we skip the SA
   * entirely: key every position by a 122-bit rolling hash of its window
-  * (O(1)/byte, PolyHash). Two physical plans compute the same groups:
-  *  - DEFAULT (removeRanges): hash-partition on the window hash, sort
-  *    within partitions, adjacent-run scan -- one window-generation pass,
-  *    one exchange; the literal distributed transcription of the
-  *    reference loop (h:417-472).
-  *  - DIFFERENTIAL (removeRangesHashAgg): salted two-phase min aggregation
-  *    (skew-safe: a viral boilerplate window never lands in a single
-  *    reducer) + join-back over a persisted window frame.
-  * Candidates are optionally re-verified against the actual window bytes
-  * (`verifyBytes`) so a hash collision can never remove a non-duplicate
-  * byte -- this re-extraction touches only positions inside duplicate
-  * groups, not the whole corpus.
+  * (O(1)/byte, PolyHash), hash-partition on that key, sort within
+  * partitions and scan adjacent rows -- one window-generation pass, one
+  * exchange; the literal distributed transcription of the reference loop
+  * (h:417-472). Like the reference, which templates its one engine over
+  * the unit type (u8 bytes / u16, u32 token ids, h:70-77), there is ONE
+  * spine -- window generation, run scan, verifier, coalescer -- and the
+  * unit (`WindowUnit`: bytes, whitespace tokens or pre-tokenized ids,
+  * forward or reversed) only chooses the per-doc sequence and the exact
+  * window key. Candidates are optionally re-verified against that exact
+  * key (`verifyBytes`) so a hash collision can never remove a
+  * non-duplicate window -- the re-extraction touches only positions
+  * inside duplicate groups, not the whole corpus.
+  *
+  * Measured and deleted (BASELINE.md): a salted hash-aggregate plan (~3x
+  * slower than the sort-scan at sf0.1, round 2) and an h1-count
+  * prefilter plan with a density-adaptive chooser (slower at every
+  * measured density, round 4).
   *
   * Scale notes (100 TB): window rows are 4 longs (~28 B/position) --
   * comparable to the reference's 8N suffix-array footprint -- and flow
@@ -61,147 +65,102 @@ object SubstringDedup {
   case class Config(
       minLen: Int,
       verifyBytes: Boolean = true,
-      saltBuckets: Int = 64,
       verifyPrune: Boolean = false)
+
+  /** The unit windows are counted in. It decides exactly two things: the
+    * per-doc sequence the window generator rolls over (`seq`, in original
+    * orientation), and the exact equality key of the window at a position
+    * (`key`, what verification compares). `reversed` (token/id units):
+    * the reference's --reversed indexes the mirrored stream
+    * (suffix-vs-prefix duplication); windows are generated over the
+    * reversed sequence and `pos` reports the REVERSED-stream offset, so
+    * first-occurrence keep order matches the reference's reversed scan.
+    */
+  private[graft] sealed abstract class WindowUnit {
+    def reversed: Boolean
+    /** The doc as a sequence: binary (bytes) or an array (tokens, ids). */
+    def seq: Column
+    /** Exact key of the `len`-unit window at 0-based `pos` (a column
+      * name) of the oriented sequence column named `s`.
+      */
+    def key(s: String, pos: String, len: Int): Column
+  }
+
+  /** UTF-8 bytes of `text` (the reference default). The key is the raw
+    * slice up to 32 bytes (no wider than a sha2-256 digest, so digesting
+    * is pure CPU overhead) and its digest above, which keeps the shuffled
+    * row at a flat 32 B regardless of minLen.
+    */
+  private[graft] case object Bytes extends WindowUnit {
+    val reversed = false
+    def seq: Column = encode(col("text"), "UTF-8")
+    def key(s: String, pos: String, len: Int): Column = {
+      val w = expr(s"substring($s, $pos + 1, $len)")
+      if (len <= 32) w else sha2(w, 256)
+    }
+  }
+
+  /** Whitespace tokens of `text` (reference C2; split ' ' + drop empties).
+    * Each token's digit is the polyhash of its UTF-8 bytes: a pure
+    * function of the token, so no vocabulary table is built, broadcast or
+    * synchronized. Key: sha2 of the NUL-joined tokens.
+    */
+  private[graft] case class Tokens(reversed: Boolean) extends WindowUnit {
+    def seq: Column = filter(split(col("text"), " "), t => t =!= "")
+    def key(s: String, pos: String, len: Int): Column =
+      sha2(encode(concat_ws("\u0000", slice(col(s), col(pos) + 1, lit(len))), "UTF-8"), 256)
+  }
+
+  /** A PRE-TOKENIZED `tokens: array<int|long>` field -- the reference's
+    * production mode (indexing_v6_sharded.py:205-218 tokenizes up front,
+    * the engine consumes u16/u32 id streams): the vocabulary lives with
+    * the caller and the ids are the window digits directly. Key: sha2 of
+    * the comma-joined decimal ids (',' never occurs inside a decimal int,
+    * so the join is injective).
+    */
+  private[graft] case class Ids(reversed: Boolean) extends WindowUnit {
+    def seq: Column = col("tokens").cast("array<long>")
+    def key(s: String, pos: String, len: Int): Column =
+      sha2(encode(concat_ws(",",
+        transform(slice(col(s), col(pos) + 1, lit(len)), _.cast("string"))), "UTF-8"), 256)
+  }
 
   /** One row per in-doc window position: (h1, h2, k, pos).
     * pos is a 0-based byte offset; docs shorter than minLen emit nothing
     * (reference bounds predicate h:232-233).
     */
   def windows(docs: DataFrame, minLen: Int): DataFrame =
-    // native Generator (functions/Native.scala GraftWindowGen): zero
-    // per-position allocation and no typed serialization boundary --
-    // null text (e.g. an image row with no caption) = no windows, same
-    // as a doc shorter than minLen (Generate outer=false drops the row)
+    unitWindows(docs, Bytes, minLen)
+
+  /** The one window-generation call site: (h1, h2, k, pos[, w]) per in-doc
+    * window of `unit`. Native Generator (functions/Native.scala
+    * GraftWindowGen): zero per-position allocation and no typed
+    * serialization boundary -- null text (e.g. an image row with no
+    * caption) = no windows, same as a doc shorter than minLen (Generate
+    * outer=false drops the row). `withBytes` (byte unit only) also emits
+    * each window's raw bytes as `w`.
+    */
+  private def unitWindows(docs: DataFrame, unit: WindowUnit, minLen: Int,
+                          withBytes: Boolean = false): DataFrame = {
+    val gen = Seq("h1", "h2", "pos") ++ (if (withBytes) Seq("w") else Nil)
     docs
-      .select(col("k").cast("long").as("k"), encode(col("text"), "UTF-8").as("b"))
+      .select(col("k").cast("long").as("k"), unit.seq.as("b"))
       .select(col("k"),
-        graft.functions.GraftFunctions.windowGen(col("b"), minLen)
-          .as(Seq("h1", "h2", "pos")))
-      .select("h1", "h2", "k", "pos")
-
-  /** Byte-verify candidate pairs: re-extract the actual window bytes for
-    * both sides of each (k,pos) -> (keep_k,keep_pos) candidate and demand
-    * equality of their sha2-256 digests -- the same exactness standard
-    * ExactDedup applies to whole documents, and linear in the number of
-    * *duplicate* positions only.
-    *
-    * Shuffle shape: a single linear two-join chain; each extracted window
-    * is reduced to its 32-byte digest IN the join projection, so nothing
-    * downstream ever carries raw windows. (Carrying raw minLen-byte
-    * windows between the joins shuffled ~1 KB per candidate at the
-    * reference's production minLen=500 and measured 61 s of a 110 s job;
-    * a distinct-position pre-extraction table was tried and was WORSE at
-    * small minLen -- it adds a union+distinct and two extra joins over
-    * millions of rows.)
-    *
-    * With `prune` (Config.verifyPrune), the corpus side is PRUNED before
-    * either join: duplicate positions cluster in few docs, so a
-    * broadcast semi-join of `docs` against the candidates' doc keys
-    * (k union keep_k, deduplicated) drops the non-duplicate majority of
-    * the corpus before any bytes are shuffled or digested -- the
-    * verification joins touch O(dup docs), not O(corpus) -- and the
-    * pruned frame is pinned once so the corpus is scanned ONCE here
-    * instead of twice. The caller must then pin `candidates` (it feeds
-    * the key set and the join probe). At 1e9+ dup-doc scale the
-    * broadcast key set would be replaced by a Bloom filter (guide §3.2
-    * shape); doc-key cardinality at the measured densities stays far
-    * under the broadcast cap.
-    */
-  private def verifyCandidates(docs: DataFrame, candidates: DataFrame,
-                               minLen: Int, prune: Boolean): DataFrame = {
-    val bytesDf0 = docs.select(
-      col("k").cast("long").as("vk"),
-      encode(col("text"), "UTF-8").as("vb"))
-    val bytesDf = if (!prune) bytesDf0 else {
-      val keys = candidates.select(col("k").as("ck"))
-        .unionAll(candidates.select(col("keep_k").as("ck")))
-        .distinct()
-      bytesDf0
-        .join(broadcast(keys), col("vk") === col("ck"), "leftsemi")
-        .localCheckpoint(true)
-    }
-    // the same exactness either way: for minLen <= 32 the raw window
-    // slice is no wider than its sha2-256 digest, so the digest step is
-    // pure CPU overhead -- compare the bytes themselves; above 32 the
-    // digest keeps the shuffled row at a flat 32 B regardless of minLen
-    def wd(posEx: String): Column =
-      if (minLen <= 32) expr(s"substring(vb, $posEx + 1, $minLen)")
-      else sha2(expr(s"substring(vb, $posEx + 1, $minLen)"), 256)
-    candidates
-      .join(bytesDf, col("k") === col("vk"))
-      .withColumn("wd_self", wd("pos"))
-      .drop("vk", "vb")
-      .join(bytesDf, col("keep_k") === col("vk"))
-      .withColumn("wd_keep", wd("keep_pos"))
-      .where(col("wd_self") === col("wd_keep"))
-      .select("k", "pos")
+        GraftFunctions.windowGen(col("b"), minLen, unit.reversed, withBytes).as(gen))
+      .select((Seq("h1", "h2", "k") ++ gen.drop(2)).map(col): _*)
   }
 
-  /** Removable positions, hash-aggregate plan: every (k,pos) whose window
-    * equals the window of a strictly smaller (k,pos). Output: (k, pos).
-    *
-    * Single-scan shape: the 4-long window frame (~32 B/position) is
-    * generated ONCE and persisted (memory, spilling to disk) -- the same
-    * footprint the sort-scan plan pays in shuffle files, and the same
-    * order as the reference's 8N suffix-array sidecar. The cached frame
-    * feeds (a) an h1-only duplicated-hash prefilter (primitive-key hash
-    * agg, vectorized: ~98% of windows are unique and drop out here before
-    * the expensive struct-min ever sees them), (b) the salted min/keeper
-    * aggregation over the surviving rows (partial min per (h1,h2,salt)
-    * defeats viral-window skew), and (c) the join-back that flags
-    * non-keepers. h1-level false positives (distinct windows sharing h1)
-    * are harmless: their (h1,h2) groups have a single member and drop out
-    * at the c>1 filter. AQE broadcasts the small dup/keeper sides.
+  /** Co-locate equal (h1, h2) windows and sort them by (h1, h2, k, pos):
+    * the input contract of every run scan. HASH repartition, not range:
+    * equal keys co-locate either way (all we need -- the reference's
+    * run-aligned boundary rule, h:324-338), but RangePartitioner runs a
+    * separate sampling job over the input, i.e. a second full
+    * window-generation pass. Hash keys are uniform by construction, so
+    * hash partitioning is also perfectly balanced.
     */
-  def removablePositions(docs: DataFrame, cfg: Config): DataFrame = {
-    val win = windows(docs, cfg.minLen).persist(StorageLevel.MEMORY_AND_DISK)
-    val dupHashes = win
-      .groupBy("h1").agg(count(lit(1)).as("c")).where(col("c") > 1)
-      .select("h1")
-    val winDup = win.join(dupHashes, Seq("h1"))
-    val salted = winDup.withColumn(
-      "salt", pmod(hash(col("k"), col("pos")), lit(cfg.saltBuckets)))
-    val partial = salted
-      .groupBy("h1", "h2", "salt")
-      .agg(min(struct(col("k"), col("pos"))).as("m"), count(lit(1)).as("c"))
-    val keepers = partial
-      .groupBy("h1", "h2")
-      .agg(min(col("m")).as("keeper"), sum(col("c")).as("c"))
-      .where(col("c") > 1)
-      .select("h1", "h2", "keeper")
-
-    val candidates = winDup
-      .join(keepers, Seq("h1", "h2"))
-      .where(struct(col("k"), col("pos")) =!= col("keeper"))
-      .select(col("k"), col("pos"),
-        col("keeper.k").as("keep_k"), col("keeper.pos").as("keep_pos"))
-
-    // pin the (small: duplicate positions only) candidate set eagerly so
-    // the multi-GB window frame can be unpersisted HERE instead of
-    // accumulating in the block manager across invocations (the
-    // round-2-advice leak); both consumers of the frame are upstream of
-    // this point.
-    val pinned = candidates.localCheckpoint(true)
-    win.unpersist(false)
-
-    if (!cfg.verifyBytes) pinned.select("k", "pos")
-    else verifyCandidates(docs, pinned, cfg.minLen, cfg.verifyPrune)
-  }
-
-  /** A2 transcription: sort-based removable positions. Range-partition by
-    * window hash (equal keys land in one partition -- the reference's
-    * run-aligned rank-space split, h:324-338, for free from
-    * RangePartitioner), sort within partitions, then an adjacent-run scan
-    * identical to the reference loop (h:417-472): the first row of each
-    * equal-hash run is kept, the rest are removable.
-    *
-    * Differential sibling of `removablePositions` -- same output, shuffle
-    * plan trades the hash aggregate for a range exchange + sort. Preferable
-    * when the agg hash table would spill (very high duplicate density).
-    */
-  def removablePositionsSortScan(docs: DataFrame, minLen: Int): DataFrame =
-    sortScanCandidates(docs, minLen).select("k", "pos")
+  private def sortedByKey(win: DataFrame): DataFrame =
+    win.repartition(col("h1"), col("h2"))
+      .sortWithinPartitions("h1", "h2", "k", "pos")
 
   /** Sort-scan run detection that also carries each run's keeper: within a
     * partition rows arrive sorted by (h1,h2,k,pos), so the first row of a
@@ -209,34 +168,16 @@ object SubstringDedup {
     * min_element-of-run keep rule (h:239-246). Output
     * (k, pos, keep_k, keep_pos) for every non-first run member.
     */
-  private def sortScanCandidates(docs: DataFrame, minLen: Int): DataFrame =
-    runScan(windows(docs, minLen))
-
-  /** Adjacent-run scan over any (h1, h2, k, pos) window frame.
-    * HASH repartition, not range: equal (h1,h2) keys co-locate either way
-    * (all we need -- the reference's run-aligned boundary rule, h:324-338),
-    * but RangePartitioner runs a separate sampling job over the input,
-    * i.e. a second full window-generation pass. Hash keys are uniform by
-    * construction, so hash partitioning is also perfectly balanced.
-    */
-  private def runScan(win: DataFrame): DataFrame =
+  private def runScan(win: DataFrame): DataFrame = {
     // MEASURED (round 6, sf0.1, min-of-2): a WindowExec variant
     // (first_value over partitionBy(h1,h2), which reuses this exact sort
     // and avoids the typed boundary) was SLOWER -- a1 1.68 -> 2.63 s,
     // five-query family total 5.35 -> 6.95 s -- because per-group window
     // machinery over ~1e8 mostly-singleton groups costs more than the
     // tuple deserialization it removes. The typed adjacent scan stays.
-    adjacentRunScan(
-      win.repartition(col("h1"), col("h2"))
-        .sortWithinPartitions("h1", "h2", "k", "pos"))
-
-  /** The run scan itself: input must be partitioned so equal (h1,h2) rows
-    * co-locate and be sorted by (h1,h2,k,pos) within partitions.
-    */
-  private def adjacentRunScan(sorted: DataFrame): DataFrame = {
-    val spark = sorted.sparkSession
+    val spark = win.sparkSession
     import spark.implicits._
-    sorted
+    sortedByKey(win)
       .select("h1", "h2", "k", "pos")
       .as[(Long, Long, Long, Long)]
       .mapPartitions { it =>
@@ -251,95 +192,114 @@ object SubstringDedup {
       .toDF("k", "pos", "keep_k", "keep_pos")
   }
 
-  /** Hybrid (prefilter-then-sort) candidates: an h1-only count pass finds
-    * the duplicated window hashes first, then the full window frame is
-    * exchanged ONCE on h1, semi-joined against that dup set co-partitioned
-    * (shuffle-hash, never sort-merge -- SMJ would sort the full frame,
-    * which is exactly what this plan avoids), and only the SURVIVORS are
-    * sorted for the run scan. Equal (h1,h2) windows co-locate under
-    * h1-partitioning, so the scan contract holds.
-    *
-    * MEASURED NEGATIVE RESULT (round 4, 330 MB / 305M positions, ~3% dup
-    * density, minLen=500, local[32], load<3): hybrid 39.8 s vs sort-scan
-    * 18.6 s unverified (48.2 vs 27.0 verified). The h1-count aggregation
-    * is NOT cheap relative to the sort it avoids: hashing 300M mostly-
-    * unique keys into agg tables + the 16 B/row count shuffle + the
-    * second window sweep costs more than sorting everything once. The
-    * sort-scan therefore stays the default at every measured density;
-    * this plan is kept as a documented differential sibling (it would win
-    * only where sort spills dominate and the agg table fits, e.g. much
-    * wider rows per position).
-    *
-    * `dupH1`: optionally a precomputed duplicated-h1 table (col "h1"),
-    * partitioned however; passed by the adaptive chooser so the count
-    * pass is not run twice.
+  /** The corpus as (vk, vb): doc key and the ORIENTED unit sequence --
+    * what verification slices exact window keys out of.
     */
-  private def hybridCandidates(docs: DataFrame, minLen: Int,
-                               dupH1: Option[DataFrame]): DataFrame = {
-    val dup = dupH1.getOrElse(
-      windows(docs, minLen)
-        .groupBy("h1").agg(count(lit(1)).as("c"))
-        .where(col("c") > 1).select("h1"))
-    val survivors = windows(docs, minLen)
-      .repartition(col("h1"))
-      .join(dup.hint("shuffle_hash"), Seq("h1"), "leftsemi")
-      .sortWithinPartitions("h1", "h2", "k", "pos")
-    adjacentRunScan(survivors)
+  private def corpus(docs: DataFrame, unit: WindowUnit): DataFrame =
+    docs.select(col("k").cast("long").as("vk"),
+      (if (unit.reversed) reverse(unit.seq) else unit.seq).as("vb"))
+
+  /** Doc-key prune: a broadcast semi-join of a `corpus` frame against the
+    * doc keys `keys` (column "ck", deduplicated here). Duplicate positions
+    * cluster in few docs, so this drops the non-duplicate majority of the
+    * corpus before any bytes are shuffled or digested. `pin` pins the
+    * pruned frame when the caller reads it twice, so the corpus is
+    * scanned ONCE. At 1e9+ dup-doc scale the broadcast key set would be
+    * replaced by a Bloom filter (guide §3.2 shape); doc-key cardinality at
+    * the measured densities stays far under the broadcast cap.
+    */
+  private def pruneToKeys(corpusDf: DataFrame, keys: DataFrame, pin: Boolean): DataFrame = {
+    val pruned = corpusDf.join(broadcast(keys.distinct()), col("vk") === col("ck"), "leftsemi")
+    if (pin) pruned.localCheckpoint(true) else pruned
   }
 
-  /** Hybrid plan end to end (same contract as removeRanges). */
-  def removeRangesHybrid(docs: DataFrame, cfg: Config): DataFrame = {
-    val cand = hybridCandidates(docs, cfg.minLen, None)
+  /** Verify candidate pairs: re-extract the exact key of the window at
+    * both sides of each (k,pos) -> (keep_k,keep_pos) candidate and demand
+    * equality -- the same exactness standard ExactDedup applies to whole
+    * documents, and linear in the number of *duplicate* positions only.
+    *
+    * Shuffle shape: a single linear two-join chain; each extracted window
+    * is reduced to its key IN the join projection, so nothing downstream
+    * ever carries raw windows. (Carrying raw minLen-byte windows between
+    * the joins shuffled ~1 KB per candidate at the reference's production
+    * minLen=500 and measured 61 s of a 110 s job; a distinct-position
+    * pre-extraction table was tried and was WORSE at small minLen -- it
+    * adds a union+distinct and two extra joins over millions of rows.)
+    *
+    * With `prune` (Config.verifyPrune) the corpus side is pruned to the
+    * candidates' doc keys (k union keep_k) and pinned; the caller must
+    * then pin `candidates` (it feeds the key set and the join probe).
+    */
+  private def verifyCandidates(docs: DataFrame, unit: WindowUnit,
+                               candidates: DataFrame, minLen: Int,
+                               prune: Boolean): DataFrame = {
+    val vb0 = corpus(docs, unit)
+    val vb = if (!prune) vb0 else pruneToKeys(vb0,
+      candidates.select(col("k").as("ck"))
+        .unionAll(candidates.select(col("keep_k").as("ck"))), pin = true)
+    candidates
+      .join(vb, col("k") === col("vk"))
+      .withColumn("wd_self", unit.key("vb", "pos", minLen))
+      .drop("vk", "vb")
+      .join(vb, col("keep_k") === col("vk"))
+      .withColumn("wd_keep", unit.key("vb", "keep_pos", minLen))
+      .where(col("wd_self") === col("wd_keep"))
+      .select("k", "pos")
+  }
+
+  /** Byte-verified removable positions with the verification fused into
+    * the run scan: windows carry their raw bytes through the hash
+    * exchange (GraftWindowGen withBytes), and a continuing run member is
+    * removable iff its bytes equal the run's FIRST member's bytes --
+    * identical keeper-equality contract to `verifyCandidates`, no joins.
+    * Intended for minLen <= 32 (window no wider than a digest).
+    */
+  private def inlineVerifiedRemovable(docs: DataFrame, minLen: Int): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    sortedByKey(unitWindows(docs, Bytes, minLen, withBytes = true))
+      .as[(Long, Long, Long, Long, Array[Byte])]
+      .mapPartitions { it =>
+        var ph1 = 0L; var ph2 = 0L; var kw: Array[Byte] = null; var first = true
+        it.flatMap { case (h1, h2, k, pos, w) =>
+          val isNewRun = first || h1 != ph1 || h2 != ph2
+          ph1 = h1; ph2 = h2; first = false
+          if (isNewRun) { kw = w; None }
+          else if (java.util.Arrays.equals(w, kw)) Some((k, pos))
+          else None // 122-bit collision: bytes differ from the keeper's
+        }
+      }
+      .toDF("k", "pos")
+  }
+
+  /** Remove ranges (k, s, e) of `unit` windows, in unit offsets over the
+    * (optionally reversed) sequence; `cfg.minLen` counts units.
+    */
+  private[graft] def removeRanges(docs: DataFrame, unit: WindowUnit, cfg: Config): DataFrame = {
     val removable =
-      if (cfg.verifyBytes)
-        verifyCandidates(docs,
-          if (cfg.verifyPrune) cand.localCheckpoint(true) else cand,
-          cfg.minLen, cfg.verifyPrune)
-      else cand.select("k", "pos")
+      if (cfg.verifyBytes && unit == Bytes && cfg.minLen <= 32) {
+        // INLINE verification (round 6): at minLen <= 32 the raw window is
+        // no wider than the sha2 digest the join path would ship, so carry
+        // the window bytes through the ONE hash exchange and byte-compare
+        // each run member against its run's first row during the scan
+        // itself -- the same candidate-vs-keeper equality the digest joins
+        // compute, with zero corpus re-scans, zero broadcast builds and
+        // zero joins. Above 32 bytes the join path stays (inlining a
+        // 500-byte window would multiply the exchange ~16x; the digests
+        // keep it flat).
+        inlineVerifiedRemovable(docs, cfg.minLen)
+      } else if (cfg.verifyBytes) {
+        // with verifyPrune, pin the (small: duplicate positions only)
+        // candidate set: it feeds the doc-key prune AND the key joins in
+        // verifyCandidates, and recomputing it would re-run the full
+        // window sort per consumer; without the prune the chain is linear
+        // and stays fully lazy
+        val cand0 = runScan(unitWindows(docs, unit, cfg.minLen))
+        val cand = if (cfg.verifyPrune) cand0.localCheckpoint(true) else cand0
+        verifyCandidates(docs, unit, cand, cfg.minLen, cfg.verifyPrune)
+      } else runScan(unitWindows(docs, unit, cfg.minLen)).select("k", "pos")
     coalesceRanges(removable, cfg.minLen)
   }
-
-  /** Dup-density-adaptive plan: one h1-count pass measures the EXACT
-    * duplicated-position fraction (cheap: the shuffle moves partially
-    * aggregated (h1, count) rows, half the width of the window frame and
-    * no sort), then picks the physical plan -- hybrid prefilter below
-    * `denseThreshold`, plain sort-scan above it (dense corpora gain
-    * nothing from a prefilter that passes everything). The candidate set
-    * is pinned eagerly so the persisted count table can be released
-    * immediately (the round-2 block-manager-leak lesson).
-    */
-  def removeRangesAdaptive(docs: DataFrame, cfg: Config,
-                           denseThreshold: Double = 0.5): DataFrame = {
-    val counts = windows(docs, cfg.minLen)
-      .groupBy("h1").agg(count(lit(1)).as("c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val row = counts
-      .agg(coalesce(sum(col("c")), lit(0L)).as("t"),
-        coalesce(sum(when(col("c") > 1, col("c")).otherwise(0L)), lit(0L)).as("d"))
-      .collect()(0)
-    val total = row.getLong(0)
-    val dupFrac = if (total == 0) 0.0 else row.getLong(1).toDouble / total
-    if (dupFrac > denseThreshold) {
-      counts.unpersist(false)
-      removeRanges(docs, cfg)
-    } else {
-      val cand = hybridCandidates(docs, cfg.minLen,
-        Some(counts.where(col("c") > 1).select("h1")))
-      val pinned = cand.localCheckpoint(true)
-      counts.unpersist(false)
-      val removable =
-        if (cfg.verifyBytes)
-          verifyCandidates(docs, pinned, cfg.minLen, cfg.verifyPrune)
-        else pinned.select("k", "pos")
-      coalesceRanges(removable, cfg.minLen)
-    }
-  }
-
-  /** Sort-scan variant of the full pipeline (same contract as
-    * removeRanges; hash-equality trusted, i.e. verifyBytes=false path).
-    */
-  def removeRangesSortScan(docs: DataFrame, minLen: Int): DataFrame =
-    coalesceRanges(removablePositionsSortScan(docs, minLen), minLen)
 
   /** Coalesce sorted removable positions into [s, e) ranges per doc.
     * Gaps-and-islands: all windows share length minLen, so ends are
@@ -385,76 +345,33 @@ object SubstringDedup {
   }
 
   /** Full pipeline: docs(k, text) -> remove_ranges(k, s, e), unclipped
-    * byte offsets (the reference's remove_ranges file, h:294-297).
-    *
-    * Default physical plan is the SORT-SCAN (one window-generation pass,
-    * one range exchange -- measured ~3x faster than the hash-agg plan at
-    * sf0.1) with byte verification of candidates when cfg.verifyBytes.
-    * The hash-agg plan stays available as `removeRangesHashAgg`, the
-    * differential sibling (reference naive-vs-parallel pattern,
-    * workflow_toy.sh:16-33).
+    * byte offsets (the reference's remove_ranges file, h:294-297): the
+    * sort-scan with byte verification of candidates when
+    * cfg.verifyBytes.
     */
-  def removeRanges(docs: DataFrame, cfg: Config): DataFrame = {
-    val removable =
-      if (cfg.verifyBytes && cfg.minLen <= 32) {
-        // INLINE verification (round 6): at minLen <= 32 the raw window
-        // is no wider than the sha2 digest the join path would ship, so
-        // carry the window bytes through the ONE hash exchange and
-        // byte-compare each run member against its run's first row
-        // during the scan itself -- the same candidate-vs-keeper
-        // equality the digest joins computed, with zero corpus
-        // re-scans, zero broadcast builds and zero joins. Above 32
-        // bytes the join path below stays (inlining a 500-byte window
-        // would multiply the exchange ~16x; the digests keep it flat).
-        inlineVerifiedRemovable(docs, cfg.minLen)
-      } else if (cfg.verifyBytes) {
-        // with verifyPrune, pin the (small: duplicate positions only)
-        // candidate set: it feeds the doc-key prune AND the digest joins
-        // in verifyCandidates, and recomputing it would re-run the full
-        // window sort per consumer; without the prune the chain is
-        // linear and stays fully lazy
-        val cand0 = sortScanCandidates(docs, cfg.minLen)
-        val cand = if (cfg.verifyPrune) cand0.localCheckpoint(true) else cand0
-        verifyCandidates(docs, cand, cfg.minLen, cfg.verifyPrune)
-      } else removablePositionsSortScan(docs, cfg.minLen)
-    coalesceRanges(removable, cfg.minLen)
-  }
+  def removeRanges(docs: DataFrame, cfg: Config): DataFrame =
+    removeRanges(docs, Bytes, cfg)
 
-  /** Byte-verified removable positions with the verification fused into
-    * the run scan: windows carry their raw bytes through the hash
-    * exchange (GraftWindowGen withBytes), and a continuing run member is
-    * removable iff its bytes equal the run's FIRST member's bytes --
-    * identical keeper-equality contract to `verifyCandidates`, no joins.
-    * Intended for minLen <= 32 (window no wider than a digest).
+  /** Token-unit remove ranges: docs(k, text) -> (k, s, e) in TOKEN
+    * offsets over the (optionally reversed) whitespace token stream --
+    * C2's find_remove_ranges for tokenized corpora. Verification is
+    * token-exact by default.
     */
-  private def inlineVerifiedRemovable(docs: DataFrame, minLen: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(col("k").cast("long").as("k"), encode(col("text"), "UTF-8").as("b"))
-      .select(col("k"),
-        graft.functions.GraftFunctions.windowGen(col("b"), minLen, withBytes = true)
-          .as(Seq("h1", "h2", "pos", "w")))
-      .select("h1", "h2", "k", "pos", "w")
-      .repartition(col("h1"), col("h2"))
-      .sortWithinPartitions("h1", "h2", "k", "pos")
-      .as[(Long, Long, Long, Long, Array[Byte])]
-      .mapPartitions { it =>
-        var ph1 = 0L; var ph2 = 0L; var kw: Array[Byte] = null; var first = true
-        it.flatMap { case (h1, h2, k, pos, w) =>
-          val isNewRun = first || h1 != ph1 || h2 != ph2
-          ph1 = h1; ph2 = h2; first = false
-          if (isNewRun) { kw = w; None }
-          else if (java.util.Arrays.equals(w, kw)) Some((k, pos))
-          else None // 122-bit collision: bytes differ from the keeper's
-        }
-      }
-      .toDF("k", "pos")
-  }
+  def removeRangesTokens(docs: DataFrame, minLenTok: Int,
+                         verify: Boolean = true, reversed: Boolean = false,
+                         verifyPrune: Boolean = false): DataFrame =
+    removeRanges(docs, Tokens(reversed), Config(minLenTok, verify, verifyPrune))
 
-  /** Hash-aggregate plan of removeRanges (differential sibling). */
-  def removeRangesHashAgg(docs: DataFrame, cfg: Config): DataFrame =
-    coalesceRanges(removablePositions(docs, cfg), cfg.minLen)
+  /** Pre-tokenized-id remove ranges: docs(k, tokens: array<int|long>) ->
+    * (k, s, e) in TOKEN offsets over the (optionally reversed) id stream
+    * -- C2's find_remove_ranges for already-tokenized corpora, the
+    * reference's production input shape. Verification is id-exact by
+    * default.
+    */
+  def removeRangesIds(docs: DataFrame, minLenTok: Int,
+                      verify: Boolean = true, reversed: Boolean = false,
+                      verifyPrune: Boolean = false): DataFrame =
+    removeRanges(docs, Ids(reversed), Config(minLenTok, verify, verifyPrune))
 
   /** Annotate mode: original rows + sa_remove_ranges (UTF-8-clipped),
     * sorted by range start; docs without duplicates get an empty array.
@@ -501,30 +418,7 @@ object SubstringDedup {
   def windowOrderViolations(docs: DataFrame, minLen: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // stays on the TYPED window path (measured round 6): a
-    // GraftWindowGen variant needed the doc bytes in GenerateExec's
-    // required child output, and the exec's per-row unsafe projection
-    // then copies the FULL doc bytes into every generated row before the
-    // slice projection can drop them -- a9 1.0 -> 1.6 s. The typed scan
-    // slices the 32-byte window directly.
-    docs
-      .select(col("k").cast("long"), encode(col("text"), "UTF-8").as("bytes"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (k, bytes) =>
-          if (bytes == null) Iterator.empty
-          else {
-            val (h1, h2) = PolyHash.windowHashes2(bytes, minLen)
-            Iterator.range(0, h1.length).map { i =>
-              (h1(i), h2(i), k, i.toLong,
-                java.util.Arrays.copyOfRange(bytes, i, i + minLen))
-            }
-          }
-        }
-      }
-      .toDF("h1", "h2", "k", "pos", "w")
-      .repartition(col("h1"), col("h2"))
-      .sortWithinPartitions("h1", "h2", "k", "pos")
+    sortedByKey(unitWindows(docs, Bytes, minLen, withBytes = true))
       .as[(Long, Long, Long, Long, Array[Byte])]
       .mapPartitions { it =>
         var ph1 = 0L; var ph2 = 0L; var pw: Array[Byte] = null; var first = true
@@ -553,177 +447,17 @@ object SubstringDedup {
     */
   def dupDocSlices(docs: DataFrame, cfg: Config): DataFrame = {
     // with verifyPrune: pin the (small) pointer table -- it feeds the
-    // doc-key prune and the snippet join -- and semi-join-prune the
-    // corpus bytes to dup docs before any text is shuffled (same shape
-    // and trade-off as verifyCandidates)
+    // doc-key prune and the snippet join -- and prune the corpus bytes to
+    // dup docs before any text is shuffled
     val ptrs0 = dupPtrs(docs, cfg)
     val ptrs = if (cfg.verifyPrune) ptrs0.localCheckpoint(true) else ptrs0
-    val bytesDf0 = docs.select(col("k").cast("long"),
-      encode(col("text"), "UTF-8").as("vb"))
-    val bytesDf = if (!cfg.verifyPrune) bytesDf0 else {
-      val keys = ptrs.select(col("k").as("ck")).distinct()
-      bytesDf0.join(broadcast(keys), col("k") === col("ck"), "leftsemi")
-    }
+    val vb0 = corpus(docs, Bytes)
+    val vb = if (!cfg.verifyPrune) vb0
+      else pruneToKeys(vb0, ptrs.select(col("k").as("ck")), pin = false)
     ptrs
-      .join(bytesDf, Seq("k"))
+      .join(vb, col("k") === col("vk"))
       .select(col("k"), col("pos"), col("dropped"),
         decode(expr(s"substring(vb, pos + 1, ${cfg.minLen})"), "UTF-8").as("snippet"))
-  }
-
-  // ---- token-unit mode (reference C2) ----
-
-  /** One row per in-doc TOKEN window position: (h1, h2, k, pos), pos a
-    * 0-based token offset. The reference templates its whole engine over
-    * the unit type (u8 bytes / u16 gpt2 / u32 llama token streams,
-    * cpp_engine_dedup.h:70-77; tokenized indexing
-    * indexing_v6_sharded.py:205-218, 261-290) with min_len counted in
-    * units; this is the same generalization -- the window machinery rolls
-    * over 61-bit token ids instead of bytes. Token id = polyhash of the
-    * token's UTF-8 bytes: a pure function of the token, so no vocabulary
-    * table is built, broadcast, or synchronized (any id collision is
-    * caught by token-level verification, mirroring verifyBytes).
-    *
-    * `reversed`: the reference's --reversed indexes the mirrored stream
-    * (suffix-vs-prefix duplication); windows are generated over the
-    * reversed token sequence and `pos` reports the REVERSED-stream offset,
-    * so first-occurrence keep order matches the reference's reversed scan.
-    */
-  def tokenWindows(docs: DataFrame, minLenTok: Int, reversed: Boolean = false): DataFrame =
-    // native Generator over the whitespace token array (split ' ' +
-    // drop-empties matches `tokensOf`); per-token 61-bit digits and the
-    // rolling window hashes are computed inside one kernel call per doc
-    docs
-      .select(col("k").cast("long").as("k"),
-        filter(split(col("text"), " "), t => t =!= "").as("ts"))
-      .select(col("k"),
-        graft.functions.GraftFunctions.windowGen(col("ts"), minLenTok, reversed)
-          .as(Seq("h1", "h2", "pos")))
-      .select("h1", "h2", "k", "pos")
-
-  /** Token-level candidate verification (the verifyBytes analogue): the
-    * actual minLenTok-token slice at each candidate and its keeper are
-    * re-extracted and compared by sha2 digest of the NUL-joined tokens --
-    * a 61-bit token-id collision can never remove a non-duplicate window.
-    */
-  private def verifyTokenCandidates(docs: DataFrame, candidates: DataFrame,
-                                    minLenTok: Int, reversed: Boolean,
-                                    prune: Boolean): DataFrame = {
-    val toks0 = filter(split(col("text"), " "), x => x =!= "")
-    val toksDf0 = docs.select(
-      col("k").cast("long").as("vk"),
-      (if (reversed) reverse(toks0) else toks0).as("vt"))
-    // optional doc-key prune + single-scan pin, same shape and rationale
-    // as verifyCandidates (the byte path); with prune the caller must
-    // pin `candidates`
-    val toksDf = if (!prune) toksDf0 else {
-      val keys = candidates.select(col("k").as("ck"))
-        .unionAll(candidates.select(col("keep_k").as("ck")))
-        .distinct()
-      toksDf0.join(broadcast(keys), col("vk") === col("ck"), "leftsemi")
-        .localCheckpoint(true)
-    }
-    def digest(posCol: Column): Column =
-      sha2(encode(concat_ws("\u0000", slice(col("vt"), posCol + 1, lit(minLenTok))), "UTF-8"), 256)
-    candidates
-      .join(toksDf, col("k") === col("vk"))
-      .withColumn("wd_self", digest(col("pos")))
-      .drop("vk", "vt")
-      .join(toksDf, col("keep_k") === col("vk"))
-      .withColumn("wd_keep", digest(col("keep_pos")))
-      .where(col("wd_self") === col("wd_keep"))
-      .select("k", "pos")
-  }
-
-  /** Token-unit remove ranges: docs(k, text) -> (k, s, e) in TOKEN
-    * offsets over the (optionally reversed) whitespace token stream --
-    * C2's find_remove_ranges for tokenized corpora. Same sort-scan spine
-    * and gaps-and-islands coalescing as the byte path; verification is
-    * token-exact by default.
-    */
-  def removeRangesTokens(docs: DataFrame, minLenTok: Int,
-                         verify: Boolean = true, reversed: Boolean = false,
-                         verifyPrune: Boolean = false): DataFrame = {
-    val removable =
-      if (verify) {
-        val cand0 = runScan(tokenWindows(docs, minLenTok, reversed))
-        val cand = if (verifyPrune) cand0.localCheckpoint(true) else cand0
-        verifyTokenCandidates(docs, cand, minLenTok, reversed, verifyPrune)
-      } else runScan(tokenWindows(docs, minLenTok, reversed)).select("k", "pos")
-    coalesceRanges(removable, minLenTok)
-  }
-
-  /** One row per in-doc TOKEN-ID window position over a PRE-TOKENIZED
-    * stream: docs(k, tokens: array<int|long>) -> (h1, h2, k, pos). This
-    * is the reference's actual production mode (indexing_v6_sharded.py:
-    * 205-218 tokenizes with gpt2/llama vocabularies up front and the
-    * engine consumes u16/u32 id streams, cpp_engine_dedup.h:70-77): the
-    * vocabulary lives with the CALLER -- the engine never sees token
-    * text, just rolls the same 61-bit window hash over the provided ids.
-    */
-  def idWindows(docs: DataFrame, minLenTok: Int, reversed: Boolean = false): DataFrame =
-    // native Generator over the pre-tokenized id array (ids are the
-    // window digits directly; `reversed` mirrors the stream in-kernel)
-    docs
-      .select(col("k").cast("long").as("k"), col("tokens").cast("array<long>").as("ids"))
-      .select(col("k"),
-        graft.functions.GraftFunctions.windowGen(col("ids"), minLenTok, reversed)
-          .as(Seq("h1", "h2", "pos")))
-      .select("h1", "h2", "k", "pos")
-
-  /** Id-level candidate verification: the minLenTok-id slice at each
-    * candidate and its keeper are compared by sha2 digest of the
-    * comma-joined decimal ids (',' never occurs inside a decimal int, so
-    * the join is injective) -- a 61-bit rolling-hash collision can never
-    * remove a window whose id sequence differs.
-    */
-  private def verifyIdCandidates(docs: DataFrame, candidates: DataFrame,
-                                 minLenTok: Int, reversed: Boolean,
-                                 prune: Boolean): DataFrame = {
-    val ids0 = col("tokens").cast("array<long>")
-    val toksDf0 = docs.select(
-      col("k").cast("long").as("vk"),
-      (if (reversed) reverse(ids0) else ids0).as("vt"))
-    // optional doc-key prune + single-scan pin, same shape and rationale
-    // as verifyCandidates (the byte path); with prune the caller must
-    // pin `candidates`
-    val toksDf = if (!prune) toksDf0 else {
-      val keys = candidates.select(col("k").as("ck"))
-        .unionAll(candidates.select(col("keep_k").as("ck")))
-        .distinct()
-      toksDf0.join(broadcast(keys), col("vk") === col("ck"), "leftsemi")
-        .localCheckpoint(true)
-    }
-    def digest(posCol: Column): Column =
-      sha2(encode(concat_ws(",",
-        transform(slice(col("vt"), posCol + 1, lit(minLenTok)), _.cast("string"))),
-        "UTF-8"), 256)
-    candidates
-      .join(toksDf, col("k") === col("vk"))
-      .withColumn("wd_self", digest(col("pos")))
-      .drop("vk", "vt")
-      .join(toksDf, col("keep_k") === col("vk"))
-      .withColumn("wd_keep", digest(col("keep_pos")))
-      .where(col("wd_self") === col("wd_keep"))
-      .select("k", "pos")
-  }
-
-  /** Pre-tokenized-id remove ranges: docs(k, tokens: array<int|long>) ->
-    * (k, s, e) in TOKEN offsets over the (optionally reversed) id stream
-    * -- C2's find_remove_ranges for already-tokenized corpora, the
-    * reference's production input shape. Same sort-scan spine and
-    * gaps-and-islands coalescing as the byte and whitespace-token paths;
-    * verification is id-exact by default.
-    */
-  def removeRangesIds(docs: DataFrame, minLenTok: Int,
-                      verify: Boolean = true, reversed: Boolean = false,
-                      verifyPrune: Boolean = false): DataFrame = {
-    val removable =
-      if (verify) {
-        val cand0 = runScan(idWindows(docs, minLenTok, reversed))
-        val cand = if (verifyPrune) cand0.localCheckpoint(true) else cand0
-        verifyIdCandidates(docs, cand, minLenTok, reversed, verifyPrune)
-      } else runScan(idWindows(docs, minLenTok, reversed)).select("k", "pos")
-    coalesceRanges(removable, minLenTok)
   }
 
   /** Diagnostics (reference find_dup_ptrs, h:801-837): every member of a
@@ -739,18 +473,16 @@ object SubstringDedup {
     */
   def dupPtrs(docs: DataFrame, cfg: Config): DataFrame = {
     // multi-member hash runs via the same one-pass adjacent scan the
-    // sort-scan dedup uses (one hash exchange + in-partition sort),
-    // instead of the previous count()-over-(h1,h2)-window + row_number()
-    // pass, which ran the full window frame through WindowExec's
-    // per-group buffering twice (round-6 guide §2.4: same co-location,
-    // strictly less machinery). Emits every member of a >= 2-member run
-    // with its first-occurrence flag.
+    // dedup uses (one hash exchange + in-partition sort), instead of the
+    // previous count()-over-(h1,h2)-window + row_number() pass, which ran
+    // the full window frame through WindowExec's per-group buffering
+    // twice (round-6 guide §2.4: same co-location, strictly less
+    // machinery). Emits every member of a >= 2-member run with its
+    // first-occurrence flag.
     val hashDups = {
       val spark = docs.sparkSession
       import spark.implicits._
-      windows(docs, cfg.minLen)
-        .repartition(col("h1"), col("h2"))
-        .sortWithinPartitions("h1", "h2", "k", "pos")
+      sortedByKey(windows(docs, cfg.minLen))
         .select("h1", "h2", "k", "pos")
         .as[(Long, Long, Long, Long)]
         .mapPartitions { it =>
@@ -783,30 +515,20 @@ object SubstringDedup {
     if (!cfg.verifyBytes) {
       hashDups
     } else {
-      // group on the sha2-256 digest of the actual window (byte-equality
-      // standard); digests are 32 B regardless of minLen, so the window
-      // shuffle stays flat when minLen is large. With verifyPrune the
-      // hash-dup pointer set is pinned (it feeds the doc-key prune and
-      // the digest join) and the corpus bytes are semi-join-pruned to
-      // dup docs before the join -- same shape as verifyCandidates.
+      // group on the exact window key (byte-equality standard; a digest
+      // above 32 bytes keeps the regroup shuffle flat). With verifyPrune
+      // the hash-dup pointer set is pinned (it feeds the doc-key prune
+      // and the key join) and the corpus bytes are pruned to dup docs
+      // before the join.
       val pinned =
         if (cfg.verifyPrune) hashDups.select("k", "pos").localCheckpoint(true)
         else hashDups.select("k", "pos")
-      val bytesDf0 = docs.select(
-        col("k").cast("long").as("vk"),
-        encode(col("text"), "UTF-8").as("vb"))
-      val bytesDf = if (!cfg.verifyPrune) bytesDf0 else {
-        val keys = pinned.select(col("k").as("ck")).distinct()
-        bytesDf0.join(broadcast(keys), col("vk") === col("ck"), "leftsemi")
-      }
-      // minLen <= 32: group on the raw slice (it is no wider than the
-      // digest); above, the digest keeps the regroup shuffle flat
-      val wCol =
-        if (cfg.minLen <= 32) expr(s"substring(vb, pos + 1, ${cfg.minLen})")
-        else sha2(expr(s"substring(vb, pos + 1, ${cfg.minLen})"), 256)
+      val vb0 = corpus(docs, Bytes)
+      val vb = if (!cfg.verifyPrune) vb0
+        else pruneToKeys(vb0, pinned.select(col("k").as("ck")), pin = false)
       val withDigest = pinned
-        .join(bytesDf, col("k") === col("vk"))
-        .select(col("k"), col("pos"), wCol.as("w"))
+        .join(vb, col("k") === col("vk"))
+        .select(col("k"), col("pos"), Bytes.key("vb", "pos", cfg.minLen).as("w"))
       val byW = Window.partitionBy("w").orderBy("k", "pos")
       withDigest
         .withColumn("rn", row_number().over(byW))

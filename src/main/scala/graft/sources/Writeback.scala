@@ -118,7 +118,11 @@ object Writeback {
           }
         if (!renamedAtomically) {
           val fs = target.getFileSystem(conf)
-          var renamed = false
+          // the temp name is unique to this attempt, so a temp that is
+          // already gone was moved onto the target by the rename above
+          // before it failed (on the local FS: renaming the checksum
+          // sidecar while another writer replaces the same target)
+          var renamed = !fs.exists(tmp)
           var tries = 0
           while (!renamed && tries < 5) {
             fs.delete(target, false)

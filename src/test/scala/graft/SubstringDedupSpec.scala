@@ -2,15 +2,18 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import graft.operators.SubstringDedup
 import graft.functions.Utf8
 
-/** Differential tests: both distributed plans (hash-agg and sort-scan)
-  * against a brute-force reimplementation of the reference naive mode
-  * (cpp_engine_dedup.h:215-302) on small random corpora -- the same
-  * correctness strategy the reference itself uses (naive vs parallel vs
-  * parallel_sharded, workflow_toy.sh:16-33).
+/** Differential tests: the substring-dedup spine (every unit and
+  * verification setting) against a brute-force reimplementation of the
+  * reference naive mode (cpp_engine_dedup.h:215-302) on small random
+  * corpora -- the same correctness strategy the reference itself uses
+  * (naive vs parallel vs parallel_sharded, workflow_toy.sh:16-33).
   */
 class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -29,38 +32,61 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
 
   def spark_(docs: Seq[(Long, String)]) = docs.toDF("k", "text")
 
-  test("all three plans (default verify on/off, hash-agg, sort-scan) match brute force") {
-    for (seed <- Seq(1, 2, 3)) {
-      val docs = randomDocs(seed, 25, "abc") // tiny alphabet -> dense dup structure
-      val expected = bruteRanges(docs, 6)
-      val df = spark_(docs)
-      val got = SubstringDedup.removeRanges(df, SubstringDedup.Config(6))
-        .as[(Long, Long, Long)].collect().toSet
-      val gotNoVerify = SubstringDedup.removeRanges(df, SubstringDedup.Config(6, verifyBytes = false))
-        .as[(Long, Long, Long)].collect().toSet
-      val gotHashAgg = SubstringDedup.removeRangesHashAgg(df, SubstringDedup.Config(6))
-        .as[(Long, Long, Long)].collect().toSet
-      val gotHashAggNoVerify = SubstringDedup.removeRangesHashAgg(df, SubstringDedup.Config(6, verifyBytes = false))
-        .as[(Long, Long, Long)].collect().toSet
-      val gotSortScan = SubstringDedup.removeRangesSortScan(df, 6)
-        .as[(Long, Long, Long)].collect().toSet
-      val gotHybrid = SubstringDedup.removeRangesHybrid(df, SubstringDedup.Config(6))
-        .as[(Long, Long, Long)].collect().toSet
-      // tiny-alphabet corpora are DENSE (adaptive takes the sort-scan
-      // arm); threshold 1.0 forces the hybrid arm so both are exercised
-      val gotAdaptive = SubstringDedup.removeRangesAdaptive(df, SubstringDedup.Config(6))
-        .as[(Long, Long, Long)].collect().toSet
-      val gotAdaptiveHybrid = SubstringDedup.removeRangesAdaptive(df, SubstringDedup.Config(6), 1.0)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(got == expected, s"default seed=$seed")
-      assert(gotNoVerify == expected, s"no-verify seed=$seed")
-      assert(gotHashAgg == expected, s"hash-agg seed=$seed")
-      assert(gotHashAggNoVerify == expected, s"hash-agg-no-verify seed=$seed")
-      assert(gotSortScan == expected, s"sort-scan seed=$seed")
-      assert(gotHybrid == expected, s"hybrid seed=$seed")
-      assert(gotAdaptive == expected, s"adaptive seed=$seed")
-      assert(gotAdaptiveHybrid == expected, s"adaptive-hybrid seed=$seed")
+  /** Dense random docs over "abc" (duplicate runs at small minLen) where
+    * about half the docs also carry a verbatim 45..75-byte slice of an
+    * earlier doc, so long windows (minLen 40) have duplicates too.
+    */
+  def plantedDocs(seed: Int, n: Int): Seq[(Long, String)] = {
+    val r = new scala.util.Random(seed)
+    def noise(len: Int) = (0 until len).map(_ => "abc"(r.nextInt(3))).mkString
+    val texts = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (i <- 0 until n) {
+      val t = noise(40 + r.nextInt(80))
+      val src = if (i > 0 && r.nextBoolean()) texts(r.nextInt(i)) else ""
+      texts += (if (src.length < 75) t else {
+        val s = r.nextInt(src.length - 75 + 1)
+        val cut = r.nextInt(t.length + 1)
+        t.take(cut) + src.substring(s, s + 45 + r.nextInt(31)) + t.drop(cut)
+      })
     }
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toSeq
+  }
+
+  test("byte plans: verify x prune x minLen match brute force") {
+    // minLen 6 + verify takes the inline-verified run scan; minLen 40 +
+    // verify takes the key-join verifier, with and without the doc-key
+    // prune (the JSONL workflow's setting)
+    for (seed <- Seq(1, 2, 3); minLen <- Seq(6, 40)) {
+      val docs = plantedDocs(seed, 25)
+      val expected = bruteRanges(docs, minLen)
+      assert(expected.nonEmpty, s"seed=$seed minLen=$minLen plants no duplicate")
+      val df = spark_(docs)
+      for (verify <- Seq(true, false); prune <- Seq(false, true)) {
+        val got = SubstringDedup.removeRanges(df,
+          SubstringDedup.Config(minLen, verifyBytes = verify, verifyPrune = prune))
+          .as[(Long, Long, Long)].collect().toSet
+        assert(got == expected, s"seed=$seed minLen=$minLen verify=$verify prune=$prune")
+      }
+    }
+  }
+
+  test("plan shape: minLen 32 joins nothing, pruned minLen 500 joins twice") {
+    val r = new scala.util.Random(3)
+    val base = (0 until 20).map(i => (i.toLong, (0 until 900).map(_ => "abcdefgh"(r.nextInt(8))).mkString))
+    val df = spark_(base ++ base.take(3).map { case (k, t) => (k + 100, t) })
+    val planHelper = new AdaptiveSparkPlanHelper {}
+    def joins(out: DataFrame): Int = {
+      out.collect()
+      planHelper.collect(out.queryExecution.executedPlan) { case j: BaseJoinExec => j }.size
+    }
+    // inline verification: the window bytes ride the one hash exchange
+    assert(joins(SubstringDedup.removeRanges(df, SubstringDedup.Config(32))) == 0)
+    // candidates and the pruned corpus are pinned, so the executed plan
+    // holds just the two key joins (self side, keeper side)
+    val pruned = SubstringDedup.Config(500, verifyPrune = true)
+    assert(joins(SubstringDedup.removeRanges(df, pruned)) == 2)
+    // pinned pointers joined to the (unpinned) semi-join-pruned corpus
+    assert(joins(SubstringDedup.dupPtrs(df, pruned)) == 2)
   }
 
   /** Token-mode brute oracle: first-occurrence keep over minLenTok-token
@@ -99,10 +125,10 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       (i.toLong, (0 until r.nextInt(30)).map(_ => words(r.nextInt(words.length))).mkString(" "))
     }
     val df = spark_(docs)
-    for (rev <- Seq(false, true); verify <- Seq(true, false)) {
-      val got = SubstringDedup.removeRangesTokens(df, 4, verify = verify, reversed = rev)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(got == bruteTokenRanges(docs, 4, rev), s"reversed=$rev verify=$verify")
+    for (rev <- Seq(false, true); verify <- Seq(true, false); prune <- Seq(false, true)) {
+      val got = SubstringDedup.removeRangesTokens(df, 4, verify = verify, reversed = rev,
+        verifyPrune = prune).as[(Long, Long, Long)].collect().toSet
+      assert(got == bruteTokenRanges(docs, 4, rev), s"reversed=$rev verify=$verify prune=$prune")
     }
   }
 
@@ -123,9 +149,11 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     for (rev <- Seq(false, true); verify <- Seq(true, false)) {
       val viaTokens = SubstringDedup.removeRangesTokens(textDf, 4, verify = verify, reversed = rev)
         .as[(Long, Long, Long)].collect().toSet
-      val viaIds = SubstringDedup.removeRangesIds(idsDf, 4, verify = verify, reversed = rev)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(viaIds == viaTokens, s"reversed=$rev verify=$verify")
+      for (prune <- Seq(false, true)) {
+        val viaIds = SubstringDedup.removeRangesIds(idsDf, 4, verify = verify, reversed = rev,
+          verifyPrune = prune).as[(Long, Long, Long)].collect().toSet
+        assert(viaIds == viaTokens, s"reversed=$rev verify=$verify prune=$prune")
+      }
     }
     // ids ARE the content: two docs with different provenance but equal
     // id runs dedup against each other (second occurrence removed)
@@ -136,6 +164,26 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val got = SubstringDedup.removeRangesIds(planted, 6)
       .as[(Long, Long, Long)].collect().toSet
     assert(got == Set((2L, 1L, 7L)))
+  }
+
+  test("window generation: a null id fails loudly, null text yields no windows") {
+    def messages(e: Throwable) =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    for (rev <- Seq(false, true)) {
+      val ids = Seq((1L, Seq[java.lang.Long](7L, null, 8L, 9L))).toDF("k", "tokens")
+      val e = intercept[Exception](
+        SubstringDedup.removeRangesIds(ids, 2, reversed = rev).collect())
+      assert(messages(e).contains("graft_window_gen: null array element at index 1"),
+        s"reversed=$rev: ${messages(e)}")
+    }
+    val ts = Seq((1L, Seq("a", null, "b"))).toDF("k", "ts")
+    val e = intercept[Exception](
+      ts.select(graft.functions.GraftFunctions.windowGen($"ts", 2).as(Seq("h1", "h2", "pos")))
+        .collect())
+    assert(messages(e).contains("graft_window_gen: null array element at index 1"))
+    val docs = Seq((1L, null: String), (2L, "abcdefgh")).toDF("k", "text")
+    assert(SubstringDedup.windows(docs, 4).as[(Long, Long, Long, Long)].collect()
+      .map(_._3).toSeq == Seq.fill(5)(2L))
   }
 
   test("A7 slices + B10 render: dropped spans carry the actual window text and paint red") {
