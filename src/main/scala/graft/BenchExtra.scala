@@ -15,6 +15,14 @@ import org.apache.spark.sql.functions._
   *                         to <dir>/<name>.txt
   *   pipeline [nImages]    one DedupPipeline pass (Bench.pipelinePass)
   *   jsonl [nDocs]         one JSONL workflow pass (Bench.jsonlPass)
+  *   minlen [nDocs] [nIndexDocs]
+  *                         the reference's minlen range (200 / 500 /
+  *                         1000) on the JSONL fixture: the per-minLen
+  *                         sort-scan at each minLen (50000 docs), then on a
+  *                         5000-doc slice against one suffix-index build
+  *                         (maxDepth 1024) answering all three, with an
+  *                         index-vs-sort-scan differential at minLen 500;
+  *                         one JSON line (BASELINE.md)
   */
 object BenchExtra {
 
@@ -171,6 +179,57 @@ object BenchExtra {
           val (b, sec, files) = Bench.jsonlPass(spark, "/dev/shm/graft-fixtures", n)
           println(f"[extra] jsonl[$i] ${b / 1e6}%.1f MB, $files files in $sec%.2f s = ${b / 1e6 / sec}%.2f MB/s (load1@start=$l%.1f)")
         }
+      case "minlen" =>
+        val nDocs = rest.headOption.map(_.toInt).getOrElse(50000)
+        val nIdxDocs = rest.lift(1).map(_.toInt).getOrElse(5000)
+        val minLens = Seq(200, 500, 1000)
+        def timed[A](what: String)(f: => A): (A, Double) = {
+          val t0 = System.nanoTime()
+          val a = f
+          val sec = (System.nanoTime() - t0) / 1e9
+          println(f"[extra] $what%-40s $sec%8.2f s")
+          (a, sec)
+        }
+        def fixture(n: Int) = {
+          val dir = s"/dev/shm/graft-fixtures/jsonl-in-$n"
+          val bytes = sources.JsonlGen.writeTree(spark, dir, n)
+          (JsonlDedupJob.readTree(spark, dir).localCheckpoint(true), bytes)
+        }
+        def ranges(docs: org.apache.spark.sql.DataFrame, ml: Int) =
+          operators.SubstringDedup.removeRanges(docs, operators.SubstringDedup.Config(ml))
+        val (docs, bytes) = fixture(nDocs)
+        ranges(docs.limit(500), 500).count() // codegen warm-up, untimed
+        val spine = minLens.map { ml =>
+          val (r, sec) = timed(s"sort-scan minLen=$ml") {
+            ranges(docs, ml).agg(count(lit(1)), sum(col("e") - col("s"))).collect()(0)
+          }
+          f"""{"minlen":$ml,"sec":$sec%.2f,"ranges":${r.getLong(0)},""" +
+            f""""removed_bytes":${if (r.isNullAt(1)) 0L else r.getLong(1)},"mb_per_sec":${bytes / 1e6 / sec}%.2f}"""
+        }
+        val (idxDocs, idxBytes) = fixture(nIdxDocs)
+        val spineSmall = minLens.map { ml =>
+          val (_, sec) = timed(s"sort-scan@$nIdxDocs minLen=$ml")(ranges(idxDocs, ml).count())
+          f"""{"minlen":$ml,"sec":$sec%.2f}"""
+        }
+        val (index, buildSec) = timed(s"index build@$nIdxDocs maxDepth=1024") {
+          operators.SuffixIndex.build(idxDocs,
+            operators.SuffixIndex.Config(maxDepth = 1024, parts = 64)).localCheckpoint(true)
+        }
+        val idxQueries = minLens.map { ml =>
+          val (n, sec) = timed(s"index query minLen=$ml") {
+            operators.SuffixIndex.removeRanges(index, ml).count()
+          }
+          f"""{"minlen":$ml,"sec":$sec%.2f,"ranges":$n}"""
+        }
+        val a = operators.SuffixIndex.removeRanges(index, 500)
+        val b = ranges(idxDocs, 500)
+        val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
+        require(diff == 0, s"index vs sort-scan differential: $diff rows differ")
+        println(f"""{"metric":"minlen_sweep","docs":$nDocs,"text_mb":${bytes / 1e6}%.1f,""" +
+          s""""sort_scan":${spine.mkString("[", ",", "]")},"index_docs":$nIdxDocs,""" +
+          f""""index_text_mb":${idxBytes / 1e6}%.1f,"sort_scan_small":${spineSmall.mkString("[", ",", "]")},""" +
+          f""""index_build_sec":$buildSec%.2f,"index_queries":${idxQueries.mkString("[", ",", "]")},""" +
+          s""""differential_minlen500":"identical"}""")
       case other => sys.error(s"unknown subcommand $other")
     }
     spark.stop()

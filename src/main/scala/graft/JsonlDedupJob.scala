@@ -388,13 +388,13 @@ object JsonlDedupJob {
 
     val out = unit match {
       case "bytes" =>
-        // verifyPrune: this reader decompresses the whole tree per scan,
-        // so restricting the verification joins to candidate docs (one
-        // pruned scan instead of two full ones) is the measured win here
-        // -- unlike the cheap vectorized parquet scans where the default
-        // stays off (see SubstringDedup.Config)
+        // no verifyPrune: this reader decompresses the whole tree per
+        // scan, and the byte unit already reads it just twice -- above
+        // minLen 32 once for the run fingerprints and once for the pinned
+        // marked docs that the window sort and the verification joins
+        // share; at or below 32 once, with verification inline
         val ranges = staged(SubstringDedup.removeRanges(keyed,
-          SubstringDedup.Config(minLen, verifyPrune = true)))
+          SubstringDedup.Config(minLen)))
         val annotated = SubstringDedup.annotateWith(keyed, ranges)
         mode match {
           case "annotate" => annotated

@@ -48,14 +48,33 @@ object NativeKernels {
       Shingles.minhashSignature(Shingles.distinctHashes(b, n), seeds))
   }
 
+  /** Sliding-window minimum over `h` by a monotone deque: push positions
+    * in ascending order; `argmin(start)` is then the position of the
+    * minimum of [start, last pushed], the LATER index on ties. Each
+    * position enters and leaves the deque at most once, so a full sweep
+    * is O(len).
+    */
+  private final class MinDeque(h: Array[Long]) {
+    private val q = new Array[Int](h.length)
+    private var qb = 0
+    private var qe = 0
+    def push(j: Int): Unit = {
+      while (qe > qb && h(q(qe - 1)) >= h(j)) qe -= 1
+      q(qe) = j; qe += 1
+    }
+    def argmin(start: Int): Int = {
+      while (q(qb) < start) qb += 1
+      q(qb)
+    }
+  }
+
   /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken MOSS): rolling
     * hash of every byte n-gram, each sliding window of w consecutive
     * hashes contributes its minimum, result = the DISTINCT selected
     * values. Trailing windows shorten naturally (frame
     * [i, min(i+w-1, last)], the SQL `ROWS BETWEEN CURRENT ROW AND w-1
-    * FOLLOWING` frame). O(len) via a monotone deque -- each hash enters
-    * and leaves at most once; equal values keep the later index (same
-    * minimum VALUE, and only values are selected).
+    * FOLLOWING` frame). O(len) via `MinDeque`; its tie rule (the later
+    * index) does not change the result, as only values are selected.
     */
   def winnow(b: Array[Byte], n: Int, w: Int): ArrayData = {
     require(w >= 1, "window w must be >= 1")
@@ -64,28 +83,67 @@ object NativeKernels {
     val m = h.length
     val out = scala.collection.mutable.LongMap.empty[Unit]
     if (m > 0) {
-      val q = new Array[Int](m)
-      var qb = 0; var qe = 0
+      val dq = new MinDeque(h)
       var j = 0
       while (j < m) {
-        while (qe > qb && h(q(qe - 1)) >= h(j)) qe -= 1
-        q(qe) = j; qe += 1
-        val start = j - w + 1 // full window [start, j]
-        if (start >= 0) {
-          while (q(qb) < start) qb += 1
-          out.update(h(q(qb)), ())
-        }
+        dq.push(j)
+        if (j >= w - 1) out.update(h(dq.argmin(j - w + 1)), ()) // full window
         j += 1
       }
       // trailing shortened windows [i, m-1]: suffix minima off the deque
       var i = math.max(0, m - w + 1)
       while (i < m) {
-        while (q(qb) < i) qb += 1
-        out.update(h(q(qb)), ())
+        out.update(h(dq.argmin(i)), ())
         i += 1
       }
     }
     UnsafeArrayData.fromPrimitiveArray(out.keysIterator.toArray)
+  }
+
+  /** Run fingerprints: a doc-level filter for exact substring dedup at
+    * `minLen`. Winnowing with w = minLen / 8 (at least 1) and
+    * n = minLen - w + 1, so a minLen-byte window spans exactly w n-gram
+    * hashes; FULL windows only. Each selected value is emitted once, and
+    * once more if the doc selects it at a second position (never more
+    * often). So a value that appears twice in the union of every doc's
+    * output -- from two docs, or twice from one -- marks each of its
+    * holders as possibly holding a duplicated minLen run, and every doc
+    * that does hold one is marked:
+    *  - a minLen window two docs share is one full run of w hashes in
+    *    both, so both select its minimum;
+    *  - a minLen window that repeats at p < q inside one doc selects the
+    *    same value at p + i and q + i (ties keep the later index in both
+    *    copies alike), i.e. at two positions.
+    * A hash collision can only add marks. A doc shorter than minLen (and
+    * null) emits nothing. Selected positions only ever move forward, so
+    * a doc emits about 2 / (w + 1) values per window (the winnowing
+    * density) -- a highly periodic doc at most two per distinct value.
+    */
+  def runFingerprints(b: Array[Byte], minLen: Int): ArrayData = {
+    val w = math.max(1, minLen / 8)
+    val h = if (b == null) Array.emptyLongArray
+            else PolyHash.windowHashes(b, minLen - w + 1, PolyHash.B1)
+    val m = h.length
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
+    if (m >= w) {
+      val emitted = scala.collection.mutable.LongMap.empty[Int]
+      val dq = new MinDeque(h)
+      var last = -1
+      var j = 0
+      while (j < m) {
+        dq.push(j)
+        if (j >= w - 1) {
+          val p = dq.argmin(j - w + 1)
+          if (p != last) {
+            last = p
+            val c = emitted.getOrElse(h(p), 0)
+            if (c < 2) { emitted.update(h(p), c + 1); out += h(p) }
+          }
+        }
+        j += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(out.result())
   }
 }
 
@@ -312,6 +370,25 @@ case class GraftWinnow(first: Expression, second: Expression, third: Expression)
     copy(first = f, second = s, third = t)
 }
 
+/** `graft_run_fingerprints(bytes, minLen)`: run fingerprints
+  * (array<bigint>, see `NativeKernels.runFingerprints`) -- docs that
+  * share or repeat a minLen-byte run hold a value twice between them.
+  */
+case class GraftRunFingerprints(left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes {
+  override def inputTypes = Seq(BinaryType, IntegerType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "graft_run_fingerprints"
+  override protected def nullSafeEval(b: Any, minLen: Any): Any =
+    NativeKernels.runFingerprints(b.asInstanceOf[Array[Byte]], minLen.asInstanceOf[Int])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (b, minLen) =>
+      s"graft.functions.NativeKernels.runFingerprints($b, $minLen)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
 /** The engine's SQL function surface: native codegen expressions plus
   * the UTF-8 writeback UDFs, injectable into any session via
   * `spark.sql.extensions=graft.functions.GraftExtensions` (or
@@ -347,6 +424,11 @@ object GraftFunctions {
     column(GraftWinnow(expr(b),
       org.apache.spark.sql.catalyst.expressions.Literal(n),
       org.apache.spark.sql.catalyst.expressions.Literal(w)))
+
+  /** Run fingerprints of a binary column at `minLen`. */
+  def runFingerprints(b: Column, minLen: Int): Column =
+    column(GraftRunFingerprints(expr(b),
+      org.apache.spark.sql.catalyst.expressions.Literal(minLen)))
 
   /** Window-frame generator column (use with multi-alias in a select:
     * one (h1, h2, pos) row per window position of a binary / token-array /
@@ -385,7 +467,10 @@ object GraftFunctions {
       3, es => GraftMinHash(es(0), es(1), es(2))),
     desc("graft_winnow",
       "graft_winnow(bytes, n, w) - distinct winnowing (MOSS) fingerprints over rolling n-gram hashes",
-      3, es => GraftWinnow(es(0), es(1), es(2))))
+      3, es => GraftWinnow(es(0), es(1), es(2))),
+    desc("graft_run_fingerprints",
+      "graft_run_fingerprints(bytes, minLen) - winnowing fingerprints marking docs that share or repeat a minLen-byte run",
+      2, es => GraftRunFingerprints(es(0), es(1))))
 
   /** Register the UTF-8 writeback UDFs on an existing session (UDFs ride
     * the public UDFRegistration, not the extension hook):

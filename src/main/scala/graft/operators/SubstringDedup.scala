@@ -33,16 +33,30 @@ import graft.functions.{GraftFunctions, Utf8}
   * non-duplicate window -- the re-extraction touches only positions
   * inside duplicate groups, not the whole corpus.
   *
+  * Bytes above minLen 32 (the reference's production minLen is 500) run
+  * a doc-level prefilter first, blocking-then-verify: winnowing
+  * fingerprints (Schleimer et al., SIGMOD'03) with w = minLen / 8 mark
+  * every doc that shares or repeats a minLen-byte run
+  * (`NativeKernels.runFingerprints`), and the spine above runs on those
+  * docs only. It is exact -- every doc holding a removable window is
+  * marked, and so is its keeper's -- and a MinHash-deduped corpus leaves
+  * few marked docs, so the window sort shrinks to match.
+  *
   * Measured and deleted (BASELINE.md): a salted hash-aggregate plan (~3x
   * slower than the sort-scan at sf0.1, round 2) and an h1-count
   * prefilter plan with a density-adaptive chooser (slower at every
-  * measured density, round 4).
+  * measured density, round 4: it still shuffled one row per window; the
+  * fingerprint prefilter drops rows before its first exchange).
   *
   * Scale notes (100 TB): window rows are 4 longs (~28 B/position) --
   * comparable to the reference's 8N suffix-array footprint -- and flow
   * through a single hash-partitioned shuffle; no stage ever materializes
   * window bytes except for the (small) duplicate-group verification join,
-  * which AQE skew-join splits if one window is viral.
+  * which AQE skew-join splits if one window is viral. Above minLen 32 the
+  * fingerprint exchange carries about 2 / (w + 1) of the windows (~3% at
+  * minLen 500) and the window shuffle only the marked docs' windows; a
+  * viral fingerprint collapses in the partial count, and only the
+  * semi-join back to its holders grows with it.
   *
   * Input contract: df(k: Long, text: String) where ascending `k` defines
   * the stable global first-occurrence order (the reference's
@@ -61,6 +75,10 @@ object SubstringDedup {
     * (the extra pin/broadcast jobs dominate) while the gzip jsonl
     * workflow pass went 26.7 -> 23.0 s best-of-2 (one pruned corpus scan
     * instead of two full decompressions). Hence default off, JSONL on.
+    * Today it applies to the token and id units, `dupPtrs` and
+    * `dupDocSlices`; the byte unit above minLen 32 ignores it and adds no
+    * corpus pin of its own: the fingerprint prefilter already pins the
+    * marked docs once, and the verification joins read that pin.
     */
   case class Config(
       minLen: Int,
@@ -199,17 +217,18 @@ object SubstringDedup {
     docs.select(col("k").cast("long").as("vk"),
       (if (unit.reversed) reverse(unit.seq) else unit.seq).as("vb"))
 
-  /** Doc-key prune: a broadcast semi-join of a `corpus` frame against the
-    * doc keys `keys` (column "ck", deduplicated here). Duplicate positions
-    * cluster in few docs, so this drops the non-duplicate majority of the
-    * corpus before any bytes are shuffled or digested. `pin` pins the
+  /** Doc-key prune: a broadcast semi-join of a frame's doc-key column
+    * `key` against the doc keys `keys` (column "ck", deduplicated here).
+    * Duplicate positions cluster in few docs, so this drops the
+    * non-duplicate majority of the corpus before any bytes are shuffled
+    * or digested. `pin` pins the
     * pruned frame when the caller reads it twice, so the corpus is
     * scanned ONCE. At 1e9+ dup-doc scale the broadcast key set would be
     * replaced by a Bloom filter (guide §3.2 shape); doc-key cardinality at
     * the measured densities stays far under the broadcast cap.
     */
-  private def pruneToKeys(corpusDf: DataFrame, keys: DataFrame, pin: Boolean): DataFrame = {
-    val pruned = corpusDf.join(broadcast(keys.distinct()), col("vk") === col("ck"), "leftsemi")
+  private def pruneToKeys(df: DataFrame, key: String, keys: DataFrame, pin: Boolean): DataFrame = {
+    val pruned = df.join(broadcast(keys.distinct()), col(key) === col("ck"), "leftsemi")
     if (pin) pruned.localCheckpoint(true) else pruned
   }
 
@@ -234,7 +253,7 @@ object SubstringDedup {
                                candidates: DataFrame, minLen: Int,
                                prune: Boolean): DataFrame = {
     val vb0 = corpus(docs, unit)
-    val vb = if (!prune) vb0 else pruneToKeys(vb0,
+    val vb = if (!prune) vb0 else pruneToKeys(vb0, "vk",
       candidates.select(col("k").as("ck"))
         .unionAll(candidates.select(col("keep_k").as("ck"))), pin = true)
     candidates
@@ -272,6 +291,25 @@ object SubstringDedup {
       .toDF("k", "pos")
   }
 
+  /** Doc keys ("ck") of the docs that may hold a removable minLen-byte
+    * window: every doc holding a run fingerprint (NativeKernels
+    * .runFingerprints) that occurs twice overall -- in two docs, or twice
+    * in one. A doc holding a removable window also holds its keeper's
+    * window, or is the keeper's doc, so the runs and keepers among these
+    * docs are exactly those of the whole corpus. Skew-safe: the (k, fp)
+    * rows are pinned, counted per fingerprint with a partial aggregate (a
+    * viral fingerprint collapses map-side) and semi-joined back; no
+    * per-fingerprint doc list is ever built. Keys may repeat.
+    */
+  private[graft] def runCandidateKeys(docs: DataFrame, minLen: Int): DataFrame = {
+    val fps = docs
+      .select(col("k").cast("long").as("k"),
+        explode(GraftFunctions.runFingerprints(Bytes.seq, minLen)).as("fp"))
+      .localCheckpoint(true)
+    val shared = fps.groupBy("fp").count().where(col("count") >= 2).select("fp")
+    fps.join(shared, Seq("fp"), "leftsemi").select(col("k").as("ck"))
+  }
+
   /** Remove ranges (k, s, e) of `unit` windows, in unit offsets over the
     * (optionally reversed) sequence; `cfg.minLen` counts units.
     */
@@ -288,16 +326,25 @@ object SubstringDedup {
         // 500-byte window would multiply the exchange ~16x; the digests
         // keep it flat).
         inlineVerifiedRemovable(docs, cfg.minLen)
-      } else if (cfg.verifyBytes) {
-        // with verifyPrune, pin the (small: duplicate positions only)
+      } else {
+        // FINGERPRINT PREFILTER (bytes above 32): the spine runs over the
+        // marked docs only, pinned once -- the window sort and both
+        // verification joins read that pin, so no verifyPrune is needed
+        val prefilter = unit == Bytes && cfg.minLen > 32
+        val src = if (!prefilter) docs else
+          pruneToKeys(docs.select(col("k").cast("long").as("k"), col("text")),
+            "k", runCandidateKeys(docs, cfg.minLen), pin = true)
+        val prune = cfg.verifyPrune && !prefilter
+        // with the prune, pin the (small: duplicate positions only)
         // candidate set: it feeds the doc-key prune AND the key joins in
         // verifyCandidates, and recomputing it would re-run the full
         // window sort per consumer; without the prune the chain is linear
         // and stays fully lazy
-        val cand0 = runScan(unitWindows(docs, unit, cfg.minLen))
-        val cand = if (cfg.verifyPrune) cand0.localCheckpoint(true) else cand0
-        verifyCandidates(docs, unit, cand, cfg.minLen, cfg.verifyPrune)
-      } else runScan(unitWindows(docs, unit, cfg.minLen)).select("k", "pos")
+        val cand0 = runScan(unitWindows(src, unit, cfg.minLen))
+        if (!cfg.verifyBytes) cand0.select("k", "pos")
+        else verifyCandidates(src, unit,
+          if (prune) cand0.localCheckpoint(true) else cand0, cfg.minLen, prune)
+      }
     coalesceRanges(removable, cfg.minLen)
   }
 
@@ -453,7 +500,7 @@ object SubstringDedup {
     val ptrs = if (cfg.verifyPrune) ptrs0.localCheckpoint(true) else ptrs0
     val vb0 = corpus(docs, Bytes)
     val vb = if (!cfg.verifyPrune) vb0
-      else pruneToKeys(vb0, ptrs.select(col("k").as("ck")), pin = false)
+      else pruneToKeys(vb0, "vk", ptrs.select(col("k").as("ck")), pin = false)
     ptrs
       .join(vb, col("k") === col("vk"))
       .select(col("k"), col("pos"), col("dropped"),
@@ -525,7 +572,7 @@ object SubstringDedup {
         else hashDups.select("k", "pos")
       val vb0 = corpus(docs, Bytes)
       val vb = if (!cfg.verifyPrune) vb0
-        else pruneToKeys(vb0, pinned.select(col("k").as("ck")), pin = false)
+        else pruneToKeys(vb0, "vk", pinned.select(col("k").as("ck")), pin = false)
       val withDigest = pinned
         .join(vb, col("k") === col("vk"))
         .select(col("k"), col("pos"), Bytes.key("vb", "pos", cfg.minLen).as("w"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
 /** Distributed bounded-depth suffix index via prefix doubling -- the
   * build-once / query-many-minLens fidelity stage.
@@ -174,9 +175,24 @@ object SuffixIndex {
     * dense, `rank` ties = suffixes equal through maxDepth bytes), with
     * `lcp` = longest common prefix with the PREVIOUS row in that order,
     * capped at maxDepth (null on the first row). `slen` = bytes remaining
-    * in the suffix's document.
+    * in the suffix's document. The `lcp` column's metadata records
+    * `cfg.maxDepth` (`depthOf`), which `removeRanges` checks a declared
+    * `indexDepth` against.
     */
   def build(docs: DataFrame, cfg: Config): DataFrame = {
+    val depth = new MetadataBuilder().putLong(DepthKey, cfg.maxDepth.toLong).build()
+    buildIndex(docs, cfg).withColumn("lcp", col("lcp").as("lcp", depth))
+  }
+
+  private val DepthKey = "graft.suffix_index.max_depth"
+
+  /** The maxDepth `build` recorded on the index's `lcp` column, if any. */
+  private[graft] def depthOf(index: DataFrame): Option[Int] = {
+    val md = index.schema("lcp").metadata
+    if (md.contains(DepthKey)) Some(md.getLong(DepthKey).toInt) else None
+  }
+
+  private def buildIndex(docs: DataFrame, cfg: Config): DataFrame = {
     // CONTRACT: `docs` must be DETERMINISTIC across re-evaluation -- the
     // direct-LCP mode scans it twice (initial ranks + the per-position
     // prefix table) and joins the results; a sampled/generated/mutable
@@ -535,6 +551,11 @@ object SuffixIndex {
     * (betweenness), so it is at least minLen long and thus eligible;
     * boundaries flagged through a filtered-out short row are real
     * boundaries.
+    *
+    * `indexDepth` (optional) declares the build's maxDepth, which enables
+    * the minLen == maxDepth shortcut below. A declaration that is not the
+    * depth `build` recorded throws an IllegalArgumentException naming
+    * both: trusting a wrong one would merge classes across rank-tie runs.
     */
   def removeRanges(index: DataFrame, minLen: Int, indexDepth: Int = -1): DataFrame = {
     val spark = index.sparkSession
@@ -554,6 +575,12 @@ object SuffixIndex {
     // slen filter, never individual interior rows. A row whose stored
     // lcp >= minLen also proves its ORIGINAL predecessor shares minLen
     // bytes and is therefore eligible and in the same class.)
+    if (indexDepth >= 0) {
+      val recorded = depthOf(index)
+      if (!recorded.contains(indexDepth)) throw new IllegalArgumentException(
+        s"declared indexDepth $indexDepth disagrees with the index's recorded build depth " +
+          recorded.getOrElse("(none)"))
+    }
     if (indexDepth == minLen) {
       val removable = index
         .where(col("slen") >= minLen && col("lcp").isNotNull && col("lcp") >= minLen)

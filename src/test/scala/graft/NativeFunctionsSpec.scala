@@ -94,6 +94,81 @@ class NativeFunctionsSpec extends AnyFunSuite with SparkTestBase {
     assert(got.size * 4 >= bytes(t).length - 8 + 1 - 3)
   }
 
+  private def runFps(b: Array[Byte], minLen: Int): Seq[Long] = {
+    val a = graft.functions.NativeKernels.runFingerprints(b, minLen)
+    (0 until a.numElements()).map(a.getLong)
+  }
+
+  test("graft_run_fingerprints: SQL and CODEGEN_ONLY output match the kernel") {
+    val t = "abcdefghij" * 12 + "the run fingerprints of a doc" * 3
+    val row = spark.sql(
+      s"""SELECT graft_run_fingerprints(encode('$t', 'UTF-8'), 40) AS fp,
+         |       graft_run_fingerprints(CAST(NULL AS BINARY), 40) AS n""".stripMargin)
+      .collect()(0)
+    assert(row.getSeq[Long](0) == runFps(bytes(t), 40) && row.getSeq[Long](0).nonEmpty)
+    assert(row.isNullAt(1))
+    val prev = spark.conf.getOption("spark.sql.codegen.factoryMode")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    try {
+      val got = Seq(t).toDF("t")
+        .select(GraftFunctions.runFingerprints(encode(col("t"), "UTF-8"), 40))
+        .collect()(0).getSeq[Long](0)
+      assert(got == runFps(bytes(t), 40))
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)
+        case None => spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+  }
+
+  test("run fingerprints guarantee (property): shared and repeated minLen runs are caught") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // a value held twice -- by two docs, or twice by one doc -- is what
+    // marks a doc as a candidate
+    def flagged(f: Seq[Long]) = f.distinct.size < f.size
+    // random bytes over a 2-letter or the full byte alphabet
+    val alphabet = Gen.oneOf(2, 256)
+    def bytesOf(n: Int, a: Int): Gen[Array[Byte]] =
+      Gen.listOfN(n, Gen.choose(0, a - 1).map(_.toByte)).map(_.toArray)
+    def chunk(a: Int): Gen[Array[Byte]] = Gen.choose(0, 200).flatMap(bytesOf(_, a))
+    val minLens = Gen.choose(33, 600)
+    def check(name: String, p: Prop): Unit = {
+      val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(200), p)
+      assert(res.passed, s"$name: ${res.status}")
+    }
+    check("shared run", Prop.forAll(minLens, alphabet) { (minLen, a) =>
+      Prop.forAll(bytesOf(minLen, a), chunk(a), chunk(a), chunk(a), chunk(a)) {
+        (run, pa, sa, pb, sb) =>
+          runFps(pa ++ run ++ sa, minLen).toSet
+            .intersect(runFps(pb ++ run ++ sb, minLen).toSet).nonEmpty
+      }
+    })
+    check("repeat inside one doc", Prop.forAll(minLens, alphabet) { (minLen, a) =>
+      Prop.forAll(bytesOf(minLen, a), chunk(a), chunk(a), chunk(a)) { (run, p, mid, s) =>
+        flagged(runFps(p ++ run ++ mid ++ run ++ s, minLen))
+      }
+    })
+    // overlapping copies: a period-u text at least minLen + u long holds
+    // the same minLen window at offsets 0 and u
+    check("periodic text", Prop.forAll(minLens, alphabet) { (minLen, a) =>
+      Prop.forAll(Gen.choose(1, minLen), chunk(a), chunk(a)) { (u, p, s) =>
+        Prop.forAll(bytesOf(u, a)) { unit =>
+          val periodic = Array.fill(minLen / u + 2)(unit).flatten
+          flagged(runFps(p ++ periodic ++ s, minLen))
+        }
+      }
+    })
+    for (minLen <- Seq(33, 64, 500, 600))
+      assert(flagged(runFps(bytes("a" * 700), minLen)), s"700 x a at minLen $minLen")
+    check("short docs", Prop.forAll(minLens, alphabet) { (minLen, a) =>
+      Prop.forAll(Gen.choose(0, minLen - 1).flatMap(bytesOf(_, a))) { b =>
+        runFps(b, minLen).isEmpty
+      }
+    })
+    assert(runFps(null, 500).isEmpty)
+  }
+
   test("registerUdfs: writeback UDFs reachable from SQL") {
     GraftFunctions.registerUdfs(spark)
     val out = spark.sql(

@@ -89,6 +89,63 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(joins(SubstringDedup.dupPtrs(df, pruned)) == 2)
   }
 
+  test("byte prefilter edge cases: minLen 33..500 x verify match brute force") {
+    val r = new scala.util.Random(17)
+    // letters never repeat a 33-byte run by chance; `|` fences each plant
+    def noise(len: Int) = (0 until len).map(_ => ('a' + r.nextInt(26)).toChar).mkString
+    def mb(len: Int) = (0 until len).map(_ => "é日😊x"(r.nextInt(4))).mkString
+    for (minLen <- Seq(33, 40, 64, 65, 500)) {
+      val run = noise(minLen)
+      // 3-byte chars on both sides of a multi-byte run, so its minLen
+      // windows start and end inside characters
+      val mbRun = mb(minLen / 2) + "日" * minLen
+      val corpora: Seq[(String, Seq[(Long, String)])] = Seq(
+        "shared run of exactly minLen" -> Seq(
+          (1L, noise(50) + "|" + run + "|" + noise(30)),
+          (2L, noise(20)),
+          (3L, noise(7) + "|" + run + "|" + noise(90))),
+        "repeat inside one doc" -> Seq(
+          (1L, noise(40)),
+          (2L, noise(10) + "|" + run + "|" + noise(25) + "|" + run + "|"),
+          (3L, noise(minLen + 60))),
+        "all-identical corpus" -> {
+          val t = noise(minLen + 40)
+          (1L to 24L).map(k => (k, t))
+        },
+        "short and null docs" -> Seq(
+          (1L, noise(minLen - 1)), (2L, null), (3L, ""),
+          (4L, noise(minLen - 1)), (5L, null)),
+        "multi-byte UTF-8 across the run edges" -> Seq(
+          (1L, mb(9) + mbRun + mb(11)),
+          (2L, "é" + mbRun + "😊"),
+          (3L, mb(minLen))))
+      for ((name, docs) <- corpora) {
+        val expected = bruteRanges(docs.filter(_._2 != null), minLen)
+        if (name != "short and null docs")
+          assert(expected.nonEmpty, s"$name minLen=$minLen plants no duplicate")
+        val df = spark_(docs)
+        for (verify <- Seq(true, false)) {
+          val got = SubstringDedup.removeRanges(df, SubstringDedup.Config(minLen, verifyBytes = verify))
+            .as[(Long, Long, Long)].collect().toSet
+          assert(got == expected, s"$name minLen=$minLen verify=$verify")
+        }
+      }
+    }
+  }
+
+  test("byte prefilter: only the two docs sharing a run become candidates") {
+    val r = new scala.util.Random(5)
+    def noise(len: Int) = (0 until len).map(_ => ('a' + r.nextInt(26)).toChar).mkString
+    val run = noise(600)
+    val docs = (0L until 50L).map { k =>
+      (k, if (k == 12L || k == 31L) noise(200) + run + noise(150) else noise(700 + r.nextInt(300)))
+    }
+    val df = spark_(docs)
+    assert(SubstringDedup.runCandidateKeys(df, 500).as[Long].collect().toSet == Set(12L, 31L))
+    assert(SubstringDedup.removeRanges(df, SubstringDedup.Config(500))
+      .as[(Long, Long, Long)].collect().toSet == bruteRanges(docs, 500))
+  }
+
   /** Token-mode brute oracle: first-occurrence keep over minLenTok-token
     * windows of the (optionally reversed) whitespace token stream,
     * interval union in token offsets.
@@ -284,6 +341,20 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     // the fallback entry point itself, on the aligned index too
     assert(operators.SuffixIndex.removeRangesSorted(index, 32)
       .as[(Long, Long, Long)].collect().toSet == expected)
+  }
+
+  test("suffix index: a declared indexDepth must be the recorded build depth") {
+    val docs = Seq((1L, "abcdefghijklmnopqrstuvwxyz0123456789"), (2L, "xyz0123456789abcdefghijklmnop"))
+    val index = operators.SuffixIndex.build(spark_(docs),
+      operators.SuffixIndex.Config(maxDepth = 16, parts = 4)).localCheckpoint(true)
+    assert(operators.SuffixIndex.depthOf(index).contains(16))
+    val err = intercept[IllegalArgumentException] {
+      operators.SuffixIndex.removeRanges(index, 32, indexDepth = 32)
+    }
+    assert(err.getMessage.contains("32") && err.getMessage.contains("16"), err.getMessage)
+    // the true depth is accepted and answers like the spine
+    assert(operators.SuffixIndex.removeRanges(index, 16, indexDepth = 16)
+      .as[(Long, Long, Long)].collect().toSet == bruteRanges(docs, 16))
   }
 
   test("suffix index: fixed-point early stop (maxDepth far above longest repeat) stays exact") {
