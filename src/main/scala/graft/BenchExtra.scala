@@ -23,6 +23,12 @@ import org.apache.spark.sql.functions._
   *                         (maxDepth 1024) answering all three, with an
   *                         index-vs-sort-scan differential at minLen 500;
   *                         one JSON line (BASELINE.md)
+  *   saindex [maxDepth]    the `sa_index_remove_ranges` path on its own
+  *                         fixture (docsWithDups): suffix-index build,
+  *                         query at SparkEntry.MinLen and build+query
+  *                         timed separately (maxDepth 32 by default), with
+  *                         an index-vs-sort-scan differential; one JSON
+  *                         line (BASELINE.md)
   */
 object BenchExtra {
 
@@ -50,6 +56,14 @@ object BenchExtra {
     val cmd = args.headOption.getOrElse("queries")
     val rest = args.drop(1).toSeq
     val spark = Bench.session(cpus)
+
+    def timed[A](what: String)(f: => A): (A, Double) = {
+      val t0 = System.nanoTime()
+      val a = f
+      val sec = (System.nanoTime() - t0) / 1e9
+      println(f"[extra] $what%-40s $sec%8.2f s")
+      (a, sec)
+    }
 
     def matching(filters: Seq[String]) =
       SparkEntry.queries.toSeq.sortBy(_._1)
@@ -91,23 +105,6 @@ object BenchExtra {
           val l = Bench.awaitQuiet(threshold = 4.0, maxWaitSec = 240)
           val st = Bench.pipelinePass(spark, "/dev/shm/graft-fixtures/images_bench", n)
           println(f"[extra] pipeline[$i] ${st.nImages} images in ${st.sec}%.2f s = ${st.imagesPerSec}%.0f img/s = ${st.mbPerSec}%.2f MB/s (load1@start=$l%.1f)")
-        }
-      case "substrab" =>
-        // verifyPrune A/B on the pipeline's caption corpus, load-gated
-        val n = rest.headOption.map(_.toInt).getOrElse(150000)
-        val images = graft.sources.ImagesGen.writeFixture(
-          spark, s"/dev/shm/graft-fixtures/images_bench-$n-p40", n, period = 40)
-        val caps = DedupPipeline.run(spark, images, DedupPipeline.Config())
-          .keyed.select(col("k"), col("caption").as("text"))
-          .localCheckpoint(true)
-        (1 to runs).foreach { i =>
-          for (prune <- Seq(false, true)) {
-            val l = Bench.awaitQuiet(threshold = 4.0, maxWaitSec = 240)
-            val t0 = System.nanoTime()
-            val rows = operators.SubstringDedup.removeRanges(caps,
-              operators.SubstringDedup.Config(32, verifyPrune = prune)).count()
-            println(f"[extra] substrab[$i] prune=$prune ${(System.nanoTime() - t0) / 1e9}%7.2f s rows=$rows (load1@start=$l%.1f)")
-          }
         }
       case "queryjobs" =>
         // job-level trace of one named query's execution (guide §1: find
@@ -183,13 +180,6 @@ object BenchExtra {
         val nDocs = rest.headOption.map(_.toInt).getOrElse(50000)
         val nIdxDocs = rest.lift(1).map(_.toInt).getOrElse(5000)
         val minLens = Seq(200, 500, 1000)
-        def timed[A](what: String)(f: => A): (A, Double) = {
-          val t0 = System.nanoTime()
-          val a = f
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"[extra] $what%-40s $sec%8.2f s")
-          (a, sec)
-        }
         def fixture(n: Int) = {
           val dir = s"/dev/shm/graft-fixtures/jsonl-in-$n"
           val bytes = sources.JsonlGen.writeTree(spark, dir, n)
@@ -230,6 +220,32 @@ object BenchExtra {
           f""""index_text_mb":${idxBytes / 1e6}%.1f,"sort_scan_small":${spineSmall.mkString("[", ",", "]")},""" +
           f""""index_build_sec":$buildSec%.2f,"index_queries":${idxQueries.mkString("[", ",", "]")},""" +
           s""""differential_minlen500":"identical"}""")
+      case "saindex" =>
+        import operators.{SubstringDedup, SuffixIndex}
+        val maxDepth = rest.headOption.map(_.toInt).getOrElse(32)
+        val minLen = SparkEntry.MinLen
+        val docs = SparkEntry.docsWithDups(spark, sfDir).localCheckpoint(true)
+        // untimed warmup: pay codegen/JIT on a slice
+        SuffixIndex.removeRanges(
+          SuffixIndex.build(docs.limit(50), SuffixIndex.Config(maxDepth, parts = 4)),
+          minLen).count()
+        val (index, buildSec) = timed(s"build maxDepth=$maxDepth") {
+          SuffixIndex.build(docs, SuffixIndex.Config(maxDepth, parts = 32))
+            .localCheckpoint(true)
+        }
+        val (nRanges, querySec) = timed(s"query minLen=$minLen") {
+          SuffixIndex.removeRanges(index, minLen).count()
+        }
+        val (_, e2eSec) = timed("end-to-end (build+query, as the query runs it)") {
+          SuffixIndex.removeRanges(
+            SuffixIndex.build(docs, SuffixIndex.Config(maxDepth, parts = 32)),
+            minLen).count()
+        }
+        val a = SuffixIndex.removeRanges(index, minLen)
+        val b = SubstringDedup.removeRanges(docs, SubstringDedup.Config(minLen))
+        val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
+        require(diff == 0, s"index vs sort-scan differential: $diff rows differ")
+        println(f"""{"metric":"sa_bench","sf":"$sfDir","max_depth":$maxDepth,"build_sec":$buildSec%.2f,"query_sec":$querySec%.2f,"e2e_sec":$e2eSec%.2f,"ranges":$nRanges,"differential":"identical"}""")
       case other => sys.error(s"unknown subcommand $other")
     }
     spark.stop()

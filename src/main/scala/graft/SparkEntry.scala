@@ -237,15 +237,15 @@ object SparkEntry {
         SubstringDedup.Config(MinLen, verifyBytes = false))),
 
     // A8 full-fidelity sibling: remove-ranges answered from the ONE-TIME
-    // prefix-doubling suffix index (build once, query any minLen <=
-    // maxDepth -- the reference's index-reuse semantics, README.md:44-48);
-    // same oracle as a1/a2.
+    // suffix index (one range sort on each position's maxDepth-byte
+    // prefix; build once, query any minLen <= maxDepth -- the reference's
+    // index-reuse semantics, README.md:44-48); same oracle as a1/a2.
     "sa_index_remove_ranges" -> ((s, dir) => {
       val idx = SuffixIndex.build(docsWithDups(s, dir),
         SuffixIndex.Config(maxDepth = 32, parts = 32))
-      // indexDepth declared -> minLen == maxDepth takes the per-row
-      // predicate path (no layout probe / keeper join); same oracle
-      SuffixIndex.removeRanges(idx, MinLen, indexDepth = 32)
+      // minLen == the recorded build depth -> the per-row lcp predicate
+      // path (no layout probe / keeper join)
+      SuffixIndex.removeRanges(idx, MinLen)
     }),
 
     // C2: token-unit substring dedup -- minLen counted in whitespace

@@ -280,7 +280,7 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(!html.contains("�") && html.contains("""<span class="dropped">"""))
   }
 
-  test("suffix index: one prefix-doubling build answers multiple minLens == per-minLen path") {
+  test("suffix index: one build answers multiple minLens == per-minLen path") {
     // docs long enough for minLen 32/64 windows, with planted verbatim
     // copies (cross-doc dups) and a repeated intra-doc run
     val r = new scala.util.Random(11)
@@ -290,125 +290,146 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val docs = base ++ base.take(4).map { case (k, t) => (k + 100L, t) } :+
       (200L, base.head._2.take(70) * 2) // intra-doc repeat of a 70-byte run
     val df = spark_(docs)
-    // both LCP modes: direct byte-compare (small-maxDepth default) and
-    // the doubling walk over level tables (large-maxDepth default)
-    for (viaBytes <- Seq(true, false)) {
-      val index = operators.SuffixIndex.build(df,
-        operators.SuffixIndex.Config(maxDepth = 64, parts = 8,
-          lcpViaBytes = Some(viaBytes)))
-        .localCheckpoint(true) // build once, query twice
-      for (minLen <- Seq(32, 64)) {
-        val viaIndex = operators.SuffixIndex.removeRanges(index, minLen)
-          .as[(Long, Long, Long)].collect().toSet
-        val perMinLen = SubstringDedup.removeRanges(df, SubstringDedup.Config(minLen))
-          .as[(Long, Long, Long)].collect().toSet
-        assert(viaIndex == perMinLen, s"minLen=$minLen viaBytes=$viaBytes")
-        assert(viaIndex == bruteRanges(docs, minLen), s"minLen=$minLen viaBytes=$viaBytes vs brute")
-      }
+    val index = operators.SuffixIndex.build(df,
+      operators.SuffixIndex.Config(maxDepth = 64, parts = 8))
+      .localCheckpoint(true) // build once, query twice
+    for (minLen <- Seq(32, 64)) {
+      val viaIndex = operators.SuffixIndex.removeRanges(index, minLen)
+        .as[(Long, Long, Long)].collect().toSet
+      val perMinLen = SubstringDedup.removeRanges(df, SubstringDedup.Config(minLen))
+        .as[(Long, Long, Long)].collect().toSet
+      assert(viaIndex == perMinLen, s"minLen=$minLen")
+      assert(viaIndex == bruteRanges(docs, minLen), s"minLen=$minLen vs brute")
     }
   }
 
   test("suffix index: removeRanges on a NON-gidx-aligned index falls back and stays exact") {
-    // the fast query path rides the build's gidx-aligned layout; an index
+    // the segment scan rides the build's gidx-aligned layout; an index
     // re-shuffled into arbitrary partitions (a storage re-read) must be
-    // detected by the layout validation and answered by the sorting
-    // fallback with identical results
+    // detected by the layout validation and range-sorted by gidx first,
+    // with identical results. At minLen == the build depth (32) the
+    // per-row lcp predicate answers instead, on either layout.
     val r = new scala.util.Random(7)
     val base = (0 until 10).map { i =>
       (i.toLong, (0 until (60 + r.nextInt(40))).map(_ => "abcd"(r.nextInt(4))).mkString)
     }
-    val docs = base ++ base.take(3).map { case (k, t) => (k + 100L, t) }
+    // plus slices planted into other docs: their shared runs continue
+    // differently, so a minLen-16 class spans several depth-32 prefixes
+    // and its keeper is not always its first member in suffix order
+    val docs = base ++ base.take(3).map { case (k, t) => (k + 100L, t) } ++
+      plantedDocs(7, 12).map { case (k, t) => (k + 1000L, t) }
     val df = spark_(docs)
     val index = operators.SuffixIndex.build(df,
       operators.SuffixIndex.Config(maxDepth = 32, parts = 4))
-    val expected = SubstringDedup.removeRanges(df, SubstringDedup.Config(32))
-      .as[(Long, Long, Long)].collect().toSet
-    // aligned fresh build -> fast path
-    assert(operators.SuffixIndex.removeRanges(index, 32)
-      .as[(Long, Long, Long)].collect().toSet == expected)
-    // minLen == maxDepth declared-depth shortcut (per-row lcp predicate,
-    // no layout probe / keeper join) -> identical ranges; also on a
-    // reshuffled layout, since the predicate is layout-independent
-    assert(operators.SuffixIndex.removeRanges(index, 32, indexDepth = 32)
-      .as[(Long, Long, Long)].collect().toSet == expected)
-    assert(operators.SuffixIndex.removeRanges(
-        index.repartition(5, col("k")).localCheckpoint(true), 32, indexDepth = 32)
-      .as[(Long, Long, Long)].collect().toSet == expected)
-    // hash-reshuffled index -> layout check fails -> sorting fallback
+    // hash-reshuffled index -> layout check fails -> sorted first; the
+    // same rows in (k, pos) order inside each partition leave no suffix-
+    // order neighbours adjacent, so a scan that skipped the sort fails
     val shuffled = index.repartition(5, col("k")).localCheckpoint(true)
-    assert(operators.SuffixIndex.removeRanges(shuffled, 32)
-      .as[(Long, Long, Long)].collect().toSet == expected)
-    // the fallback entry point itself, on the aligned index too
-    assert(operators.SuffixIndex.removeRangesSorted(index, 32)
-      .as[(Long, Long, Long)].collect().toSet == expected)
+    val byDoc = index.repartition(5, col("k")).sortWithinPartitions("k", "pos")
+      .localCheckpoint(true)
+    for (minLen <- Seq(16, 32)) {
+      val expected = SubstringDedup.removeRanges(df, SubstringDedup.Config(minLen))
+        .as[(Long, Long, Long)].collect().toSet
+      assert(operators.SuffixIndex.removeRanges(index, minLen)
+        .as[(Long, Long, Long)].collect().toSet == expected, s"aligned minLen=$minLen")
+      assert(operators.SuffixIndex.removeRanges(shuffled, minLen)
+        .as[(Long, Long, Long)].collect().toSet == expected, s"reshuffled minLen=$minLen")
+      assert(operators.SuffixIndex.removeRanges(byDoc, minLen)
+        .as[(Long, Long, Long)].collect().toSet == expected, s"(k, pos) order minLen=$minLen")
+    }
   }
 
-  test("suffix index: a declared indexDepth must be the recorded build depth") {
+  test("suffix index: minLen above the recorded build depth throws, naming both") {
+    // lcp is capped at the build depth, so a deeper query would read
+    // every row as a class break and silently return no ranges
     val docs = Seq((1L, "abcdefghijklmnopqrstuvwxyz0123456789"), (2L, "xyz0123456789abcdefghijklmnop"))
     val index = operators.SuffixIndex.build(spark_(docs),
       operators.SuffixIndex.Config(maxDepth = 16, parts = 4)).localCheckpoint(true)
     assert(operators.SuffixIndex.depthOf(index).contains(16))
     val err = intercept[IllegalArgumentException] {
-      operators.SuffixIndex.removeRanges(index, 32, indexDepth = 32)
+      operators.SuffixIndex.removeRanges(index, 17)
     }
-    assert(err.getMessage.contains("32") && err.getMessage.contains("16"), err.getMessage)
-    // the true depth is accepted and answers like the spine
-    assert(operators.SuffixIndex.removeRanges(index, 16, indexDepth = 16)
+    assert(err.getMessage.contains("17") && err.getMessage.contains("16"), err.getMessage)
+    // the build depth itself is answerable and matches the brute force
+    assert(operators.SuffixIndex.removeRanges(index, 16)
       .as[(Long, Long, Long)].collect().toSet == bruteRanges(docs, 16))
   }
 
-  test("suffix index: fixed-point early stop (maxDepth far above longest repeat) stays exact") {
-    // longest repeated substring is ~6 bytes but maxDepth is 256: the
-    // class partition stabilizes after ~3 doubling rounds and the build
-    // must stop there without changing any answer
+  test("suffix index: minLen below 1 throws") {
+    val index = operators.SuffixIndex.build(spark_(Seq((1L, "abcabc"))),
+      operators.SuffixIndex.Config(maxDepth = 8, parts = 2))
+    for (minLen <- Seq(0, -3)) {
+      val err = intercept[IllegalArgumentException] {
+        operators.SuffixIndex.removeRanges(index, minLen)
+      }
+      assert(err.getMessage.contains(minLen.toString), err.getMessage)
+    }
+  }
+
+  test("suffix index: maxDepth far above the longest repeat stays exact") {
+    // longest repeated substring is ~6 bytes but maxDepth is 256: every
+    // adjacent lcp is far below the cap
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "pack my box with five dozen liquor jugs"),
       (3L, "sphinx of black quartz judge my vow"))
     val df = spark_(docs)
-    for (viaBytes <- Seq(true, false)) {
-      val idx = operators.SuffixIndex.build(df,
-        operators.SuffixIndex.Config(maxDepth = 256, parts = 4,
-          lcpViaBytes = Some(viaBytes)))
-      val viaIndex = operators.SuffixIndex.removeRanges(idx, 4)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(viaIndex == bruteRanges(docs, 4), s"viaBytes=$viaBytes")
-    }
+    val idx = operators.SuffixIndex.build(df,
+      operators.SuffixIndex.Config(maxDepth = 256, parts = 4))
+    val viaIndex = operators.SuffixIndex.removeRanges(idx, 4)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(viaIndex == bruteRanges(docs, 4))
   }
 
   test("suffix index: lcp values are exact against brute-force suffix comparison") {
-    val docs = Seq((1L, "banana"), (2L, "bananas are bananas"), (3L, "anab"))
+    // ASCII docs plus multi-byte UTF-8 (2-, 3- and 4-byte sequences):
+    // bytes >= 0x80 sort AFTER ASCII only under unsigned byte order, and
+    // UTF-16 String order disagrees with UTF-8 byte order for 4-byte
+    // characters (surrogates) vs U+E000..U+FFFF, so the brute order below
+    // is over unsigned byte arrays
+    val docs = Seq((1L, "banana"), (2L, "bananas are bananas"), (3L, "anab"),
+      (4L, "naïve café naïve"), (5L, "日本語の日本"), (6L, "a\uD83D\uDE00b\uFF71a\uD83D\uDE00"),
+      (7L, "ﾅana\u00e9"))
     val df = spark_(docs)
     val maxDepth = 8
-    for (viaBytes <- Seq(true, false)) {
     val idx = operators.SuffixIndex.build(df,
-      operators.SuffixIndex.Config(maxDepth, parts = 4, lcpViaBytes = Some(viaBytes)))
+      operators.SuffixIndex.Config(maxDepth, parts = 4))
       .orderBy("gidx")
-      .select("k", "pos", "lcp").as[(Long, Long, Option[Long])].collect()
-    val texts = docs.toMap
-    def suffix(k: Long, p: Long): String = {
-      val t = texts(k); t.substring(p.toInt, math.min(t.length, p.toInt + maxDepth))
+      .select("gidx", "k", "pos", "rank", "lcp")
+      .as[(Long, Long, Long, Long, Option[Long])].collect()
+    val bytes = docs.map { case (k, t) => (k, t.getBytes(UTF_8)) }.toMap
+    def suffix(k: Long, p: Long): Seq[Int] = {
+      val b = bytes(k)
+      b.slice(p.toInt, math.min(b.length, p.toInt + maxDepth)).toSeq.map(_ & 0xff)
     }
-    // brute order: bounded-depth suffixes, ties by (k, pos)
-    val bruteOrder = docs.flatMap { case (k, t) =>
-      (0 until t.length).map(p => (suffix(k, p), k, p.toLong))
-    }.sorted
-    idx.zipWithIndex.foreach { case ((k, p, lcpOpt), i) =>
+    val unsigned: Ordering[Seq[Int]] = Ordering.Implicits.seqOrdering[Seq, Int]
+    // brute order: bounded-depth suffixes as unsigned bytes, shorter
+    // first on a common prefix, ties by (k, pos)
+    val bruteOrder = bytes.toSeq.flatMap { case (k, b) =>
+      (0 until b.length).map(p => (suffix(k, p), k, p.toLong))
+    }.sortBy(r => (r._1, r._2, r._3))(Ordering.Tuple3(unsigned, Ordering.Long, Ordering.Long))
+    assert(idx.length == bruteOrder.length)
+    idx.zipWithIndex.foreach { case ((gidx, k, p, rank, lcpOpt), i) =>
       val (bs, bk, bp) = bruteOrder(i)
-      // rank ties may permute, but the bounded suffix STRING at each
-      // order slot is unique-or-tied, so compare strings not (k,pos)
-      assert(suffix(k, p) == bs, s"order slot $i: (${k},${p}) vs (${bk},${bp})")
-      if (i == 0) assert(lcpOpt.isEmpty)
-      else {
+      assert(gidx == i.toLong)
+      // rank ties may permute, but the bounded suffix at each order slot
+      // is unique-or-tied, so compare suffix bytes, not (k, pos)
+      assert(suffix(k, p) == bs, s"order slot $i: ($k,$p) vs ($bk,$bp)")
+      if (i == 0) {
+        assert(lcpOpt.isEmpty)
+        assert(rank == 1L)
+      } else {
         val prevS = bruteOrder(i - 1)._1
+        val prevRank = idx(i - 1)._4
         // bounded-equal suffixes (rank ties, incl. truncated-equal) store
-        // the cap; otherwise the exact common-prefix length
+        // the cap and share a rank; otherwise the exact common-prefix
+        // length, and the dense rank steps by one
         val expected =
           if (bs == prevS) maxDepth
-          else math.min(bs.zip(prevS).takeWhile { case (a, b) => a == b }.size, maxDepth)
-        assert(lcpOpt.contains(expected.toLong), s"slot $i lcp (viaBytes=$viaBytes): got $lcpOpt want $expected")
+          else bs.zip(prevS).takeWhile { case (a, b) => a == b }.size
+        assert(lcpOpt.contains(expected.toLong), s"slot $i lcp: got $lcpOpt want $expected")
+        assert(rank == (if (bs == prevS) prevRank else prevRank + 1), s"slot $i rank")
       }
-    }
     }
   }
 
