@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * gated Bench. Subcommands:
   *
   *   queries [substr...]   min-of-N .count() per matching query (Bench
-  *                         methodology), N from SPARK_GRAFT_EXTRA_RUNS (2)
+  *                         methodology), N from SPARK_GRAFT_EXTRA_RUNS (2),
+  *                         after one untimed warm-up run of that query
   *   noop [substr...]      same but through the noop sink (computes every
   *                         column; guide §1.4)
   *   explain <dir> [s...]  write .explain("formatted") per matching query
@@ -29,6 +30,10 @@ import org.apache.spark.sql.functions._
   *                         timed separately (maxDepth 32 by default), with
   *                         an index-vs-sort-scan differential; one JSON
   *                         line (BASELINE.md)
+  *   ivf [nCells] [outDir] `ann_ivf_topk` at a configurable nCells (512
+  *                         by default; the oracle query pins 64) written
+  *                         as parquet plus its generated oracle_sql.json
+  *                         under outDir: check with dev/compare.py
   */
 object BenchExtra {
 
@@ -69,20 +74,27 @@ object BenchExtra {
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => filters.isEmpty || filters.exists(n.contains) }
 
+    // Bench.main's warm-up, then one untimed run of each measured query
+    // right before its timed runs, so the first timed run is not cold
+    def warmUp(): Unit = {
+      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      SparkEntry.queries("q1_agg")(spark, sfDir).count()
+    }
+
     cmd match {
       case "queries" | "noop" =>
-        // same warmup as Bench.main
-        spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-        SparkEntry.queries("q1_agg")(spark, sfDir).count()
+        warmUp()
         val all = matching(rest)
         var total = 0.0
         all.foreach { case (name, fn) =>
           spark.sparkContext.setJobDescription(name)
+          def once(): Unit =
+            if (cmd == "noop") fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            else fn(spark, sfDir).count()
+          once()
           val secs = (1 to runs).map { _ =>
             val t0 = System.nanoTime()
-            if (cmd == "noop")
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            else fn(spark, sfDir).count()
+            once()
             (System.nanoTime() - t0) / 1e9
           }
           total += secs.min
@@ -110,9 +122,10 @@ object BenchExtra {
         // job-level trace of one named query's execution (guide §1: find
         // which scheduled job inside a multi-job operator eats the time)
         traceJobs(spark)
-        spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-        SparkEntry.queries("q1_agg")(spark, sfDir).count()
+        warmUp()
         matching(rest).foreach { case (name, fn) =>
+          println(s"[extra] ---- $name warm-up (untimed) ----")
+          fn(spark, sfDir).count()
           (1 to runs).foreach { i =>
             println(s"[extra] ---- $name run $i ----")
             val t0 = System.nanoTime()
@@ -246,6 +259,30 @@ object BenchExtra {
         val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
         require(diff == 0, s"index vs sort-scan differential: $diff rows differ")
         println(f"""{"metric":"sa_bench","sf":"$sfDir","max_depth":$maxDepth,"build_sec":$buildSec%.2f,"query_sec":$querySec%.2f,"e2e_sec":$e2eSec%.2f,"ranges":$nRanges,"differential":"identical"}""")
+      case "ivf" =>
+        val nCells = rest.headOption.map(_.toInt).getOrElse(512)
+        val outDir = rest.lift(1).getOrElse("/tmp/ivf_check")
+        val name = s"ann_ivf_topk_c$nCells"
+        val vecs = SparkEntry.intVecs(spark, sfDir)
+        timed(s"ivf nCells=$nCells") {
+          operators.AnnCosine.ivfTopKInt(
+            vecs.where(col("id") < 5).select(col("id").as("qid"), col("vec")),
+            vecs.select(col("id"), col("vec")),
+            10, nCells = nCells, nProbe = 4, rounds = 2)
+            .select("qid", "id", "rn")
+            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        }
+        val sql = OracleSqlGen.ivfTopKSql(5, SparkEntry.AnnDim, nCells, 4, 10, rounds = 2)
+        def q(s: String): String = "\"" + s.flatMap {
+          case '"'  => "\\\""
+          case '\\' => "\\\\"
+          case '\n' => "\\n"
+          case c if c < ' ' => f"\\u${c.toInt}%04x"
+          case c => c.toString
+        } + "\""
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/oracle_sql.json"),
+          s"{${q(name)}: ${q(sql)}}")
+        println(s"[extra] wrote $outDir/$name and $outDir/oracle_sql.json")
       case other => sys.error(s"unknown subcommand $other")
     }
     spark.stop()

@@ -1,7 +1,6 @@
 package graft
 
-import java.io.{BufferedReader, InputStream, InputStreamReader}
-import java.nio.charset.StandardCharsets
+import java.io.InputStream
 import java.util.zip.GZIPInputStream
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -117,46 +116,61 @@ object JsonlDedupJob {
     n
   }
 
-  /** (linenum, line) iterator over the lines STARTING in [start, end) of a
-    * plain (uncompressed) file -- the splittable-read unit. Semantics
-    * match the whole-file reader: '\n' terminates (a trailing '\r' is
-    * stripped, so \r\n works; bare-\r files are not split-safe), the
+  /** `p` opened and decompressed by its extension (.gz, .zst or plain). */
+  private def open(fs: org.apache.hadoop.fs.FileSystem, p: Path): InputStream = {
+    val raw = fs.open(p)
+    if (p.getName.endsWith(".gz")) new GZIPInputStream(raw, 1 << 16)
+    else if (p.getName.endsWith(".zst")) new com.github.luben.zstd.ZstdInputStream(raw)
+    else raw
+  }
+
+  /** The one line reader: (linenum, line) over the lines STARTING in
+    * [start, end) of the byte stream `in`, which is positioned at
+    * max(0, start - 1) -- a split chunk of a plain file, or a whole
+    * (decompressed) file with start 0 and no end bound. '\n' alone ends
+    * a line, as in the reference (indexing_v6_sharded.py:21-39 splits the
+    * decompressed bytes on '\n'): a trailing '\r' is stripped, so \r\n
+    * works, and a bare '\r' elsewhere is JSON whitespace. The
     * unterminated tail line belongs to the chunk its first byte starts
-    * in, blank lines advance linenum but emit nothing.
+    * in; blank lines advance linenum but emit nothing.
     */
-  private final class ChunkLines(in: org.apache.hadoop.fs.FSDataInputStream,
-                                 start: Long, end: Long, startLn: Long,
-                                 relPath: String) extends Iterator[(Long, String)] {
+  private final class Lines(in: InputStream, start: Long, end: Long,
+                            startLn: Long, relPath: String) extends Iterator[(Long, String)] {
     private val buf = new Array[Byte](1 << 16)
     private var bl = 0
     private var bp = 0
     private var pos = if (start == 0) 0L else start - 1
-    in.seek(pos)
-    private def fill(): Boolean =
-      bp < bl || { bl = in.read(buf); bp = 0; bl > 0 }
-    // discard the partial line owned by the previous chunk
-    if (start > 0) {
-      var done = false
-      while (!done && fill()) {
-        val c = buf(bp); bp += 1; pos += 1
-        if (c == '\n') done = true
+    private val line = new java.io.ByteArrayOutputStream(256)
+    private def fill(): Boolean = bp < bl || {
+      var n = 0
+      while (n == 0) n = in.read(buf)
+      bl = math.max(n, 0); bp = 0; n > 0
+    }
+    /** Consumes through the next '\n' (or EOF), appending to `line`. */
+    private def readLine(): Unit = {
+      var terminated = false
+      while (!terminated && fill()) {
+        var i = bp
+        while (i < bl && buf(i) != '\n') i += 1
+        line.write(buf, bp, i - bp)
+        terminated = i < bl
+        if (terminated) i += 1
+        pos += i - bp; bp = i
       }
     }
+    // discard the partial line owned by the previous chunk
+    if (start > 0) readLine()
     private var ln = startLn - 1
     private var nextLine: String = advance()
     @annotation.tailrec
     private def advance(): String = {
       if (pos >= end || !fill()) null // next line starts past our range / EOF
       else {
-        val sb = new java.io.ByteArrayOutputStream(256)
-        var terminated = false
-        while (!terminated && fill()) {
-          val c = buf(bp); bp += 1; pos += 1
-          if (c == '\n') terminated = true else sb.write(c)
-        }
+        line.reset()
+        readLine()
         ln += 1
         require(ln < (1L << LinenumBits), s"$relPath exceeds 2^$LinenumBits lines")
-        var s = sb.toString("UTF-8")
+        var s = line.toString("UTF-8")
         if (s.nonEmpty && s.charAt(s.length - 1) == '\r') s = s.substring(0, s.length - 1)
         if (s.trim.nonEmpty) s else advance()
       }
@@ -209,17 +223,10 @@ object JsonlDedupJob {
         val fs = p.getFileSystem(conf)
         if (fs.getFileStatus(p).getLen == 0) Nil
         else {
-          val raw = fs.open(p)
-          val in: InputStream = relPath match {
-            case r if r.endsWith(".gz")  => new GZIPInputStream(raw, 1 << 16)
-            case r if r.endsWith(".zst") => new com.github.luben.zstd.ZstdInputStream(raw)
-            case _                       => raw
-          }
-          val reader = new BufferedReader(
-            new InputStreamReader(in, StandardCharsets.UTF_8), 1 << 16)
-          try Iterator.continually(reader.readLine()).takeWhile(_ != null)
-            .filter(_.trim.nonEmpty).take(inferLinesPerFile).toList
-          finally reader.close()
+          val in = open(fs, p)
+          try new Lines(in, 0, Long.MaxValue, 0, relPath).map(_._2)
+            .take(inferLinesPerFile).toList
+          finally in.close()
         }
       }
       require(lines.nonEmpty, s"no JSONL lines found in the $inDir schema sample")
@@ -278,45 +285,18 @@ object JsonlDedupJob {
         // 0-byte files occur in real crawl trees; a GZIPInputStream over
         // one throws EOFException at construction -- skip them outright
         if (fs.getFileStatus(p).getLen == 0) Iterator.empty
-        else if (ce >= 0) {
-          // splittable path: lines starting in [cs, ce), exact linenums
-          val in = fs.open(p)
+        else {
+          // splittable path: lines starting in [cs, ce) of the plain
+          // file; whole-file path (ce = -1): every line, decompressed
+          val in =
+            if (ce < 0) open(fs, p)
+            else { val raw = fs.open(p); raw.seek(math.max(0L, cs - 1)); raw }
+          // a killed/failed task never reaches EOF -- close on task end
           Option(org.apache.spark.TaskContext.get())
             .foreach(_.addTaskCompletionListener[Unit](_ =>
               try in.close() catch { case _: java.io.IOException => () }))
-          new ChunkLines(in, cs, ce, startLn, relPath)
+          new Lines(in, cs, if (ce < 0) Long.MaxValue else ce, startLn, relPath)
             .map { case (ln, line) => (fid, relPath, ln, line) }
-        } else {
-        val raw = fs.open(p)
-        val in: InputStream = relPath match {
-          case r if r.endsWith(".gz")  => new GZIPInputStream(raw, 1 << 16)
-          case r if r.endsWith(".zst") => new com.github.luben.zstd.ZstdInputStream(raw)
-          case _                       => raw
-        }
-        val reader = new BufferedReader(
-          new InputStreamReader(in, StandardCharsets.UTF_8), 1 << 16)
-        // a killed/failed task never reaches EOF -- close on task end
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ =>
-            try reader.close() catch { case _: java.io.IOException => () }))
-        new Iterator[(Long, String, Long, String)] {
-          private var ln = -1L
-          private var nextLine: String = advance()
-          private def advance(): String = {
-            var l = reader.readLine()
-            ln += 1
-            while (l != null && l.trim.isEmpty) { l = reader.readLine(); ln += 1 }
-            if (l == null) reader.close()
-            else require(ln < (1L << LinenumBits), s"$relPath exceeds 2^$LinenumBits lines")
-            l
-          }
-          def hasNext: Boolean = nextLine != null
-          def next(): (Long, String, Long, String) = {
-            val out = (fid, relPath, ln, nextLine)
-            nextLine = advance()
-            out
-          }
-        }
         }
       }
       .toDF("fid", "path", "linenum", "line")
@@ -391,7 +371,7 @@ object JsonlDedupJob {
         // no verifyPrune: this reader decompresses the whole tree per
         // scan, and the byte unit already reads it just twice -- above
         // minLen 32 once for the run fingerprints and once for the pinned
-        // marked docs that the window sort and the verification joins
+        // marked docs that the window sort and the verifier's one join
         // share; at or below 32 once, with verification inline
         val ranges = staged(SubstringDedup.removeRanges(keyed,
           SubstringDedup.Config(minLen)))

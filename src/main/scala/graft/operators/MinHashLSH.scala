@@ -166,10 +166,12 @@ object MinHashLSH {
     * (small), the shingle pass runs ONCE over only the docs that appear
     * in a candidate pair (broadcast semi-join), and the pinned pruned
     * sets feed both join sides. Same trade-off as
-    * SubstringDedup.Config.verifyPrune: pays when candidates cover a
-    * small fraction of a large corpus (DedupPipeline passes true), costs
-    * a few extra scheduled jobs at small fixture scale (default off so
-    * the d7 oracle query keeps its lazy single-job shape).
+    * SubstringDedup.Config.verifyPrune (which prunes the corpus side of
+    * that verifier's one join and pins its hash-run members): pays when
+    * candidates cover a small fraction of a large corpus (DedupPipeline
+    * passes true), costs a few extra scheduled jobs at small fixture
+    * scale (default off so the d7 oracle query keeps its lazy single-job
+    * shape).
     */
   def verifiedPairs(docs: DataFrame, cfg: Config, threshold: Double,
                     pruneVerify: Boolean = false): DataFrame = {

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftFunctions, Utf8}
 
@@ -21,26 +20,35 @@ import graft.functions.{GraftFunctions, Utf8}
   * class of positions with identical minLen-byte windows, so we skip the SA
   * entirely: key every position by a 122-bit rolling hash of its window
   * (O(1)/byte, PolyHash), hash-partition on that key, sort within
-  * partitions and scan adjacent rows -- one window-generation pass, one
-  * exchange; the literal distributed transcription of the reference loop
-  * (h:417-472). Like the reference, which templates its one engine over
-  * the unit type (u8 bytes / u16, u32 token ids, h:70-77), there is ONE
-  * spine -- window generation, run scan, verifier, coalescer -- and the
-  * unit (`WindowUnit`: bytes, whitespace tokens or pre-tokenized ids,
-  * forward or reversed) only chooses the per-doc sequence and the exact
-  * window key. Candidates are optionally re-verified against that exact
-  * key (`verifyBytes`) so a hash collision can never remove a
-  * non-duplicate window -- the re-extraction touches only positions
-  * inside duplicate groups, not the whole corpus.
+  * partitions and scan adjacent rows -- the literal distributed
+  * transcription of the reference loop (h:417-472). Like the reference,
+  * which templates its one engine over the unit type (u8 bytes / u16, u32
+  * token ids, h:70-77), there is ONE spine, and the unit (`WindowUnit`:
+  * bytes, whitespace tokens or pre-tokenized ids, forward or reversed)
+  * only chooses the per-doc sequence and the exact window key.
+  *
+  * The spine is the members of exact duplicate groups (`members`, the
+  * reference's find_dup_ptrs, h:801-837): ONE run scan over windows
+  * sorted on (h1, h2, x, k, pos) emits every member of a run of >= 2
+  * equal (h1, h2, x) rows, the run's first row -- its (k, pos) minimum,
+  * the keeper (h:239-246) -- with dropped = false. `x` is the exact
+  * window key or null, and ONE verifier decides what it is: the window
+  * bytes the generator carries (bytes at minLen <= 32), null with
+  * verification off, or else null on a first scan whose hash-run members
+  * are joined to the corpus once, keyed, and scanned again. Every member
+  * is compared with its exact equals, not with its hash run's first row,
+  * so the result is exact under hash collisions: in a hash run
+  * [A, B, B'] with B = B' != A, B' is removable and B is not. `dupPtrs`
+  * is the members; `removeRanges` is their dropped rows, coalesced.
   *
   * Bytes above minLen 32 (the reference's production minLen is 500) run
   * a doc-level prefilter first, blocking-then-verify: winnowing
   * fingerprints (Schleimer et al., SIGMOD'03) with w = minLen / 8 mark
   * every doc that shares or repeats a minLen-byte run
-  * (`NativeKernels.runFingerprints`), and the spine above runs on those
-  * docs only. It is exact -- every doc holding a removable window is
-  * marked, and so is its keeper's -- and a MinHash-deduped corpus leaves
-  * few marked docs, so the window sort shrinks to match.
+  * (`NativeKernels.runFingerprints`), and the spine runs on those docs
+  * only. It is exact -- every member of a duplicate group holds a shared
+  * fingerprint -- and a MinHash-deduped corpus leaves few marked docs,
+  * so the window sort shrinks to match.
   *
   * Measured and deleted (BASELINE.md): a salted hash-aggregate plan (~3x
   * slower than the sort-scan at sf0.1, round 2) and an h1-count
@@ -50,13 +58,15 @@ import graft.functions.{GraftFunctions, Utf8}
   *
   * Scale notes (100 TB): window rows are 4 longs (~28 B/position) --
   * comparable to the reference's 8N suffix-array footprint -- and flow
-  * through a single hash-partitioned shuffle; no stage ever materializes
-  * window bytes except for the (small) duplicate-group verification join,
-  * which AQE skew-join splits if one window is viral. Above minLen 32 the
-  * fingerprint exchange carries about 2 / (w + 1) of the windows (~3% at
-  * minLen 500) and the window shuffle only the marked docs' windows; a
-  * viral fingerprint collapses in the partial count, and only the
-  * semi-join back to its holders grows with it.
+  * through a single hash-partitioned shuffle; at minLen <= 32 with
+  * verification on they also carry the window bytes (no wider than a
+  * digest), and above it only the (small) hash-run members are ever
+  * joined to the corpus, a join AQE skew-join splits if one window is
+  * viral. Above minLen 32 the fingerprint exchange carries about
+  * 2 / (w + 1) of the windows (~3% at minLen 500) and the window shuffle
+  * only the marked docs' windows; a viral fingerprint collapses in the
+  * partial count, and only the semi-join back to its holders grows with
+  * it.
   *
   * Input contract: df(k: Long, text: String) where ascending `k` defines
   * the stable global first-occurrence order (the reference's
@@ -64,21 +74,22 @@ import graft.functions.{GraftFunctions, Utf8}
   */
 object SubstringDedup {
 
-  /** `verifyPrune`: semi-join-prune the corpus side of the verification
-    * joins down to the candidate doc keys (and pin both so the corpus is
-    * scanned once instead of twice). Pays when one corpus scan is
-    * expensive relative to a handful of extra scheduled jobs -- e.g. the
-    * JSONL workflow, whose scan decompresses every shard (JsonlDedupJob
-    * passes true); costs more than it saves on cheap vectorized parquet
+  /** `verifyPrune`: semi-join-prune the corpus side of the verifier's
+    * one join down to the hash-run members' doc keys, and pin the members
+    * (they feed both the key set and the join probe, so the window sort
+    * runs once). Pays when one corpus scan is expensive relative to a
+    * handful of extra scheduled jobs -- e.g. the JSONL workflow, whose
+    * scan decompresses every shard (JsonlDedupJob passes true for token
+    * and id units); costs more than it saves on cheap vectorized parquet
     * scans at fixture scale. Measured round 6 (sf0.1 / 330 MB jsonl,
     * local[32]): prune ON made the parquet-backed a1 query 1.8 -> 2.5 s
     * (the extra pin/broadcast jobs dominate) while the gzip jsonl
     * workflow pass went 26.7 -> 23.0 s best-of-2 (one pruned corpus scan
-    * instead of two full decompressions). Hence default off, JSONL on.
-    * Today it applies to the token and id units, `dupPtrs` and
-    * `dupDocSlices`; the byte unit above minLen 32 ignores it and adds no
-    * corpus pin of its own: the fingerprint prefilter already pins the
-    * marked docs once, and the verification joins read that pin.
+    * instead of two full decompressions). Hence default off. It only
+    * matters where the verifier joins: not at bytes minLen <= 32 (inline
+    * bytes) and not at bytes above 32, whose fingerprint prefilter
+    * already pins the marked docs that the window sort and the join read.
+    * `dupDocSlices` also uses it to prune its snippet join.
     */
   case class Config(
       minLen: Int,
@@ -98,50 +109,51 @@ object SubstringDedup {
     def reversed: Boolean
     /** The doc as a sequence: binary (bytes) or an array (tokens, ids). */
     def seq: Column
-    /** Exact key of the `len`-unit window at 0-based `pos` (a column
-      * name) of the oriented sequence column named `s`.
+    /** Exact key (binary) of the `len`-unit window at 0-based `pos` (a
+      * column name) of the oriented sequence column named `s`.
       */
     def key(s: String, pos: String, len: Int): Column
   }
 
-  /** UTF-8 bytes of `text` (the reference default). The key is the raw
-    * slice up to 32 bytes (no wider than a sha2-256 digest, so digesting
-    * is pure CPU overhead) and its digest above, which keeps the shuffled
-    * row at a flat 32 B regardless of minLen.
+  /** UTF-8 bytes of `text` (the reference default). The key is the
+    * window's raw digest, a flat 32 B regardless of minLen; it is only
+    * computed above 32 bytes, since at or below that the run scan
+    * compares the raw window the generator carries.
     */
   private[graft] case object Bytes extends WindowUnit {
     val reversed = false
     def seq: Column = encode(col("text"), "UTF-8")
-    def key(s: String, pos: String, len: Int): Column = {
-      val w = expr(s"substring($s, $pos + 1, $len)")
-      if (len <= 32) w else sha2(w, 256)
-    }
+    def key(s: String, pos: String, len: Int): Column =
+      digest(expr(s"substring($s, $pos + 1, $len)"))
   }
 
   /** Whitespace tokens of `text` (reference C2; split ' ' + drop empties).
     * Each token's digit is the polyhash of its UTF-8 bytes: a pure
     * function of the token, so no vocabulary table is built, broadcast or
-    * synchronized. Key: sha2 of the NUL-joined tokens.
+    * synchronized. Key: digest of the NUL-joined tokens.
     */
   private[graft] case class Tokens(reversed: Boolean) extends WindowUnit {
     def seq: Column = filter(split(col("text"), " "), t => t =!= "")
     def key(s: String, pos: String, len: Int): Column =
-      sha2(encode(concat_ws("\u0000", slice(col(s), col(pos) + 1, lit(len))), "UTF-8"), 256)
+      digest(encode(concat_ws("\u0000", slice(col(s), col(pos) + 1, lit(len))), "UTF-8"))
   }
 
   /** A PRE-TOKENIZED `tokens: array<int|long>` field -- the reference's
     * production mode (indexing_v6_sharded.py:205-218 tokenizes up front,
     * the engine consumes u16/u32 id streams): the vocabulary lives with
-    * the caller and the ids are the window digits directly. Key: sha2 of
-    * the comma-joined decimal ids (',' never occurs inside a decimal int,
+    * the caller and the ids are the window digits directly. Key: digest
+    * of the comma-joined decimal ids (',' never occurs inside a decimal int,
     * so the join is injective).
     */
   private[graft] case class Ids(reversed: Boolean) extends WindowUnit {
     def seq: Column = col("tokens").cast("array<long>")
     def key(s: String, pos: String, len: Int): Column =
-      sha2(encode(concat_ws(",",
-        transform(slice(col(s), col(pos) + 1, lit(len)), _.cast("string"))), "UTF-8"), 256)
+      digest(encode(concat_ws(",",
+        transform(slice(col(s), col(pos) + 1, lit(len)), _.cast("string"))), "UTF-8"))
   }
+
+  /** The 32 raw bytes of a window's sha2-256 digest. */
+  private def digest(b: Column): Column = unhex(sha2(b, 256))
 
   /** One row per in-doc window position: (h1, h2, k, pos).
     * pos is a 0-based byte offset; docs shorter than minLen emit nothing
@@ -150,17 +162,17 @@ object SubstringDedup {
   def windows(docs: DataFrame, minLen: Int): DataFrame =
     unitWindows(docs, Bytes, minLen)
 
-  /** The one window-generation call site: (h1, h2, k, pos[, w]) per in-doc
+  /** The one window-generation call site: (h1, h2, k, pos[, x]) per in-doc
     * window of `unit`. Native Generator (functions/Native.scala
     * GraftWindowGen): zero per-position allocation and no typed
     * serialization boundary -- null text (e.g. an image row with no
     * caption) = no windows, same as a doc shorter than minLen (Generate
     * outer=false drops the row). `withBytes` (byte unit only) also emits
-    * each window's raw bytes as `w`.
+    * each window's raw bytes as `x`.
     */
   private def unitWindows(docs: DataFrame, unit: WindowUnit, minLen: Int,
                           withBytes: Boolean = false): DataFrame = {
-    val gen = Seq("h1", "h2", "pos") ++ (if (withBytes) Seq("w") else Nil)
+    val gen = Seq("h1", "h2", "pos") ++ (if (withBytes) Seq("x") else Nil)
     docs
       .select(col("k").cast("long").as("k"), unit.seq.as("b"))
       .select(col("k"),
@@ -168,25 +180,29 @@ object SubstringDedup {
       .select((Seq("h1", "h2", "k") ++ gen.drop(2)).map(col): _*)
   }
 
-  /** Co-locate equal (h1, h2) windows and sort them by (h1, h2, k, pos):
-    * the input contract of every run scan. HASH repartition, not range:
-    * equal keys co-locate either way (all we need -- the reference's
-    * run-aligned boundary rule, h:324-338), but RangePartitioner runs a
-    * separate sampling job over the input, i.e. a second full
-    * window-generation pass. Hash keys are uniform by construction, so
-    * hash partitioning is also perfectly balanced.
+  /** Co-locate equal (h1, h2) windows and sort them by (h1, h2[, x], k,
+    * pos): the input contract of the run scan. HASH repartition, not
+    * range: equal keys co-locate either way (all we need -- the
+    * reference's run-aligned boundary rule, h:324-338), but
+    * RangePartitioner runs a separate sampling job over the input, i.e. a
+    * second full window-generation pass. Hash keys are uniform by
+    * construction, so hash partitioning is also perfectly balanced.
     */
   private def sortedByKey(win: DataFrame): DataFrame =
     win.repartition(col("h1"), col("h2"))
-      .sortWithinPartitions("h1", "h2", "k", "pos")
+      .sortWithinPartitions(
+        (Seq("h1", "h2") ++ win.columns.filter(_ == "x") ++ Seq("k", "pos")).map(col): _*)
 
-  /** Sort-scan run detection that also carries each run's keeper: within a
-    * partition rows arrive sorted by (h1,h2,k,pos), so the first row of a
-    * run is its minimum (k,pos) -- exactly the reference's
-    * min_element-of-run keep rule (h:239-246). Output
-    * (k, pos, keep_k, keep_pos) for every non-first run member.
+  /** The one run scan: rows arrive sorted by (h1, h2, x, k, pos) (a frame
+    * without `x` has x = null, and null equals null), so equal
+    * (h1, h2, x) rows are adjacent and a run's first row is its
+    * (k, pos) minimum -- the reference's min_element-of-run keep rule
+    * (h:239-246). Emits (h1, h2, k, pos, dropped) for every member of a
+    * run of >= 2 rows, dropped = false on the first. Lookahead form: a
+    * row survives iff it CONTINUES its predecessor or its SUCCESSOR
+    * continues it; singleton runs -- the vast majority -- are skipped.
     */
-  private def runScan(win: DataFrame): DataFrame = {
+  private def runMembers(win: DataFrame): DataFrame = {
     // MEASURED (round 6, sf0.1, min-of-2): a WindowExec variant
     // (first_value over partitionBy(h1,h2), which reuses this exact sort
     // and avoids the typed boundary) was SLOWER -- a1 1.68 -> 2.63 s,
@@ -195,19 +211,32 @@ object SubstringDedup {
     // tuple deserialization it removes. The typed adjacent scan stays.
     val spark = win.sparkSession
     import spark.implicits._
+    type Row = (Long, Long, Array[Byte], Long, Long)
+    def same(a: Row, b: Row): Boolean =
+      a._1 == b._1 && a._2 == b._2 && java.util.Arrays.equals(a._3, b._3)
+    val x = if (win.columns.contains("x")) col("x") else lit(null).cast("binary")
     sortedByKey(win)
-      .select("h1", "h2", "k", "pos")
-      .as[(Long, Long, Long, Long)]
+      .select(col("h1"), col("h2"), x, col("k"), col("pos"))
+      .as[(Long, Long, Array[Byte], Long, Long)]
       .mapPartitions { it =>
-        var ph1 = 0L; var ph2 = 0L; var kk = 0L; var kp = 0L; var first = true
-        it.flatMap { case (h1, h2, k, pos) =>
-          val isNewRun = first || h1 != ph1 || h2 != ph2
-          ph1 = h1; ph2 = h2; first = false
-          if (isNewRun) { kk = k; kp = pos; None }
-          else Some((k, pos, kk, kp))
+        val buf = it.buffered
+        new Iterator[(Long, Long, Long, Long, Boolean)] {
+          private var prev: Row = null
+          private var nxt = advance()
+          @annotation.tailrec private def advance(): (Long, Long, Long, Long, Boolean) =
+            if (!buf.hasNext) null
+            else {
+              val r = buf.next()
+              val cont = prev != null && same(prev, r)
+              prev = r
+              if (cont || (buf.hasNext && same(buf.head, r))) (r._1, r._2, r._4, r._5, cont)
+              else advance()
+            }
+          def hasNext: Boolean = nxt != null
+          def next(): (Long, Long, Long, Long, Boolean) = { val r = nxt; nxt = advance(); r }
         }
       }
-      .toDF("k", "pos", "keep_k", "keep_pos")
+      .toDF("h1", "h2", "k", "pos", "dropped")
   }
 
   /** The corpus as (vk, vb): doc key and the ORIENTED unit sequence --
@@ -232,74 +261,15 @@ object SubstringDedup {
     if (pin) pruned.localCheckpoint(true) else pruned
   }
 
-  /** Verify candidate pairs: re-extract the exact key of the window at
-    * both sides of each (k,pos) -> (keep_k,keep_pos) candidate and demand
-    * equality -- the same exactness standard ExactDedup applies to whole
-    * documents, and linear in the number of *duplicate* positions only.
-    *
-    * Shuffle shape: a single linear two-join chain; each extracted window
-    * is reduced to its key IN the join projection, so nothing downstream
-    * ever carries raw windows. (Carrying raw minLen-byte windows between
-    * the joins shuffled ~1 KB per candidate at the reference's production
-    * minLen=500 and measured 61 s of a 110 s job; a distinct-position
-    * pre-extraction table was tried and was WORSE at small minLen -- it
-    * adds a union+distinct and two extra joins over millions of rows.)
-    *
-    * With `prune` (Config.verifyPrune) the corpus side is pruned to the
-    * candidates' doc keys (k union keep_k) and pinned; the caller must
-    * then pin `candidates` (it feeds the key set and the join probe).
-    */
-  private def verifyCandidates(docs: DataFrame, unit: WindowUnit,
-                               candidates: DataFrame, minLen: Int,
-                               prune: Boolean): DataFrame = {
-    val vb0 = corpus(docs, unit)
-    val vb = if (!prune) vb0 else pruneToKeys(vb0, "vk",
-      candidates.select(col("k").as("ck"))
-        .unionAll(candidates.select(col("keep_k").as("ck"))), pin = true)
-    candidates
-      .join(vb, col("k") === col("vk"))
-      .withColumn("wd_self", unit.key("vb", "pos", minLen))
-      .drop("vk", "vb")
-      .join(vb, col("keep_k") === col("vk"))
-      .withColumn("wd_keep", unit.key("vb", "keep_pos", minLen))
-      .where(col("wd_self") === col("wd_keep"))
-      .select("k", "pos")
-  }
-
-  /** Byte-verified removable positions with the verification fused into
-    * the run scan: windows carry their raw bytes through the hash
-    * exchange (GraftWindowGen withBytes), and a continuing run member is
-    * removable iff its bytes equal the run's FIRST member's bytes --
-    * identical keeper-equality contract to `verifyCandidates`, no joins.
-    * Intended for minLen <= 32 (window no wider than a digest).
-    */
-  private def inlineVerifiedRemovable(docs: DataFrame, minLen: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    sortedByKey(unitWindows(docs, Bytes, minLen, withBytes = true))
-      .as[(Long, Long, Long, Long, Array[Byte])]
-      .mapPartitions { it =>
-        var ph1 = 0L; var ph2 = 0L; var kw: Array[Byte] = null; var first = true
-        it.flatMap { case (h1, h2, k, pos, w) =>
-          val isNewRun = first || h1 != ph1 || h2 != ph2
-          ph1 = h1; ph2 = h2; first = false
-          if (isNewRun) { kw = w; None }
-          else if (java.util.Arrays.equals(w, kw)) Some((k, pos))
-          else None // 122-bit collision: bytes differ from the keeper's
-        }
-      }
-      .toDF("k", "pos")
-  }
-
   /** Doc keys ("ck") of the docs that may hold a removable minLen-byte
     * window: every doc holding a run fingerprint (NativeKernels
     * .runFingerprints) that occurs twice overall -- in two docs, or twice
-    * in one. A doc holding a removable window also holds its keeper's
-    * window, or is the keeper's doc, so the runs and keepers among these
-    * docs are exactly those of the whole corpus. Skew-safe: the (k, fp)
-    * rows are pinned, counted per fingerprint with a partial aggregate (a
-    * viral fingerprint collapses map-side) and semi-joined back; no
-    * per-fingerprint doc list is ever built. Keys may repeat.
+    * in one. Every member of a duplicate group holds such a fingerprint,
+    * so the duplicate groups among these docs are exactly those of the
+    * whole corpus. Skew-safe: the (k, fp) rows are pinned, counted per
+    * fingerprint with a partial aggregate (a viral fingerprint collapses
+    * map-side) and semi-joined back; no per-fingerprint doc list is ever
+    * built. Keys may repeat.
     */
   private[graft] def runCandidateKeys(docs: DataFrame, minLen: Int): DataFrame = {
     val fps = docs
@@ -310,43 +280,54 @@ object SubstringDedup {
     fps.join(shared, Seq("fp"), "leftsemi").select(col("k").as("ck"))
   }
 
-  /** Remove ranges (k, s, e) of `unit` windows, in unit offsets over the
-    * (optionally reversed) sequence; `cfg.minLen` counts units.
+  /** The spine: (k, pos, dropped) for every member of an exact duplicate
+    * group of `unit` windows, dropped = false on the group's first
+    * occurrence. `rekey` rewrites the window frame before the run scan
+    * (the forced-collision tests overwrite h1/h2 with constants).
     */
-  private[graft] def removeRanges(docs: DataFrame, unit: WindowUnit, cfg: Config): DataFrame = {
-    val removable =
-      if (cfg.verifyBytes && unit == Bytes && cfg.minLen <= 32) {
-        // INLINE verification (round 6): at minLen <= 32 the raw window is
-        // no wider than the sha2 digest the join path would ship, so carry
-        // the window bytes through the ONE hash exchange and byte-compare
-        // each run member against its run's first row during the scan
-        // itself -- the same candidate-vs-keeper equality the digest joins
-        // compute, with zero corpus re-scans, zero broadcast builds and
-        // zero joins. Above 32 bytes the join path stays (inlining a
-        // 500-byte window would multiply the exchange ~16x; the digests
-        // keep it flat).
-        inlineVerifiedRemovable(docs, cfg.minLen)
-      } else {
-        // FINGERPRINT PREFILTER (bytes above 32): the spine runs over the
-        // marked docs only, pinned once -- the window sort and both
-        // verification joins read that pin, so no verifyPrune is needed
-        val prefilter = unit == Bytes && cfg.minLen > 32
-        val src = if (!prefilter) docs else
-          pruneToKeys(docs.select(col("k").cast("long").as("k"), col("text")),
-            "k", runCandidateKeys(docs, cfg.minLen), pin = true)
-        val prune = cfg.verifyPrune && !prefilter
-        // with the prune, pin the (small: duplicate positions only)
-        // candidate set: it feeds the doc-key prune AND the key joins in
-        // verifyCandidates, and recomputing it would re-run the full
-        // window sort per consumer; without the prune the chain is linear
-        // and stays fully lazy
-        val cand0 = runScan(unitWindows(src, unit, cfg.minLen))
-        if (!cfg.verifyBytes) cand0.select("k", "pos")
-        else verifyCandidates(src, unit,
-          if (prune) cand0.localCheckpoint(true) else cand0, cfg.minLen, prune)
-      }
-    coalesceRanges(removable, cfg.minLen)
+  private[graft] def members(docs: DataFrame, unit: WindowUnit, cfg: Config,
+                             rekey: DataFrame => DataFrame = identity): DataFrame = {
+    // FINGERPRINT PREFILTER (bytes above 32): the spine runs over the
+    // marked docs only, pinned once -- the window sort and the verifier
+    // join read that pin, so no verifyPrune is needed
+    val prefilter = unit == Bytes && cfg.minLen > 32
+    val src = if (!prefilter) docs else
+      pruneToKeys(docs.select(col("k").cast("long").as("k"), col("text")),
+        "k", runCandidateKeys(docs, cfg.minLen), pin = true)
+    // INLINE verification (round 6): at minLen <= 32 the raw window is no
+    // wider than the digest the join would compute, so x = the window
+    // bytes ride the ONE hash exchange -- zero corpus re-scans and zero
+    // joins. Above 32 bytes the join stays (inlining a 500-byte window
+    // would multiply the exchange ~16x; the digests keep it flat).
+    val inline = cfg.verifyBytes && unit == Bytes && cfg.minLen <= 32
+    val hashRuns = runMembers(rekey(unitWindows(src, unit, cfg.minLen, withBytes = inline)))
+    if (inline || !cfg.verifyBytes) hashRuns.select("k", "pos", "dropped")
+    else {
+      // JOIN verification: the hash-run members (a small fraction of the
+      // windows) are joined to the corpus once, keyed exactly IN the join
+      // projection, and scanned again -- no raw window crosses an exchange
+      // (carrying raw 500-byte windows between joins measured 61 s of a
+      // 110 s job, round 2). With the prune, the members are pinned: they
+      // feed the doc-key prune AND the join probe, and recomputing them
+      // would re-run the full window sort per consumer
+      val prune = cfg.verifyPrune && !prefilter
+      val probe = if (prune) hashRuns.localCheckpoint(true) else hashRuns
+      val vb = if (!prune) corpus(src, unit)
+        else pruneToKeys(corpus(src, unit), "vk", probe.select(col("k").as("ck")), pin = false)
+      runMembers(probe.join(vb, col("k") === col("vk"))
+        .select(col("h1"), col("h2"), col("k"), col("pos"),
+          unit.key("vb", "pos", cfg.minLen).as("x")))
+        .select("k", "pos", "dropped")
+    }
   }
+
+  /** Remove ranges (k, s, e) of `unit` windows, in unit offsets over the
+    * (optionally reversed) sequence; `cfg.minLen` counts units: the
+    * dropped members, coalesced.
+    */
+  private[graft] def removeRanges(docs: DataFrame, unit: WindowUnit, cfg: Config,
+                                  rekey: DataFrame => DataFrame = identity): DataFrame =
+    coalesceRanges(members(docs, unit, cfg, rekey).where(col("dropped")), cfg.minLen)
 
   /** Coalesce sorted removable positions into [s, e) ranges per doc.
     * Gaps-and-islands: all windows share length minLen, so ends are
@@ -454,7 +435,7 @@ object SubstringDedup {
   /** A9: index-order verification (reference verify_sa_correctness,
     * h:914-930, driven by verify_sa.py). The reference checks that
     * adjacent suffix-array ranks are non-decreasing under depth-`hack`
-    * compare; our index is the (h1,h2)-sorted window frame, and the two
+    * compare; our index is the spine's sorted window frame, and the two
     * properties the dedup relies on are (a) the exchange+sort actually
     * delivers non-decreasing keys within every partition and (b) every
     * same-key run is byte-homogeneous (a 122-bit collision would merge
@@ -509,79 +490,10 @@ object SubstringDedup {
 
   /** Diagnostics (reference find_dup_ptrs, h:801-837): every member of a
     * duplicate group with dropped flag; the kept (first) one has
-    * dropped=false.
-    *
-    * Verification policy matches removeRanges: with cfg.verifyBytes the
-    * hash-dup rows (a tiny fraction of the corpus) are re-joined to their
-    * actual window bytes and regrouped on those bytes, so a 122-bit hash
-    * collision can neither create a phantom group nor misattribute the
-    * dropped flag. Byte-equal windows always share (h1,h2), so regrouping
-    * within the hash-dup set is exhaustive.
+    * dropped=false. The spine itself (`members`), so it is exact under
+    * hash collisions with cfg.verifyBytes, and `removeRanges` is exactly
+    * its dropped rows, coalesced.
     */
-  def dupPtrs(docs: DataFrame, cfg: Config): DataFrame = {
-    // multi-member hash runs via the same one-pass adjacent scan the
-    // dedup uses (one hash exchange + in-partition sort), instead of the
-    // previous count()-over-(h1,h2)-window + row_number() pass, which ran
-    // the full window frame through WindowExec's per-group buffering
-    // twice (round-6 guide §2.4: same co-location, strictly less
-    // machinery). Emits every member of a >= 2-member run with its
-    // first-occurrence flag.
-    val hashDups = {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      sortedByKey(windows(docs, cfg.minLen))
-        .select("h1", "h2", "k", "pos")
-        .as[(Long, Long, Long, Long)]
-        .mapPartitions { it =>
-          // lookahead run scan: a row survives iff it CONTINUES its
-          // predecessor (dropped=true) or its SUCCESSOR continues it
-          // (the run's first member, dropped=false); singleton runs --
-          // the vast majority -- are skipped right here
-          val buf = it.buffered
-          new Iterator[(Long, Long, Boolean)] {
-            private var ph1 = 0L; private var ph2 = 0L; private var first = true
-            private var nxt: (Long, Long, Boolean) = advance()
-            @annotation.tailrec private def advance(): (Long, Long, Boolean) = {
-              if (!buf.hasNext) null
-              else {
-                val (h1, h2, k, pos) = buf.next()
-                val cont = !first && h1 == ph1 && h2 == ph2
-                ph1 = h1; ph2 = h2; first = false
-                if (cont) (k, pos, true)
-                else if (buf.hasNext && buf.head._1 == h1 && buf.head._2 == h2)
-                  (k, pos, false)
-                else advance()
-              }
-            }
-            def hasNext: Boolean = nxt != null
-            def next(): (Long, Long, Boolean) = { val r = nxt; nxt = advance(); r }
-          }
-        }
-        .toDF("k", "pos", "dropped")
-    }
-    if (!cfg.verifyBytes) {
-      hashDups
-    } else {
-      // group on the exact window key (byte-equality standard; a digest
-      // above 32 bytes keeps the regroup shuffle flat). With verifyPrune
-      // the hash-dup pointer set is pinned (it feeds the doc-key prune
-      // and the key join) and the corpus bytes are pruned to dup docs
-      // before the join.
-      val pinned =
-        if (cfg.verifyPrune) hashDups.select("k", "pos").localCheckpoint(true)
-        else hashDups.select("k", "pos")
-      val vb0 = corpus(docs, Bytes)
-      val vb = if (!cfg.verifyPrune) vb0
-        else pruneToKeys(vb0, "vk", pinned.select(col("k").as("ck")), pin = false)
-      val withDigest = pinned
-        .join(vb, col("k") === col("vk"))
-        .select(col("k"), col("pos"), Bytes.key("vb", "pos", cfg.minLen).as("w"))
-      val byW = Window.partitionBy("w").orderBy("k", "pos")
-      withDigest
-        .withColumn("rn", row_number().over(byW))
-        .withColumn("c2", count(lit(1)).over(Window.partitionBy("w")))
-        .where(col("c2") > 1)
-        .select(col("k"), col("pos"), (col("rn") > 1).as("dropped"))
-    }
-  }
+  def dupPtrs(docs: DataFrame, cfg: Config): DataFrame =
+    members(docs, Bytes, cfg)
 }

@@ -369,6 +369,20 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
     assert(split == whole)
     assert(split.size == 120)
     assert(split.forall(!_._2.contains("\r")))
+    // a bare '\r' is JSON whitespace, not a line end: plain whole, plain
+    // split and gzip all read the same 120 lines
+    val cr = (0 until 120).map(i => s"""{"text": "cr doc $i with padding",\r"id": $i}""")
+    val plainDir = Files.createTempDirectory("graft_split_cr")
+    writePlain(plainDir.resolve("f.jsonl"), cr)
+    val gzDir = Files.createTempDirectory("graft_split_cr_gz")
+    writeGz(gzDir.resolve("f.jsonl.gz"), cr)
+    def read(dir: Path, splitBytes: Long) =
+      JsonlDedupJob.readTree(spark, dir.toString, splitBytes = splitBytes)
+        .select("linenum", "text", "id").as[(Long, String, Long)].collect().toSet
+    val crWhole = read(plainDir, 0)
+    assert(crWhole == (0 until 120).map(i => (i.toLong, s"cr doc $i with padding", i.toLong)).toSet)
+    assert(read(plainDir, 256) == crWhole)
+    assert(read(gzDir, 0) == crWhole)
   }
 
   test("listTree orders by the reference key (crawl= stripped)") {

@@ -62,15 +62,59 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       assert(expected.nonEmpty, s"seed=$seed minLen=$minLen plants no duplicate")
       val df = spark_(docs)
       for (verify <- Seq(true, false); prune <- Seq(false, true)) {
-        val got = SubstringDedup.removeRanges(df,
-          SubstringDedup.Config(minLen, verifyBytes = verify, verifyPrune = prune))
-          .as[(Long, Long, Long)].collect().toSet
+        val cfg = SubstringDedup.Config(minLen, verifyBytes = verify, verifyPrune = prune)
+        val got = SubstringDedup.removeRanges(df, cfg).as[(Long, Long, Long)].collect().toSet
         assert(got == expected, s"seed=$seed minLen=$minLen verify=$verify prune=$prune")
+        // dupPtrs is the spine removeRanges coalesces: the exact groups
+        val ptrs = SubstringDedup.dupPtrs(df, cfg).as[(Long, Long, Boolean)].collect().toSet
+        assert(ptrs == DedupTestOracle.bruteMembers(docs, minLen),
+          s"dupPtrs seed=$seed minLen=$minLen verify=$verify prune=$prune")
       }
     }
   }
 
-  test("plan shape: minLen 32 joins nothing, pruned minLen 500 joins twice") {
+  test("forced hash collisions: every window in one hash run, spine stays exact") {
+    // h1/h2 overwritten by constants: every window of the corpus lands in
+    // ONE hash run, so the verifier alone decides every group. A member
+    // compared only with its hash run's first row would keep B' in a run
+    // [A, B, B'] with B = B' != A.
+    val collide = (w: DataFrame) => w.withColumn("h1", lit(7L)).withColumn("h2", lit(11L))
+    def check(what: String, df: DataFrame, unit: SubstringDedup.WindowUnit, minLen: Int,
+              brute: Set[(Long, Long, Boolean)]): Unit = {
+      assert(DedupTestOracle.dropped(brute).nonEmpty, s"$what plants no duplicate")
+      for (prune <- Seq(false, true)) {
+        val cfg = SubstringDedup.Config(minLen, verifyPrune = prune)
+        val ranges = SubstringDedup.removeRanges(df, unit, cfg, collide)
+          .as[(Long, Long, Long)].collect().toSet
+        assert(ranges == DedupTestOracle.coalesce(DedupTestOracle.dropped(brute), minLen),
+          s"$what prune=$prune ranges")
+        val ptrs = SubstringDedup.members(df, unit, cfg, collide)
+          .as[(Long, Long, Boolean)].collect().toSet
+        assert(DedupTestOracle.dropped(ptrs) == DedupTestOracle.dropped(brute),
+          s"$what prune=$prune dropped")
+        assert(ptrs == brute, s"$what prune=$prune members")
+      }
+    }
+    val docs = plantedDocs(4, 12)
+    for (minLen <- Seq(6, 40)) // inline bytes, join verifier
+      check(s"bytes minLen=$minLen", spark_(docs), SubstringDedup.Bytes, minLen,
+        DedupTestOracle.bruteMembers(docs, minLen))
+    val words = "aa bb cc dd ee".split(" ")
+    val r = new scala.util.Random(9)
+    val wdocs = (0 until 20).map { i =>
+      (i.toLong, (0 until r.nextInt(25)).map(_ => words(r.nextInt(words.length))).mkString(" "))
+    }
+    val idsDf = wdocs.map { case (k, t) =>
+      (k, t.split(' ').filter(_.nonEmpty).map(w => words.indexOf(w).toLong))
+    }.toDF("k", "tokens")
+    for (rev <- Seq(false, true)) {
+      val brute = DedupTestOracle.bruteTokenMembers(wdocs, 3, rev)
+      check(s"tokens reversed=$rev", spark_(wdocs), SubstringDedup.Tokens(rev), 3, brute)
+      check(s"ids reversed=$rev", idsDf, SubstringDedup.Ids(rev), 3, brute)
+    }
+  }
+
+  test("plan shape: minLen 32 joins nothing, pruned minLen 500 joins once") {
     val r = new scala.util.Random(3)
     val base = (0 until 20).map(i => (i.toLong, (0 until 900).map(_ => "abcdefgh"(r.nextInt(8))).mkString))
     val df = spark_(base ++ base.take(3).map { case (k, t) => (k + 100, t) })
@@ -81,12 +125,12 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     }
     // inline verification: the window bytes ride the one hash exchange
     assert(joins(SubstringDedup.removeRanges(df, SubstringDedup.Config(32))) == 0)
-    // candidates and the pruned corpus are pinned, so the executed plan
-    // holds just the two key joins (self side, keeper side)
+    assert(joins(SubstringDedup.dupPtrs(df, SubstringDedup.Config(32))) == 0)
+    // the prefilter pins the marked docs, so the executed plan holds just
+    // the verifier's one join of the hash-run members to those docs
     val pruned = SubstringDedup.Config(500, verifyPrune = true)
-    assert(joins(SubstringDedup.removeRanges(df, pruned)) == 2)
-    // pinned pointers joined to the (unpinned) semi-join-pruned corpus
-    assert(joins(SubstringDedup.dupPtrs(df, pruned)) == 2)
+    assert(joins(SubstringDedup.removeRanges(df, pruned)) == 1)
+    assert(joins(SubstringDedup.dupPtrs(df, pruned)) == 1)
   }
 
   test("byte prefilter edge cases: minLen 33..500 x verify match brute force") {
@@ -146,34 +190,9 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       .as[(Long, Long, Long)].collect().toSet == bruteRanges(docs, 500))
   }
 
-  /** Token-mode brute oracle: first-occurrence keep over minLenTok-token
-    * windows of the (optionally reversed) whitespace token stream,
-    * interval union in token offsets.
-    */
-  private def bruteTokenRanges(docs: Seq[(Long, String)], minLenTok: Int,
-                               reversed: Boolean): Set[(Long, Long, Long)] = {
-    val toks = docs.map { case (k, t) =>
-      val ws = t.split(' ').filter(_.nonEmpty)
-      (k, if (reversed) ws.reverse else ws)
-    }
-    val seen = scala.collection.mutable.Set.empty[Seq[String]]
-    val removable = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-    for ((k, ws) <- toks.sortBy(_._1); pos <- 0 to ws.length - minLenTok) {
-      val w = ws.slice(pos, pos + minLenTok).toSeq
-      if (seen(w)) removable += ((k, pos)) else seen += w
-    }
-    removable.groupBy(_._1).flatMap { case (k, ps) =>
-      val sorted = ps.map(_._2).sorted
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      var s = sorted.head; var e = sorted.head + minLenTok
-      for (p <- sorted.tail) {
-        if (p <= e) e = p + minLenTok
-        else { out += ((k, s.toLong, e.toLong)); s = p; e = p + minLenTok }
-      }
-      out += ((k, s.toLong, e.toLong))
-      out
-    }.toSet
-  }
+  def bruteTokenRanges(docs: Seq[(Long, String)], minLenTok: Int,
+                       reversed: Boolean): Set[(Long, Long, Long)] =
+    DedupTestOracle.bruteTokenRanges(docs, minLenTok, reversed)
 
   test("token-unit dedup (C2): forward and reversed match brute force") {
     val words = "aa bb cc dd ee".split(" ")
@@ -186,6 +205,10 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       val got = SubstringDedup.removeRangesTokens(df, 4, verify = verify, reversed = rev,
         verifyPrune = prune).as[(Long, Long, Long)].collect().toSet
       assert(got == bruteTokenRanges(docs, 4, rev), s"reversed=$rev verify=$verify prune=$prune")
+      val ptrs = SubstringDedup.members(df, SubstringDedup.Tokens(rev),
+        SubstringDedup.Config(4, verify, prune)).as[(Long, Long, Boolean)].collect().toSet
+      assert(ptrs == DedupTestOracle.bruteTokenMembers(docs, 4, rev),
+        s"members reversed=$rev verify=$verify prune=$prune")
     }
   }
 
@@ -210,6 +233,10 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
         val viaIds = SubstringDedup.removeRangesIds(idsDf, 4, verify = verify, reversed = rev,
           verifyPrune = prune).as[(Long, Long, Long)].collect().toSet
         assert(viaIds == viaTokens, s"reversed=$rev verify=$verify prune=$prune")
+        val ptrs = SubstringDedup.members(idsDf, SubstringDedup.Ids(rev),
+          SubstringDedup.Config(4, verify, prune)).as[(Long, Long, Boolean)].collect().toSet
+        assert(ptrs == DedupTestOracle.bruteTokenMembers(docs, 4, rev),
+          s"members reversed=$rev verify=$verify prune=$prune")
       }
     }
     // ids ARE the content: two docs with different provenance but equal
@@ -445,9 +472,13 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val minLen = 8
     val expected = bruteRanges(docs, minLen)
     val df = spark_(docs)
-    val got = SubstringDedup.removeRanges(df, SubstringDedup.Config(minLen))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got == expected)
+    for (verify <- Seq(true, false)) {
+      val cfg = SubstringDedup.Config(minLen, verifyBytes = verify)
+      val got = SubstringDedup.removeRanges(df, cfg).as[(Long, Long, Long)].collect().toSet
+      assert(got == expected, s"verify=$verify")
+      assert(SubstringDedup.dupPtrs(df, cfg).as[(Long, Long, Boolean)].collect().toSet ==
+        DedupTestOracle.bruteMembers(docs, minLen), s"dupPtrs verify=$verify")
+    }
 
     val annotated = SubstringDedup.annotate(df, SubstringDedup.Config(minLen))
     val byK = docs.toMap
