@@ -12,15 +12,23 @@ import org.apache.spark.sql.functions._
   *                         after one untimed warm-up run of that query
   *   noop [substr...]      same but through the noop sink (computes every
   *                         column; guide §1.4)
+  *   queryjobs [substr...] each matching query's Spark jobs: wall time
+  *                         and description of every job as it ends, one
+  *                         untimed warm-up run then N traced runs
   *   explain <dir> [s...]  write .explain("formatted") per matching query
   *                         to <dir>/<name>.txt
   *   pipeline [nImages]    one DedupPipeline pass (Bench.pipelinePass)
+  *   scaling [levels...]   Bench.scalingPass at the given local[N] levels
+  *                         (2 8 32 by default) on a SPARK_GRAFT_BENCH_IMAGES
+  *                         (100000) fixture, SPARK_GRAFT_SCALING_ROUNDS (3)
+  *                         rounds, after one untimed warm-up pass; one JSON
+  *                         line with the efficiency and its detail
   *   jsonl [nDocs]         one JSONL workflow pass (Bench.jsonlPass)
   *   minlen [nDocs] [nIndexDocs]
   *                         the reference's minlen range (200 / 500 /
   *                         1000) on the JSONL fixture: the per-minLen
   *                         sort-scan at each minLen (50000 docs), then on a
-  *                         5000-doc slice against one suffix-index build
+  *                         60-doc slice against one suffix-index build
   *                         (maxDepth 1024) answering all three, with an
   *                         index-vs-sort-scan differential at minLen 500;
   *                         one JSON line (BASELINE.md)
@@ -54,12 +62,31 @@ object BenchExtra {
     })
   }
 
+  /** Scaling efficiency between local[N] levels on identical input.
+    * Bench.scalingPass starts a fresh session per level, so this runs
+    * before main opens its shared session.
+    */
+  private def scaling(args: Seq[String]): Unit = {
+    val levels = if (args.nonEmpty) args else Seq("2", "8", "32")
+    val rounds = sys.env.getOrElse("SPARK_GRAFT_SCALING_ROUNDS", "3").toInt
+    val nBase = sys.env.getOrElse("SPARK_GRAFT_BENCH_IMAGES", "100000").toInt
+    val fixtureBase = "/dev/shm/graft-fixtures/images_bench"
+    // generate + warm the fixture (and codegen paths) once, untimed
+    locally {
+      val s = Bench.session(levels.last)
+      try Bench.pipelinePass(s, fixtureBase, nBase) finally s.stop()
+    }
+    val (efficiency, _, json) = Bench.scalingPass(fixtureBase, nBase, rounds, levels)
+    println(s"""{"metric":"scaling_efficiency","value":$efficiency,"unit":"ratio","detail":$json}""")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_EXTRA_RUNS", "2").toInt
     val cmd = args.headOption.getOrElse("queries")
     val rest = args.drop(1).toSeq
+    if (cmd == "scaling") { scaling(rest); return }
     val spark = Bench.session(cpus)
 
     def timed[A](what: String)(f: => A): (A, Double) = {
@@ -133,55 +160,6 @@ object BenchExtra {
             println(f"[extra] $name TOTAL ${(System.nanoTime() - t0) / 1e9}%7.2f s (load1=${Bench.load1()}%.1f)")
           }
         }
-      case "pipejobs" =>
-        // job-level trace of DedupPipeline.run's eager part (the id map)
-        traceJobs(spark)
-        val n = rest.headOption.map(_.toInt).getOrElse(150000)
-        val images = graft.sources.ImagesGen.writeFixture(
-          spark, s"/dev/shm/graft-fixtures/images_bench-$n-p40", n, period = 40)
-        val res0 = DedupPipeline.run(spark, images, DedupPipeline.Config())
-        val caps = res0.keyed.select(col("k"), col("caption").as("text"))
-          .localCheckpoint(true)
-        (1 to runs).foreach { i =>
-          spark.sparkContext.setJobDescription(s"substr_noverify$i")
-          var t0 = System.nanoTime()
-          val n1 = operators.SubstringDedup.removeRanges(
-            caps, operators.SubstringDedup.Config(32, verifyBytes = false)).count()
-          println(f"[extra] substr_noverify[$i] ${(System.nanoTime() - t0) / 1e9}%7.2f s rows=$n1")
-          spark.sparkContext.setJobDescription(s"substr_verify$i")
-          t0 = System.nanoTime()
-          val n2 = operators.SubstringDedup.removeRanges(
-            caps, operators.SubstringDedup.Config(32)).count()
-          println(f"[extra] substr_verify[$i] ${(System.nanoTime() - t0) / 1e9}%7.2f s rows=$n2")
-        }
-      case "pipestages" =>
-        // per-stage breakdown of DedupPipeline (each branch counted
-        // separately; the id-map pin happens inside run())
-        val n = rest.headOption.map(_.toInt).getOrElse(150000)
-        val images = graft.sources.ImagesGen.writeFixture(
-          spark, s"/dev/shm/graft-fixtures/images_bench-$n-p40", n, period = 40)
-        def time(what: String)(f: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val rows = f
-          println(f"[extra] $what%-18s ${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows (load1=${Bench.load1()}%.1f)")
-        }
-        (1 to runs).foreach { i =>
-          println(s"[extra] ---- pass $i ----")
-          val t0 = System.nanoTime()
-          val res = DedupPipeline.run(spark, images, DedupPipeline.Config())
-          println(f"[extra] run() (id map)   ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-          time("exact_edges")(res.exactEdges.count())
-          val caps = res.keyed.select(col("k"), col("caption").as("text"))
-          time("substr_ranges")(operators.SubstringDedup.removeRanges(
-            caps, operators.SubstringDedup.Config(32)).count())
-          time("substr_noverify")(operators.SubstringDedup.removeRanges(
-            caps, operators.SubstringDedup.Config(32, verifyBytes = false)).count())
-          time("annotated")(res.annotated.agg(count(lit(1)),
-            sum(size(col("sa_remove_ranges")))).collect()(0).getLong(0))
-          time("near_edges")(res.nearEdges.count())
-          time("phash_edges")(res.phashEdges.count())
-          time("clusters")(res.clusters.count())
-        }
       case "jsonl" =>
         val n = rest.headOption.map(_.toInt).getOrElse(50000)
         (1 to runs).foreach { i =>
@@ -191,7 +169,9 @@ object BenchExtra {
         }
       case "minlen" =>
         val nDocs = rest.headOption.map(_.toInt).getOrElse(50000)
-        val nIdxDocs = rest.lift(1).map(_.toInt).getOrElse(5000)
+        // the index carries up to maxDepth bytes per text byte through its
+        // exchange: 60 docs (~0.4 MB of text) already move ~0.4 GB
+        val nIdxDocs = rest.lift(1).map(_.toInt).getOrElse(60)
         val minLens = Seq(200, 500, 1000)
         def fixture(n: Int) = {
           val dir = s"/dev/shm/graft-fixtures/jsonl-in-$n"

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{PolyHash, Shingles}
+import graft.functions.Shingles
 
 /** DuckDB-SQL reimplementation of the engine's hash primitives, used to
   * build EXACT oracles for the MinHash/LSH/SimHash family (VERDICT r1
@@ -273,7 +273,4 @@ object OracleSqlGen {
        |SELECT qid, id, CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, id) AS INT) AS rn
        |FROM sims QUALIFY rn <= $k""".stripMargin
   }
-
-  /** Sanity self-check used by tests: mix64 in Scala == reference. */
-  def mix64Ref(z: Long): Long = PolyHash.mix64(z)
 }

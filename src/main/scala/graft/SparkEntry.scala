@@ -334,17 +334,11 @@ object SparkEntry {
     // count (the MOSS match-detection join). Self-join on the narrow
     // (k, fp) table only, never on documents. n=24 so a collision means a
     // real >= 24-char shared run, not a common English fragment -- at
-    // n=8 the join degenerates toward all-pairs.
+    // n=8 the join degenerates toward all-pairs. Every pair in a bucket
+    // is part of the answer, hot buckets included, exactly as the oracle
+    // asks.
     "winnow_candidate_pairs" -> ((s, dir) => {
-      // hot-bucket prune (cap 10000) before the self-join: a fp bucket
-      // beyond the cap is boilerplate whose self-join would go quadratic
-      // at corpus scale (TextStats.pruneHotFingerprints; same guard as
-      // MinHashLSH's maxBucketSize). The driver fixture has no bucket
-      // anywhere near the cap, so the result -- and the oracle -- is
-      // unchanged (oracle compatibility verified by the driver's hash).
-      val fp = TextStats.pruneHotFingerprints(
-        TextStats.winnowFingerprints(asciiGuard(docsWithDups(s, dir)), 24, 8),
-        10000L)
+      val fp = TextStats.winnowFingerprints(asciiGuard(docsWithDups(s, dir)), 24, 8)
       fp.as("x").join(fp.as("y"),
           col("x.fp") === col("y.fp") && col("x.k") < col("y.k"))
         .groupBy(col("x.k").as("a"), col("y.k").as("b"))

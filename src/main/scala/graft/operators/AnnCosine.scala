@@ -12,11 +12,12 @@ import graft.functions.PolyHash
   *    against the corpus. The corpus is streamed once per partition; only
   *    (query, id, sim) triples survive, then a per-query top-k window.
   *    This is the baseline/verifier.
-  *  - `lshTopK`: sign-random-projection (hyperplane) LSH -- each vector
-  *    gets `tables` bucket keys of `planeBits` sign bits from seeded
-  *    deterministic hyperplanes; candidates = bucket collisions in any
-  *    table; exact cosine re-rank on candidates only. The scale path: the
-  *    cross product never happens, just `tables` equi-joins.
+  *  - `lshTopKInt`: sign-random-projection (hyperplane) LSH -- each
+  *    vector gets `tables` bucket keys of `planeBits` sign bits from
+  *    seeded deterministic integer hyperplanes; candidates = bucket
+  *    collisions in any table; exact cosine re-rank on candidates only.
+  *    The scale path: the cross product never happens, just `tables`
+  *    equi-joins.
   *
   * All dot products run in double precision over codegen'd
   * higher-order-array functions (zip_with + aggregate) -- no UDF.
@@ -50,14 +51,6 @@ object AnnCosine {
       .select(col("qid"), col("id"), round(col("sim"), 6).as("sim"), col("rn"))
   }
 
-  /** Deterministic pseudo-random unit-ish hyperplanes: component j of
-    * plane p in table t = mix64-derived value in [-1, 1).
-    */
-  private def planeVal(table: Int, plane: Int, j: Int): Double = {
-    val h = PolyHash.mix64((table.toLong << 40) ^ (plane.toLong << 20) ^ j.toLong ^ 0x9e11L)
-    (h >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0
-  }
-
   /** Integer-valued hyperplane component in [-3, 3]: with integer-valued
     * vectors, every dot product is exact integer arithmetic, so the sign
     * bits (and hence buckets, candidates, and the whole top-k) are exactly
@@ -68,18 +61,14 @@ object AnnCosine {
     Math.floorMod(
       PolyHash.mix64((table.toLong << 40) ^ (plane.toLong << 20) ^ j.toLong ^ 0x51a9L), 7) - 3
 
-  def intPlanes(tables: Int, planeBits: Int, dim: Int): Array[Array[Array[Double]]] =
+  private def intPlanes(tables: Int, planeBits: Int, dim: Int): Array[Array[Array[Double]]] =
     Array.tabulate(tables, planeBits, dim)((t, p, j) => intPlaneVal(t, p, j).toDouble)
 
   /** (id, table, bucket): sign-bit bucket per table, computed in one
     * mapPartitions pass, no shuffle.
     */
-  def bucketTable(corpus: DataFrame, dim: Int, tables: Int, planeBits: Int): DataFrame =
-    bucketTableWith(corpus,
-      Array.tabulate(tables, planeBits, dim)((t, p, j) => planeVal(t, p, j)))
-
-  private def bucketTableWith(corpus: DataFrame,
-                              planes: Array[Array[Array[Double]]]): DataFrame = {
+  private def bucketTable(corpus: DataFrame,
+                          planes: Array[Array[Array[Double]]]): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val tables = planes.length
@@ -105,20 +94,22 @@ object AnnCosine {
   }
 
   /** LSH-accelerated top-k: bucket-collision candidates, exact re-rank.
-    * Approximate -- tests measure recall vs bruteTopK.
-    */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-              dim: Int, tables: Int = 8, planeBits: Int = 10): DataFrame =
-    lshTopKWith(queries, corpus, k,
-      Array.tabulate(tables, planeBits, dim)((t, p, j) => planeVal(t, p, j)))
-
-  /** `lshTopK` over integer-valued hyperplanes -- same plan, but every
-    * bucket bit is the sign of an exact integer dot product. Intended for
-    * integer-valued vectors, where the full result is oracle-checkable.
+    * Every bucket bit is the sign of an integer-hyperplane dot product, so
+    * on integer-valued vectors the full result is oracle-checkable; on
+    * arbitrary vectors it is approximate (tests measure recall against
+    * bruteTopK).
     */
   def lshTopKInt(queries: DataFrame, corpus: DataFrame, k: Int,
-                 dim: Int, tables: Int, planeBits: Int): DataFrame =
-    lshTopKWith(queries, corpus, k, intPlanes(tables, planeBits, dim))
+                 dim: Int, tables: Int, planeBits: Int): DataFrame = {
+    val planes = intPlanes(tables, planeBits, dim)
+    val cb = bucketTable(corpus.select(col("id"), col("vec")), planes)
+    val qb = bucketTable(queries.select(col("qid").as("id"), col("vec")), planes)
+      .withColumnRenamed("id", "qid")
+    val cand = qb.join(cb, Seq("table", "bucket"))
+      .where(col("qid") =!= col("id"))
+      .select("qid", "id").distinct()
+    rerank(cand, queries, corpus, k)
+  }
 
   /** Embedding-cosine near-duplicate pairs -- the dedup-flavored use of
     * the ANN machinery: all (a, b, sim) with cosine >= threshold among
@@ -130,7 +121,7 @@ object AnnCosine {
     */
   def nearDupPairsInt(corpus: DataFrame, threshold: Double,
                       dim: Int, tables: Int, planeBits: Int): DataFrame = {
-    val b = bucketTableWith(corpus.select(col("id"), col("vec")),
+    val b = bucketTable(corpus.select(col("id"), col("vec")),
       intPlanes(tables, planeBits, dim))
     val cand = b.as("x")
       .join(b.as("y"),
@@ -145,17 +136,6 @@ object AnnCosine {
       .withColumn("sim", cosine("qv", "cv"))
       .where(col("sim") >= threshold)
       .select(col("a"), col("b"), round(col("sim"), 6).as("sim"))
-  }
-
-  private def lshTopKWith(queries: DataFrame, corpus: DataFrame, k: Int,
-                          planes: Array[Array[Array[Double]]]): DataFrame = {
-    val cb = bucketTableWith(corpus.select(col("id"), col("vec")), planes)
-    val qb = bucketTableWith(queries.select(col("qid").as("id"), col("vec")), planes)
-      .withColumnRenamed("id", "qid")
-    val cand = qb.join(cb, Seq("table", "bucket"))
-      .where(col("qid") =!= col("id"))
-      .select("qid", "id").distinct()
-    rerank(cand, queries, corpus, k)
   }
 
   /** Exact cosine re-rank of a (qid, id) candidate table: the shared tail

@@ -125,26 +125,4 @@ object TextStats {
         explode(graft.functions.GraftFunctions
           .winnow(encode(col(textCol), "UTF-8"), n, w)).as("fp"))
   }
-
-  /** Left-anti prune of (k, fp) rows whose fingerprint bucket exceeds
-    * `maxBucketSize` -- the guard a fingerprint-collision self-join needs
-    * before it can run at corpus scale: a fingerprint selected out of a
-    * viral boilerplate run (license header, templated prose) lands in
-    * 1e5+ docs, and joining that bucket with itself fans out
-    * quadratically. A fp shared by thousands of documents is boilerplate,
-    * not a plagiarism signal -- the same rationale and shape as
-    * MinHashLSH.candidatePairs' maxBucketSize prune.
-    */
-  def pruneHotFingerprints(fp: DataFrame, maxBucketSize: Long): DataFrame =
-    // bucket size via a window count over fp: the downstream
-    // fingerprint-collision join keys on fp too, so this exchange is the
-    // one the join pays anyway (a count-aggregate + left-anti variant
-    // measured 2.5x slower on the driver query -- extra agg exchange +
-    // either a pin or a third fingerprint scan). A viral bucket lands in
-    // one task but only STREAMS through the count -- linear, bounded,
-    // no fan-out.
-    fp.withColumn("_n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("fp")))
-      .where(col("_n") <= maxBucketSize)
-      .drop("_n")
 }

@@ -1,28 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Structured Streaming surface. The reference is strictly batch
-  * (SURVEY.md §2.I), but a training-data engine needs an ingest path:
-  * file-source streaming over the same table layout, watermarked windowed
-  * aggregation, and the batch-equivalent transform shared so the streaming
-  * query is just `readStream` + the same column expressions.
+/** Event-time windowed aggregation over the events table (the
+  * `stream_window_counts` query). Built from column expressions only, so
+  * the same transform runs unchanged on a batch or a streaming DataFrame.
   */
 object EventStream {
 
-  val schema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** Shared transform: 5-minute tumbling-window counts per event type.
-    * Works identically on a batch or streaming DataFrame.
-    */
+  /** 5-minute tumbling-window counts and value totals per event type. */
   def windowCounts(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "5 minutes").as("win"), col("event_type"))
@@ -30,39 +17,4 @@ object EventStream {
       .select(
         date_format(col("win.start"), "yyyy-MM-dd HH:mm").as("win_start"),
         col("event_type"), col("n"), col("total_value"))
-
-  /** Streaming variant with a watermark (late data beyond 10 min dropped).
-    * Tests drive it with the file source over a testdata dir + memory sink.
-    */
-  def streamingWindowCounts(spark: SparkSession, dir: String): DataFrame =
-    windowCounts(
-      spark.readStream.schema(schema).parquet(dir)
-        .withWatermark("ts", "10 minutes"))
-
-  /** Streaming exact dedup on a content key: first occurrence of each key
-    * passes, later copies are dropped, with state bounded by the watermark
-    * (duplicates are only tracked while their event time is within the
-    * watermark window -- the streaming analogue of ExactDedup's
-    * first-occurrence keep for an ingest pipeline; state never grows
-    * unboundedly on a 10^12-row stream).
-    */
-  def streamingDedup(spark: SparkSession, dir: String,
-                     keyCols: Seq[String] = Seq("user_id", "event_type"),
-                     watermark: String = "10 minutes"): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Batch reference for streamingDedup on a static dir: first occurrence
-    * per key in event-time order (ties by event_id for determinism).
-    */
-  def batchDedup(events: DataFrame,
-                 keyCols: Seq[String] = Seq("user_id", "event_type")): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*).orderBy(col("ts"), col("event_id"))
-    events
-      .withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1)
-      .drop("_rn")
-  }
 }

@@ -158,30 +158,6 @@ class NearDupSpec extends AnyFunSuite with SparkTestBase {
     assert(fp(0L).size >= (len0 - n + 1) / (2 * w))
   }
 
-  test("winnow hot-bucket prune bounds a viral fingerprint's join fan-out") {
-    import org.apache.spark.sql.functions.col
-    val n = 8; val w = 4
-    val viral = "SPDX-License-Identifier: Apache-2.0 boilerplate header" // shared by everyone
-    val docs = (0L until 50L).map(k => (k, s"$viral unique body $k ${k * 7919}")).toDF("k", "text")
-    val fp = graft.operators.TextStats.winnowFingerprints(docs, n, w)
-    // uncapped: the boilerplate fp buckets put every doc in a shared
-    // bucket -> ~50*49/2 candidate pairs from boilerplate alone
-    val uncapped = fp.as("x").join(fp.as("y"),
-        col("x.fp") === col("y.fp") && col("x.k") < col("y.k"))
-      .select("x.k", "y.k").distinct().count()
-    assert(uncapped >= 1000L, s"fixture should be viral, got $uncapped pairs")
-    // capped at 10: every bucket with more than 10 members (the
-    // boilerplate ones) is dropped before the join, so the quadratic
-    // fan-out disappears while private fingerprints survive
-    val pruned = graft.operators.TextStats.pruneHotFingerprints(fp, 10L)
-    val capped = pruned.as("x").join(pruned.as("y"),
-        col("x.fp") === col("y.fp") && col("x.k") < col("y.k"))
-      .select("x.k", "y.k").distinct().count()
-    assert(capped == 0L, s"capped join should drop boilerplate-only pairs, got $capped")
-    // docs keep their non-viral fingerprints
-    assert(pruned.count() > 0L)
-  }
-
   test("minhash signature similarity approximates jaccard") {
     val seeds = Shingles.seeds(256)
     val r = new scala.util.Random(41)

@@ -29,86 +29,26 @@ class StageAndStreamSpec extends AnyFunSuite with SparkTestBase {
     assert(m2 == ((19L, 7L)))
   }
 
-  test("streaming dedup keeps exactly one row per key, keys match batch") {
-    val src = Files.createTempDirectory("graft_sdedup").toString
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events.write.mode("overwrite").parquet(src)
-    val q = EventStream.streamingDedup(spark, src)
-      .writeStream.format("memory").queryName("sd")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamedKeys = spark.table("sd")
-      .select($"user_id", $"event_type").as[(Long, String)].collect()
-    val batchKeys = EventStream.batchDedup(events)
-      .select($"user_id", $"event_type").as[(Long, String)].collect()
-    // one survivor per key; which physical row survives is processing-order
-    // dependent in streaming, so parity is on the key multiset
-    assert(streamedKeys.length == streamedKeys.distinct.length)
-    assert(streamedKeys.toSet == batchKeys.toSet)
-    assert(streamedKeys.length == batchKeys.length)
-  }
-
-  test("streaming image ingest dedup admits exactly what batch ExactDedup keeps") {
-    val dir = Files.createTempDirectory("graft_ingest").toString + "/images"
-    // period=5 plants plenty of exact dups (ImagesGen kind=exact)
-    val images = graft.sources.ImagesGen.writeFixture(spark, dir, 300, period = 5)
-
-    val q = graft.streaming.IngestDedup.streamingDedup(spark, dir)
-      .writeStream.format("memory").queryName("ingest")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("ingest").select($"digest").as[String].collect()
-
-    // batch reference: the pipeline's exact-dedup stage on the same table
-    val batchKept = graft.operators.ExactDedup.flag(
-        images.select(expr("xxhash64(image_id)").as("k"), // unique per row
-          concat(sha2($"bytes", 256),
-            DedupPipeline.nullSafeCaption($"caption")).as("content")), "content")
-      .where(!$"is_dup")
-    // some payloads really are duplicated, so the stream dropped rows...
-    assert(images.count() > streamed.length)
-    // ...and what survived is exactly one row per distinct content, the
-    // same content set batch ExactDedup keeps
-    assert(streamed.length == streamed.distinct.length)
-    assert(streamed.length == batchKept.count())
-    val batchDigests = images
-      .withColumn("digest", graft.streaming.IngestDedup.contentDigest)
-      .select($"digest").distinct().as[String].collect()
-    assert(streamed.toSet == batchDigests.toSet)
-  }
-
   test("null captions: distinct images are NOT collapsed by the content digest") {
-    // regression: a NULL caption nulled the whole concat, and groupBy /
-    // dropDuplicates treat NULLs as equal -- every distinct null-caption
-    // image collapsed into one arbitrarily-kept row
-    val dir = Files.createTempDirectory("graft_nullcap").toString + "/images"
-    val rows = Seq(
+    // regression: a NULL caption nulled the whole content concat, so the
+    // content digest was NULL too and null-caption images either collapsed
+    // into one group or dropped out of exact dedup altogether
+    val images = Seq(
       ("i0", Array[Byte](1, 2, 3), 1, 1, "png", null.asInstanceOf[String], 10L),
       ("i1", Array[Byte](4, 5, 6), 1, 1, "png", null.asInstanceOf[String], 11L),
       ("i2", Array[Byte](1, 2, 3), 1, 1, "png", null.asInstanceOf[String], 10L), // true dup of i0
       ("i3", Array[Byte](1, 2, 3), 1, 1, "png", "cap", 10L)) // same bytes, real caption
       .toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
-    rows.write.mode("overwrite").parquet(dir)
 
-    val q = graft.streaming.IngestDedup.streamingDedup(spark, dir)
-      .writeStream.format("memory").queryName("nullcap")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val admitted = spark.table("nullcap").select($"image_id").as[String].collect().toSet
-    // i0/i1 distinct bytes -> both admitted; i2 duplicates i0; i3's real
-    // caption distinguishes it from the null-caption i0
-    assert(admitted.intersect(Set("i0", "i2")).size == 1)
-    assert(admitted.contains("i1") && admitted.contains("i3"))
-    assert(admitted.size == 3)
-
-    // the FULL batch pipeline survives null captions end to end: exactly
-    // one exact dup edge (i2 -> i0), every image clustered, null-caption
-    // docs get empty annotate ranges (no windows, not an NPE)
-    val res = DedupPipeline.run(spark, spark.read.parquet(dir), DedupPipeline.Config())
-    assert(res.exactEdges.count() == 1)
+    // the batch pipeline survives null captions end to end: exactly one
+    // exact dup edge, i2 -> i0 (i1's distinct bytes and i3's real caption
+    // keep them apart), every image clustered, null-caption docs get
+    // empty annotate ranges (no windows, not an NPE)
+    val res = DedupPipeline.run(spark, images, DedupPipeline.Config())
+    val ids = res.keyed.select($"k", $"image_id").as[(Long, String)].collect().toMap
+    val edges = res.exactEdges.select($"a", $"b").as[(Long, Long)].collect()
+      .map { case (a, b) => (ids(b), ids(a)) }
+    assert(edges.toSeq == Seq(("i2", "i0")))
     assert(res.clusters.count() == 4)
     assert(res.annotated.where($"caption".isNull)
       .select(size($"sa_remove_ranges")).as[Int].collect().forall(_ == 0))
@@ -118,7 +58,11 @@ class StageAndStreamSpec extends AnyFunSuite with SparkTestBase {
     val src = Files.createTempDirectory("graft_stream").toString
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     events.write.mode("overwrite").parquet(src)
-    val q = EventStream.streamingWindowCounts(spark, src)
+    // a watermark needs TIMESTAMP; the fixture stores TIMESTAMP_NTZ
+    val stream = spark.readStream.schema(events.schema).parquet(src)
+      .withColumn("ts", $"ts".cast("timestamp"))
+      .withWatermark("ts", "10 minutes")
+    val q = EventStream.windowCounts(stream)
       .writeStream.format("memory").queryName("wc")
       .outputMode("append").start()
     q.processAllAvailable()
