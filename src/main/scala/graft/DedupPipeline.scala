@@ -26,22 +26,22 @@ import graft.plans.Stage
   */
 object DedupPipeline {
 
-  /** Defaults: word-3-gram MinHash (char shingles over a narrow vocabulary
-    * flood LSH buckets -- see MinHashLSH.Config), Jaccard 0.6 verification,
-    * Hamming radius 4 on the 64 phash bits, substring minLen 32 bytes.
+  /** Defaults: word-3-gram MinHash (see MinHashLSH.Config), Jaccard 0.6
+    * verification, Hamming radius 4 on the 64 phash bits, substring
+    * minLen 32 bytes.
     */
   case class Config(
       minLen: Int = 32,
-      minhash: MinHashLSH.Config = MinHashLSH.Config(shingleLen = 3, wordShingles = true),
+      minhash: MinHashLSH.Config = MinHashLSH.Config(),
       jaccThreshold: Double = 0.6,
       hammingRadius: Int = 4)
 
   /** Null-safe caption for content-digest purposes: a NULL caption would
-    * null the whole concat, and both groupBy and dropDuplicates treat
-    * NULLs as equal -- every distinct image with a null caption would
-    * collapse into one arbitrarily-kept row. The sentinel starts with a
-    * NUL byte, which no real caption string contains, so it can never
-    * collide with a literal caption value.
+    * null the whole concat, and ExactDedup.flag groups NULL content as one
+    * value -- every distinct image with a null caption would collapse into
+    * one group. The sentinel starts with a NUL byte, which no real caption
+    * string contains, so it can never collide with a literal caption
+    * value. The hex bytes digest passes through it the same way.
     */
   def nullSafeCaption(caption: Column): Column =
     coalesce(caption, lit("\u0000<null>"))
@@ -83,7 +83,8 @@ object DedupPipeline {
     val exactEdges = checkpointed("exact_edges") {
       ExactDedup.flag(
         keyed.withColumn("content",
-          concat(sha2(col("bytes"), 256), nullSafeCaption(col("caption")))),
+          concat(nullSafeCaption(sha2(col("bytes"), 256)),
+            nullSafeCaption(col("caption")))),
         "content")
         .where(col("is_dup"))
         .select(col("keeper").as("a"), col("k").as("b"))

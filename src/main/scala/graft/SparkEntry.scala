@@ -118,8 +118,7 @@ object SparkEntry {
     * semantics are exactly "share >= 1 band bucket" (same as the SQL).
     */
   private val lshOracleCfg = MinHashLSH.Config(
-    shingleLen = 3, numHashes = 8, bands = 4,
-    maxBucketSize = Long.MaxValue, wordShingles = true)
+    numHashes = 8, bands = 4, maxBucketSize = Long.MaxValue)
 
   /** Docs with >= 3 words: below that the Spark side emits sentinel
     * signatures while SQL gram generation emits nothing -- excluded on

@@ -35,19 +35,6 @@ object NativeKernels {
   def simhash64(b: Array[Byte], n: Int): Long =
     Shingles.simhash64(Shingles.allHashes(b, n))
 
-  private val seedCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()
-
-  /** k-permutation MinHash signature over DISTINCT byte n-gram shingles
-    * (set semantics; Long.MaxValue sentinels when the doc is shorter
-    * than n). Seed schedules are cached per k.
-    */
-  def minhash(b: Array[Byte], n: Int, k: Int): ArrayData = {
-    val seeds = seedCache.computeIfAbsent(k, kk => Shingles.seeds(kk))
-    UnsafeArrayData.fromPrimitiveArray(
-      Shingles.minhashSignature(Shingles.distinctHashes(b, n), seeds))
-  }
-
   /** Sliding-window minimum over `h` by a monotone deque: push positions
     * in ascending order; `argmin(start)` is then the position of the
     * minimum of [start, last pushed], the LATER index on ties. Each
@@ -336,23 +323,6 @@ case class GraftSimHash64(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** `graft_minhash(bytes, n, k)`: k-permutation MinHash signature
-  * (array<bigint>) over distinct byte n-gram shingles.
-  */
-case class GraftMinHash(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(BinaryType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_minhash"
-  override protected def nullSafeEval(b: Any, n: Any, k: Any): Any =
-    NativeKernels.minhash(b.asInstanceOf[Array[Byte]], n.asInstanceOf[Int], k.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, n, k) => s"graft.functions.NativeKernels.minhash($b, $n, $k)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
 /** `graft_winnow(bytes, n, w)`: distinct winnowing fingerprints
   * (array<bigint>) -- min-of-each-w-window over rolling n-gram hashes.
   */
@@ -413,12 +383,6 @@ object GraftFunctions {
   def simhash64(b: Column, n: Int): Column =
     column(GraftSimHash64(expr(b), org.apache.spark.sql.catalyst.expressions.Literal(n)))
 
-  /** k-permutation MinHash signature over distinct byte n-gram shingles. */
-  def minhash(b: Column, n: Int, k: Int): Column =
-    column(GraftMinHash(expr(b),
-      org.apache.spark.sql.catalyst.expressions.Literal(n),
-      org.apache.spark.sql.catalyst.expressions.Literal(k)))
-
   /** Distinct winnowing fingerprints of a binary column. */
   def winnow(b: Column, n: Int, w: Int): Column =
     column(GraftWinnow(expr(b),
@@ -462,9 +426,6 @@ object GraftFunctions {
     desc("graft_simhash64",
       "graft_simhash64(bytes, n) - 64-bit SimHash over byte n-gram shingles",
       2, es => GraftSimHash64(es(0), es(1))),
-    desc("graft_minhash",
-      "graft_minhash(bytes, n, k) - k-permutation MinHash signature over distinct byte n-gram shingles",
-      3, es => GraftMinHash(es(0), es(1), es(2))),
     desc("graft_winnow",
       "graft_winnow(bytes, n, w) - distinct winnowing (MOSS) fingerprints over rolling n-gram hashes",
       3, es => GraftWinnow(es(0), es(1), es(2))),

@@ -1,28 +1,11 @@
 package graft.functions
 
-/** Character n-gram shingling over UTF-8 bytes. Per-doc, driver-free,
-  * O(bytes) via the same rolling hash as window generation -- a shingle is
-  * just a short fixed-length window keyed by its 61-bit hash. Shingle SETS
-  * (distinct) feed Jaccard / MinHash; shingle BAGS feed SimHash weights.
+/** Shingling kernels. Per-doc, driver-free, hashed with the same 61-bit
+  * polynomial hash as window generation. Distinct word n-gram SETS
+  * (`wordNgramHashes`) feed MinHash and exact Jaccard; byte n-gram BAGS
+  * (`allHashes`) feed SimHash weights.
   */
 object Shingles {
-
-  /** Distinct shingle hashes of byte n-grams (sorted, for deterministic
-    * downstream folds). Empty when the doc is shorter than n.
-    */
-  def distinctHashes(bytes: Array[Byte], n: Int): Array[Long] = {
-    if (bytes == null) return Array.emptyLongArray // null text = no shingles
-    val hs = PolyHash.windowHashes(bytes, n, PolyHash.B1)
-    if (hs.isEmpty) return hs
-    java.util.Arrays.sort(hs)
-    var w = 1
-    var i = 1
-    while (i < hs.length) {
-      if (hs(i) != hs(w - 1)) { hs(w) = hs(i); w += 1 }
-      i += 1
-    }
-    java.util.Arrays.copyOf(hs, w)
-  }
 
   /** All (non-distinct) shingle hashes in document order. */
   def allHashes(bytes: Array[Byte], n: Int): Array[Long] =

@@ -76,14 +76,6 @@ object Utf8 {
     else removeRanges(bytes, ranges.map(r => (r.getLong(0), r.getLong(1))))
   }
 
-  /** kept-in-the-middle lengths (write_back_to_jsonl_sharded.py:91-92):
-    * lengths of keep ranges strictly between two remove ranges.
-    */
-  val keptMiddleLengthsUdf = udf { (len: Long, ranges: Seq[org.apache.spark.sql.Row]) =>
-    val keeps = keepRanges(len, ranges.map(r => (r.getLong(0), r.getLong(1))))
-    keeps.drop(1).dropRight(1).map { case (s, e) => e - s }
-  }
-
   def clip(bytes: Column, ranges: Column): Column = clipRangesUdf(bytes, ranges)
   def removeMode(bytes: Column, ranges: Column): Column = removeModeUdf(bytes, ranges)
 }

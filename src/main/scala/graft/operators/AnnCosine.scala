@@ -208,21 +208,21 @@ object AnnCosine {
       while (j < v.length && j < ct.length) { val t = v(j) - ct(j); d += t * t; j += 1 }
       d
     }
+    def nearest(cs: Array[Array[Double]], v: Array[Double]): Int = {
+      var best = 0; var bd = Double.MaxValue; var ci = 0
+      while (ci < cs.length) {
+        val d = l2sq(v, cs(ci))
+        if (d < bd) { bd = d; best = ci } // strict <: ties keep lowest cell
+        ci += 1
+      }
+      best
+    }
     // centroids ride a BROADCAST variable, not the task closure: at the
     // production design point nCells ~ sqrt(N) ~ 3e4 cells x dim doubles
     // is tens of MB, serialized once per executor instead of per task
     def assign(cents: Array[Array[Double]]): DataFrame = {
       val bc = spark.sparkContext.broadcast(cents)
-      c.map { case (id, v) =>
-        val cs = bc.value
-        var best = 0; var bd = Double.MaxValue; var ci = 0
-        while (ci < cs.length) {
-          val d = l2sq(v, cs(ci))
-          if (d < bd) { bd = d; best = ci } // strict <: ties keep lowest cell
-          ci += 1
-        }
-        (id, best)
-      }.toDF("id", "cell")
+      c.map { case (id, v) => (id, nearest(bc.value, v)) }.toDF("id", "cell")
     }
 
     // Lloyd round: the assignment map pass EMITS the vector alongside its
@@ -231,16 +231,7 @@ object AnnCosine {
     // same sums, identical centroids)
     def assignWithVec(cents: Array[Array[Double]]): DataFrame = {
       val bc = spark.sparkContext.broadcast(cents)
-      c.map { case (_, v) =>
-        val cs = bc.value
-        var best = 0; var bd = Double.MaxValue; var ci = 0
-        while (ci < cs.length) {
-          val d = l2sq(v, cs(ci))
-          if (d < bd) { bd = d; best = ci } // strict <: ties keep lowest cell
-          ci += 1
-        }
-        (best, v)
-      }.toDF("cell", "vec")
+      c.map { case (_, v) => (nearest(bc.value, v), v) }.toDF("cell", "vec")
     }
 
     var cents = cent0

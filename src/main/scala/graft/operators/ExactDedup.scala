@@ -29,28 +29,19 @@ object ExactDedup {
     }
 
   /** docs(k: Long, <contentCol>) -> (k, keeper, is_dup): one row per doc,
-    * keeper = min k among docs with identical content.
+    * keeper = min k among docs with identical content. NULL content is
+    * one more content value: the join is null-safe (`<=>`), so every
+    * NULL-content doc gets its row, grouped with the other NULLs -- the
+    * same answer as SQL's `min(k) OVER (PARTITION BY content)`.
     */
   def flag(docs: DataFrame, contentCol: String): DataFrame = {
     val keyed = docs.select(
       col("k").cast("long"),
       digest(docs, contentCol).as("digest"))
     val keepers = keyed.groupBy("digest").agg(min(col("k")).as("keeper"))
+      .withColumnRenamed("digest", "kdigest")
     keyed
-      .join(keepers, "digest")
+      .join(keepers, col("digest") <=> col("kdigest"))
       .select(col("k"), col("keeper"), (col("k") =!= col("keeper")).as("is_dup"))
   }
-
-  /** Distinct-content summary: (keeper, n_copies) per duplicate group. */
-  def groups(docs: DataFrame, contentCol: String): DataFrame =
-    docs
-      .select(col("k").cast("long"), digest(docs, contentCol).as("digest"))
-      .groupBy("digest")
-      .agg(min(col("k")).as("keeper"), count(lit(1)).as("n_copies"))
-      .select("keeper", "n_copies")
-
-  /** Deduplicated view: first occurrence of each content value only. */
-  def dedup(docs: DataFrame, contentCol: String): DataFrame =
-    flag(docs, contentCol).where(!col("is_dup")).select("k")
-      .join(docs.withColumn("k", col("k").cast("long")), Seq("k"))
 }

@@ -116,45 +116,33 @@ object Hamming {
     * at small corpora (round-4 A/B at 168k fingerprints: 2.1 s flat vs
     * 12.6 s two-level -- the variant expansion pays ~64r rows/fp
     * regardless of n) but goes quadratic once buckets fill, so:
-    * count the rows (one narrow scan); above the uniform-density cutoff
-    * (expected flat candidates > ~512/row) go two-level outright; below
-    * it, check the WORST flat bucket (one cheap agg at this size) --
-    * a hot shared block value (flat phash regions) forces two-level even
-    * at small n. The two probe jobs are narrow-column scans, trivial
-    * next to the join they steer.
+    * above the uniform-density cutoff (expected flat candidates > ~512
+    * per row) go two-level outright; below it, the WORST flat bucket
+    * decides -- a hot shared block value (flat phash regions) forces
+    * two-level even at small n. One probe job, a narrow-column histogram
+    * trivial next to the join it steers, yields both. A caller's `nHint`
+    * above the cutoff skips the probe; below it, the probe still runs.
     */
   def pairs(df: DataFrame, r: Int, nHint: Long = -1L): DataFrame = {
     if (r <= 2) return pairsFlat(df, r)
     val minW = 64 / (r + 1)
     val cutoff = 512L * (1L << minW) / (r + 1)
-    // caller-supplied row count skips both probe jobs (and the pin below)
+    // caller-supplied row count above the cutoff skips the probe (and the
+    // pin below)
     if (nHint > cutoff) return pairsTwoLevel(df, r)
     // pin the narrow (id, bits) projection ONCE: without it the probe
     // and the steered join each re-evaluate the upstream plan -- 2x for
     // an expensive input (e.g. freshly decoded phashes)
     val base = df.select(col("id"), col("bits")).localCheckpoint(true)
-    // ONE probe job yields both steering signals (round 6: previously a
-    // count() job plus a separate worst-bucket aggregation): the bucket
-    // histogram's sum of counts is (r+1) * n and its max is the worst
-    // flat bucket -- same dispatch decisions from half the probe passes
-    val (n, maxBucket) =
-      if (nHint >= 0L) (nHint, -1L)
-      else {
-        val row = blockTable(base, r + 1)
-          .groupBy("block", "block_bits").agg(count(lit(1)).as("c"))
-          .agg(coalesce(sum(col("c")), lit(0L)), coalesce(max(col("c")), lit(0L)))
-          .collect()(0)
-        (row.getLong(0) / (r + 1), row.getLong(1))
-      }
-    if (n > cutoff) pairsTwoLevel(base, r)
-    else if (maxBucket < 0L) {
-      // nHint given and small: pay the worst-bucket probe only
-      val mb = blockTable(base, r + 1)
-        .groupBy("block", "block_bits").agg(count(lit(1)).as("c"))
-        .agg(coalesce(max(col("c")), lit(0L))).collect()(0).getLong(0)
-      if (mb <= 4096) pairsFlat(base, r) else pairsTwoLevel(base, r)
-    } else if (maxBucket <= 4096) pairsFlat(base, r)
-    else pairsTwoLevel(base, r)
+    // the bucket histogram's sum of counts is (r+1) * n and its max is
+    // the worst flat bucket
+    val row = blockTable(base, r + 1)
+      .groupBy("block", "block_bits").agg(count(lit(1)).as("c"))
+      .agg(coalesce(sum(col("c")), lit(0L)), coalesce(max(col("c")), lit(0L)))
+      .collect()(0)
+    val (n, maxBucket) = (row.getLong(0) / (r + 1), row.getLong(1))
+    if (n > cutoff || maxBucket > 4096) pairsTwoLevel(base, r)
+    else pairsFlat(base, r)
   }
 
   /** Flat r+1-block scheme (see scaladoc); exact, narrow-block. */

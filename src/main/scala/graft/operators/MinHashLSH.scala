@@ -10,9 +10,9 @@ import graft.functions.{PolyHash, Shingles}
   * north_rule requires natively).
   *
   * Scale shape:
-  *  - signatures are computed PER DOC inside mapPartitions (the shingle
-  *    set of a row is local), so the only shuffle in the whole operator is
-  *    the band-bucket self-join;
+  *  - signatures are computed PER DOC in the one word-shingle pass
+  *    (NgramJaccard.shingled: the shingle set of a row is local), so the
+  *    only shuffle in the whole operator is the band-bucket self-join;
   *  - each doc emits exactly `bands` rows of (band, band_hash) -- 20 B/row
   *    regardless of numHashes -- so the join input is tiny relative to the
   *    corpus;
@@ -24,27 +24,19 @@ import graft.functions.{PolyHash, Shingles}
   */
 object MinHashLSH {
 
-  /** wordShingles=true hashes word n-grams (shingleLen = words) instead of
-    * char n-grams (shingleLen = bytes). Word shingles are the right unit
-    * for natural text: a small shared character vocabulary makes char
-    * n-grams near-universal, which floods LSH buckets with false
+  /** shingleLen is words per shingle: the unit is word n-grams
+    * (`NgramJaccard.shingled`). A small shared character vocabulary makes
+    * char n-grams near-universal, which floods LSH buckets with false
     * candidates; word n-grams keep bucket sizes honest.
     */
   case class Config(
-      shingleLen: Int = 5,
+      shingleLen: Int = 3,
       numHashes: Int = 128,
       bands: Int = 32,
-      maxBucketSize: Long = 10000,
-      wordShingles: Boolean = false) {
+      maxBucketSize: Long = 10000) {
     require(numHashes % bands == 0, "bands must divide numHashes")
     def rowsPerBand: Int = numHashes / bands
   }
-
-  private def shinglesOf(cfg: Config): (String, Array[Byte]) => Array[Long] =
-    if (cfg.wordShingles)
-      (text, _) => Shingles.wordNgramHashes(text, cfg.shingleLen)
-    else
-      (_, bytes) => Shingles.distinctHashes(bytes, cfg.shingleLen)
 
   /** docs(k, text) -> (k, sig: array<long>) one row per doc, no shuffle.
     * Empty-shingle docs keep their all-sentinel signature row here (the
@@ -52,32 +44,12 @@ object MinHashLSH {
     * dropped, before any self-join can see them.
     */
   def signatures(docs: DataFrame, cfg: Config): DataFrame = {
-    if (!cfg.wordShingles) {
-      // byte-shingle mode rides the native GraftMinHash expression (same
-      // kernel/seed schedule), fused into the scan's codegen span; null
-      // text coalesces to empty bytes = the empty shingle set, keeping
-      // the signature total per contract.
-      docs.select(col("k").cast("long"),
-        graft.functions.GraftFunctions.minhash(
-          coalesce(encode(col("text"), "UTF-8"), lit(Array.emptyByteArray)),
-          cfg.shingleLen, cfg.numHashes).as("sig"))
-    } else {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val seeds = Shingles.seeds(cfg.numHashes)
-      val shingler = shinglesOf(cfg)
-      docs
-        .select(col("k").cast("long"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (k, t0) =>
-            val t = if (t0 == null) "" else t0 // null text = empty shingle set
-            val b = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            (k, Shingles.minhashSignature(shingler(t, b), seeds))
-          }
-        }
-        .toDF("k", "sig")
-    }
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val seeds = Shingles.seeds(cfg.numHashes)
+    NgramJaccard.shingled(docs, cfg.shingleLen)((k, sh) =>
+      Iterator.single((k, Shingles.minhashSignature(sh, seeds))))
+      .toDF("k", "sig")
   }
 
   /** (k, band, band_hash): one row per doc per band; band_hash folds the
@@ -94,28 +66,18 @@ object MinHashLSH {
     import spark.implicits._
     val seeds = Shingles.seeds(cfg.numHashes)
     val (bands, rows) = (cfg.bands, cfg.rowsPerBand)
-    val shingler = shinglesOf(cfg)
-    docs
-      .select(col("k").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (k, t0) =>
-          val t = if (t0 == null) "" else t0 // null text = empty shingle set
-          val b = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val sh = shingler(t, b)
-          if (sh.isEmpty) Iterator.empty
-          else {
-            val sig = Shingles.minhashSignature(sh, seeds)
-            Iterator.range(0, bands).map { bi =>
-              var h = 0x6a0917b1L + bi
-              var r = 0
-              while (r < rows) { h = PolyHash.mix64(h ^ sig(bi * rows + r)); r += 1 }
-              (k, bi, h)
-            }
-          }
+    NgramJaccard.shingled(docs, cfg.shingleLen) { (k, sh) =>
+      if (sh.isEmpty) Iterator.empty
+      else {
+        val sig = Shingles.minhashSignature(sh, seeds)
+        Iterator.range(0, bands).map { bi =>
+          var h = 0x6a0917b1L + bi
+          var r = 0
+          while (r < rows) { h = PolyHash.mix64(h ^ sig(bi * rows + r)); r += 1 }
+          (k, bi, h)
         }
       }
-      .toDF("k", "band", "band_hash")
+    }.toDF("k", "band", "band_hash")
   }
 
   /** Candidate pairs (a < b): docs sharing at least one band bucket.
@@ -140,24 +102,9 @@ object MinHashLSH {
       .distinct()
   }
 
-  /** Per-doc sorted distinct shingle-set arrays, computed map-side. */
-  def shingleSets(docs: DataFrame, cfg: Config): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val shingler = shinglesOf(cfg)
-    docs.select(col("k").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (k, t0) =>
-        val t = if (t0 == null) "" else t0 // null text = empty shingle set
-        val b = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        (k, shingler(t, b))
-      })
-      .toDF("k", "sset")
-  }
-
   /** Candidates re-verified with EXACT shingle Jaccard >= threshold.
     * Output (a, b, jacc) -- the LSH-accelerated version of
-    * NgramJaccard.pairs: same result set minus LSH false negatives
+    * NgramJaccard.wordPairs: same result set minus LSH false negatives
     * (recall is tuned by bands/rows; tests assert >= 0.99 on fixtures).
     *
     * `pruneVerify`: by default the shingle-set table feeds BOTH sides of
@@ -177,14 +124,14 @@ object MinHashLSH {
                     pruneVerify: Boolean = false): DataFrame = {
     if (!pruneVerify)
       NgramJaccard.verifyWithSets(
-        candidatePairs(docs, cfg), shingleSets(docs, cfg), threshold)
+        candidatePairs(docs, cfg), NgramJaccard.shingleSets(docs, cfg.shingleLen), threshold)
     else {
       val cand = candidatePairs(docs, cfg).localCheckpoint(true)
       val keys = cand.select(col("a").as("ck"))
         .unionAll(cand.select(col("b").as("ck")))
         .distinct()
-      val sets = shingleSets(
-        docs.join(broadcast(keys), col("k") === col("ck"), "leftsemi"), cfg)
+      val sets = NgramJaccard.shingleSets(
+        docs.join(broadcast(keys), col("k") === col("ck"), "leftsemi"), cfg.shingleLen)
         .localCheckpoint(true)
       NgramJaccard.verifyWithSets(cand, sets, threshold)
     }

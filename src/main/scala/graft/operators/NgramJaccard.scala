@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import graft.functions.Shingles
 
-/** Exact n-gram Jaccard near-duplicate pairs with AllPairs/ppjoin-style
+/** Exact word n-gram Jaccard near-duplicate pairs with AllPairs/ppjoin-style
   * PREFIX FILTERING (Bayardo et al. WWW'07; Xiao et al. WWW'08) -- exact,
   * no approximation, and no quadratic inverted-index blowup:
   *
@@ -19,23 +19,34 @@ import graft.functions.Shingles
   * Candidates are then verified with the true intersection over the FULL
   * shingle sets.
   *
-  * This is the exact counterpart to MinHash/LSH: same shingle definition.
-  * Used as a first-class operator, as the verifier for LSH candidates
-  * (MinHashLSH.verifiedPairs), and as the recall oracle in tests.
+  * This is the exact counterpart to MinHash/LSH, over the same shingle
+  * unit: `shingled` is the one place a doc's text becomes its distinct
+  * word n-gram hashes, and MinHashLSH's signatures and bands, the shingle
+  * sets and the prefix table are all that pass with their own tail.
   */
 object NgramJaccard {
 
-  /** docs(k, text) -> (k, sh: Long) distinct shingle hashes. */
-  def shingleTable(docs: DataFrame, n: Int): DataFrame = {
+  /** The one per-doc shingle pass: docs(k, text) -> `tail(k, sset)`, where
+    * sset is the doc's sorted distinct word n-gram hashes
+    * (`Shingles.wordNgramHashes`; null text and docs shorter than n words
+    * give the empty set). Each caller's frame crosses this single typed
+    * boundary and nothing else.
+    */
+  def shingled[T: Encoder](docs: DataFrame, n: Int)(
+      tail: (Long, Array[Long]) => Iterator[T]): Dataset[T] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs
-      .select(col("k").cast("long"), encode(col("text"), "UTF-8").as("b"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (k, b) =>
-        Shingles.distinctHashes(b, n).iterator.map(sh => (k, sh))
-      })
-      .toDF("k", "sh")
+      .select(col("k").cast("long"), col("text"))
+      .as[(Long, String)]
+      .mapPartitions(_.flatMap { case (k, t) => tail(k, Shingles.wordNgramHashes(t, n)) })
+  }
+
+  /** docs(k, text) -> (k, sset) per-doc shingle-set arrays, map-side. */
+  def shingleSets(docs: DataFrame, n: Int): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    shingled(docs, n)((k, s) => Iterator.single((k, s))).toDF("k", "sset")
   }
 
   /** Prefix table: each doc's (|d| - ceil(t*|d|) + 1) globally-rarest
@@ -55,42 +66,24 @@ object NgramJaccard {
       .select("k", "sh")
   }
 
-  /** docs(k, text) -> (k, sh: Long) distinct WORD n-gram shingle hashes.
-    * Prefer these for natural text: char n-grams over a small vocabulary
+  /** Exact Jaccard >= threshold pairs (a < b) over word n-gram shingles:
+    * prefix-filtered candidates verified against the per-doc shingle sets.
+    * Output: (a, b, jacc).
+    *
+    * Word shingles, not char n-grams: char n-grams over a small vocabulary
     * are near-universal (every doc contains most of them), which defeats
     * any inverted-index / prefix-filter join; word n-grams keep document
     * frequency low.
     */
-  def wordShingleTable(docs: DataFrame, n: Int): DataFrame = {
+  def wordPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
-      .select(col("k").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.flatMap { case (k, t) =>
-        Shingles.wordNgramHashes(t, n).iterator.map(sh => (k, sh))
-      })
-      .toDF("k", "sh")
-  }
-
-  /** Exact Jaccard >= threshold pairs (a < b) over char n-gram shingles. */
-  def pairs(docs: DataFrame, n: Int, threshold: Double): DataFrame =
-    pairsFromShingles(shingleTable(docs, n), threshold)
-
-  /** Exact Jaccard >= threshold pairs (a < b) over word n-gram shingles. */
-  def wordPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame =
-    pairsFromShingles(wordShingleTable(docs, n), threshold)
-
-  /** Prefix-filtered exact Jaccard join over any (k, sh) shingle table.
-    * Output: (a, b, jacc).
-    */
-  def pairsFromShingles(sh: DataFrame, threshold: Double): DataFrame = {
     // NOT pinned (measured round 6): an eager localCheckpoint of the
-    // shingle table cost more than the three map-side shingling passes
-    // it saved (driver query 1.69 -> 2.03 s), and at corpus scale the
+    // shingle table cost more than the map-side shingling passes it
+    // saved (driver query 1.69 -> 2.03 s), and at corpus scale the
     // shingle table is corpus-sized -- rematerializing a cheap narrow
     // map beats block-storing it, locally and at 100 TB
-    val sizes = sh.groupBy("k").agg(count(lit(1)).as("sz"))
+    val sh = shingled(docs, n)((k, s) => s.iterator.map(x => (k, x))).toDF("k", "sh")
     val prefix = prefixTable(sh, threshold)
 
     val cand = prefix.select(col("k").as("a"), col("sh"))
@@ -99,22 +92,13 @@ object NgramJaccard {
       .select("a", "b")
       .distinct()
 
-    verify(cand, sh, sizes, threshold)
+    verifyWithSets(cand, shingleSets(docs, n), threshold)
   }
 
-  /** Exact-intersection verification of candidate pairs against the full
-    * shingle sets. Shared with MinHashLSH.verifiedPairs.
-    */
-  def verify(cand: DataFrame, sh: DataFrame, sizes: DataFrame,
-             threshold: Double): DataFrame = {
-    val sets = sh.groupBy("k").agg(sort_array(collect_list(col("sh"))).as("sset"))
-    verifyWithSets(cand, sets, threshold)
-  }
-
-  /** Verification against per-doc shingle-set ARRAYS (k, sset): two
-    * equi-joins + a codegen'd array_intersect -- half the shuffles of the
-    * exploded-shingle form, and the set arrays are bounded by doc size so
-    * they stay small at any corpus scale.
+  /** Exact-intersection verification of candidate pairs against per-doc
+    * shingle-set ARRAYS (k, sset): two equi-joins + a codegen'd
+    * array_intersect; the set arrays are bounded by doc size so they stay
+    * small at any corpus scale. Shared with MinHashLSH.verifiedPairs.
     */
   def verifyWithSets(cand: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
     cand

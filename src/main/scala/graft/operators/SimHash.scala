@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.functions.Shingles
 
 /** SimHash near-duplicate detection: a 64-bit locality-sensitive content
-  * fingerprint per doc (computed locally, no shuffle), then Hamming-radius
-  * pairing via the pigeonhole band join (Hamming.pairs). The same Hamming
-  * machinery serves image-level near-dups over the `phash` column
+  * fingerprint per doc (computed locally, no shuffle). Pairing at a
+  * Hamming radius is the pigeonhole band join (Hamming.pairs), the same
+  * machinery that serves image-level near-dups over the `phash` column
   * (north_star: "SimHash over perceptual pHash bits").
   */
 object SimHash {
@@ -27,8 +27,4 @@ object SimHash {
           .simhash64(encode(col("text"), "UTF-8"), shingleLen).as("simhash"))
       .where(col("simhash").isNotNull)
   }
-
-  /** Near-dup pairs (a < b, hamming distance) at Hamming radius r. */
-  def pairs(docs: DataFrame, shingleLen: Int, r: Int): DataFrame =
-    Hamming.pairs(simhashes(docs, shingleLen).select(col("k").as("id"), col("simhash").as("bits")), r)
 }

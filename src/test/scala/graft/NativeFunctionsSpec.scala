@@ -20,16 +20,13 @@ class NativeFunctionsSpec extends AnyFunSuite with SparkTestBase {
       """SELECT
         |  graft_lcp(encode('abcdef', 'UTF-8'), encode('abcxyz', 'UTF-8')) AS l,
         |  graft_polyhash61(encode('hello world', 'UTF-8'), 257) AS ph,
-        |  graft_simhash64(encode('the quick brown fox', 'UTF-8'), 4) AS sh,
-        |  graft_minhash(encode('the quick brown fox', 'UTF-8'), 4, 8) AS mh
+        |  graft_simhash64(encode('the quick brown fox', 'UTF-8'), 4) AS sh
         |""".stripMargin).collect()(0)
     assert(row.getLong(0) == 3L)
     val b = bytes("hello world")
     assert(row.getLong(1) == PolyHash.hash(b, 0, b.length, 257L))
     val q = bytes("the quick brown fox")
     assert(row.getLong(2) == Shingles.simhash64(Shingles.allHashes(q, 4)))
-    assert(row.getSeq[Long](3) ==
-      Shingles.minhashSignature(Shingles.distinctHashes(q, 4), Shingles.seeds(8)).toSeq)
   }
 
   test("null propagation: null-intolerant expressions yield null, never throw") {
@@ -37,10 +34,9 @@ class NativeFunctionsSpec extends AnyFunSuite with SparkTestBase {
       """SELECT
         |  graft_lcp(CAST(NULL AS BINARY), encode('x', 'UTF-8')) AS l,
         |  graft_polyhash61(CAST(NULL AS BINARY), 257) AS ph,
-        |  graft_simhash64(CAST(NULL AS BINARY), 4) AS sh,
-        |  graft_minhash(CAST(NULL AS BINARY), 4, 8) AS mh
+        |  graft_simhash64(CAST(NULL AS BINARY), 4) AS sh
         |""".stripMargin).collect()(0)
-    (0 until 4).foreach(i => assert(row.isNullAt(i), s"col $i"))
+    (0 until 3).foreach(i => assert(row.isNullAt(i), s"col $i"))
   }
 
   test("CODEGEN_ONLY: every native expression compiles (no interpreter fallback)") {
@@ -51,15 +47,12 @@ class NativeFunctionsSpec extends AnyFunSuite with SparkTestBase {
         .select(
           GraftFunctions.lcp(encode(col("a"), "UTF-8"), encode(col("b"), "UTF-8")).as("l"),
           GraftFunctions.polyhash61(encode(col("a"), "UTF-8"), 257L).as("ph"),
-          GraftFunctions.simhash64(encode(col("a"), "UTF-8"), 3).as("sh"),
-          GraftFunctions.minhash(encode(col("a"), "UTF-8"), 3, 4).as("mh"))
+          GraftFunctions.simhash64(encode(col("a"), "UTF-8"), 3).as("sh"))
       val rows = df.collect()
       assert(rows(0).getLong(0) == 3L && rows(1).getLong(0) == 4L)
       val a = bytes("abcdef")
       assert(rows(0).getLong(1) == PolyHash.hash(a, 0, a.length, 257L))
       assert(rows(0).getLong(2) == Shingles.simhash64(Shingles.allHashes(a, 3)))
-      assert(rows(0).getSeq[Long](3) ==
-        Shingles.minhashSignature(Shingles.distinctHashes(a, 3), Shingles.seeds(4)).toSeq)
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)
@@ -71,13 +64,10 @@ class NativeFunctionsSpec extends AnyFunSuite with SparkTestBase {
   test("edge kernels: empty inputs, short docs, equal arrays") {
     assert(graft.functions.NativeKernels.lcp(Array.emptyByteArray, bytes("x")) == 0L)
     assert(graft.functions.NativeKernels.lcp(bytes("abc"), bytes("abc")) == 3L)
-    // doc shorter than n: simhash of zero shingles = 0, minhash = sentinels
+    // doc shorter than n: simhash of zero shingles = 0
     val row = spark.sql(
-      """SELECT graft_simhash64(encode('ab', 'UTF-8'), 4) AS sh,
-        |       graft_minhash(encode('ab', 'UTF-8'), 4, 3) AS mh""".stripMargin)
-      .collect()(0)
+      "SELECT graft_simhash64(encode('ab', 'UTF-8'), 4) AS sh").collect()(0)
     assert(row.getLong(0) == 0L)
-    assert(row.getSeq[Long](1) == Seq.fill(3)(Long.MaxValue))
   }
 
   test("graft_winnow: SQL output matches the kernel; guarantee holds") {

@@ -27,7 +27,7 @@ class NearDupSpec extends AnyFunSuite with SparkTestBase {
 
   test("LSH verified pairs = subset of exact pairs with recall >= 0.99") {
     val docs = corpus(11, 60).toDF("k", "text")
-    val exact = NgramJaccard.pairs(docs, 5, 0.8)
+    val exact = NgramJaccard.wordPairs(docs, 3, 0.8)
       .select($"a", $"b").as[(Long, Long)].collect().toSet
     val lsh = MinHashLSH.verifiedPairs(docs, MinHashLSH.Config(), 0.8)
       .select($"a", $"b").as[(Long, Long)].collect().toSet
@@ -39,16 +39,50 @@ class NearDupSpec extends AnyFunSuite with SparkTestBase {
 
   test("exact Jaccard values match a scala set computation") {
     val docs = corpus(12, 20)
-    val got = NgramJaccard.pairs(docs.toDF("k", "text"), 5, 0.5)
+    val got = NgramJaccard.wordPairs(docs.toDF("k", "text"), 3, 0.5)
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, j) => (a, b) -> j }.toMap
-    def shingleSet(t: String) = t.getBytes("UTF-8").sliding(5).filter(_.length == 5)
-      .map(_.toSeq).toSet
+    assert(got.nonEmpty, "fixture must plant pairs")
+    def shingleSet(t: String) = t.split(" ").filter(_.nonEmpty).sliding(3)
+      .filter(_.length == 3).map(_.mkString(" ")).toSet
     for (((a, b), j) <- got) {
       val (sa, sb) = (shingleSet(docs.toMap.apply(a)), shingleSet(docs.toMap.apply(b)))
       val expected = sa.intersect(sb).size.toDouble / sa.union(sb).size
       assert(math.abs(j - expected) < 1e-5, s"pair ($a,$b)")
     }
+  }
+
+  test("one shingle pass: signatures, bands and sets equal the kernels row by row") {
+    val texts = Seq[(Long, String)](
+      (0L, null),                                  // null text: empty set
+      (1L, "two words"),                           // fewer than n words
+      (2L, ""),
+      (3L, "  the   quick  brown fox  "),          // repeated spaces
+      (4L, "the quick brown fox"),
+      (5L, "naïve café über straße 東京 タワー 🙂 ok"), // multi-byte UTF-8
+      (6L, "naïve café über"))
+    val docs = texts.toDF("k", "text")
+    val cfg = MinHashLSH.Config(numHashes = 16, bands = 4)
+    val seeds = Shingles.seeds(cfg.numHashes)
+    val sets = texts.map { case (k, t) => k -> Shingles.wordNgramHashes(t, cfg.shingleLen) }
+    val sigs = sets.map { case (k, s) => k -> Shingles.minhashSignature(s, seeds) }
+    val bands = for ((k, s) <- sets if s.nonEmpty; bi <- 0 until cfg.bands) yield {
+      val sig = sigs.toMap.apply(k)
+      var h = 0x6a0917b1L + bi
+      for (r <- 0 until cfg.rowsPerBand)
+        h = graft.functions.PolyHash.mix64(h ^ sig(bi * cfg.rowsPerBand + r))
+      (k, bi, h)
+    }
+    assert(sets.count(_._2.nonEmpty) == 4 && sets.toMap.apply(3L).sameElements(sets.toMap.apply(4L)))
+
+    val gotSets = NgramJaccard.shingleSets(docs, cfg.shingleLen)
+      .as[(Long, Array[Long])].collect().map { case (k, s) => k -> s.toSeq }.sortBy(_._1)
+    assert(gotSets.toSeq == sets.map { case (k, s) => k -> s.toSeq })
+    val gotSigs = MinHashLSH.signatures(docs, cfg)
+      .as[(Long, Array[Long])].collect().map { case (k, s) => k -> s.toSeq }.sortBy(_._1)
+    assert(gotSigs.toSeq == sigs.map { case (k, s) => k -> s.toSeq })
+    val gotBands = MinHashLSH.bandTable(docs, cfg).as[(Long, Int, Long)].collect()
+    assert(gotBands.sorted.toSeq == bands.sorted)
   }
 
   test("hamming banding pairs == brute force, exact recall") {

@@ -54,6 +54,23 @@ class StageAndStreamSpec extends AnyFunSuite with SparkTestBase {
       .select(size($"sa_remove_ranges")).as[Int].collect().forall(_ == 0))
   }
 
+  test("null bytes: images with NULL bytes and different captions are NOT merged") {
+    // ExactDedup.flag groups NULL content as one value, so the bytes
+    // digest must stay non-null for the content concat to keep the
+    // captions apart
+    val images = Seq(
+      ("i0", null.asInstanceOf[Array[Byte]], 1, 1, "png", "cap a", 0L),
+      ("i1", null.asInstanceOf[Array[Byte]], 1, 1, "png", "cap b", -1L),
+      ("i2", null.asInstanceOf[Array[Byte]], 1, 1, "png", "cap a", 0x5555555555555555L),
+      ("i3", Array[Byte](1, 2, 3), 1, 1, "png", "cap a", 0x3333333333333333L))
+      .toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+    val res = DedupPipeline.run(spark, images, DedupPipeline.Config())
+    val ids = res.keyed.select($"k", $"image_id").as[(Long, String)].collect().toMap
+    val edges = res.exactEdges.select($"a", $"b").as[(Long, Long)].collect()
+      .map { case (a, b) => (ids(b), ids(a)) }
+    assert(edges.toSeq == Seq(("i2", "i0")))
+  }
+
   test("streaming window counts equal batch on the same events") {
     val src = Files.createTempDirectory("graft_stream").toString
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
