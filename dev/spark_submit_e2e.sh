@@ -9,6 +9,8 @@
 #   4. spark-submit graft.JsonlDedupCli at local[32] (same input, fresh out)
 #   5. verify both runs annotate the identical (docid -> ranges) set and
 #      report wall times + scaling efficiency
+#   6. spark-submit graft.JsonlDedupCli --unit tokens --mode remove at
+#      local[8]; every output file must hold as many lines as its input
 #
 # Usage: dev/spark_submit_e2e.sh [nDocs]   (default 5000)
 set -euo pipefail
@@ -84,6 +86,31 @@ else
   echo "[e2e] resume FAILED: no 'wrote' marker in $WORK/run8b.log" >&2
   exit 1
 fi
+
+echo "[e2e] token-unit remove at local[8]"
+run_submit "local[8]" graft.JsonlDedupCli "$WORK/in" "$WORK/out8tok" \
+  --minlen 50 --mode remove --unit tokens \
+  > "$WORK/run8tok.log" 2>&1
+python3 - "$WORK/in" "$WORK/out8tok" <<'EOF'
+import gzip, json, sys, pathlib
+
+def scan(root):
+    root = pathlib.Path(root)
+    lines, tokens = {}, 0
+    for p in sorted(root.rglob("*.jsonl.gz")):
+        with gzip.open(p, "rt") as f:
+            docs = [json.loads(line) for line in f]
+        lines[str(p.relative_to(root))] = len(docs)
+        tokens += sum(len(d["text"].split()) for d in docs)
+    return lines, tokens
+
+(a, ta), (b, tb) = scan(sys.argv[1]), scan(sys.argv[2])
+assert a, "no input files"
+assert a == b, f"line counts differ: {sorted(set(a.items()) ^ set(b.items()))[:5]}"
+assert tb < ta, "token-unit remove cut nothing -- planted duplicates missing?"
+print(f"[e2e] PASS: token-unit remove kept the line count of all {len(a)} files, "
+      f"cut {ta - tb} of {ta} tokens")
+EOF
 
 eff=$(python3 -c "import sys; print(f'{float(sys.argv[1])/(4*float(sys.argv[2])):.3f}')" "$t8" "$t32")
 echo "[e2e] local[8]: ${t8}s  local[32]: ${t32}s  naive 8->32 efficiency: $eff"

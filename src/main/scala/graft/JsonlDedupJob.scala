@@ -5,7 +5,6 @@ import java.util.zip.GZIPInputStream
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import graft.operators.SubstringDedup
 import graft.sources.Writeback
 
@@ -49,6 +48,10 @@ object JsonlDedupJob {
     */
   val LinenumBits = 40
   val MaxFiles: Long = 1L << (63 - LinenumBits)
+
+  /** `readTree`'s schema sample: files, and lines read from each. */
+  private val InferFiles = 16
+  private val InferLinesPerFile = 100
 
   /** The reference's file-order key: relative path with "crawl="
     * stripped (indexing_v6_sharded.py:179).
@@ -197,26 +200,22 @@ object JsonlDedupJob {
     * Blank lines advance linenum but emit no doc
     * (indexing_v6_sharded.py:21-39 skips empties the same way).
     *
-    * `schema`: pass one for trees whose fields drift; by default it is
-    * inferred from an evenly spaced sample of `inferFiles` files (full
-    * inference would decompress the entire corpus a second time).
+    * The schema is inferred from the first `InferLinesPerFile` lines of
+    * an evenly spaced sample of `InferFiles` files (full inference would
+    * decompress the entire corpus a second time).
     */
   def readTree(spark: SparkSession, inDir: String,
-               schema: StructType = null, inferFiles: Int = 16,
-               inferLinesPerFile: Int = 100,
                splitBytes: Long = 256L << 20,
                requiredField: String = "text"): DataFrame = {
     import spark.implicits._
     val relLen = listTreeWithLen(spark, inDir)
     val rel = relLen.map(_._1)
-    // schema: infer from the first `inferLinesPerFile` lines of an evenly
-    // spaced sample of files -- bounded BYTES, not bounded files: at
-    // corpus scale a single shard can be multi-GB, so "read 16 whole
-    // files" is not a cheap sample. Driver-side streaming reads; pass an
-    // explicit schema for trees whose fields drift beyond the sample.
-    val sch = Option(schema).getOrElse {
-      val stride = math.max(1, rel.size / inferFiles)
-      val sample = rel.grouped(stride).map(_.head).take(inferFiles).toSeq
+    // schema sample: bounded BYTES, not bounded files -- at corpus scale a
+    // single shard can be multi-GB, so "read 16 whole files" is not a
+    // cheap sample. Driver-side streaming reads.
+    val sch = {
+      val stride = math.max(1, rel.size / InferFiles)
+      val sample = rel.grouped(stride).map(_.head).take(InferFiles).toSeq
       val conf = spark.sessionState.newHadoopConf()
       val lines = sample.flatMap { relPath =>
         val p = new Path(inDir, relPath)
@@ -225,7 +224,7 @@ object JsonlDedupJob {
         else {
           val in = open(fs, p)
           try new Lines(in, 0, Long.MaxValue, 0, relPath).map(_._2)
-            .take(inferLinesPerFile).toList
+            .take(InferLinesPerFile).toList
           finally in.close()
         }
       }
@@ -346,14 +345,17 @@ object JsonlDedupJob {
           stageDir: Option[String] = None,
           unit: String = "bytes", reversed: Boolean = false): Result = {
     require(mode == "annotate" || mode == "remove", s"unknown mode $mode")
-    require(unit == "bytes" || unit == "tokens" || unit == "ids",
-      s"unknown unit $unit")
     require(!(reversed && unit == "bytes"), "--reversed applies to unit=tokens|ids")
+    val u = unit match {
+      case "bytes" => SubstringDedup.Bytes
+      case "tokens" => SubstringDedup.Tokens(reversed)
+      case "ids" => SubstringDedup.Ids(reversed)
+      case _ => throw new IllegalArgumentException(s"unknown unit $unit")
+    }
     // strip the input's compression extension: the sink appends the one
     // matching the CHOSEN output compression, so the tree mirrors exactly
     // when in/out codecs agree and stays honest when they differ
-    val keyed = readTree(spark, inDir,
-      requiredField = if (unit == "ids") "tokens" else "text")
+    val keyed = readTree(spark, inDir, requiredField = u.source)
       .withColumn("path", regexp_replace(col("path"), "\\.(gz|zst)$", ""))
 
     // stage name carries the unit/orientation: the (k,s,e) schema is
@@ -361,65 +363,18 @@ object JsonlDedupJob {
     // a stageDir written with a different --unit/--reversed would
     // otherwise silently reuse the WRONG snapshot
     val stageName = s"remove_ranges_$unit${if (reversed) "_rev" else ""}"
-    def staged(df: => org.apache.spark.sql.DataFrame) = stageDir match {
-      case Some(d) => new graft.plans.Stage(spark, d).run(stageName)(df)
-      case None => df
+    // verifyPrune pays on this reader, whose every corpus scan
+    // decompresses the tree (see Config). The byte unit never reaches the
+    // verifier join it prunes (inline bytes at minLen <= 32, the
+    // fingerprint prefilter's pinned docs above): same plan either way
+    def ranges = SubstringDedup.removeRanges(keyed, u,
+      SubstringDedup.Config(minLen, verifyPrune = true))
+    val staged = stageDir match {
+      case Some(d) => new graft.plans.Stage(spark, d).run(stageName)(ranges)
+      case None => ranges
     }
-
-    val out = unit match {
-      case "bytes" =>
-        // no verifyPrune: this reader decompresses the whole tree per
-        // scan, and the byte unit already reads it just twice -- above
-        // minLen 32 once for the run fingerprints and once for the pinned
-        // marked docs that the window sort and the verifier's one join
-        // share; at or below 32 once, with verification inline
-        val ranges = staged(SubstringDedup.removeRanges(keyed,
-          SubstringDedup.Config(minLen)))
-        val annotated = SubstringDedup.annotateWith(keyed, ranges)
-        mode match {
-          case "annotate" => annotated
-          case "remove" =>
-            annotated
-              .withColumn("text",
-                graft.functions.Utf8.removeMode(
-                  encode(col("text"), "UTF-8"), col("sa_remove_ranges")))
-              .drop("sa_remove_ranges")
-        }
-      case _ =>
-        // token units: whitespace tokens of `text`, or pre-tokenized
-        // `tokens: array<int>` ids (the reference's production shape);
-        // minLen counts units and ranges are unit offsets
-        val u = if (unit == "tokens") SubstringDedup.Tokens(reversed)
-          else SubstringDedup.Ids(reversed)
-        val ranges0 = staged(SubstringDedup.removeRanges(keyed, u,
-          SubstringDedup.Config(minLen, verifyPrune = true)))
-        // reversed-stream offsets -> original orientation: [s,e) over the
-        // mirrored stream covers original tokens [n-e, n-s)
-        val ranges = if (!reversed) ranges0 else {
-          val nTok = keyed.select(col("k"), size(u.seq).cast("long").as("_n"))
-          ranges0.join(nTok, "k")
-            .select(col("k"), (col("_n") - col("e")).as("_s2"), (col("_n") - col("s")).as("_e2"))
-            .select(col("k"), col("_s2").as("s"), col("_e2").as("e"))
-        }
-        val agg = ranges.groupBy("k")
-          .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("raw"))
-        val annotated = keyed
-          .join(agg, Seq("k"), "left")
-          .withColumn("sa_remove_ranges_tokens",
-            coalesce(col("raw"), array().cast("array<struct<s:bigint,e:bigint>>")))
-          .drop("raw")
-        mode match {
-          case "annotate" => annotated
-          case "remove" =>
-            // drop the duplicated spans; surviving whitespace tokens are
-            // re-joined with single spaces
-            val kept = filter(u.seq, (_, i) => !exists(col("sa_remove_ranges_tokens"),
-              r => i >= r("s") && i < r("e")))
-            (if (unit == "tokens") annotated.withColumn("text", concat_ws(" ", kept))
-             else annotated.withColumn("tokens", kept))
-              .drop("sa_remove_ranges_tokens")
-        }
-    }
+    val annotated = SubstringDedup.annotateWith(keyed, u, staged)
+    val out = if (mode == "annotate") annotated else SubstringDedup.cut(annotated, u)
     val written = Writeback.jsonlTree(out.drop("k"), outDir, compression = compression)
     Result(out, written)
   }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, TernaryExpression, UnaryExpression}
@@ -24,12 +24,6 @@ object NativeKernels {
     while (i < n && a(i) == b(i)) i += 1
     i.toLong
   }
-
-  /** 61-bit polynomial rolling hash of the whole byte string at `base`
-    * (the same hash family as window generation, mod 2^61 - 1).
-    */
-  def polyhash61(b: Array[Byte], base: Long): Long =
-    PolyHash.hash(b, 0, b.length, base)
 
   /** 64-bit SimHash over all byte n-gram shingles (bag semantics). */
   def simhash64(b: Array[Byte], n: Int): Long =
@@ -274,38 +268,6 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
     copy(child = c)
 }
 
-/** `graft_lcp(a, b)`: common prefix length of two binary values. */
-case class GraftLcp(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_lcp"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    NativeKernels.lcp(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.NativeKernels.lcp($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** `graft_polyhash61(bytes, base)`: 61-bit polynomial hash of a binary
-  * value -- the engine's window/shingle hash family, exposed to SQL.
-  */
-case class GraftPolyHash61(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(BinaryType, LongType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_polyhash61"
-  override protected def nullSafeEval(b: Any, base: Any): Any =
-    NativeKernels.polyhash61(b.asInstanceOf[Array[Byte]], base.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, base) => s"graft.functions.NativeKernels.polyhash61($b, $base)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 /** `graft_simhash64(bytes, n)`: 64-bit SimHash over byte n-gram
   * shingles of a binary value.
   */
@@ -359,8 +321,8 @@ case class GraftRunFingerprints(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** The engine's SQL function surface: native codegen expressions plus
-  * the UTF-8 writeback UDFs, injectable into any session via
+/** The engine's SQL function surface: native codegen expressions,
+  * injectable into any session via
   * `spark.sql.extensions=graft.functions.GraftExtensions` (or
   * `builder.withExtensions(new GraftExtensions)`).
   */
@@ -371,13 +333,6 @@ object GraftFunctions {
     org.apache.spark.sql.GraftColumnBridge.expression(c)
 
   // ---- Column-side wrappers (usable without any registration) ----
-
-  /** Common prefix length (bytes) of two binary columns. */
-  def lcp(a: Column, b: Column): Column = column(GraftLcp(expr(a), expr(b)))
-
-  /** 61-bit polynomial hash of a binary column at `base`. */
-  def polyhash61(b: Column, base: Long): Column =
-    column(GraftPolyHash61(expr(b), org.apache.spark.sql.catalyst.expressions.Literal(base)))
 
   /** 64-bit SimHash over byte n-gram shingles of a binary column. */
   def simhash64(b: Column, n: Int): Column =
@@ -417,12 +372,6 @@ object GraftFunctions {
 
   /** Native-expression descriptions for SparkSessionExtensions. */
   val descriptions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    desc("graft_lcp",
-      "graft_lcp(a, b) - common prefix length (bytes) of two binary values",
-      2, es => GraftLcp(es(0), es(1))),
-    desc("graft_polyhash61",
-      "graft_polyhash61(bytes, base) - 61-bit polynomial rolling hash (mod 2^61-1)",
-      2, es => GraftPolyHash61(es(0), es(1))),
     desc("graft_simhash64",
       "graft_simhash64(bytes, n) - 64-bit SimHash over byte n-gram shingles",
       2, es => GraftSimHash64(es(0), es(1))),
@@ -432,17 +381,6 @@ object GraftFunctions {
     desc("graft_run_fingerprints",
       "graft_run_fingerprints(bytes, minLen) - winnowing fingerprints marking docs that share or repeat a minLen-byte run",
       2, es => GraftRunFingerprints(es(0), es(1))))
-
-  /** Register the UTF-8 writeback UDFs on an existing session (UDFs ride
-    * the public UDFRegistration, not the extension hook):
-    * `graft_clip_ranges(bytes, ranges)` and
-    * `graft_remove_mode(bytes, ranges)` with
-    * ranges: array<struct<s:bigint, e:bigint>>.
-    */
-  def registerUdfs(spark: SparkSession): Unit = {
-    spark.udf.register("graft_clip_ranges", Utf8.clipRangesUdf)
-    spark.udf.register("graft_remove_mode", Utf8.removeModeUdf)
-  }
 }
 
 /** SparkSessionExtensions entry point: activate with

@@ -30,12 +30,10 @@ object StableIds {
   /** Narrow (idCol, outCol) map: one row per input row, outCol dense in
     * [0, n), ordered by idCol ascending. Materialized eagerly.
     */
-  def idMap(df: DataFrame, idCol: String, outCol: String = "k",
-            numPartitions: Int = 0): DataFrame = {
+  def idMap(df: DataFrame, idCol: String, outCol: String = "k"): DataFrame = {
     val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val ranged = df.select(idCol).repartitionByRange(parts, col(idCol))
+    val ranged = df.select(idCol)
+      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col(idCol))
       .withColumn("_pid", spark_partition_id())
     val withRn = ranged.withColumn("_rn",
       row_number().over(Window.partitionBy("_pid").orderBy(idCol)))
@@ -50,9 +48,4 @@ object StableIds {
       .withColumn(outCol, (col("_off") + col("_rn") - 1).cast("long"))
       .select(col(idCol), col(outCol))
   }
-
-  /** df + (idCol: unique string) -> df with extra `outCol` long id. */
-  def assign(df: DataFrame, idCol: String, outCol: String = "k",
-             numPartitions: Int = 0): DataFrame =
-    df.join(idMap(df, idCol, outCol, numPartitions), Seq(idCol))
 }

@@ -61,7 +61,7 @@ object Utf8 {
   // ---- Column-level wrappers (schema: array<struct<s:long,e:long>>) ----
 
   /** clip_ranges(textBytes, ranges) -> ranges clipped to char boundaries. */
-  val clipRangesUdf = udf { (bytes: Array[Byte], ranges: Seq[org.apache.spark.sql.Row]) =>
+  private val clipRangesUdf = udf { (bytes: Array[Byte], ranges: Seq[org.apache.spark.sql.Row]) =>
     ranges.map { r =>
       val (s, e) = clipRange(bytes, r.getLong(0), r.getLong(1))
       ByteRange(s, e)
@@ -71,7 +71,7 @@ object Utf8 {
   /** remove_mode(textBytes, clippedRanges) -> deduped text (null in ->
     * null out, matching SQL null propagation).
     */
-  val removeModeUdf = udf { (bytes: Array[Byte], ranges: Seq[org.apache.spark.sql.Row]) =>
+  private val removeModeUdf = udf { (bytes: Array[Byte], ranges: Seq[org.apache.spark.sql.Row]) =>
     if (bytes == null) null
     else removeRanges(bytes, ranges.map(r => (r.getLong(0), r.getLong(1))))
   }

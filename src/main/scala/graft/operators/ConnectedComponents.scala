@@ -70,6 +70,11 @@ object ConnectedComponents {
     */
   val SmallGraphEdges: Long = 2000000L
 
+  /** Star-contraction rounds before `run` fails loudly; convergence
+    * takes O(log n) rounds.
+    */
+  private val MaxIter = 50
+
   private def unionFindLocal(pairs: Array[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x0: Long): Long = {
@@ -90,7 +95,7 @@ object ConnectedComponents {
   /** edges(a: Long, b: Long) undirected (self-loops/dups tolerated) ->
     * assignments(id, comp) for every node incident to an edge.
     */
-  def run(edges: DataFrame, maxIter: Int = 50,
+  def run(edges: DataFrame,
           smallGraphThreshold: Long = SmallGraphEdges): DataFrame = {
     val spark = edges.sparkSession
     var cur = canon(edges).localCheckpoint(true)
@@ -103,7 +108,7 @@ object ConnectedComponents {
     var curSig = signature(cur)
     var converged = cur.isEmpty
     var iter = 0
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxIter) {
       val next = smallStar(largeStar(cur)).localCheckpoint(true)
       val nextSig = signature(next)
       converged = nextSig == curSig
@@ -114,7 +119,7 @@ object ConnectedComponents {
     // Fail loudly rather than emit multi-labeled nodes: a non-star result
     // would silently corrupt every downstream cluster assignment.
     require(converged || cur.isEmpty,
-      s"connected components did not converge within $maxIter rounds")
+      s"connected components did not converge within $MaxIter rounds")
     cur.select(col("hi").as("id"), col("lo").as("comp"))
       .unionAll(cur.select(col("lo").as("id"), col("lo").as("comp")))
       .distinct()

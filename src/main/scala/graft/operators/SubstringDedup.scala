@@ -25,7 +25,8 @@ import graft.functions.{GraftFunctions, Utf8}
   * which templates its one engine over the unit type (u8 bytes / u16, u32
   * token ids, h:70-77), there is ONE spine, and the unit (`WindowUnit`:
   * bytes, whitespace tokens or pre-tokenized ids, forward or reversed)
-  * only chooses the per-doc sequence and the exact window key.
+  * only chooses the per-doc sequence and the exact window key -- and, at
+  * writeback, the annotation column and how its ranges are cut out.
   *
   * The spine is the members of exact duplicate groups (`members`, the
   * reference's find_dup_ptrs, h:801-837): ONE run scan over windows
@@ -79,9 +80,9 @@ object SubstringDedup {
     * (they feed both the key set and the join probe, so the window sort
     * runs once). Pays when one corpus scan is expensive relative to a
     * handful of extra scheduled jobs -- e.g. the JSONL workflow, whose
-    * scan decompresses every shard (JsonlDedupJob passes true for token
-    * and id units); costs more than it saves on cheap vectorized parquet
-    * scans at fixture scale. Measured round 6 (sf0.1 / 330 MB jsonl,
+    * scan decompresses every shard (JsonlDedupJob passes true); costs
+    * more than it saves on cheap vectorized parquet scans at fixture
+    * scale. Measured round 6 (sf0.1 / 330 MB jsonl,
     * local[32]): prune ON made the parquet-backed a1 query 1.8 -> 2.5 s
     * (the extra pin/broadcast jobs dominate) while the gzip jsonl
     * workflow pass went 26.7 -> 23.0 s best-of-2 (one pruned corpus scan
@@ -96,10 +97,11 @@ object SubstringDedup {
       verifyBytes: Boolean = true,
       verifyPrune: Boolean = false)
 
-  /** The unit windows are counted in. It decides exactly two things: the
-    * per-doc sequence the window generator rolls over (`seq`, in original
-    * orientation), and the exact equality key of the window at a position
-    * (`key`, what verification compares). `reversed` (token/id units):
+  /** The unit windows are counted in. For the spine it decides two
+    * things: the per-doc sequence the window generator rolls over (`seq`,
+    * in original orientation), and the exact equality key of the window
+    * at a position (`key`, what verification compares); for the
+    * writeback, the annotation and the cut. `reversed` (token/id units):
     * the reference's --reversed indexes the mirrored stream
     * (suffix-vs-prefix duplication); windows are generated over the
     * reversed sequence and `pos` reports the REVERSED-stream offset, so
@@ -113,6 +115,27 @@ object SubstringDedup {
       * column name) of the oriented sequence column named `s`.
       */
     def key(s: String, pos: String, len: Int): Column
+    /** The doc field `seq` is read from, and remove mode rewrites. */
+    def source: String
+    /** The annotation column: the doc's ranges in original-orientation
+      * unit offsets.
+      */
+    def annotation: String = "sa_remove_ranges_tokens"
+    /** The annotation from the doc's sorted [s, e) array over the
+      * oriented sequence: a reversed stream's [s, e) covers the original
+      * units [n - e, n - s).
+      */
+    def annotate(ranges: Column): Column =
+      if (!reversed) ranges
+      else {
+        val n = size(seq).cast("long")
+        sort_array(transform(ranges, r => struct((n - r("e")).as("s"), (n - r("s")).as("e"))))
+      }
+    /** The units of `seq` outside every range of `ranges`. */
+    protected def kept(ranges: Column): Column =
+      filter(seq, (_, i) => !exists(ranges, r => i >= r("s") && i < r("e")))
+    /** `source` with the annotated ranges cut out. */
+    def cut(ranges: Column): Column
   }
 
   /** UTF-8 bytes of `text` (the reference default). The key is the
@@ -122,9 +145,14 @@ object SubstringDedup {
     */
   private[graft] case object Bytes extends WindowUnit {
     val reversed = false
+    val source = "text"
     def seq: Column = encode(col("text"), "UTF-8")
     def key(s: String, pos: String, len: Int): Column =
       digest(expr(s"substring($s, $pos + 1, $len)"))
+    /** Byte offsets clipped inward to UTF-8 character boundaries. */
+    override val annotation = "sa_remove_ranges"
+    override def annotate(ranges: Column): Column = Utf8.clip(seq, ranges)
+    def cut(ranges: Column): Column = Utf8.removeMode(seq, ranges)
   }
 
   /** Whitespace tokens of `text` (reference C2; split ' ' + drop empties).
@@ -133,9 +161,12 @@ object SubstringDedup {
     * synchronized. Key: digest of the NUL-joined tokens.
     */
   private[graft] case class Tokens(reversed: Boolean) extends WindowUnit {
+    val source = "text"
     def seq: Column = filter(split(col("text"), " "), t => t =!= "")
     def key(s: String, pos: String, len: Int): Column =
       digest(encode(concat_ws("\u0000", slice(col(s), col(pos) + 1, lit(len))), "UTF-8"))
+    /** The surviving tokens re-joined with single spaces. */
+    def cut(ranges: Column): Column = concat_ws(" ", kept(ranges))
   }
 
   /** A PRE-TOKENIZED `tokens: array<int|long>` field -- the reference's
@@ -146,10 +177,12 @@ object SubstringDedup {
     * so the join is injective).
     */
   private[graft] case class Ids(reversed: Boolean) extends WindowUnit {
+    val source = "tokens"
     def seq: Column = col("tokens").cast("array<long>")
     def key(s: String, pos: String, len: Int): Column =
       digest(encode(concat_ws(",",
         transform(slice(col(s), col(pos) + 1, lit(len)), _.cast("string"))), "UTF-8"))
+    def cut(ranges: Column): Column = kept(ranges)
   }
 
   /** The 32 raw bytes of a window's sha2-256 digest. */
@@ -413,7 +446,17 @@ object SubstringDedup {
     * (aws_workflow.sh:123-138), so callers can snapshot the narrow ranges
     * and re-enter here without re-running the dedup.
     */
-  def annotateWith(docs: DataFrame, rangesTable: DataFrame): DataFrame = {
+  def annotateWith(docs: DataFrame, rangesTable: DataFrame): DataFrame =
+    annotateWith(docs, Bytes, rangesTable)
+
+  /** The one place ranges meet documents (write_back_to_jsonl_sharded.py
+    * :75-101 --mode annotate): the `unit` ranges table (k, s, e) becomes
+    * each doc's sorted array<struct<s, e>>, empty for docs without
+    * duplicates, and `unit.annotate` turns it into the `unit.annotation`
+    * column.
+    */
+  private[graft] def annotateWith(docs: DataFrame, unit: WindowUnit,
+                                  rangesTable: DataFrame): DataFrame = {
     val ranges = rangesTable
       .groupBy("k")
       .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("raw"))
@@ -422,15 +465,16 @@ object SubstringDedup {
       .join(ranges, Seq("k"), "left")
       .withColumn("raw",
         coalesce(col("raw"), array().cast("array<struct<s:bigint,e:bigint>>")))
-      .withColumn("sa_remove_ranges", Utf8.clip(encode(col("text"), "UTF-8"), col("raw")))
+      .withColumn(unit.annotation, unit.annotate(col("raw")))
       .drop("raw")
   }
 
-  /** Remove mode: duplicated substrings cut out of the text. */
-  def remove(docs: DataFrame, cfg: Config): DataFrame =
-    annotate(docs, cfg)
-      .withColumn("text_deduped",
-        Utf8.removeMode(encode(col("text"), "UTF-8"), col("sa_remove_ranges")))
+  /** Remove mode (write_back_to_jsonl_sharded.py:89-94): an annotated
+    * frame's `unit.source` rewritten without its ranges; the annotation
+    * is dropped.
+    */
+  private[graft] def cut(annotated: DataFrame, unit: WindowUnit): DataFrame =
+    annotated.withColumn(unit.source, unit.cut(col(unit.annotation))).drop(unit.annotation)
 
   /** A9: index-order verification (reference verify_sa_correctness,
     * h:914-930, driven by verify_sa.py). The reference checks that
@@ -471,7 +515,7 @@ object SubstringDedup {
     * (k, pos, dropped, snippet). The reference returns each dup doc's
     * text plus per-ptr spans with kept/dropped flags for its diagnostic
     * renderer (find_dup_docs.cpp:18-68); this is that payload in flat
-    * form (one row per span), feeding graft.Render for the B10 overlay.
+    * form (one row per span).
     */
   def dupDocSlices(docs: DataFrame, cfg: Config): DataFrame = {
     // with verifyPrune: pin the (small) pointer table -- it feeds the

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   */
 object Writeback {
 
-  /** docs(pathCol, linenumCol, payload...) -> `outDir`/<path>[.gz|.zst]
+  /** docs(path, linenum, payload...) -> `outDir`/<path>[.gz|.zst]
     * JSONL files; every column except path/linenum lands in the JSON
     * object. Returns (file, rows) per written file -- materialize it
     * (e.g. `.count()`) to execute the write.
@@ -44,9 +44,7 @@ object Writeback {
     * (gzip 6 / zstd 3), matching the reference's defaults.
     */
   def jsonlTree(docs: DataFrame, outDir: String,
-                pathCol: String = "path", linenumCol: String = "linenum",
-                compression: String = "gzip",
-                numPartitions: Int = 0): DataFrame = {
+                compression: String = "gzip"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val (codec, level) = compression.split(":") match {
@@ -68,17 +66,14 @@ object Writeback {
     // ZstdOutputStream failure mid-write
     level.foreach(l => if (codec == "zstd")
       require(l >= -7 && l <= 22, s"zstd level must be -7..22: $compression"))
-    val payload = docs.columns.filter(c => c != pathCol && c != linenumCol)
-    val keyed = docs.select(
-        col(pathCol).as("_p"),
-        col(linenumCol).cast("long").as("_ln"),
+    val payload = docs.columns.filter(c => c != "path" && c != "linenum")
+    // writer parallelism: the session's shuffle partitions (the
+    // reference's worker-count knob, :113-118)
+    val rows = docs.select(
+        col("path").as("_p"),
+        col("linenum").cast("long").as("_ln"),
         to_json(struct(payload.map(col).toSeq: _*)).as("_js"))
-    // writer parallelism: default is the session's shuffle partitions;
-    // on a tree with far more files than that, pass numPartitions ~
-    // 2-3x total executor cores so each task streams a bounded slice of
-    // files (the reference's worker-count knob, :113-118)
-    val rows = (if (numPartitions > 0) keyed.repartition(numPartitions, col("_p"))
-                else keyed.repartition(col("_p")))
+      .repartition(col("_p"))
       .sortWithinPartitions("_p", "_ln")
       .as[(String, Long, String)]
     val suffix = codec match {

@@ -57,10 +57,10 @@ class GraphAndIdsSpec extends AnyFunSuite with SparkTestBase {
     val keys = (0 until 500).map(_ => f"id${r.nextInt(1000000)}%07d").distinct
     val sortedKeys = keys.sorted
     val df = keys.toDF("image_id")
-    val a = StableIds.assign(df.repartition(3), "image_id")
-      .select($"image_id", $"k").as[(String, Long)].collect().toMap
-    val b = StableIds.assign(df.repartition(7), "image_id")
-      .select($"image_id", $"k").as[(String, Long)].collect().toMap
+    val a = StableIds.idMap(df.repartition(3), "image_id", "k")
+      .as[(String, Long)].collect().toMap
+    val b = StableIds.idMap(df.repartition(7), "image_id", "k")
+      .as[(String, Long)].collect().toMap
     assert(a == b, "partitioning must not change ids")
     assert(a.values.toSeq.sorted == (0L until keys.length.toLong))
     assert(sortedKeys.zipWithIndex.forall { case (key, i) => a(key) == i.toLong })

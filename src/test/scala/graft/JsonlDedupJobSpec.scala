@@ -297,6 +297,63 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
     assert(revRanges == Seq((3L, 13L)))
   }
 
+  test("unit differential: tokens and ids, forward and reversed, annotate and remove match brute force") {
+    // one random corpus over a 5-word vocab, each record carrying both the
+    // whitespace text and its ids under an injective vocab, so the token
+    // and id units see the same stream
+    val words = "aa bb cc dd ee".split(" ")
+    val vocab = words.zipWithIndex.toMap
+    val r = new scala.util.Random(17)
+    val docs: Seq[(Long, String)] = for (fid <- 0 until 2; ln <- 0 until 15) yield
+      ((fid.toLong << JsonlDedupJob.LinenumBits) + ln,
+        Seq.fill(1 + r.nextInt(25))(words(r.nextInt(words.length))).mkString(" "))
+    val root = Files.createTempDirectory("graft_unit_diff")
+    for ((f, fid) <- Seq("a/p0.jsonl", "b/p1.jsonl").zipWithIndex)
+      writePlain(root.resolve(f), docs.filter(_._1 >> JsonlDedupJob.LinenumBits == fid).map {
+        case (k, t) =>
+          s"""{"id": $k, "text": "$t", "tokens": [${t.split(' ').map(vocab).mkString(", ")}]}"""
+      })
+    val tokensOf = docs.map { case (k, t) => k -> t.split(' ').toSeq }.toMap
+    val minLen = 4
+    def written(out: String) = spark.read.option("recursiveFileLookup", "true").json(out)
+    for (unit <- Seq("tokens", "ids"); rev <- Seq(false, true)) {
+      val tag = s"unit=$unit reversed=$rev"
+      // oracle ranges over the scanned stream, mapped to the original
+      // orientation: a reversed stream's [s, e) is original [n - e, n - s)
+      val raw = DedupTestOracle.bruteTokenRanges(docs, minLen, rev)
+      val want: Map[Long, Seq[(Long, Long)]] = tokensOf.map { case (k, ts) =>
+        val n = ts.length.toLong
+        k -> raw.toSeq.collect { case (`k`, s, e) => if (rev) (n - e, n - s) else (s, e) }.sorted
+      }
+      assert(want.values.exists(_.nonEmpty), tag)
+
+      val outA = Files.createTempDirectory("graft_unit_diff_ann").toString
+      JsonlDedupJob.run(spark, root.toString, outA, minLen = minLen, mode = "annotate",
+        compression = "none", unit = unit, reversed = rev).written.collect()
+      val got = written(outA)
+        .select(col("id"),
+          expr("transform(sa_remove_ranges_tokens, r -> struct(r.s as s, r.e as e))"))
+        .as[(Long, Seq[(Long, Long)])].collect().toMap
+      assert(got == want, tag)
+
+      val outR = Files.createTempDirectory("graft_unit_diff_rm").toString
+      JsonlDedupJob.run(spark, root.toString, outR, minLen = minLen, mode = "remove",
+        compression = "none", unit = unit, reversed = rev).written.collect()
+      val back = written(outR)
+      assert(!back.columns.contains("sa_remove_ranges_tokens"), tag)
+      val kept = tokensOf.map { case (k, ts) =>
+        k -> ts.indices.filterNot(i => want(k).exists { case (s, e) => i >= s && i < e }).map(ts)
+      }
+      if (unit == "tokens") {
+        val cut = back.select("id", "text").as[(Long, String)].collect().toMap
+        assert(cut == kept.map { case (k, ts) => k -> ts.mkString(" ") }, tag)
+      } else {
+        val cut = back.select("id", "tokens").as[(Long, Seq[Long])].collect().toMap
+        assert(cut == kept.map { case (k, ts) => k -> ts.map(w => vocab(w).toLong) }, tag)
+      }
+    }
+  }
+
   test("splittable plain ingest: tiny splitBytes == unsplit read, exact linenums, >1 task") {
     val root = Files.createTempDirectory("graft_split_in")
     val r = new scala.util.Random(13)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{GraftFunctions, PolyHash, Shingles}
+import graft.functions.{GraftFunctions, Shingles}
 
 /** Native Catalyst expressions (graft.functions.Native): SQL registration
   * via GraftExtensions (SparkTestBase's session sets
@@ -18,41 +18,29 @@ class NativeFunctionsSpec extends AnyFunSuite with SparkTestBase {
   test("SQL surface: extension-registered functions match the Scala kernels") {
     val row = spark.sql(
       """SELECT
-        |  graft_lcp(encode('abcdef', 'UTF-8'), encode('abcxyz', 'UTF-8')) AS l,
-        |  graft_polyhash61(encode('hello world', 'UTF-8'), 257) AS ph,
         |  graft_simhash64(encode('the quick brown fox', 'UTF-8'), 4) AS sh
         |""".stripMargin).collect()(0)
-    assert(row.getLong(0) == 3L)
-    val b = bytes("hello world")
-    assert(row.getLong(1) == PolyHash.hash(b, 0, b.length, 257L))
     val q = bytes("the quick brown fox")
-    assert(row.getLong(2) == Shingles.simhash64(Shingles.allHashes(q, 4)))
+    assert(row.getLong(0) == Shingles.simhash64(Shingles.allHashes(q, 4)))
   }
 
   test("null propagation: null-intolerant expressions yield null, never throw") {
     val row = spark.sql(
       """SELECT
-        |  graft_lcp(CAST(NULL AS BINARY), encode('x', 'UTF-8')) AS l,
-        |  graft_polyhash61(CAST(NULL AS BINARY), 257) AS ph,
         |  graft_simhash64(CAST(NULL AS BINARY), 4) AS sh
         |""".stripMargin).collect()(0)
-    (0 until 3).foreach(i => assert(row.isNullAt(i), s"col $i"))
+    assert(row.isNullAt(0))
   }
 
   test("CODEGEN_ONLY: every native expression compiles (no interpreter fallback)") {
     val prev = spark.conf.getOption("spark.sql.codegen.factoryMode")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
-      val df = Seq(("abcdef", "abcxyz"), ("same", "same")).toDF("a", "b")
-        .select(
-          GraftFunctions.lcp(encode(col("a"), "UTF-8"), encode(col("b"), "UTF-8")).as("l"),
-          GraftFunctions.polyhash61(encode(col("a"), "UTF-8"), 257L).as("ph"),
-          GraftFunctions.simhash64(encode(col("a"), "UTF-8"), 3).as("sh"))
+      val df = Seq("abcdef", "same").toDF("a")
+        .select(GraftFunctions.simhash64(encode(col("a"), "UTF-8"), 3).as("sh"))
       val rows = df.collect()
-      assert(rows(0).getLong(0) == 3L && rows(1).getLong(0) == 4L)
-      val a = bytes("abcdef")
-      assert(rows(0).getLong(1) == PolyHash.hash(a, 0, a.length, 257L))
-      assert(rows(0).getLong(2) == Shingles.simhash64(Shingles.allHashes(a, 3)))
+      for ((a, row) <- Seq("abcdef", "same").zip(rows))
+        assert(row.getLong(0) == Shingles.simhash64(Shingles.allHashes(bytes(a), 3)))
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)
@@ -157,15 +145,5 @@ class NativeFunctionsSpec extends AnyFunSuite with SparkTestBase {
       }
     })
     assert(runFps(null, 500).isEmpty)
-  }
-
-  test("registerUdfs: writeback UDFs reachable from SQL") {
-    GraftFunctions.registerUdfs(spark)
-    val out = spark.sql(
-      """SELECT graft_remove_mode(encode('hello cruel world', 'UTF-8'),
-        |  graft_clip_ranges(encode('hello cruel world', 'UTF-8'),
-        |    array(named_struct('s', 5L, 'e', 11L)))) AS t""".stripMargin)
-      .collect()(0).getString(0)
-    assert(out == "hello world")
   }
 }

@@ -270,7 +270,7 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       .map(_._3).toSeq == Seq.fill(5)(2L))
   }
 
-  test("A7 slices + B10 render: dropped spans carry the actual window text and paint red") {
+  test("A7 slices: dropped spans carry the actual window text") {
     val dup = "0123456789abcdefghij" // 20 bytes, minLen 10
     val docs = Seq((1L, s"$dup and a tail unique to doc one"),
                    (2L, s"prefix two $dup suffix <two>"))
@@ -285,26 +285,6 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     }
     // doc 1 holds the kept (first-occurrence) copies
     assert(slices.filter(s => s._1 == 1L).forall(!_._3))
-
-    val ann = SubstringDedup.annotate(df, SubstringDedup.Config(10))
-    val ansi = Render.annotated(ann)
-    assert(ansi.contains("\u001b[31m")) // a red (removed) span exists
-    assert(ansi.contains(dup)) // the duplicated run is painted
-    val html = Render.annotated(ann, html = true)
-    assert(html.contains("""<span class="dropped">"""))
-    assert(html.contains("&lt;two&gt;")) // escaping
-  }
-
-  test("B10 render: multi-byte text slices at clipped boundaries without mojibake") {
-    val dup = "日本語のテキストですね全部で" // 14 chars x 3 bytes = 42 bytes
-    val docs = Seq((1L, s"first $dup copy"), (2L, s"zwei $dup copy two")).toDF("k", "text")
-    val ann = SubstringDedup.annotate(docs, SubstringDedup.Config(12))
-    val ansi = Render.annotated(ann)
-    // rendered segments re-decode cleanly: no replacement characters
-    assert(!ansi.contains("�"))
-    assert(ansi.contains("\u001b[31m")) // something was painted red
-    val html = Render.annotated(ann, html = true)
-    assert(!html.contains("�") && html.contains("""<span class="dropped">"""))
   }
 
   test("suffix index: one build answers multiple minLens == per-minLen path") {
@@ -503,12 +483,20 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
   test("remove mode cuts exactly the clipped ranges") {
     val docs = Seq(
       (0L, "0123456789abcdefghij"),
-      (1L, "xx0123456789abcdefghijyy")) // shares a 20-byte run
+      (1L, "xx0123456789abcdefghijyy"), // shares a 20-byte run
+      // U+00E9 is C3 A9 and U+00A9 is C2 A9: doc 3 repeats doc 2's
+      // window at byte 1, which starts inside its first character
+      (2L, "\u00e90123456789"),
+      (3L, "\u00a90123456789"))
     val minLen = 10
-    val out = SubstringDedup.remove(spark_(docs), SubstringDedup.Config(minLen))
-      .select($"k", $"text_deduped").as[(Long, String)].collect().toMap
+    val cut = SubstringDedup.cut(
+      SubstringDedup.annotate(spark_(docs), SubstringDedup.Config(minLen)), SubstringDedup.Bytes)
+    assert(!cut.columns.contains("sa_remove_ranges"))
+    val out = cut.select($"k", $"text").as[(Long, String)].collect().toMap
     assert(out(0L) == "0123456789abcdefghij") // first occurrence kept whole
     assert(out(1L) == "xxyy") // duplicated middle removed
+    assert(out(2L) == "\u00e9")
+    assert(out(3L) == "\u00a9") // [1, 12) clipped to [2, 12): no half character
   }
 
   test("docs shorter than minLen produce no windows and survive annotate") {

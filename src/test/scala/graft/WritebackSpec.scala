@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.SubstringDedup
-import graft.sources.{RemoveRangesBin, Writeback}
+import graft.sources.Writeback
 
-/** B7 writeback sink + B6 remove_ranges binary compat writer golden tests
-  * (reference write_back_to_jsonl_sharded.py:39-66, 95-101 semantics;
+/** B7 writeback sink golden tests (reference write_back_to_jsonl_sharded.py:39-66, 95-101 semantics;
   * verify_zst.py:20-43 is the reference's own roundtrip check).
   */
 class WritebackSpec extends AnyFunSuite with SparkTestBase {
@@ -167,39 +165,5 @@ class WritebackSpec extends AnyFunSuite with SparkTestBase {
     assert(rebuilt.get("fs.graft.test.key") == "sekrit")
     // core defaults present too (rebuild is a full conf, not a delta)
     assert(rebuilt.get("fs.defaultFS") != null)
-  }
-
-  test("remove_ranges LE compat writer matches hand-built golden bytes") {
-    // three docs; doc starts at 1 + sum(1 + len_j) for j < k
-    val docs = Seq(
-      (0L, "aaaa"), // len 4, start 1
-      (1L, "bbbbbb"), // len 6, start 6
-      (2L, "cc") // len 2, start 13
-    ).toDF("k", "text")
-    val lens = docs.select(col("k"), length(col("text")).as("len"))
-    val ranges = Seq((0L, 1L, 3L), (1L, 0L, 6L), (2L, 1L, 2L))
-      .toDF("k", "s", "e")
-    val out = Files.createTempDirectory("graft_rrbin").toString
-    val n = RemoveRangesBin.writeLE(ranges, lens, out, partitions = 1)
-    assert(n == 3)
-    val got = Files.readAllBytes(Paths.get(out, "part-00000.bin"))
-    val buf = ByteBuffer.allocate(48).order(ByteOrder.LITTLE_ENDIAN)
-    // global: doc0 [1+1, 1+3), doc1 [6+0, 6+6), doc2 [13+1, 13+2)
-    Seq((2L, 4L), (6L, 12L), (14L, 15L)).foreach { case (s, e) =>
-      buf.putLong(s); buf.putLong(e)
-    }
-    assert(got.toSeq == buf.array().toSeq)
-  }
-
-  test("docStarts two-phase prefix sum equals the naive cumulative sum") {
-    val lens = (0L until 500L).map(k => (k, 1 + (k * 7) % 90)).toDF("k", "len")
-    val got = RemoveRangesBin.docStarts(lens)
-      .as[(Long, Long)].collect().toMap
-    var acc = 0L
-    (0L until 500L).foreach { k =>
-      val len = 1 + (k * 7) % 90
-      assert(got(k) == acc + 1, s"doc $k")
-      acc += 1 + len
-    }
   }
 }
