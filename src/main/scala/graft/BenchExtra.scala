@@ -24,20 +24,17 @@ import org.apache.spark.sql.functions._
   *                         rounds, after one untimed warm-up pass; one JSON
   *                         line with the efficiency and its detail
   *   jsonl [nDocs]         one JSONL workflow pass (Bench.jsonlPass)
-  *   minlen [nDocs] [nIndexDocs]
-  *                         the reference's minlen range (200 / 500 /
-  *                         1000) on the JSONL fixture: the per-minLen
-  *                         sort-scan at each minLen (50000 docs), then on a
-  *                         60-doc slice against one suffix-index build
-  *                         (maxDepth 1024) answering all three, with an
-  *                         index-vs-sort-scan differential at minLen 500;
-  *                         one JSON line (BASELINE.md)
-  *   saindex [maxDepth]    the `sa_index_remove_ranges` path on its own
-  *                         fixture (docsWithDups): suffix-index build,
-  *                         query at SparkEntry.MinLen and build+query
-  *                         timed separately (maxDepth 32 by default), with
-  *                         an index-vs-sort-scan differential; one JSON
-  *                         line (BASELINE.md)
+  *   minlen [nDocs]        the reference's minlen range (200 / 500 /
+  *                         1000) on the JSONL fixture (50000 docs): the
+  *                         spine once per minLen; one JSON line. A sweep
+  *                         is not served by the suffix index, which lost
+  *                         to the spine here (BASELINE.md)
+  *   saindex [depth]       the `sa_index_remove_ranges` path on its own
+  *                         fixture (docsWithDups): suffix-index build and
+  *                         its query at that depth, and build+query, timed
+  *                         separately (depth SparkEntry.MinLen by default),
+  *                         with a differential against the spine at the
+  *                         same minLen; one JSON line
   *   ivf [nCells] [outDir] `ann_ivf_topk` at a configurable nCells (512
   *                         by default; the oracle query pins 64) written
   *                         as parquet plus its generated oracle_sql.json
@@ -169,76 +166,43 @@ object BenchExtra {
         }
       case "minlen" =>
         val nDocs = rest.headOption.map(_.toInt).getOrElse(50000)
-        // the index carries up to maxDepth bytes per text byte through its
-        // exchange: 60 docs (~0.4 MB of text) already move ~0.4 GB
-        val nIdxDocs = rest.lift(1).map(_.toInt).getOrElse(60)
-        val minLens = Seq(200, 500, 1000)
-        def fixture(n: Int) = {
-          val dir = s"/dev/shm/graft-fixtures/jsonl-in-$n"
-          val bytes = sources.JsonlGen.writeTree(spark, dir, n)
-          (JsonlDedupJob.readTree(spark, dir).localCheckpoint(true), bytes)
-        }
-        def ranges(docs: org.apache.spark.sql.DataFrame, ml: Int) =
-          operators.SubstringDedup.removeRanges(docs, operators.SubstringDedup.Config(ml))
-        val (docs, bytes) = fixture(nDocs)
+        val dir = s"/dev/shm/graft-fixtures/jsonl-in-$nDocs"
+        val bytes = sources.JsonlGen.writeTree(spark, dir, nDocs)
+        val docs = JsonlDedupJob.readTree(spark, dir).localCheckpoint(true)
+        def ranges(d: org.apache.spark.sql.DataFrame, ml: Int) =
+          operators.SubstringDedup.removeRanges(d, operators.SubstringDedup.Config(ml))
         ranges(docs.limit(500), 500).count() // codegen warm-up, untimed
-        val spine = minLens.map { ml =>
+        val spine = Seq(200, 500, 1000).map { ml =>
           val (r, sec) = timed(s"sort-scan minLen=$ml") {
             ranges(docs, ml).agg(count(lit(1)), sum(col("e") - col("s"))).collect()(0)
           }
           f"""{"minlen":$ml,"sec":$sec%.2f,"ranges":${r.getLong(0)},""" +
             f""""removed_bytes":${if (r.isNullAt(1)) 0L else r.getLong(1)},"mb_per_sec":${bytes / 1e6 / sec}%.2f}"""
         }
-        val (idxDocs, idxBytes) = fixture(nIdxDocs)
-        val spineSmall = minLens.map { ml =>
-          val (_, sec) = timed(s"sort-scan@$nIdxDocs minLen=$ml")(ranges(idxDocs, ml).count())
-          f"""{"minlen":$ml,"sec":$sec%.2f}"""
-        }
-        val (index, buildSec) = timed(s"index build@$nIdxDocs maxDepth=1024") {
-          operators.SuffixIndex.build(idxDocs,
-            operators.SuffixIndex.Config(maxDepth = 1024, parts = 64)).localCheckpoint(true)
-        }
-        val idxQueries = minLens.map { ml =>
-          val (n, sec) = timed(s"index query minLen=$ml") {
-            operators.SuffixIndex.removeRanges(index, ml).count()
-          }
-          f"""{"minlen":$ml,"sec":$sec%.2f,"ranges":$n}"""
-        }
-        val a = operators.SuffixIndex.removeRanges(index, 500)
-        val b = ranges(idxDocs, 500)
-        val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
-        require(diff == 0, s"index vs sort-scan differential: $diff rows differ")
         println(f"""{"metric":"minlen_sweep","docs":$nDocs,"text_mb":${bytes / 1e6}%.1f,""" +
-          s""""sort_scan":${spine.mkString("[", ",", "]")},"index_docs":$nIdxDocs,""" +
-          f""""index_text_mb":${idxBytes / 1e6}%.1f,"sort_scan_small":${spineSmall.mkString("[", ",", "]")},""" +
-          f""""index_build_sec":$buildSec%.2f,"index_queries":${idxQueries.mkString("[", ",", "]")},""" +
-          s""""differential_minlen500":"identical"}""")
+          s""""sort_scan":${spine.mkString("[", ",", "]")}}""")
       case "saindex" =>
         import operators.{SubstringDedup, SuffixIndex}
-        val maxDepth = rest.headOption.map(_.toInt).getOrElse(32)
-        val minLen = SparkEntry.MinLen
+        val depth = rest.headOption.map(_.toInt).getOrElse(SparkEntry.MinLen)
         val docs = SparkEntry.docsWithDups(spark, sfDir).localCheckpoint(true)
+        def build(d: org.apache.spark.sql.DataFrame, parts: Int) =
+          SuffixIndex.build(d, SuffixIndex.Config(depth, parts))
         // untimed warmup: pay codegen/JIT on a slice
-        SuffixIndex.removeRanges(
-          SuffixIndex.build(docs.limit(50), SuffixIndex.Config(maxDepth, parts = 4)),
-          minLen).count()
-        val (index, buildSec) = timed(s"build maxDepth=$maxDepth") {
-          SuffixIndex.build(docs, SuffixIndex.Config(maxDepth, parts = 32))
-            .localCheckpoint(true)
+        SuffixIndex.removeRanges(build(docs.limit(50), 4)).count()
+        val (index, buildSec) = timed(s"build maxDepth=$depth") {
+          build(docs, 32).localCheckpoint(true)
         }
-        val (nRanges, querySec) = timed(s"query minLen=$minLen") {
-          SuffixIndex.removeRanges(index, minLen).count()
+        val (nRanges, querySec) = timed(s"query at depth $depth") {
+          SuffixIndex.removeRanges(index).count()
         }
         val (_, e2eSec) = timed("end-to-end (build+query, as the query runs it)") {
-          SuffixIndex.removeRanges(
-            SuffixIndex.build(docs, SuffixIndex.Config(maxDepth, parts = 32)),
-            minLen).count()
+          SuffixIndex.removeRanges(build(docs, 32)).count()
         }
-        val a = SuffixIndex.removeRanges(index, minLen)
-        val b = SubstringDedup.removeRanges(docs, SubstringDedup.Config(minLen))
+        val a = SuffixIndex.removeRanges(index)
+        val b = SubstringDedup.removeRanges(docs, SubstringDedup.Config(depth))
         val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
         require(diff == 0, s"index vs sort-scan differential: $diff rows differ")
-        println(f"""{"metric":"sa_bench","sf":"$sfDir","max_depth":$maxDepth,"build_sec":$buildSec%.2f,"query_sec":$querySec%.2f,"e2e_sec":$e2eSec%.2f,"ranges":$nRanges,"differential":"identical"}""")
+        println(f"""{"metric":"sa_bench","sf":"$sfDir","max_depth":$depth,"build_sec":$buildSec%.2f,"query_sec":$querySec%.2f,"e2e_sec":$e2eSec%.2f,"ranges":$nRanges,"differential":"identical"}""")
       case "ivf" =>
         val nCells = rest.headOption.map(_.toInt).getOrElse(512)
         val outDir = rest.lift(1).getOrElse("/tmp/ivf_check")

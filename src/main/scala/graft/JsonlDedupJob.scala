@@ -324,7 +324,11 @@ object JsonlDedupJob {
     * snapshot through plans.Stage with per-partition metrics; a re-run
     * (crash recovery, or writing a second output mode/codec from the same
     * dedup) reads the snapshot instead of re-running the dedup. Only the
-    * ~12-byte/range table is ever materialized, never the corpus.
+    * ~12-byte/range table is ever materialized, never the corpus. The
+    * snapshot is named by unit, orientation and minLen
+    * (`remove_ranges_<unit>[_rev]_m<minLen>`), so a run with other
+    * parameters computes its own; that `inDir` holds the same tree as
+    * the run that wrote the snapshot stays the caller's contract.
     *
     * `unit`: "bytes" (the reference default -- minLen in bytes, ranges
     * UTF-8-clipped byte offsets in `sa_remove_ranges`) or "tokens"
@@ -358,11 +362,12 @@ object JsonlDedupJob {
     val keyed = readTree(spark, inDir, requiredField = u.source)
       .withColumn("path", regexp_replace(col("path"), "\\.(gz|zst)$", ""))
 
-    // stage name carries the unit/orientation: the (k,s,e) schema is
-    // identical across bytes/tokens/reversed runs, so a resume pointed at
-    // a stageDir written with a different --unit/--reversed would
-    // otherwise silently reuse the WRONG snapshot
-    val stageName = s"remove_ranges_$unit${if (reversed) "_rev" else ""}"
+    // stage name carries every parameter of the ranges: the (k,s,e)
+    // schema is identical across units, orientations and minLens, so a
+    // resume pointed at a stageDir written with a different --unit,
+    // --reversed or --minlen would otherwise silently reuse the WRONG
+    // snapshot
+    val stageName = s"remove_ranges_$unit${if (reversed) "_rev" else ""}_m$minLen"
     // verifyPrune pays on this reader, whose every corpus scan
     // decompresses the tree (see Config). The byte unit never reaches the
     // verifier join it prunes (inline bytes at minLen <= 32, the

@@ -235,17 +235,14 @@ object SparkEntry {
       SubstringDedup.removeRanges(docsWithDups(s, dir),
         SubstringDedup.Config(MinLen, verifyBytes = false))),
 
-    // A8 full-fidelity sibling: remove-ranges answered from the ONE-TIME
-    // suffix index (one range sort on each position's maxDepth-byte
-    // prefix; build once, query any minLen <= maxDepth -- the reference's
-    // index-reuse semantics, README.md:44-48); same oracle as a1/a2.
-    "sa_index_remove_ranges" -> ((s, dir) => {
-      val idx = SuffixIndex.build(docsWithDups(s, dir),
-        SuffixIndex.Config(maxDepth = 32, parts = 32))
-      // minLen == the recorded build depth -> the per-row lcp predicate
-      // path (no layout probe / keeper join)
-      SuffixIndex.removeRanges(idx, MinLen)
-    }),
+    // A8 full-fidelity sibling: remove-ranges answered from the suffix
+    // index (one range sort on each position's maxDepth-byte prefix),
+    // queried at its own build depth (MinLen) with the per-row lcp
+    // predicate; same oracle as a1/a2. Other minLens go through the
+    // spine, which measured faster for a sweep (SuffixIndex header).
+    "sa_index_remove_ranges" -> ((s, dir) =>
+      SuffixIndex.removeRanges(SuffixIndex.build(docsWithDups(s, dir),
+        SuffixIndex.Config(maxDepth = MinLen, parts = 32)))),
 
     // C2: token-unit substring dedup -- minLen counted in whitespace
     // tokens over rolling 61-bit token-id hashes, token-exact verified

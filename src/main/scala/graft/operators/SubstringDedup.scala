@@ -90,7 +90,6 @@ object SubstringDedup {
     * matters where the verifier joins: not at bytes minLen <= 32 (inline
     * bytes) and not at bytes above 32, whose fingerprint prefilter
     * already pins the marked docs that the window sort and the join read.
-    * `dupDocSlices` also uses it to prune its snippet join.
     */
   case class Config(
       minLen: Int,
@@ -415,24 +414,20 @@ object SubstringDedup {
 
   /** Token-unit remove ranges: docs(k, text) -> (k, s, e) in TOKEN
     * offsets over the (optionally reversed) whitespace token stream --
-    * C2's find_remove_ranges for tokenized corpora. Verification is
-    * token-exact by default.
+    * C2's find_remove_ranges for tokenized corpora, token-exact verified.
     */
   def removeRangesTokens(docs: DataFrame, minLenTok: Int,
-                         verify: Boolean = true, reversed: Boolean = false,
-                         verifyPrune: Boolean = false): DataFrame =
-    removeRanges(docs, Tokens(reversed), Config(minLenTok, verify, verifyPrune))
+                         reversed: Boolean = false): DataFrame =
+    removeRanges(docs, Tokens(reversed), Config(minLenTok))
 
   /** Pre-tokenized-id remove ranges: docs(k, tokens: array<int|long>) ->
     * (k, s, e) in TOKEN offsets over the (optionally reversed) id stream
     * -- C2's find_remove_ranges for already-tokenized corpora, the
-    * reference's production input shape. Verification is id-exact by
-    * default.
+    * reference's production input shape, id-exact verified.
     */
   def removeRangesIds(docs: DataFrame, minLenTok: Int,
-                      verify: Boolean = true, reversed: Boolean = false,
-                      verifyPrune: Boolean = false): DataFrame =
-    removeRanges(docs, Ids(reversed), Config(minLenTok, verify, verifyPrune))
+                      reversed: Boolean = false): DataFrame =
+    removeRanges(docs, Ids(reversed), Config(minLenTok))
 
   /** Annotate mode: original rows + sa_remove_ranges (UTF-8-clipped),
     * sorted by range start; docs without duplicates get an empty array.
@@ -517,20 +512,11 @@ object SubstringDedup {
     * renderer (find_dup_docs.cpp:18-68); this is that payload in flat
     * form (one row per span).
     */
-  def dupDocSlices(docs: DataFrame, cfg: Config): DataFrame = {
-    // with verifyPrune: pin the (small) pointer table -- it feeds the
-    // doc-key prune and the snippet join -- and prune the corpus bytes to
-    // dup docs before any text is shuffled
-    val ptrs0 = dupPtrs(docs, cfg)
-    val ptrs = if (cfg.verifyPrune) ptrs0.localCheckpoint(true) else ptrs0
-    val vb0 = corpus(docs, Bytes)
-    val vb = if (!cfg.verifyPrune) vb0
-      else pruneToKeys(vb0, "vk", ptrs.select(col("k").as("ck")), pin = false)
-    ptrs
-      .join(vb, col("k") === col("vk"))
+  def dupDocSlices(docs: DataFrame, cfg: Config): DataFrame =
+    dupPtrs(docs, cfg)
+      .join(corpus(docs, Bytes), col("k") === col("vk"))
       .select(col("k"), col("pos"), col("dropped"),
         decode(expr(s"substring(vb, pos + 1, ${cfg.minLen})"), "UTF-8").as("snippet"))
-  }
 
   /** Diagnostics (reference find_dup_ptrs, h:801-837): every member of a
     * duplicate group with dropped flag; the kept (first) one has

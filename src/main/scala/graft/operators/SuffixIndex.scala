@@ -5,17 +5,21 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
 
-/** Distributed bounded-depth suffix index -- the build-once /
-  * query-many-minLens fidelity stage.
+/** Distributed bounded-depth suffix index (A8): the exact suffix order
+  * to a build depth, and the remove-ranges at that depth.
   *
-  * The reference builds its suffix array ONCE (rust_indexing sidecar,
-  * README.md:44-48) and then answers `find_remove_ranges` at any
-  * `min_len` without re-indexing (workflow_v1.sh minlen=500 vs
-  * workflow_pileval.sh minlen=200 reuse the same index). Our default
-  * per-minLen sort-scan (SubstringDedup.removeRanges*) re-pays the full
-  * window exchange per minLen; this operator closes that gap: one build
-  * to `maxDepth`, then any `minLen <= maxDepth` remove-ranges query is a
-  * narrow scan over the prebuilt (order, lcp) table.
+  * The reference builds its suffix array once (rust_indexing sidecar,
+  * README.md:44-48) and answers `find_remove_ranges` at any `min_len`
+  * from it. Here a sweep over several minLens runs the spine
+  * (SubstringDedup.removeRanges) once per minLen instead: measured with
+  * `BenchExtra minlen 2000 60` on 4 cores (BASELINE.md, best of 3
+  * JVMs), the spine ran minLen 200/500/1000 over a 60-doc / 0.4 MB slice
+  * in 4.8 s, while a maxDepth-1024 index took 6.3 s to build plus 4.1 s
+  * to answer the three. One query saves about 0.24 s, so a build pays
+  * off only after about 26 minLens; the reference's own workflows use
+  * two (500, 200). The index also moves ~maxDepth x the corpus through
+  * its exchange (about 13.5 GB at 13.2 MB of text), where the spine ran
+  * all three minLens over those 13.2 MB in 17.0 s.
   *
   * The reference only ever compares `min_len`-byte prefixes
   * (cpp_engine_dedup.h:233), so a bounded-depth suffix order is a sort
@@ -26,23 +30,15 @@ import org.apache.spark.sql.types.MetadataBuilder
   * with a shorter value first, which is exactly end-truncated prefix
   * order (a suffix that ends sorts before every extension of it).
   * Ranks are exact byte equality -- no hashing anywhere -- so the index
-  * and every query over it are collision-free by construction. Suffixes
+  * and the query over it are collision-free by construction. Suffixes
   * never cross documents (the reference's doc-sep exclusion, C3/C4):
-  * the prefix is cut at the doc's end.
-  *
-  * Scale shape: the one exchange carries up to `maxDepth` prefix bytes
-  * per byte position, so the build moves ~maxDepth x the corpus; only
-  * per-partition counts and boundary prefixes reach the driver. That
-  * cost is why the per-minLen sort-scan stays the default for one-shot
-  * dedup (measured in BASELINE.md).
+  * the prefix is cut at the doc's end. Only per-partition counts and
+  * boundary prefixes reach the driver.
   */
 object SuffixIndex {
 
-  /** `maxDepth`: suffixes are ordered by their first `maxDepth` bytes;
-    * any `minLen <= maxDepth` is answerable. This is the same
-    * bounded-depth contract as the default path hoisted to the index
-    * level: one build covers the reference's whole production minlen
-    * range (200..1000 -> maxDepth 1024) instead of one minLen.
+  /** `maxDepth`: suffixes are ordered by their first `maxDepth` bytes,
+    * and `removeRanges` answers at minLen == maxDepth.
     * `parts`: range-partition width of the build sort.
     */
   case class Config(maxDepth: Int = 128, parts: Int = 32)
@@ -61,8 +57,8 @@ object SuffixIndex {
     * maxDepth bytes), with `lcp` = longest common prefix with the
     * PREVIOUS row in that order, capped at maxDepth (null on the first
     * row). `slen` = bytes remaining in the suffix's document. The `lcp`
-    * column's metadata records `cfg.maxDepth` (`depthOf`), which
-    * `removeRanges` checks `minLen` against. `docs` is scanned once.
+    * column's metadata records `cfg.maxDepth` (`depthOf`), the depth
+    * `removeRanges` answers at. `docs` is scanned once.
     */
   def build(docs: DataFrame, cfg: Config): DataFrame = {
     require(cfg.maxDepth >= 1, s"maxDepth ${cfg.maxDepth} must be at least 1")
@@ -164,161 +160,29 @@ object SuffixIndex {
     h ^ Long.MinValue
   }
 
-  /** Remove-ranges at any `minLen` in 1..maxDepth from a prebuilt index
-    * -- no window exchange: eligible suffixes (slen >= minLen) in index
-    * order segment into equal-minLen-prefix classes wherever the stored
-    * adjacent lcp stays >= minLen; every class member except the
-    * first-occurrence (min (k, pos)) keeper is removable. Result is
-    * byte-identical to SubstringDedup.removeRanges at the same minLen
-    * (differential-tested).
+  /** Remove-ranges at the depth `build` recorded (`depthOf`) -- no
+    * window exchange. At minLen == build depth a class of equal
+    * minLen-byte prefixes is exactly a rank-tie run: stored lcp is the
+    * depth on ties and strictly below it otherwise, and tie runs are
+    * sorted by (k, pos) within the index order (pfx, k, pos), so the
+    * FIRST member of every class is its min-(k, pos) keeper and every
+    * continuing member is removable. "Removable" is then the per-row
+    * predicate `slen >= d AND lcp >= d` feeding the range coalescer.
+    * (Short suffixes never sit inside an eligible tie run: a depth-d tie
+    * has equal prefix lengths, so a class is either all >= d long with
+    * equal bytes or all identical short suffixes, and whole classes drop
+    * at the slen filter.) Result is byte-identical to
+    * SubstringDedup.removeRanges at minLen d (differential-tested).
     *
-    * Stored lcp is with the ORIGINAL previous row, which may be an
-    * ineligible short suffix -- still correct: any suffix lying between
-    * two class members in suffix order shares their class prefix
-    * (betweenness), so it is at least minLen long and thus eligible;
-    * boundaries flagged through a filtered-out short row are real
-    * boundaries.
-    *
-    * A `minLen` outside 1..(the depth `build` recorded) throws an
-    * IllegalArgumentException naming both: lcp is capped at the build
-    * depth, so a deeper query would silently find no duplicates.
+    * An index without a recorded depth throws an
+    * IllegalArgumentException: the depth is the index's, not the caller's.
     */
-  def removeRanges(index: DataFrame, minLen: Int): DataFrame = {
-    val depth = depthOf(index)
-    if (minLen < 1)
-      throw new IllegalArgumentException(s"minLen $minLen must be at least 1")
-    for (d <- depth if minLen > d) throw new IllegalArgumentException(
-      s"minLen $minLen exceeds the index's recorded build depth $d")
-    // minLen == build depth: a segment is then exactly a rank-tie run --
-    // stored lcp is maxDepth on ties and strictly below it otherwise --
-    // and tie runs are sorted by (k, pos) within the index order
-    // (pfx, k, pos), so the FIRST member of every class is its
-    // min-(k,pos) keeper and every CONTINUING member is removable.
-    // "Removable" collapses to the per-row predicate `slen >= minLen AND
-    // lcp >= minLen`: no layout probe, no segment seam, no keeper
-    // aggregation or join -- one filter feeding the range coalescer.
-    // (Short suffixes can never sit inside an eligible tie run: a
-    // depth-maxDepth tie has equal prefix lengths, so a class is either
-    // all >= maxDepth long with equal bytes or all identical short
-    // suffixes -- whole classes drop at the slen filter, never individual
-    // interior rows. A row whose stored lcp >= minLen also proves its
-    // ORIGINAL predecessor shares minLen bytes and is therefore eligible
-    // and in the same class.)
-    if (depth.contains(minLen)) {
-      val removable = index
-        .where(col("slen") >= minLen && col("lcp").isNotNull && col("lcp") >= minLen)
-        .select("k", "pos")
-      return SubstringDedup.coalesceRanges(removable, minLen)
-    }
-    val spark = index.sparkSession
-    import spark.implicits._
-    // A freshly built (or checkpointed) index is already laid out in
-    // gidx order -- the build's final sort IS that order, and
-    // mapPartitions preserves it -- so the segment scan runs on the
-    // existing partitions with NO exchange. One stats pass both
-    // VALIDATES the layout (gidx ascending within partitions and across
-    // partition ids) and collects the per-partition seams: eligible-row
-    // counts, first/last break flags, and the flagged-break sums that
-    // give each partition its global segment-id base. An index in any
-    // other layout (e.g. re-read from unsorted storage) is range-sorted
-    // by gidx and pinned, so the stats pass and the scan below see the
-    // same partitions.
-    def probe(df: DataFrame) = df.select(col("gidx"), col("k"), col("pos"),
-        col("slen"), col("lcp"))
-      .withColumn("_pid", spark_partition_id())
-      .as[(Long, Long, Long, Long, java.lang.Long, Int)]
-    def layoutStats(df: DataFrame) = {
-      val stats = probe(df).mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          var pid = -1
-          var asc = true
-          var prevG = Long.MinValue
-          var minG = Long.MaxValue
-          var maxG = Long.MinValue
-          var nElig = 0L
-          var firstBrk = -1L
-          var lastBrk = -1L
-          var flaggedSum = 0L   // sum of brk over flagged rows, last row pending
-          var prevEligBrk = -1L
-          it.foreach { case (g, _, _, slen, lcp, p) =>
-            pid = p
-            if (g <= prevG) asc = false
-            prevG = g
-            if (g < minG) minG = g
-            if (g > maxG) maxG = g
-            if (slen >= minLen) {
-              val brk = if (lcp == null || lcp.longValue() < minLen) 1L else 0L
-              nElig += 1
-              if (firstBrk < 0) firstBrk = brk
-              if (prevEligBrk >= 0 && (prevEligBrk == 0L || brk == 0L))
-                flaggedSum += prevEligBrk
-              prevEligBrk = brk
-              lastBrk = brk
-            }
-          }
-          Iterator.single((pid, asc, minG, maxG, nElig, firstBrk, lastBrk, flaggedSum))
-        }
-      }.collect().sortBy(_._1)
-      val aligned = stats.forall(_._2) &&
-        stats.iterator.sliding(2).withPartial(false)
-          .forall(w => w(0)._4 < w(1)._3)
-      (aligned, stats)
-    }
-    val (laidOut, stats) = layoutStats(index) match {
-      case (true, s) => (index, s)
-      case _ =>
-        val parts = spark.conf
-          .getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
-        val sorted = index.repartitionByRange(parts, col("gidx"))
-          .sortWithinPartitions("gidx")
-          .localCheckpoint(true)
-        val (aligned, s) = layoutStats(sorted)
-        require(aligned, "index gidx values are not unique")
-        (sorted, s)
-    }
-    // resolve each partition's LAST eligible row (flagged iff it
-    // continues, or the next partition's first eligible row continues
-    // it) and accumulate the global segment-id bases
-    val eligPids = stats.filter(_._5 > 0)
-    val nextFirstBrk: Map[Int, Long] =
-      eligPids.zip(eligPids.drop(1).map(_._6) :+ 1L)
-        .map { case (s, nb) => (s._1, nb) }.toMap
-    var segAcc = 0L
-    val seam: Map[Int, (Long, Long)] = eligPids.map { s =>
-      val (pid, _, _, _, _, _, lastBrk, flaggedSum) = s
-      val tailBrk = nextFirstBrk(pid)
-      val lastFlagged = lastBrk == 0L || tailBrk == 0L
-      val total = flaggedSum + (if (lastFlagged) lastBrk else 0L)
-      val e = (pid, (segAcc, tailBrk))
-      segAcc += total
-      e
-    }.toMap
-    val bcSeam = spark.sparkContext.broadcast(seam)
-    val seg = probe(laidOut).mapPartitions { it =>
-      val elig = it.filter(_._4 >= minLen).map { case (_, k, pos, _, lcp, p) =>
-        (k, pos, if (lcp == null || lcp.longValue() < minLen) 1L else 0L, p)
-      }.buffered
-      if (!elig.hasNext) Iterator.empty
-      else {
-        val (segBase, tailBrk) = bcSeam.value(elig.head._4)
-        var segId = segBase
-        new Iterator[(Long, Long, Long, Long)] {
-          def hasNext: Boolean = elig.hasNext
-          def next(): (Long, Long, Long, Long) = {
-            val (k, pos, brk, _) = elig.next()
-            val nb = if (elig.hasNext) elig.head._3 else tailBrk
-            if (brk == 0L || nb == 0L) { segId += brk; (k, pos, segId, 1L) }
-            else (k, pos, 0L, 0L)
-          }
-        }.filter(_._4 == 1L).map(r => (r._1, r._2, r._3))
-      }
-    }.toDF("k", "pos", "seg")
-    val keep = seg.groupBy("seg")
-      .agg(min(struct(col("k"), col("pos"))).as("kp"))
-    val removable = seg.join(keep, "seg")
-      .where(col("k") =!= col("kp.k") || col("pos") =!= col("kp.pos"))
+  def removeRanges(index: DataFrame): DataFrame = {
+    val d = depthOf(index).getOrElse(throw new IllegalArgumentException(
+      "index has no recorded build depth on its lcp column; build it with SuffixIndex.build"))
+    val removable = index
+      .where(col("slen") >= d && col("lcp").isNotNull && col("lcp") >= d)
       .select("k", "pos")
-    SubstringDedup.coalesceRanges(removable, minLen)
+    SubstringDedup.coalesceRanges(removable, d)
   }
 }

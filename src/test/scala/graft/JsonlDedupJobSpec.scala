@@ -143,15 +143,32 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
       compression = "none", stageDir = Some(stage)).written.collect()
     assert(st.metrics.count() == m1, "ranges stage must resume, not recompute")
     // the snapshot is the narrow reference artifact (k, s, e)
-    // stage name carries the unit (a bytes-run snapshot must never be
-    // resumed by a tokens/reversed run with the same (k,s,e) schema)
-    val snap = spark.read.parquet(s"$stage/remove_ranges_bytes")
+    // stage name carries the unit and minLen (a bytes-run snapshot must
+    // never be resumed by a tokens/reversed run with the same (k,s,e) schema)
+    val snap = spark.read.parquet(s"$stage/remove_ranges_bytes_m32")
     assert(snap.columns.toSet == Set("k", "s", "e") && snap.count() > 0)
     // and the resumed remove-mode output still cuts the duplicated run
     val back = spark.read.option("recursiveFileLookup", "true").json(out2)
       .select("meta", "text").as[(String, String)].collect().toMap
     assert(back("m0") == s"the original $run lives here first")
     assert(!back("m2").contains(run))
+  }
+
+  test("stage-dir: a rerun at another minLen computes its own snapshot") {
+    // the shared run is 42 bytes: a duplicate at minLen 32, none at 100
+    val in = mkTree()
+    val stage = Files.createTempDirectory("graft_jsonl_stage_ml").toString
+    def annotated(minLen: Int, stageDir: Option[String]) = {
+      val out = Files.createTempDirectory("graft_jsonl_ml").toString
+      JsonlDedupJob.run(spark, in, out, minLen = minLen, mode = "annotate",
+        compression = "none", stageDir = stageDir).written.collect()
+      spark.read.option("recursiveFileLookup", "true").json(out)
+        .where(size(col("sa_remove_ranges")) > 0).select("meta").as[String].collect().toSet
+    }
+    assert(annotated(32, Some(stage)) == Set("m2"))
+    val fresh = annotated(100, None)
+    assert(fresh.isEmpty)
+    assert(annotated(100, Some(stage)) == fresh, "minLen-100 rerun resumed the minLen-32 snapshot")
   }
 
   test("readTree streams: many-line gz + zst files, exact linenums across blank lines, no whole-file rows") {

@@ -202,8 +202,8 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     }
     val df = spark_(docs)
     for (rev <- Seq(false, true); verify <- Seq(true, false); prune <- Seq(false, true)) {
-      val got = SubstringDedup.removeRangesTokens(df, 4, verify = verify, reversed = rev,
-        verifyPrune = prune).as[(Long, Long, Long)].collect().toSet
+      val got = SubstringDedup.removeRanges(df, SubstringDedup.Tokens(rev),
+        SubstringDedup.Config(4, verify, prune)).as[(Long, Long, Long)].collect().toSet
       assert(got == bruteTokenRanges(docs, 4, rev), s"reversed=$rev verify=$verify prune=$prune")
       val ptrs = SubstringDedup.members(df, SubstringDedup.Tokens(rev),
         SubstringDedup.Config(4, verify, prune)).as[(Long, Long, Boolean)].collect().toSet
@@ -227,11 +227,11 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       (k, t.split(' ').filter(_.nonEmpty).map(w => vocab(w).toLong))
     }.toDF("k", "tokens")
     for (rev <- Seq(false, true); verify <- Seq(true, false)) {
-      val viaTokens = SubstringDedup.removeRangesTokens(textDf, 4, verify = verify, reversed = rev)
-        .as[(Long, Long, Long)].collect().toSet
+      val viaTokens = SubstringDedup.removeRanges(textDf, SubstringDedup.Tokens(rev),
+        SubstringDedup.Config(4, verify)).as[(Long, Long, Long)].collect().toSet
       for (prune <- Seq(false, true)) {
-        val viaIds = SubstringDedup.removeRangesIds(idsDf, 4, verify = verify, reversed = rev,
-          verifyPrune = prune).as[(Long, Long, Long)].collect().toSet
+        val viaIds = SubstringDedup.removeRanges(idsDf, SubstringDedup.Ids(rev),
+          SubstringDedup.Config(4, verify, prune)).as[(Long, Long, Long)].collect().toSet
         assert(viaIds == viaTokens, s"reversed=$rev verify=$verify prune=$prune")
         val ptrs = SubstringDedup.members(idsDf, SubstringDedup.Ids(rev),
           SubstringDedup.Config(4, verify, prune)).as[(Long, Long, Boolean)].collect().toSet
@@ -287,7 +287,12 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(slices.filter(s => s._1 == 1L).forall(!_._3))
   }
 
-  test("suffix index: one build answers multiple minLens == per-minLen path") {
+  /** Remove-ranges from a depth-`depth` suffix index over `df`. */
+  def viaIndex(df: DataFrame, depth: Int, parts: Int = 4): Set[(Long, Long, Long)] =
+    operators.SuffixIndex.removeRanges(operators.SuffixIndex.build(df,
+      operators.SuffixIndex.Config(depth, parts))).as[(Long, Long, Long)].collect().toSet
+
+  test("suffix index: one build per depth matches the spine") {
     // docs long enough for minLen 32/64 windows, with planted verbatim
     // copies (cross-doc dups) and a repeated intra-doc run
     val r = new scala.util.Random(11)
@@ -297,95 +302,78 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val docs = base ++ base.take(4).map { case (k, t) => (k + 100L, t) } :+
       (200L, base.head._2.take(70) * 2) // intra-doc repeat of a 70-byte run
     val df = spark_(docs)
-    val index = operators.SuffixIndex.build(df,
-      operators.SuffixIndex.Config(maxDepth = 64, parts = 8))
-      .localCheckpoint(true) // build once, query twice
-    for (minLen <- Seq(32, 64)) {
-      val viaIndex = operators.SuffixIndex.removeRanges(index, minLen)
+    for (depth <- Seq(32, 64)) {
+      val got = viaIndex(df, depth, parts = 8)
+      val spine = SubstringDedup.removeRanges(df, SubstringDedup.Config(depth))
         .as[(Long, Long, Long)].collect().toSet
-      val perMinLen = SubstringDedup.removeRanges(df, SubstringDedup.Config(minLen))
-        .as[(Long, Long, Long)].collect().toSet
-      assert(viaIndex == perMinLen, s"minLen=$minLen")
-      assert(viaIndex == bruteRanges(docs, minLen), s"minLen=$minLen vs brute")
+      assert(got == spine, s"depth=$depth")
+      assert(got == bruteRanges(docs, depth), s"depth=$depth vs brute")
     }
   }
 
-  test("suffix index: removeRanges on a NON-gidx-aligned index falls back and stays exact") {
-    // the segment scan rides the build's gidx-aligned layout; an index
-    // re-shuffled into arbitrary partitions (a storage re-read) must be
-    // detected by the layout validation and range-sorted by gidx first,
-    // with identical results. At minLen == the build depth (32) the
-    // per-row lcp predicate answers instead, on either layout.
+  test("suffix index: removeRanges is exact on any row layout") {
+    // the per-row lcp predicate reads no neighbour, so an index
+    // re-shuffled into arbitrary partitions (a storage re-read) answers
+    // the same as the build's own layout
     val r = new scala.util.Random(7)
     val base = (0 until 10).map { i =>
       (i.toLong, (0 until (60 + r.nextInt(40))).map(_ => "abcd"(r.nextInt(4))).mkString)
     }
-    // plus slices planted into other docs: their shared runs continue
-    // differently, so a minLen-16 class spans several depth-32 prefixes
-    // and its keeper is not always its first member in suffix order
     val docs = base ++ base.take(3).map { case (k, t) => (k + 100L, t) } ++
       plantedDocs(7, 12).map { case (k, t) => (k + 1000L, t) }
     val df = spark_(docs)
     val index = operators.SuffixIndex.build(df,
       operators.SuffixIndex.Config(maxDepth = 32, parts = 4))
-    // hash-reshuffled index -> layout check fails -> sorted first; the
-    // same rows in (k, pos) order inside each partition leave no suffix-
-    // order neighbours adjacent, so a scan that skipped the sort fails
+    // hash-reshuffled, and the same rows in (k, pos) order inside each
+    // partition, which leaves no suffix-order neighbours adjacent
     val shuffled = index.repartition(5, col("k")).localCheckpoint(true)
     val byDoc = index.repartition(5, col("k")).sortWithinPartitions("k", "pos")
       .localCheckpoint(true)
-    for (minLen <- Seq(16, 32)) {
-      val expected = SubstringDedup.removeRanges(df, SubstringDedup.Config(minLen))
-        .as[(Long, Long, Long)].collect().toSet
-      assert(operators.SuffixIndex.removeRanges(index, minLen)
-        .as[(Long, Long, Long)].collect().toSet == expected, s"aligned minLen=$minLen")
-      assert(operators.SuffixIndex.removeRanges(shuffled, minLen)
-        .as[(Long, Long, Long)].collect().toSet == expected, s"reshuffled minLen=$minLen")
-      assert(operators.SuffixIndex.removeRanges(byDoc, minLen)
-        .as[(Long, Long, Long)].collect().toSet == expected, s"(k, pos) order minLen=$minLen")
-    }
+    val expected = SubstringDedup.removeRanges(df, SubstringDedup.Config(32))
+      .as[(Long, Long, Long)].collect().toSet
+    assert(expected.nonEmpty)
+    for ((layout, idx) <- Seq("aligned" -> index, "reshuffled" -> shuffled, "(k, pos) order" -> byDoc))
+      assert(operators.SuffixIndex.removeRanges(idx)
+        .as[(Long, Long, Long)].collect().toSet == expected, layout)
   }
 
-  test("suffix index: minLen above the recorded build depth throws, naming both") {
-    // lcp is capped at the build depth, so a deeper query would read
-    // every row as a class break and silently return no ranges
+  test("suffix index: an index without a recorded depth throws") {
+    // the depth is the build's: a bare (gidx, k, pos, slen, rank, lcp)
+    // table says nothing about how deep its lcp values are capped
     val docs = Seq((1L, "abcdefghijklmnopqrstuvwxyz0123456789"), (2L, "xyz0123456789abcdefghijklmnop"))
     val index = operators.SuffixIndex.build(spark_(docs),
       operators.SuffixIndex.Config(maxDepth = 16, parts = 4)).localCheckpoint(true)
     assert(operators.SuffixIndex.depthOf(index).contains(16))
-    val err = intercept[IllegalArgumentException] {
-      operators.SuffixIndex.removeRanges(index, 17)
-    }
-    assert(err.getMessage.contains("17") && err.getMessage.contains("16"), err.getMessage)
-    // the build depth itself is answerable and matches the brute force
-    assert(operators.SuffixIndex.removeRanges(index, 16)
+    val bare = index.withColumn("lcp", col("lcp").as("lcp", org.apache.spark.sql.types.Metadata.empty))
+    assert(operators.SuffixIndex.depthOf(bare).isEmpty)
+    val err = intercept[IllegalArgumentException](operators.SuffixIndex.removeRanges(bare))
+    assert(err.getMessage.contains("build depth"), err.getMessage)
+    // the recorded depth answers and matches the brute force
+    assert(operators.SuffixIndex.removeRanges(index)
       .as[(Long, Long, Long)].collect().toSet == bruteRanges(docs, 16))
   }
 
-  test("suffix index: minLen below 1 throws") {
-    val index = operators.SuffixIndex.build(spark_(Seq((1L, "abcabc"))),
-      operators.SuffixIndex.Config(maxDepth = 8, parts = 2))
-    for (minLen <- Seq(0, -3)) {
+  test("suffix index: maxDepth below 1 throws") {
+    for (maxDepth <- Seq(0, -3)) {
       val err = intercept[IllegalArgumentException] {
-        operators.SuffixIndex.removeRanges(index, minLen)
+        operators.SuffixIndex.build(spark_(Seq((1L, "abcabc"))),
+          operators.SuffixIndex.Config(maxDepth, parts = 2))
       }
-      assert(err.getMessage.contains(minLen.toString), err.getMessage)
+      assert(err.getMessage.contains(maxDepth.toString), err.getMessage)
     }
   }
 
   test("suffix index: maxDepth far above the longest repeat stays exact") {
-    // longest repeated substring is ~6 bytes but maxDepth is 256: every
-    // adjacent lcp is far below the cap
+    // longest repeated substring is ~6 bytes: a depth-256 index finds no
+    // ranges, and a depth-4 index over the same docs finds the short ones
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "pack my box with five dozen liquor jugs"),
       (3L, "sphinx of black quartz judge my vow"))
     val df = spark_(docs)
-    val idx = operators.SuffixIndex.build(df,
-      operators.SuffixIndex.Config(maxDepth = 256, parts = 4))
-    val viaIndex = operators.SuffixIndex.removeRanges(idx, 4)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(viaIndex == bruteRanges(docs, 4))
+    assert(viaIndex(df, 256).isEmpty)
+    val short = viaIndex(df, 4)
+    assert(short.nonEmpty && short == bruteRanges(docs, 4))
   }
 
   test("suffix index: lcp values are exact against brute-force suffix comparison") {
