@@ -9,7 +9,10 @@
 #   4. spark-submit graft.JsonlDedupCli at local[32] (same input, fresh out)
 #   5. verify both runs annotate the identical (docid -> ranges) set and
 #      report wall times, plus the scaling efficiency on >= 32 cores
-#   6. spark-submit graft.JsonlDedupCli --unit tokens --mode remove at
+#   6. rerun local[8] on the stage dir: no stage recomputed (same number
+#      of metrics part files), output identical to the first run's, every
+#      output line its input line's fields plus sa_remove_ranges
+#   7. spark-submit graft.JsonlDedupCli --unit tokens --mode remove at
 #      local[8]; every output file must hold as many lines as its input
 #
 # Usage: dev/spark_submit_e2e.sh [nDocs]   (default 5000)
@@ -75,17 +78,46 @@ print(f"[e2e] PASS: {len(a)} annotated docs identical across local[8] and local[
 EOF
 
 echo "[e2e] resume check: re-run local[8] against the existing stage dir"
+# Stage.run appends metrics part files only when it computes a stage, so a
+# resumed run leaves their number unchanged
+metric_parts() { find "$WORK/stage8/_metrics" -name 'part-*' | wc -l; }
+parts_before=$(metric_parts)
 run_submit "local[8]" graft.JsonlDedupCli "$WORK/in" "$WORK/out8b" \
   --minlen 500 --mode annotate --stage-dir "$WORK/stage8" \
   > "$WORK/run8b.log" 2>&1
-# explicit if/else: under `set -euo pipefail` a bare `grep && echo` list
-# would abort the script silently when the marker is missing
-if grep -q "wrote" "$WORK/run8b.log"; then
-  echo "[e2e] resume PASS (stage snapshot reused)"
+parts_after=$(metric_parts)
+# explicit if/else: under `set -euo pipefail` a bare `test && echo` list
+# would abort the script silently when the check fails
+if [ "$parts_before" -gt 0 ] && [ "$parts_before" -eq "$parts_after" ]; then
+  echo "[e2e] resume PASS: stage snapshot reused ($parts_after metrics part files before and after)"
 else
-  echo "[e2e] resume FAILED: no 'wrote' marker in $WORK/run8b.log" >&2
+  echo "[e2e] resume FAILED: $parts_before metrics part files before the rerun, $parts_after after" >&2
   exit 1
 fi
+
+echo "[e2e] comparing the resumed output, and every field against its input line"
+python3 - "$WORK/in" "$WORK/out8" "$WORK/out8b" <<'EOF'
+import gzip, json, sys, pathlib
+
+def docs(root):
+    root = pathlib.Path(root)
+    acc = {}
+    for p in sorted(root.rglob("*.jsonl.gz")):
+        with gzip.open(p, "rt") as f:
+            acc[str(p.relative_to(root))] = [json.loads(line) for line in f]
+    return acc
+
+src, out, resumed = (docs(d) for d in sys.argv[1:4])
+assert resumed == out, "the resumed run's output differs from the first run's"
+assert src.keys() == out.keys(), "output files do not mirror the input tree"
+for f, lines in src.items():
+    assert len(out[f]) == len(lines), f"{f}: {len(out[f])} lines, want {len(lines)}"
+    for i, (d, o) in enumerate(zip(lines, out[f])):
+        assert list(o) == list(d) + ["sa_remove_ranges"], f"{f}:{i}: keys {list(o)}"
+        assert all(o[k] == v for k, v in d.items()), f"{f}:{i}: a field changed"
+n = sum(len(v) for v in src.values())
+print(f"[e2e] PASS: resumed output identical; all {n} docs keep their input fields and values")
+EOF
 
 echo "[e2e] token-unit remove at local[8]"
 run_submit "local[8]" graft.JsonlDedupCli "$WORK/in" "$WORK/out8tok" \

@@ -173,10 +173,11 @@ object BenchExtra {
           operators.SubstringDedup.removeRanges(d, operators.SubstringDedup.Config(ml))
         ranges(docs.limit(500), 500).count() // codegen warm-up, untimed
         val spine = Seq(200, 500, 1000).map { ml =>
+          val l = Bench.awaitQuiet(threshold = 4.0, maxWaitSec = 240)
           val (r, sec) = timed(s"sort-scan minLen=$ml") {
             ranges(docs, ml).agg(count(lit(1)), sum(col("e") - col("s"))).collect()(0)
           }
-          f"""{"minlen":$ml,"sec":$sec%.2f,"ranges":${r.getLong(0)},""" +
+          f"""{"minlen":$ml,"sec":$sec%.2f,"load1":$l%.2f,"ranges":${r.getLong(0)},""" +
             f""""removed_bytes":${if (r.isNullAt(1)) 0L else r.getLong(1)},"mb_per_sec":${bytes / 1e6 / sec}%.2f}"""
         }
         println(f"""{"metric":"minlen_sweep","docs":$nDocs,"text_mb":${bytes / 1e6}%.1f,""" +

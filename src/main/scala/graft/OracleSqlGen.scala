@@ -68,7 +68,7 @@ object OracleSqlGen {
   private def sigCtes(docsSql: String, cfg: graft.operators.MinHashLSH.Config): String = {
     val seedVals = Shingles.seeds(cfg.numHashes).zipWithIndex
       .map { case (s, i) => s"($i, ${unsigned(s)}::HUGEINT)" }.mkString(", ")
-    s"""${wordShingleCtes(docsSql, cfg.shingleLen)},
+    s"""${wordShingleCtes(docsSql, graft.operators.MinHashLSH.ShingleLen)},
        |seeds(i, seed) AS (VALUES $seedVals),
        |zz AS (SELECT k, i, ${xor("sh", "seed")} AS z0 FROM ph CROSS JOIN seeds),
        |${mixCtes("zz", "z0", "m", "mm")},

@@ -24,13 +24,14 @@ import graft.functions.{PolyHash, Shingles}
   */
 object MinHashLSH {
 
-  /** shingleLen is words per shingle: the unit is word n-grams
+  /** Words per shingle: the unit is word n-grams
     * (`NgramJaccard.shingled`). A small shared character vocabulary makes
     * char n-grams near-universal, which floods LSH buckets with false
     * candidates; word n-grams keep bucket sizes honest.
     */
+  val ShingleLen = 3
+
   case class Config(
-      shingleLen: Int = 3,
       numHashes: Int = 128,
       bands: Int = 32,
       maxBucketSize: Long = 10000) {
@@ -47,7 +48,7 @@ object MinHashLSH {
     val spark = docs.sparkSession
     import spark.implicits._
     val seeds = Shingles.seeds(cfg.numHashes)
-    NgramJaccard.shingled(docs, cfg.shingleLen)((k, sh) =>
+    NgramJaccard.shingled(docs, ShingleLen)((k, sh) =>
       Iterator.single((k, Shingles.minhashSignature(sh, seeds))))
       .toDF("k", "sig")
   }
@@ -66,7 +67,7 @@ object MinHashLSH {
     import spark.implicits._
     val seeds = Shingles.seeds(cfg.numHashes)
     val (bands, rows) = (cfg.bands, cfg.rowsPerBand)
-    NgramJaccard.shingled(docs, cfg.shingleLen) { (k, sh) =>
+    NgramJaccard.shingled(docs, ShingleLen) { (k, sh) =>
       if (sh.isEmpty) Iterator.empty
       else {
         val sig = Shingles.minhashSignature(sh, seeds)
@@ -124,14 +125,14 @@ object MinHashLSH {
                     pruneVerify: Boolean = false): DataFrame = {
     if (!pruneVerify)
       NgramJaccard.verifyWithSets(
-        candidatePairs(docs, cfg), NgramJaccard.shingleSets(docs, cfg.shingleLen), threshold)
+        candidatePairs(docs, cfg), NgramJaccard.shingleSets(docs, ShingleLen), threshold)
     else {
       val cand = candidatePairs(docs, cfg).localCheckpoint(true)
       val keys = cand.select(col("a").as("ck"))
         .unionAll(cand.select(col("b").as("ck")))
         .distinct()
       val sets = NgramJaccard.shingleSets(
-        docs.join(broadcast(keys), col("k") === col("ck"), "leftsemi"), cfg.shingleLen)
+        docs.join(broadcast(keys), col("k") === col("ck"), "leftsemi"), ShingleLen)
         .localCheckpoint(true)
       NgramJaccard.verifyWithSets(cand, sets, threshold)
     }

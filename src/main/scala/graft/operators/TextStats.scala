@@ -12,6 +12,9 @@ import graft.functions.PolyHash
   */
 object TextStats {
 
+  /** The document column every operator here reads. */
+  private val Text = col("text")
+
   /** Whitespace tokens with empties dropped (robust to repeated spaces). */
   def tokens(text: Column): Column =
     filter(split(text, " "), t => t =!= "")
@@ -23,9 +26,9 @@ object TextStats {
   /** (k, token, cnt): unigram counts over the corpus (reference unigram
     * sidecar, indexing_v6_sharded.py:103-106).
     */
-  def unigramCounts(docs: DataFrame, textCol: String = "text"): DataFrame =
+  def unigramCounts(docs: DataFrame): DataFrame =
     docs
-      .select(explode(tokens(col(textCol))).as("token"))
+      .select(explode(tokens(Text)).as("token"))
       .groupBy("token")
       .agg(count(lit(1)).as("cnt"))
 
@@ -34,15 +37,15 @@ object TextStats {
     */
   val Stopwords: Seq[String] = Seq("the", "a", "an", "and", "of", "to", "in", "is")
 
-  def docStats(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = tokens(col(textCol))
+  def docStats(docs: DataFrame): DataFrame = {
+    val toks = tokens(Text)
     val nTok = size(toks)
     val stopList = array(Stopwords.map(lit): _*)
     docs.select(
       col("k").cast("long"),
       nTok.cast("long").as("n_tokens"),
       size(array_distinct(toks)).cast("long").as("n_distinct"),
-      round(length(regexp_replace(col(textCol), " ", "")).cast("double") /
+      round(length(regexp_replace(Text, " ", "")).cast("double") /
         greatest(nTok, lit(1)), 6).as("mean_tok_len"),
       round(size(filter(toks, t => array_contains(stopList, t))).cast("double") /
         greatest(nTok, lit(1)), 6).as("stopword_ratio"))
@@ -51,8 +54,8 @@ object TextStats {
   /** Composite quality score in [0,1]: favors mid-length docs with healthy
     * type-token and stopword ratios (the usual pretraining heuristics).
     */
-  def qualityScore(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docStats(docs, textCol).withColumn("quality",
+  def qualityScore(docs: DataFrame): DataFrame =
+    docStats(docs).withColumn("quality",
       round(
         least(col("n_tokens").cast("double") / 64.0, lit(1.0)) * 0.4 +
         (col("n_distinct").cast("double") / greatest(col("n_tokens"), lit(1))) * 0.4 +
@@ -69,9 +72,9 @@ object TextStats {
     "de" -> Seq("der", "die", "und", "das", "ist", "von"),
     "fr" -> Seq("le", "la", "et", "les", "des", "une"))
 
-  def langId(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = tokens(lower(col(textCol)))
-    val scored = LangDicts.foldLeft(docs.select(col("k").cast("long"), col(textCol))) {
+  def langId(docs: DataFrame): DataFrame = {
+    val toks = tokens(lower(Text))
+    val scored = LangDicts.foldLeft(docs.select(col("k").cast("long"), Text)) {
       case (df, (lang, words)) =>
         val dict = array(words.map(lit): _*)
         df.withColumn(s"score_$lang",
@@ -93,12 +96,12 @@ object TextStats {
     * winnowing; the hash-based sliding-window variant is
     * `winnowFingerprints`).
     */
-  def minShingleFingerprint(docs: DataFrame, n: Int, textCol: String = "text"): DataFrame =
+  def minShingleFingerprint(docs: DataFrame, n: Int): DataFrame =
     docs.select(col("k").cast("long"),
-      when(length(col(textCol)) < n, col(textCol)).otherwise(
+      when(length(Text) < n, Text).otherwise(
         array_min(transform(
-          sequence(lit(1), length(col(textCol)) - (n - 1)),
-          i => col(textCol).substr(i, lit(n))))
+          sequence(lit(1), length(Text) - (n - 1)),
+          i => Text.substr(i, lit(n))))
       ).as("fp"))
 
   /** Winnowing fingerprints (Schleimer et al., SIGMOD'03 -- the MOSS
@@ -113,8 +116,7 @@ object TextStats {
     * deque of candidate minima (each hash enters and leaves the deque at
     * most once) instead of rescanning each w-window.
     */
-  def winnowFingerprints(docs: DataFrame, n: Int, w: Int,
-                         textCol: String = "text"): DataFrame = {
+  def winnowFingerprints(docs: DataFrame, n: Int, w: Int): DataFrame = {
     require(w >= 1, "window w must be >= 1")
     // the deque selection runs inside the native GraftWinnow expression
     // (functions/Native.scala): one codegen'd kernel call per doc fused
@@ -123,6 +125,6 @@ object TextStats {
     // the old null-handling.
     docs.select(col("k").cast("long"),
         explode(graft.functions.GraftFunctions
-          .winnow(encode(col(textCol), "UTF-8"), n, w)).as("fp"))
+          .winnow(encode(Text, "UTF-8"), n, w)).as("fp"))
   }
 }

@@ -1,16 +1,25 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** JSONL writeback sink (reference B7): re-serialize each document as one
-  * JSON line and write one output file per ORIGINAL input file, mirroring
-  * the input's relative path tree, rows in original line order, optionally
+/** JSONL writeback sink (reference B7): write each document as one JSON
+  * line and one output file per ORIGINAL input file, mirroring the
+  * input's relative path tree, rows in original line order, optionally
   * compressed -- the reference's final pipeline step
   * (write_back_to_jsonl_sharded.py:39-66, 95-101: group docs by `path`,
   * emit `json.dumps({**item, **meta})` lines, compress .zst/.gz).
+  *
+  * One overlay rule builds each line, `{**item, **meta}`: the doc's
+  * `json` column (the object as read; an empty object when the frame has
+  * no `json` column) with every payload column set on it. A field of the
+  * same name is replaced in place, a new one is appended, and every
+  * other field keeps its value and key order.
   *
   * Spark shape: `repartition(path)` routes every doc of one input file to
   * one task (the reference's worker-per-shard fan-out, :113-118);
@@ -29,9 +38,10 @@ import org.apache.spark.sql.functions._
   */
 object Writeback {
 
-  /** docs(path, linenum, payload...) -> `outDir`/<path>[.gz|.zst]
-    * JSONL files; every column except path/linenum lands in the JSON
-    * object. Returns (file, rows) per written file -- materialize it
+  /** docs(path, linenum, [json,] payload...) -> `outDir`/<path>[.gz|.zst]
+    * JSONL files; every payload column (all but path/linenum/json) is set
+    * on the doc's `json` object, null payload values excepted (to_json
+    * omits them). Returns (file, rows) per written file -- materialize it
     * (e.g. `.count()`) to execute the write.
     *
     * compression: "gzip" | "zstd" | "none" (reference supports the same
@@ -47,35 +57,32 @@ object Writeback {
                 compression: String = "gzip"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
+    // a malformed or out-of-range level is a caller error raised here, not
+    // a NumberFormatException or a codec failure mid-write on an executor
     val (codec, level) = compression.split(":") match {
       case Array(c) => (c, None)
-      case Array(c, l) =>
-        // a malformed level ("zstd:abc") is a caller error, not a bare
-        // NumberFormatException from deep inside the sink
-        (c, Some(try l.toInt catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"non-numeric codec level: $compression")
-        }))
+      case Array(c, l) => (c, Some(l.toIntOption.getOrElse(
+        throw new IllegalArgumentException(s"non-numeric codec level: $compression"))))
       case _ => throw new IllegalArgumentException(s"unknown compression $compression")
     }
     require(Set("gzip", "zstd", "none")(codec), s"unknown compression $compression")
     require(level.isEmpty || codec != "none", s"'none' takes no level: $compression")
-    level.foreach(l => if (codec == "gzip")
-      require(l >= 1 && l <= 9, s"gzip level must be 1..9: $compression"))
-    // zstd range-checked at parse time like gzip, not as an executor-side
-    // ZstdOutputStream failure mid-write
-    level.foreach(l => if (codec == "zstd")
-      require(l >= -7 && l <= 22, s"zstd level must be -7..22: $compression"))
-    val payload = docs.columns.filter(c => c != "path" && c != "linenum")
+    level.foreach { l =>
+      val (lo, hi) = if (codec == "gzip") (1, 9) else (-7, 22)
+      require(l >= lo && l <= hi, s"$codec level must be $lo..$hi: $compression")
+    }
+    val payload = docs.columns.filter(c => c != "path" && c != "linenum" && c != "json")
+    val base = if (docs.columns.contains("json")) col("json") else lit(null)
     // writer parallelism: the session's shuffle partitions (the
     // reference's worker-count knob, :113-118)
     val rows = docs.select(
         col("path").as("_p"),
         col("linenum").cast("long").as("_ln"),
+        base.cast("binary").as("_base"), // UTF-8, parsed without a String
         to_json(struct(payload.map(col).toSeq: _*)).as("_js"))
       .repartition(col("_p"))
       .sortWithinPartitions("_p", "_ln")
-      .as[(String, Long, String)]
+      .as[(String, Long, Array[Byte], String)]
     val suffix = codec match {
       case "gzip" => ".gz"; case "zstd" => ".zst"; case _ => ""
     }
@@ -84,6 +91,16 @@ object Writeback {
       // Executor-side Hadoop conf: the SESSION's conf rebuilt from a
       // snapshot, so s3a credentials/endpoints and fs tuning propagate.
       val conf = HadoopConfs.build(hadoopProps)
+      // floats read as exact BigDecimals: a passed-through number keeps its digits
+      val mapper = new ObjectMapper().enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+        .configure(JsonNodeFeature.STRIP_TRAILING_BIGDECIMAL_ZEROES, false)
+      def line(p: String, ln: Long, base: Array[Byte], js: String): Array[Byte] =
+        if (base == null) js.getBytes(StandardCharsets.UTF_8) // empty base: the payload as is
+        else mapper.readTree(base) match {
+          case doc: ObjectNode =>
+            mapper.writeValueAsBytes(doc.setAll[JsonNode](mapper.readTree(js).asInstanceOf[ObjectNode]))
+          case _ => throw new IllegalArgumentException(s"`json` at $p:$ln is not a JSON object")
+        }
       val attempt = Option(org.apache.spark.TaskContext.get())
         .map(tc => tc.taskAttemptId().toString).getOrElse("local")
       val written = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
@@ -94,15 +111,10 @@ object Writeback {
       var n = 0L
       def finish(): Unit = if (os != null) {
         os.close(); os = null
-        // commit: atomic OVERWRITING rename of the completed temp onto the
-        // final name. FileContext.rename(OVERWRITE) replaces the target in
-        // one namespace operation on HDFS (and posix-rename on local FS),
-        // so there is never a window where the final name is absent -- a
-        // re-run over existing output keeps the old committed file visible
-        // until the instant the new one replaces it. Where FileContext is
-        // unsupported, fall back to delete+rename retried (last completed
-        // attempt wins either way; interleaving stays impossible because
-        // only COMPLETED temps are ever renamed).
+        // commit: FileContext.rename(OVERWRITE) replaces the target in one
+        // namespace operation (HDFS, posix rename), so a re-run keeps the
+        // old file visible until the new one replaces it. Elsewhere fall
+        // back to delete+rename, retried; only COMPLETED temps are renamed.
         val renamedAtomically =
           try {
             org.apache.hadoop.fs.FileContext.getFileContext(target.toUri, conf)
@@ -128,7 +140,7 @@ object Writeback {
         }
         written += ((cur, n))
       }
-      it.foreach { case (p, _, js) =>
+      it.foreach { case (p, ln, base, js) =>
         if (p != cur) {
           finish()
           // hard guard: Hadoop's Path(parent, child) RESOLVES an absolute
@@ -151,7 +163,8 @@ object Writeback {
             case _ => raw
           }
         }
-        os.write((js + "\n").getBytes(StandardCharsets.UTF_8))
+        os.write(line(p, ln, base, js))
+        os.write('\n')
         n += 1
       }
       finish()

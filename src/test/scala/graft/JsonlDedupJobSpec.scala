@@ -182,7 +182,8 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
       """{"text": "zstd doc one", "id": 90001}""",
       """{"text": "zstd doc two", "id": 90002}"""))
     val df = JsonlDedupJob.readTree(spark, root.toString)
-    val got = df.select("path", "linenum", "id").as[(String, Long, Long)].collect()
+    val got = df.select(col("path"), col("linenum"), get_json_object(col("json"), "$.id").cast("long"))
+      .as[(String, Long, Long)].collect()
     val big = got.filter(_._1 == "big.jsonl.gz")
     assert(big.length == lines.count(_.nonEmpty))
     // each doc's linenum equals its physical 0-based line index
@@ -276,6 +277,7 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
 
   test("token-unit workflow: annotate carries token ranges, remove cuts the span; reversed maps back") {
     val run10 = (1 to 10).map(i => s"t$i").mkString(" ")
+    val meta = get_json_object(col("json"), "$.meta")
     val root = Files.createTempDirectory("graft_tok_in")
     writePlain(root.resolve("a/part0.jsonl"), Seq(
       s"""{"text": "$run10 unique alpha beta", "meta": "m0"}"""))
@@ -286,20 +288,20 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
       Files.createTempDirectory("graft_tok_ann").toString,
       minLen = 8, mode = "annotate", unit = "tokens")
     ann.written.count()
-    val ranges = ann.docs.where(col("meta") === "m1")
+    val ranges = ann.docs.where(meta === "m1")
       .select(explode(col("sa_remove_ranges_tokens")))
       .select("col.s", "col.e").as[(Long, Long)].collect().toSeq
     // doc2 tokens: 3 prefix + 10 copied + 2 tail; the copied run spans
     // token offsets [3, 13)
     assert(ranges == Seq((3L, 13L)))
-    assert(ann.docs.where(col("meta") === "m0")
+    assert(ann.docs.where(meta === "m0")
       .select(size(col("sa_remove_ranges_tokens"))).as[Int].collect().head == 0)
 
     val rem = JsonlDedupJob.run(spark, root.toString,
       Files.createTempDirectory("graft_tok_rem").toString,
       minLen = 8, mode = "remove", unit = "tokens")
     rem.written.count()
-    val cut = rem.docs.where(col("meta") === "m1").select("text").as[String].collect().head
+    val cut = rem.docs.where(meta === "m1").select("text").as[String].collect().head
     assert(cut == "prefix words here tail words")
 
     // reversed scan: same keep/remove decision here, ranges mapped back
@@ -308,7 +310,7 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
       Files.createTempDirectory("graft_tok_rev").toString,
       minLen = 8, mode = "annotate", unit = "tokens", reversed = true)
     rev.written.count()
-    val revRanges = rev.docs.where(col("meta") === "m1")
+    val revRanges = rev.docs.where(meta === "m1")
       .select(explode(col("sa_remove_ranges_tokens")))
       .select("col.s", "col.e").as[(Long, Long)].collect().toSeq
     assert(revRanges == Seq((3L, 13L)))
@@ -371,6 +373,88 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("every input field passes through: unsampled files, late fields, mixed types, reader-named fields") {
+    // every doc carries both `text` and its ids (`tokens`, id i <-> word
+    // "w<i>"), so the bytes and ids units run over the same trees; docs
+    // 0 and `copyAt` of each tree share a 12-id (59-byte) run
+    val dupRun = 100 until 112
+    def doc(i: Int, copyAt: Int, extra: Seq[(String, String)] = Nil, id: String = null): String = {
+      val r = new scala.util.Random(i)
+      val own = Seq.fill(8)(200 + r.nextInt(800))
+      val ids = if (i == 0 || i == copyAt) own.take(3) ++ dupRun ++ own.drop(3) else own
+      val text = ids.map(t => s"w$t").mkString(" ")
+      (Seq("id" -> Option(id).getOrElse(i.toString), "text" -> s""""$text"""", "score" -> "0.25",
+        "tokens" -> ids.mkString("[", ", ", "]"), "nested" -> """{"q": [1, 2.50]}""") ++ extra)
+        .map { case (f, v) => s""""$f": $v""" }.mkString("{", ", ", "}")
+    }
+    val trees: Seq[(String, Seq[(String, Seq[String])])] = Seq(
+      // `url` only in the last of 20 files, outside any head sample
+      "unsampled" -> (0 until 20).map { f =>
+        f"f$f%02d.jsonl" -> (0 until 2).map { j =>
+          doc(2 * f + j, 39, if (f == 19) Seq("url" -> s""""https://x/$j"""") else Nil) }
+      },
+      // `lang` first appears at line 110
+      "late" -> Seq("a.jsonl" -> (0 until 120).map(i =>
+        doc(i, 115, if (i >= 110) Seq("lang" -> "\"en\"") else Nil))),
+      // a string id after 110 numeric ones
+      "mixed" -> Seq("a.jsonl" -> (0 until 120).map(i =>
+        doc(i, 110, id = if (i >= 110) s""""x$i"""" else null))),
+      // doc fields named like the reader's own columns
+      "reader" -> Seq("a.jsonl" -> (0 until 3).map(i => doc(i, -1)),
+        "b.jsonl" -> (3 until 6).map(i => doc(i, 4,
+          Seq("path" -> "\"s3://elsewhere/x.jsonl\"", "linenum" -> "7", "k" -> "\"kv\"")))))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def obj(line: String) = mapper.readTree(line).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    def keys(o: com.fasterxml.jackson.databind.JsonNode) = {
+      val b = Seq.newBuilder[String]; o.fieldNames().forEachRemaining(b += _); b.result()
+    }
+    def lines(dir: String, f: String) = Files.readAllLines(Paths.get(dir, f)).toArray.toSeq.map(_.toString)
+    for ((name, files) <- trees; (unit, minLen) <- Seq("bytes" -> 32, "ids" -> 6)) {
+      val tag = s"tree=$name unit=$unit"
+      val root = Files.createTempDirectory("graft_passthrough")
+      files.foreach { case (f, ls) => writePlain(root.resolve(f), ls) }
+      val ann = unit match { case "bytes" => "sa_remove_ranges"; case _ => "sa_remove_ranges_tokens" }
+      val outA = Files.createTempDirectory("graft_passthrough_ann").toString
+      val outR = Files.createTempDirectory("graft_passthrough_rm").toString
+      for ((out, mode) <- Seq(outA -> "annotate", outR -> "remove"))
+        JsonlDedupJob.run(spark, root.toString, out, minLen = minLen, mode = mode,
+          compression = "none", unit = unit).written.collect()
+      var cut = 0
+      files.foreach { case (f, ls) =>
+        val a = lines(outA, f)
+        val r = lines(outR, f)
+        assert(a.length == ls.length && r.length == ls.length, s"$tag $f")
+        ls.indices.foreach { i =>
+          val in = obj(ls(i))
+          // annotate: the input, key order kept, plus the annotation
+          val got = obj(a(i))
+          assert(keys(got) == keys(in) :+ ann, s"$tag $f:$i")
+          val ranges = (0 until got.get(ann).size).map(j => got.get(ann).get(j))
+            .map(x => (x.get("s").asInt, x.get("e").asInt))
+          got.remove(ann)
+          assert(got == in, s"$tag $f:$i")
+          // remove: the input with the source field replaced in place by
+          // the annotated ranges cut out
+          val rm = obj(r(i))
+          assert(keys(rm) == keys(in), s"$tag $f:$i")
+          val want = in.deepCopy()
+          if (unit == "bytes") {
+            val t = in.get("text").asText
+            want.put("text", (0 until t.length).filterNot(p => ranges.exists(x => p >= x._1 && p < x._2))
+              .map(t.charAt).mkString)
+          } else {
+            val kept = want.putArray("tokens")
+            (0 until in.get("tokens").size).filterNot(p => ranges.exists(x => p >= x._1 && p < x._2))
+              .foreach(p => kept.add(in.get("tokens").get(p)))
+          }
+          assert(rm == want, s"$tag $f:$i")
+          if (ranges.nonEmpty) cut += 1
+        }
+      }
+      assert(cut == 1, s"$tag: the one later copy of the shared run is annotated")
+    }
+  }
+
   test("splittable plain ingest: tiny splitBytes == unsplit read, exact linenums, >1 task") {
     val root = Files.createTempDirectory("graft_split_in")
     val r = new scala.util.Random(13)
@@ -388,9 +472,9 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
       """{"text": "gz sibling doc", "meta": "g0"}"""))
 
     val whole = JsonlDedupJob.readTree(spark, root.toString, splitBytes = 0)
-      .select("path", "linenum", "k", "text", "meta")
+      .select(col("path"), col("linenum"), col("k"), col("text"), get_json_object(col("json"), "$.meta"))
     val split = JsonlDedupJob.readTree(spark, root.toString, splitBytes = 512)
-      .select("path", "linenum", "k", "text", "meta")
+      .select(col("path"), col("linenum"), col("k"), col("text"), get_json_object(col("json"), "$.meta"))
     val fileLen = Files.size(p)
     assert(fileLen > 5 * 512, "fixture must span many chunks")
     val w = whole.collect().map(_.toSeq).toSet
@@ -452,7 +536,8 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
     writeGz(gzDir.resolve("f.jsonl.gz"), cr)
     def read(dir: Path, splitBytes: Long) =
       JsonlDedupJob.readTree(spark, dir.toString, splitBytes = splitBytes)
-        .select("linenum", "text", "id").as[(Long, String, Long)].collect().toSet
+        .select(col("linenum"), col("text"), get_json_object(col("json"), "$.id").cast("long"))
+        .as[(Long, String, Long)].collect().toSet
     val crWhole = read(plainDir, 0)
     assert(crWhole == (0 until 120).map(i => (i.toLong, s"cr doc $i with padding", i.toLong)).toSet)
     assert(read(plainDir, 256) == crWhole)
@@ -463,7 +548,7 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
     val root = Files.createTempDirectory("graft_jsonl_order")
     for (p <- Seq("crawl=b/x.jsonl", "a0/y.jsonl", "crawl=a1/z.jsonl", "b1/w.jsonl"))
       writePlain(root.resolve(p), Seq("""{"text": "t"}"""))
-    val got = JsonlDedupJob.listTree(spark, root.toString)
+    val got = JsonlDedupJob.listTreeWithLen(spark, root.toString).map(_._1)
     // keys: a0/y.jsonl, a1/z.jsonl, b/x.jsonl, b1/w.jsonl ("/" < "1")
     assert(got == Seq("a0/y.jsonl", "crawl=a1/z.jsonl", "crawl=b/x.jsonl", "b1/w.jsonl"))
   }

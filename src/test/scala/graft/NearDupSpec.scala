@@ -64,7 +64,7 @@ class NearDupSpec extends AnyFunSuite with SparkTestBase {
     val docs = texts.toDF("k", "text")
     val cfg = MinHashLSH.Config(numHashes = 16, bands = 4)
     val seeds = Shingles.seeds(cfg.numHashes)
-    val sets = texts.map { case (k, t) => k -> Shingles.wordNgramHashes(t, cfg.shingleLen) }
+    val sets = texts.map { case (k, t) => k -> Shingles.wordNgramHashes(t, MinHashLSH.ShingleLen) }
     val sigs = sets.map { case (k, s) => k -> Shingles.minhashSignature(s, seeds) }
     val bands = for ((k, s) <- sets if s.nonEmpty; bi <- 0 until cfg.bands) yield {
       val sig = sigs.toMap.apply(k)
@@ -75,7 +75,7 @@ class NearDupSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(sets.count(_._2.nonEmpty) == 4 && sets.toMap.apply(3L).sameElements(sets.toMap.apply(4L)))
 
-    val gotSets = NgramJaccard.shingleSets(docs, cfg.shingleLen)
+    val gotSets = NgramJaccard.shingleSets(docs, MinHashLSH.ShingleLen)
       .as[(Long, Array[Long])].collect().map { case (k, s) => k -> s.toSeq }.sortBy(_._1)
     assert(gotSets.toSeq == sets.map { case (k, s) => k -> s.toSeq })
     val gotSigs = MinHashLSH.signatures(docs, cfg)

@@ -103,6 +103,24 @@ class WritebackSpec extends AnyFunSuite with SparkTestBase {
     m.get.group(1).toLong
   }
 
+  test("writeback overlays payload columns on the doc's json object; without json the line is the payload") {
+    val out = Files.createTempDirectory("graft_wb_overlay").toString
+    def written(f: String) = Files.readAllLines(Paths.get(out, f)).toArray.toSeq
+    // no json column: the golden bytes of the payload's to_json
+    Writeback.jsonlTree(Seq(("p.jsonl", 0L, "t", 3, Seq((1L, 2L))))
+      .toDF("path", "linenum", "text", "n", "r")
+      .withColumn("r", expr("transform(r, x -> struct(x._1 as s, x._2 as e))")),
+      out, compression = "none").collect()
+    assert(written("p.jsonl") == Seq("""{"text":"t","n":3,"r":[{"s":1,"e":2}]}"""))
+    // json base: `text` replaced in place, `extra` appended, every other
+    // field (numbers with their digits, nested values) kept in order
+    val base = """{"id": 7, "text": "old", "score": 1.50, "nested": {"q": [1, 2.0]}}"""
+    Writeback.jsonlTree(Seq(("q.jsonl", 0L, base, "new", Seq(1L, 2L)))
+      .toDF("path", "linenum", "json", "text", "extra"), out, compression = "none").collect()
+    assert(written("q.jsonl") ==
+      Seq("""{"id":7,"text":"new","score":1.50,"nested":{"q":[1,2.0]},"extra":[1,2]}"""))
+  }
+
   test("writeback rejects absolute / scheme-qualified / traversal paths") {
     val out = Files.createTempDirectory("graft_wb_guard").toString
     for (bad <- Seq("/etc/x.jsonl", "file:///tmp/x.jsonl", "a/../../x.jsonl")) {
