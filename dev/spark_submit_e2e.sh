@@ -8,7 +8,8 @@
 #   3. spark-submit graft.JsonlDedupCli at local[8]  (annotate + stage dir)
 #   4. spark-submit graft.JsonlDedupCli at local[32] (same input, fresh out)
 #   5. verify both runs annotate the identical (docid -> ranges) set and
-#      report wall times, plus the scaling efficiency on >= 32 cores
+#      report the input file count and wall times, plus the scaling
+#      efficiency on >= 32 cores
 #   6. rerun local[8] on the stage dir: no stage recomputed (same number
 #      of metrics part files), output identical to the first run's, every
 #      output line its input line's fields plus sa_remove_ranges
@@ -152,5 +153,7 @@ if [ "$cores" -ge 32 ]; then
 else
   eff="8->32 efficiency: not measured ($cores cores)"
 fi
-echo "[e2e] local[8]: ${t8}s  local[32]: ${t32}s  $eff"
+# one read task per input file: the file count bounds the read's parallelism
+nfiles=$(find "$WORK/in" -type f ! -name '.*' | wc -l) # not the hidden .crc sidecars
+echo "[e2e] input: $nfiles files  local[8]: ${t8}s  local[32]: ${t32}s  $eff"
 echo "[e2e] DONE"

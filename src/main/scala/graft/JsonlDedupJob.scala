@@ -33,9 +33,10 @@ import graft.sources.Writeback
   *
   * Scale shape: files are STREAMED line by line through Hadoop input
   * streams (the reference's per-shard loop, indexing_v6_sharded.py:21-39),
-  * never one row per file, and the doc id k = fid * 2^40 + linenum is a
-  * pure function of position (fid from the sorted file list), so no
-  * per-doc id map is built, broadcast or joined.
+  * one task per input chunk (a gzip/zstd file, or a newline-aligned
+  * range of a large plain file), never one row per file, and the doc id
+  * k = fid * 2^40 + linenum is a pure function of position (fid from the
+  * sorted file list), so no per-doc id map is built, broadcast or joined.
   */
 object JsonlDedupJob {
 
@@ -179,7 +180,11 @@ object JsonlDedupJob {
     * one row per CHUNK) assigns each chunk its exact starting linenum,
     * and the read pass runs one task per chunk -- a 400 GB plain shard
     * parses on ~1600 cores instead of serializing through one task.
-    * Blank lines advance linenum but emit no doc
+    * Both passes run the driver's chunk table itself as their task list
+    * (task i reads chunk i, by construction): the plan holds no
+    * exchange, and Spark hands the tasks to free cores. 0-byte files are
+    * dropped on the driver from the listed lengths; fids stay indices in
+    * the full listing. Blank lines advance linenum but emit no doc
     * (indexing_v6_sharded.py:21-39 skips empties the same way).
     *
     * Output: (path, linenum, k, json, <requiredField>): the raw line, which
@@ -193,8 +198,12 @@ object JsonlDedupJob {
     val relLen = listTreeWithLen(spark, inDir)
     val hadoopProps = graft.sources.HadoopConfs.snapshot(spark)
     // chunk table: whole-file units (end = -1) for compressed or small
-    // files, [start, end) byte ranges for plain files above splitBytes
+    // files, [start, end) byte ranges for plain files above splitBytes.
+    // fid is the index in the full listing; 0-byte files (they occur in
+    // real crawl trees, and a GZIPInputStream over one throws at
+    // construction) get no chunk
     val chunks: Seq[(Long, String, Long, Long)] = relLen.zipWithIndex.flatMap {
+      case ((_, 0L), _) => Nil
       case ((p, len), i) =>
         val fid = i.toLong
         val compressed = p.endsWith(".gz") || p.endsWith(".zst")
@@ -204,22 +213,25 @@ object JsonlDedupJob {
           (fid, p, ci * splitBytes, math.min((ci + 1) * splitBytes, len))
         }
     }
+    // the indices 0 until n in n partitions: exactly one chunk index per
+    // task, no exchange. A parallelized RDD would split the same way, but
+    // an RDD-backed plan is sized spark.sql.defaultSizeInBytes, which
+    // plans the downstream broadcast joins as shuffles
+    def oneTaskEach(n: Int) = spark.range(0, n, 1, math.max(n, 1)).as[Long]
     // offset probe: exact starting linenum per split chunk. The probe job
     // returns one (fid, start, nLineStarts) row PER CHUNK -- metadata
     // scale -- and the per-file prefix sum runs on the driver.
-    val split = chunks.filter(_._4 >= 0)
+    val split = chunks.filter(_._4 >= 0).toVector
     val startLnOf: Map[(Long, Long), Long] =
       if (split.isEmpty) Map.empty
       else {
-        val counts = spark.createDataset(split).toDF("fid", "path", "start", "end")
-          .repartition(split.size, col("fid"), col("start"))
-          .as[(Long, String, Long, Long)]
-          .map { case (fid, relPath, s, e) =>
-            val p = new Path(inDir, relPath)
-            val conf = graft.sources.HadoopConfs.build(hadoopProps)
-            val in = p.getFileSystem(conf).open(p)
-            try (fid, s, countLineStarts(in, s, e)) finally in.close()
-          }.collect()
+        val counts = oneTaskEach(split.size).map { i =>
+          val (fid, relPath, s, e) = split(i.toInt)
+          val p = new Path(inDir, relPath)
+          val conf = graft.sources.HadoopConfs.build(hadoopProps)
+          val in = p.getFileSystem(conf).open(p)
+          try (fid, s, countLineStarts(in, s, e)) finally in.close()
+        }.collect()
         counts.toSeq.groupBy(_._1).flatMap { case (fid, cs) =>
           var acc = 0L
           cs.sortBy(_._2).map { case (_, s, n) => val r = ((fid, s), acc); acc += n; r }
@@ -227,38 +239,25 @@ object JsonlDedupJob {
       }
     val tasks = chunks.map { case (fid, p, s, e) =>
       (fid, p, s, e, startLnOf.getOrElse((fid, s), 0L))
-    }
-    val lines = spark.createDataset(tasks).toDF("fid", "path", "start", "end", "start_ln")
-      // explicit numPartitions = one chunk per task (AQE never coalesces a
-      // REPARTITION_BY_NUM exchange); at most a few chunks share a task on
-      // hash collision, which only costs a little pipelining
-      .repartition(tasks.size, col("fid"), col("start"))
-      .as[(Long, String, Long, Long, Long)]
-      .flatMap { case (fid, relPath, cs, ce, startLn) =>
-        val p = new Path(inDir, relPath)
-        val conf = graft.sources.HadoopConfs.build(hadoopProps)
-        val fs = p.getFileSystem(conf)
-        // 0-byte files occur in real crawl trees; a GZIPInputStream over
-        // one throws EOFException at construction -- skip them outright
-        if (fs.getFileStatus(p).getLen == 0) Iterator.empty
-        else {
-          // splittable path: lines starting in [cs, ce) of the plain
-          // file; whole-file path (ce = -1): every line, decompressed
-          val raw = fs.open(p)
-          val in: InputStream =
-            if (ce >= 0) { raw.seek(math.max(0L, cs - 1)); raw }
-            else if (p.getName.endsWith(".gz")) new GZIPInputStream(raw, 1 << 16)
-            else if (p.getName.endsWith(".zst")) new com.github.luben.zstd.ZstdInputStream(raw)
-            else raw
-          // a killed/failed task never reaches EOF -- close on task end
-          Option(org.apache.spark.TaskContext.get())
-            .foreach(_.addTaskCompletionListener[Unit](_ =>
-              try in.close() catch { case _: java.io.IOException => () }))
-          new Lines(in, cs, if (ce < 0) Long.MaxValue else ce, startLn, relPath)
-            .map { case (ln, line) => (fid, relPath, ln, line) }
-        }
-      }
-      .toDF("fid", "path", "linenum", "line")
+    }.toVector
+    val lines = oneTaskEach(tasks.size).flatMap { i =>
+      val (fid, relPath, cs, ce, startLn) = tasks(i.toInt)
+      val p = new Path(inDir, relPath)
+      val raw = p.getFileSystem(graft.sources.HadoopConfs.build(hadoopProps)).open(p)
+      // splittable path: lines starting in [cs, ce) of the plain file;
+      // whole-file path (ce = -1): every line, decompressed
+      val in: InputStream =
+        if (ce >= 0) { raw.seek(math.max(0L, cs - 1)); raw }
+        else if (p.getName.endsWith(".gz")) new GZIPInputStream(raw, 1 << 16)
+        else if (p.getName.endsWith(".zst")) new com.github.luben.zstd.ZstdInputStream(raw)
+        else raw
+      // a killed/failed task never reaches EOF -- close on task end
+      Option(org.apache.spark.TaskContext.get())
+        .foreach(_.addTaskCompletionListener[Unit](_ =>
+          try in.close() catch { case _: java.io.IOException => () }))
+      new Lines(in, cs, if (ce < 0) Long.MaxValue else ce, startLn, relPath)
+        .map { case (ln, line) => (fid, relPath, ln, line) }
+    }.toDF("fid", "path", "linenum", "line")
 
     val fieldType = if (requiredField == "tokens") ArrayType(LongType) else StringType
     val parsed = lines.select(

@@ -285,7 +285,7 @@ case class GraftSimHash64(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** `graft_winnow(bytes, n, w)`: distinct winnowing fingerprints
+/** `GraftFunctions.winnow(bytes, n, w)`: distinct winnowing fingerprints
   * (array<bigint>) -- min-of-each-w-window over rolling n-gram hashes.
   */
 case class GraftWinnow(first: Expression, second: Expression, third: Expression)
@@ -302,7 +302,7 @@ case class GraftWinnow(first: Expression, second: Expression, third: Expression)
     copy(first = f, second = s, third = t)
 }
 
-/** `graft_run_fingerprints(bytes, minLen)`: run fingerprints
+/** `GraftFunctions.runFingerprints(bytes, minLen)`: run fingerprints
   * (array<bigint>, see `NativeKernels.runFingerprints`) -- docs that
   * share or repeat a minLen-byte run hold a value twice between them.
   */
@@ -374,13 +374,7 @@ object GraftFunctions {
   val descriptions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     desc("graft_simhash64",
       "graft_simhash64(bytes, n) - 64-bit SimHash over byte n-gram shingles",
-      2, es => GraftSimHash64(es(0), es(1))),
-    desc("graft_winnow",
-      "graft_winnow(bytes, n, w) - distinct winnowing (MOSS) fingerprints over rolling n-gram hashes",
-      3, es => GraftWinnow(es(0), es(1), es(2))),
-    desc("graft_run_fingerprints",
-      "graft_run_fingerprints(bytes, minLen) - winnowing fingerprints marking docs that share or repeat a minLen-byte run",
-      2, es => GraftRunFingerprints(es(0), es(1))))
+      2, es => GraftSimHash64(es(0), es(1))))
 }
 
 /** SparkSessionExtensions entry point: activate with

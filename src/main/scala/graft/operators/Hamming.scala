@@ -99,7 +99,7 @@ object Hamming {
     * Block i covers bit range [i*w + min(i,extra), ...) where the first
     * `extra` blocks get an extra bit (64 = blocks*w + extra).
     */
-  def blockTable(df: DataFrame, blocks: Int): DataFrame = {
+  private def blockTable(df: DataFrame, blocks: Int): DataFrame = {
     val blockCols = blockBounds(blocks).map { b =>
       struct(lit(b.i).as("block"), blockVal(col("bits"), b).as("block_bits"))
     }

@@ -52,7 +52,7 @@ object NgramJaccard {
   /** Prefix table: each doc's (|d| - ceil(t*|d|) + 1) globally-rarest
     * shingles -- the only ones that need indexing for threshold t.
     */
-  def prefixTable(sh: DataFrame, threshold: Double): DataFrame = {
+  private def prefixTable(sh: DataFrame, threshold: Double): DataFrame = {
     val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
     val byRarity = org.apache.spark.sql.expressions.Window
       .partitionBy("k").orderBy(col("df"), col("sh"))

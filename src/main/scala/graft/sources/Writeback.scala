@@ -145,8 +145,9 @@ object Writeback {
           finish()
           // hard guard: Hadoop's Path(parent, child) RESOLVES an absolute
           // or scheme-qualified child to itself, which would write outside
-          // outDir (over arbitrary files) -- reject non-relative paths.
-          require(!p.startsWith("/") && !p.contains(":") && !p.contains(".."),
+          // outDir (over arbitrary files) -- reject non-relative paths and
+          // any `..` segment (a `..` inside a name, `a..b`, is a name).
+          require(!p.startsWith("/") && !p.contains(":") && !p.split('/').contains(".."),
             s"writeback path must be a clean relative path, got: $p")
           cur = p; n = 0L
           target = new Path(outDir, p + suffix)

@@ -265,14 +265,29 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
     val root = Files.createTempDirectory("graft_jsonl_edge")
     Files.createDirectories(root.resolve("sub"))
     Files.write(root.resolve("sub/empty.jsonl.gz"), Array.emptyByteArray)
+    // 0-byte plain and zstd files sorted BEFORE the non-empty one: skipping
+    // them must not renumber its fid
+    Files.write(root.resolve("0a.jsonl"), Array.emptyByteArray)
+    Files.write(root.resolve("0b.jsonl.zst"), Array.emptyByteArray)
     // no trailing newline on the final line
     Files.writeString(root.resolve("a.jsonl"),
       "{\"text\": \"first line doc\"}\n{\"text\": \"last line no newline\"}")
-    val got = JsonlDedupJob.readTree(spark, root.toString)
-      .select("path", "linenum", "text").as[(String, Long, String)].collect().sortBy(_._2)
+    val df = JsonlDedupJob.readTree(spark, root.toString)
+    val got = df.select("path", "linenum", "text").as[(String, Long, String)].collect().sortBy(_._2)
     assert(got.toSeq == Seq(
       ("a.jsonl", 0L, "first line doc"),
       ("a.jsonl", 1L, "last line no newline")))
+    val fid = JsonlDedupJob.listTreeWithLen(spark, root.toString).map(_._1).indexOf("a.jsonl")
+    assert(fid == 2)
+    assert(df.select(shiftright(col("k"), JsonlDedupJob.LinenumBits)).as[Long]
+      .collect().toSet == Set(fid.toLong))
+    // a tree of 0-byte files only reads as an empty frame, same schema
+    val empty = Files.createTempDirectory("graft_jsonl_all_empty")
+    Files.write(empty.resolve("x.jsonl.gz"), Array.emptyByteArray)
+    Files.write(empty.resolve("y.jsonl"), Array.emptyByteArray)
+    val none = JsonlDedupJob.readTree(spark, empty.toString)
+    assert(none.schema == df.schema)
+    assert(none.collect().isEmpty)
   }
 
   test("token-unit workflow: annotate carries token ranges, remove cuts the span; reversed maps back") {
@@ -542,6 +557,34 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
     assert(crWhole == (0 until 120).map(i => (i.toLong, s"cr doc $i with padding", i.toLong)).toSet)
     assert(read(plainDir, 256) == crWhole)
     assert(read(gzDir, 0) == crWhole)
+  }
+
+  test("readTree: one task per chunk, no exchange") {
+    val root = Files.createTempDirectory("graft_jsonl_layout")
+    for (f <- 0 until 8)
+      writeGz(root.resolve(f"part-$f%04d.jsonl.gz"),
+        (0 until 3).map(i => s"""{"text": "gz file $f doc $i"}"""))
+    val plain = root.resolve("plain.jsonl")
+    writePlain(plain, (0 until 60).map(i => s"""{"text": "plain doc $i with some padding text"}"""))
+    val len = Files.size(plain)
+    assert(len > 3 * 512)
+    val nChunks = 8 + (len + 511) / 512
+    val df = JsonlDedupJob.readTree(spark, root.toString, splitBytes = 512)
+    assert(df.rdd.getNumPartitions == nChunks)
+    val filesOf = df.select(spark_partition_id(), col("path")).distinct()
+      .as[(Int, String)].collect().groupBy(_._1).map { case (pid, r) => pid -> r.map(_._2).toSet }
+    val gzParts = (0 until 8).map(f => f"part-$f%04d.jsonl.gz").map(p => filesOf.collect {
+      case (pid, fs) if fs.contains(p) => pid
+    }.toSeq)
+    assert(gzParts.forall(_.size == 1) && gzParts.flatten.distinct.size == 8, filesOf)
+    assert(filesOf.values.forall(fs => !fs.contains("plain.jsonl") || fs.size == 1), filesOf)
+    assert(df.count() == 8 * 3 + 60)
+    // the helper's collect also walks into an adaptive plan's stages
+    val exchanges = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+      }
+    assert(exchanges.isEmpty, df.queryExecution.executedPlan)
   }
 
   test("listTree orders by the reference key (crawl= stripped)") {

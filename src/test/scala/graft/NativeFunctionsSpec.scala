@@ -4,11 +4,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{GraftFunctions, Shingles}
 
-/** Native Catalyst expressions (graft.functions.Native): SQL registration
-  * via GraftExtensions (SparkTestBase's session sets
-  * spark.sql.extensions=graft.functions.GraftExtensions), kernel equivalence, null
-  * propagation, and a CODEGEN_ONLY pass proving every doGenCode actually
-  * compiles (no silent interpreter fallback).
+/** Native Catalyst expressions (graft.functions.Native): the one SQL
+  * registration, graft_simhash64, via GraftExtensions (SparkTestBase's
+  * session sets spark.sql.extensions=graft.functions.GraftExtensions), the
+  * Column wrappers, kernel equivalence, null propagation, and a
+  * CODEGEN_ONLY pass proving every doGenCode actually compiles (no silent
+  * interpreter fallback).
   */
 class NativeFunctionsSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -58,10 +59,10 @@ class NativeFunctionsSpec extends AnyFunSuite with SparkTestBase {
     assert(row.getLong(0) == 0L)
   }
 
-  test("graft_winnow: SQL output matches the kernel; guarantee holds") {
+  test("winnow: column output matches the kernel; guarantee holds") {
     val t = "the winnowing guarantee says shared runs share a fingerprint"
-    val got = spark.sql(
-      s"SELECT graft_winnow(encode('$t', 'UTF-8'), 8, 4) AS fp")
+    val got = Seq(t).toDF("t")
+      .select(GraftFunctions.winnow(encode(col("t"), "UTF-8"), 8, 4).as("fp"))
       .collect()(0).getSeq[Long](0).toSet
     val want = {
       val arr = graft.functions.NativeKernels.winnow(bytes(t), 8, 4)
@@ -77,11 +78,11 @@ class NativeFunctionsSpec extends AnyFunSuite with SparkTestBase {
     (0 until a.numElements()).map(a.getLong)
   }
 
-  test("graft_run_fingerprints: SQL and CODEGEN_ONLY output match the kernel") {
+  test("runFingerprints: column and CODEGEN_ONLY output match the kernel") {
     val t = "abcdefghij" * 12 + "the run fingerprints of a doc" * 3
-    val row = spark.sql(
-      s"""SELECT graft_run_fingerprints(encode('$t', 'UTF-8'), 40) AS fp,
-         |       graft_run_fingerprints(CAST(NULL AS BINARY), 40) AS n""".stripMargin)
+    val row = Seq(t).toDF("t")
+      .select(GraftFunctions.runFingerprints(encode(col("t"), "UTF-8"), 40).as("fp"),
+        GraftFunctions.runFingerprints(lit(null).cast("binary"), 40).as("n"))
       .collect()(0)
     assert(row.getSeq[Long](0) == runFps(bytes(t), 40) && row.getSeq[Long](0).nonEmpty)
     assert(row.isNullAt(1))

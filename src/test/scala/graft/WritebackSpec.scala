@@ -133,6 +133,23 @@ class WritebackSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("writeback: `..` inside a name is a name, a `..` segment is rejected") {
+    val out = Files.createTempDirectory("graft_wb_dots").toString
+    val ok = Seq(("a..b/c..d.jsonl", 0L, "t")).toDF("path", "linenum", "text")
+    val files = Writeback.jsonlTree(ok, out, compression = "none").collect()
+    assert(files.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("a..b/c..d.jsonl", 1L)))
+    assert(Files.readAllLines(Paths.get(out, "a..b", "c..d.jsonl")).toArray.toSeq ==
+      Seq("""{"text":"t"}"""))
+    for (bad <- Seq("../x.jsonl", "a/../../x.jsonl")) {
+      val docs = Seq((bad, 0L, "t")).toDF("path", "linenum", "text")
+      val e = intercept[org.apache.spark.SparkException] {
+        Writeback.jsonlTree(docs, out, compression = "none").collect()
+      }
+      assert(e.getMessage.contains("relative path") ||
+        Option(e.getCause).exists(_.getMessage.contains("relative path")), s"for $bad")
+    }
+  }
+
   test("writeback commit protocol: no .inprogress litter, re-runs replace completed files, stale temps are inert") {
     val out = Files.createTempDirectory("graft_wb_commit").toString
     // a stale temp from a "zombie attempt" that died mid-write
