@@ -23,6 +23,9 @@ import graft.plans.Stage
   *
   * Every stage is snapshot-checkpointed with metrics (Stage); passing
   * stageDir=None runs it unmaterialized (pure lazy plan) for benchmarks.
+  * A stage's name carries every Config field that shapes its output, so
+  * a rerun on the same stageDir at another config computes its own
+  * snapshots; that the images are the same stays the caller's contract.
   */
 object DedupPipeline {
 
@@ -59,6 +62,9 @@ object DedupPipeline {
     val stage = stageDir.map(new Stage(spark, _))
     def checkpointed(name: String)(df: => DataFrame): DataFrame =
       stage.map(_.run(name)(df)).getOrElse(df)
+    val nearCfg = s"h${cfg.minhash.numHashes}_b${cfg.minhash.bands}" +
+      s"_x${cfg.minhash.maxBucketSize}_j${cfg.jaccThreshold}"
+    val phashCfg = s"r${cfg.hammingRadius}"
 
     // Pin only the narrow (image_id -> k) id MAP: range bounds are sampled
     // per execution, so the assignment must be materialized once (see
@@ -91,7 +97,7 @@ object DedupPipeline {
     }
 
     // 3. substring dedup on captions, annotate mode
-    val annotated = checkpointed("annotated") {
+    val annotated = checkpointed(s"annotated_m${cfg.minLen}") {
       SubstringDedup.annotate(
         keyed.select(col("k"), col("caption").as("text")),
         SubstringDedup.Config(cfg.minLen))
@@ -102,7 +108,7 @@ object DedupPipeline {
     // pruneVerify: candidates cover a small fraction of the corpus, so
     // the exact-Jaccard shingle pass runs once over candidate docs only
     // instead of twice over every caption (MinHashLSH.verifiedPairs).
-    val nearEdges = checkpointed("near_edges") {
+    val nearEdges = checkpointed(s"near_edges_$nearCfg") {
       MinHashLSH.verifiedPairs(
         keyed.select(col("k"), col("caption").as("text")),
         cfg.minhash, cfg.jaccThreshold, pruneVerify = true)
@@ -112,13 +118,13 @@ object DedupPipeline {
     // count is already known from the pinned id map (one cheap count of
     // the narrow checkpoint), so Hamming.pairs skips its own counting
     // probe pass when steering the flat-vs-two-level plan choice.
-    val phashEdges = checkpointed("phash_edges") {
+    val phashEdges = checkpointed(s"phash_edges_$phashCfg") {
       Hamming.pairs(keyed.select(col("k").as("id"), col("phash").as("bits")),
         cfg.hammingRadius, nHint = idMap.count())
     }
 
     // 6. union -> connected components -> clusters keyed back to image_id
-    val clusters = checkpointed("clusters") {
+    val clusters = checkpointed(s"clusters_${nearCfg}_$phashCfg") {
       val edges = exactEdges.select("a", "b")
         .unionAll(nearEdges.select("a", "b"))
         .unionAll(phashEdges.select("a", "b"))

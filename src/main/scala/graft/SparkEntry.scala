@@ -224,16 +224,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // A1 + A4 + E1: production remove-ranges plan (sort-scan keeper
-    // detection + byte verification of every candidate). Differential vs
-    // a2's bare hash-trusted sort-scan.
+    // detection + byte verification of every candidate).
     "a1_remove_ranges" -> ((s, dir) =>
       SubstringDedup.removeRanges(docsWithDups(s, dir), SubstringDedup.Config(MinLen))),
 
-    // A2 + F1: sort-scan substring dedup trusting the 122-bit window hash
-    // (no byte verification; differential plan, same oracle).
+    // A2 + F1: the reference's parallel scan IS the spine -- the hash
+    // partition on (h1, h2) never splits a group, so each partition's
+    // sorted adjacent-run scan is the parallel scan, exact-compared like
+    // the reference's (same plan and oracle as a1).
     "a2_remove_ranges_sortscan" -> ((s, dir) =>
-      SubstringDedup.removeRanges(docsWithDups(s, dir),
-        SubstringDedup.Config(MinLen, verifyBytes = false))),
+      SubstringDedup.removeRanges(docsWithDups(s, dir), SubstringDedup.Config(MinLen))),
 
     // A8 full-fidelity sibling: remove-ranges answered from the suffix
     // index (one range sort on each position's maxDepth-byte prefix),
@@ -248,12 +248,14 @@ object SparkEntry {
     // tokens over rolling 61-bit token-id hashes, token-exact verified
     // (the reference's u16/u32 tokenized-indexing surface).
     "a1_remove_ranges_tokens" -> ((s, dir) =>
-      SubstringDedup.removeRangesTokens(docsWithDups(s, dir), MinLenTok)),
+      SubstringDedup.removeRanges(docsWithDups(s, dir), SubstringDedup.Tokens(false),
+        SubstringDedup.Config(MinLenTok))),
 
     // C2 --reversed: the mirrored-stream scan (suffix duplication);
     // positions are reversed-stream token offsets.
     "a1_remove_ranges_tokens_rev" -> ((s, dir) =>
-      SubstringDedup.removeRangesTokens(docsWithDups(s, dir), MinLenTok, reversed = true)),
+      SubstringDedup.removeRanges(docsWithDups(s, dir), SubstringDedup.Tokens(true),
+        SubstringDedup.Config(MinLenTok))),
 
     // C2 --unit ids: dedup over a PRE-TOKENIZED id stream (the
     // reference's production mode: vocab applied upstream, engine sees
@@ -263,7 +265,8 @@ object SparkEntry {
     // extra collisions the lossy mapping introduces are seen IDENTICALLY
     // by both engines -- ids mode dedups whatever ids it is handed.
     "a1_remove_ranges_ids" -> ((s, dir) =>
-      SubstringDedup.removeRangesIds(docsWithIdTokens(s, dir), MinLenTok)),
+      SubstringDedup.removeRanges(docsWithIdTokens(s, dir), SubstringDedup.Ids(false),
+        SubstringDedup.Config(MinLenTok))),
 
     // A6: dup-ptr enumeration with dropped flags.
     "a6_dup_ptrs" -> ((s, dir) =>

@@ -6,9 +6,10 @@ package graft.functions
   * Used to key fixed-length (`minLen`-byte) windows without materializing
   * the window bytes: the reference engine compares raw `min_len`-byte
   * prefixes of suffix-array neighbours (cpp_engine_dedup.h:233-234
-  * `memcmp(ds+ptr1, ds+ptr2, min_len)`); we replace "equal bytes" with
-  * "equal 122-bit hash", optionally re-verified on the (rare) duplicate
-  * groups against the actual bytes (see SubstringDedup.verifyBytes).
+  * `memcmp(ds+ptr1, ds+ptr2, min_len)`); the hash only blocks: equal
+  * 122-bit hashes co-locate and sort together, and every window in a
+  * (rare) hash run is then compared by its exact key (see
+  * SubstringDedup.members).
   *
   * Deterministic, seed-free, and O(1) per position via rolling update --
   * this is what keeps window generation at O(bytes) instead of

@@ -41,18 +41,6 @@ object Shingles {
     java.util.Arrays.copyOf(hs, w)
   }
 
-  /** Exact Jaccard similarity of two SORTED distinct-hash arrays. */
-  def jaccard(a: Array[Long], b: Array[Long]): Double = {
-    if (a.isEmpty && b.isEmpty) return 0.0
-    var i = 0; var j = 0; var inter = 0
-    while (i < a.length && j < b.length) {
-      if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
-      else if (a(i) < b(j)) i += 1
-      else j += 1
-    }
-    inter.toDouble / (a.length + b.length - inter)
-  }
-
   /** MinHash signature from distinct shingle hashes: sig(i) =
     * min over shingles of mix64(shingle ^ seed(i)). Computed per doc with
     * no shuffle (the shingle set is local to the row). Empty docs get

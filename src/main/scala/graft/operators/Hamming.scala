@@ -146,7 +146,7 @@ object Hamming {
   }
 
   /** Flat r+1-block scheme (see scaladoc); exact, narrow-block. */
-  def pairsFlat(df: DataFrame, r: Int): DataFrame = {
+  private[graft] def pairsFlat(df: DataFrame, r: Int): DataFrame = {
     val blocks = r + 1
     val bt = blockTable(df, blocks)
     bt.select(col("block"), col("block_bits"), col("id").as("a"), col("bits").as("ba"))

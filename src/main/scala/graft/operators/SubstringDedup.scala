@@ -25,22 +25,26 @@ import graft.functions.{GraftFunctions, Utf8}
   * which templates its one engine over the unit type (u8 bytes / u16, u32
   * token ids, h:70-77), there is ONE spine, and the unit (`WindowUnit`:
   * bytes, whitespace tokens or pre-tokenized ids, forward or reversed)
-  * only chooses the per-doc sequence and the exact window key -- and, at
-  * writeback, the annotation column and how its ranges are cut out.
+  * answers everything the spine asks of it: the per-doc sequence, the
+  * exact window key, whether its windows carry that key themselves, and
+  * which docs can hold a run -- and, at writeback, the annotation column
+  * and how its ranges are cut out.
   *
   * The spine is the members of exact duplicate groups (`members`, the
   * reference's find_dup_ptrs, h:801-837): ONE run scan over windows
   * sorted on (h1, h2, x, k, pos) emits every member of a run of >= 2
   * equal (h1, h2, x) rows, the run's first row -- its (k, pos) minimum,
   * the keeper (h:239-246) -- with dropped = false. `x` is the exact
-  * window key or null, and ONE verifier decides what it is: the window
-  * bytes the generator carries (bytes at minLen <= 32), null with
-  * verification off, or else null on a first scan whose hash-run members
-  * are joined to the corpus once, keyed, and scanned again. Every member
-  * is compared with its exact equals, not with its hash run's first row,
-  * so the result is exact under hash collisions: in a hash run
-  * [A, B, B'] with B = B' != A, B' is removable and B is not. `dupPtrs`
-  * is the members; `removeRanges` is their dropped rows, coalesced.
+  * window key, and ONE verifier decides where it comes from: the window
+  * bytes the generator carries (bytes at minLen <= 32), or else null on
+  * a first scan whose hash-run members are joined to the corpus once,
+  * keyed, and scanned again. Like the reference, which memcmps every
+  * window it keeps or drops (h:233-234), no group is ever decided by the
+  * hash alone: every member is compared with its exact equals, not with
+  * its hash run's first row, so the result is exact under hash
+  * collisions: in a hash run [A, B, B'] with B = B' != A, B' is
+  * removable and B is not. `dupPtrs` is the members; `removeRanges` is
+  * their dropped rows, coalesced.
   *
   * Bytes above minLen 32 (the reference's production minLen is 500) run
   * a doc-level prefilter first, blocking-then-verify: winnowing
@@ -59,11 +63,10 @@ import graft.functions.{GraftFunctions, Utf8}
   *
   * Scale notes (100 TB): window rows are 4 longs (~28 B/position) --
   * comparable to the reference's 8N suffix-array footprint -- and flow
-  * through a single hash-partitioned shuffle; at minLen <= 32 with
-  * verification on they also carry the window bytes (no wider than a
-  * digest), and above it only the (small) hash-run members are ever
-  * joined to the corpus, a join AQE skew-join splits if one window is
-  * viral. Above minLen 32 the fingerprint exchange carries about
+  * through a single hash-partitioned shuffle; at minLen <= 32 they also
+  * carry the window bytes (no wider than a digest), and above it only
+  * the (small) hash-run members are ever joined to the corpus, a join AQE
+  * skew-join splits if one window is viral. Above minLen 32 the fingerprint exchange carries about
   * 2 / (w + 1) of the windows (~3% at minLen 500) and the window shuffle
   * only the marked docs' windows; a viral fingerprint collapses in the
   * partial count, and only the semi-join back to its holders grows with
@@ -91,29 +94,39 @@ object SubstringDedup {
     * bytes) and not at bytes above 32, whose fingerprint prefilter
     * already pins the marked docs that the window sort and the join read.
     */
-  case class Config(
-      minLen: Int,
-      verifyBytes: Boolean = true,
-      verifyPrune: Boolean = false)
+  case class Config(minLen: Int, verifyPrune: Boolean = false)
 
-  /** The unit windows are counted in. For the spine it decides two
-    * things: the per-doc sequence the window generator rolls over (`seq`,
-    * in original orientation), and the exact equality key of the window
-    * at a position (`key`, what verification compares); for the
-    * writeback, the annotation and the cut. `reversed` (token/id units):
-    * the reference's --reversed indexes the mirrored stream
-    * (suffix-vs-prefix duplication); windows are generated over the
-    * reversed sequence and `pos` reports the REVERSED-stream offset, so
-    * first-occurrence keep order matches the reference's reversed scan.
+  /** The unit windows are counted in. For the spine it decides the
+    * per-doc sequence (`seq`, in original orientation), the exact window
+    * key (`key`), whether windows carry that key (`inlineKey`) and which
+    * docs can hold a run (`runDocs`); for the writeback, the annotation
+    * and the cut. `reversed` (token/id units): the reference's --reversed
+    * indexes the mirrored stream (suffix-vs-prefix duplication); windows
+    * are generated over the reversed sequence and `pos` reports the
+    * REVERSED-stream offset, so first-occurrence keep order matches the
+    * reference's reversed scan.
     */
   private[graft] sealed abstract class WindowUnit {
     def reversed: Boolean
     /** The doc as a sequence: binary (bytes) or an array (tokens, ids). */
     def seq: Column
     /** Exact key (binary) of the `len`-unit window at 0-based `pos` (a
-      * column name) of the oriented sequence column named `s`.
+      * column name) of the oriented sequence column named `s`: the digest
+      * of its elements as strings joined by single spaces, as the DuckDB
+      * oracle keys them. Injective: no token (split on ' ', empties
+      * dropped) and no decimal id holds a space.
       */
-    def key(s: String, pos: String, len: Int): Column
+    def key(s: String, pos: String, len: Int): Column =
+      digest(encode(concat_ws(" ",
+        transform(slice(col(s), col(pos) + 1, lit(len)), _.cast("string"))), "UTF-8"))
+    /** Whether the generator's window at `minLen` carries its own exact
+      * key (`x`), so the run scan needs no verifier join.
+      */
+    def inlineKey(minLen: Int): Boolean = false
+    /** The docs (k, ...) that can hold a run of `minLen`-unit windows,
+      * pinned, or None when every doc can.
+      */
+    def runDocs(docs: DataFrame, minLen: Int): Option[DataFrame] = None
     /** The doc field `seq` is read from, and remove mode rewrites. */
     def source: String
     /** The annotation column: the doc's ranges in original-orientation
@@ -139,15 +152,28 @@ object SubstringDedup {
 
   /** UTF-8 bytes of `text` (the reference default). The key is the
     * window's raw digest, a flat 32 B regardless of minLen; it is only
-    * computed above 32 bytes, since at or below that the run scan
+    * computed above `InlineMax` bytes, since at or below that the run scan
     * compares the raw window the generator carries.
     */
   private[graft] case object Bytes extends WindowUnit {
+    private val InlineMax = 32
     val reversed = false
     val source = "text"
     def seq: Column = encode(col("text"), "UTF-8")
-    def key(s: String, pos: String, len: Int): Column =
+    override def key(s: String, pos: String, len: Int): Column =
       digest(expr(s"substring($s, $pos + 1, $len)"))
+    /** INLINE (round 6): a window no wider than its digest rides the ONE
+      * hash exchange -- zero corpus re-scans, zero joins. Inlining a
+      * 500-byte window would multiply the exchange ~16x.
+      */
+    override def inlineKey(minLen: Int): Boolean = minLen <= InlineMax
+    /** FINGERPRINT PREFILTER above 32 bytes: the docs holding a shared
+      * run fingerprint (`runCandidateKeys`), pinned once.
+      */
+    override def runDocs(docs: DataFrame, minLen: Int): Option[DataFrame] =
+      if (minLen <= InlineMax) None
+      else Some(pruneToKeys(docs.select(col("k").cast("long").as("k"), col("text")),
+        "k", runCandidateKeys(docs, minLen), pin = true))
     /** Byte offsets clipped inward to UTF-8 character boundaries. */
     override val annotation = "sa_remove_ranges"
     override def annotate(ranges: Column): Column = Utf8.clip(seq, ranges)
@@ -157,13 +183,11 @@ object SubstringDedup {
   /** Whitespace tokens of `text` (reference C2; split ' ' + drop empties).
     * Each token's digit is the polyhash of its UTF-8 bytes: a pure
     * function of the token, so no vocabulary table is built, broadcast or
-    * synchronized. Key: digest of the NUL-joined tokens.
+    * synchronized.
     */
   private[graft] case class Tokens(reversed: Boolean) extends WindowUnit {
     val source = "text"
     def seq: Column = filter(split(col("text"), " "), t => t =!= "")
-    def key(s: String, pos: String, len: Int): Column =
-      digest(encode(concat_ws("\u0000", slice(col(s), col(pos) + 1, lit(len))), "UTF-8"))
     /** The surviving tokens re-joined with single spaces. */
     def cut(ranges: Column): Column = concat_ws(" ", kept(ranges))
   }
@@ -171,16 +195,11 @@ object SubstringDedup {
   /** A PRE-TOKENIZED `tokens: array<int|long>` field -- the reference's
     * production mode (indexing_v6_sharded.py:205-218 tokenizes up front,
     * the engine consumes u16/u32 id streams): the vocabulary lives with
-    * the caller and the ids are the window digits directly. Key: digest
-    * of the comma-joined decimal ids (',' never occurs inside a decimal int,
-    * so the join is injective).
+    * the caller and the ids are the window digits directly.
     */
   private[graft] case class Ids(reversed: Boolean) extends WindowUnit {
     val source = "tokens"
     def seq: Column = col("tokens").cast("array<long>")
-    def key(s: String, pos: String, len: Int): Column =
-      digest(encode(concat_ws(",",
-        transform(slice(col(s), col(pos) + 1, lit(len)), _.cast("string"))), "UTF-8"))
     def cut(ranges: Column): Column = kept(ranges)
   }
 
@@ -319,21 +338,13 @@ object SubstringDedup {
     */
   private[graft] def members(docs: DataFrame, unit: WindowUnit, cfg: Config,
                              rekey: DataFrame => DataFrame = identity): DataFrame = {
-    // FINGERPRINT PREFILTER (bytes above 32): the spine runs over the
-    // marked docs only, pinned once -- the window sort and the verifier
-    // join read that pin, so no verifyPrune is needed
-    val prefilter = unit == Bytes && cfg.minLen > 32
-    val src = if (!prefilter) docs else
-      pruneToKeys(docs.select(col("k").cast("long").as("k"), col("text")),
-        "k", runCandidateKeys(docs, cfg.minLen), pin = true)
-    // INLINE verification (round 6): at minLen <= 32 the raw window is no
-    // wider than the digest the join would compute, so x = the window
-    // bytes ride the ONE hash exchange -- zero corpus re-scans and zero
-    // joins. Above 32 bytes the join stays (inlining a 500-byte window
-    // would multiply the exchange ~16x; the digests keep it flat).
-    val inline = cfg.verifyBytes && unit == Bytes && cfg.minLen <= 32
+    // a unit that marks the docs that can hold a run pins them once: the
+    // window sort and the verifier join read that pin, so it needs no prune
+    val marked = unit.runDocs(docs, cfg.minLen)
+    val src = marked.getOrElse(docs)
+    val inline = unit.inlineKey(cfg.minLen)
     val hashRuns = runMembers(rekey(unitWindows(src, unit, cfg.minLen, withBytes = inline)))
-    if (inline || !cfg.verifyBytes) hashRuns.select("k", "pos", "dropped")
+    if (inline) hashRuns.select("k", "pos", "dropped")
     else {
       // JOIN verification: the hash-run members (a small fraction of the
       // windows) are joined to the corpus once, keyed exactly IN the join
@@ -342,7 +353,7 @@ object SubstringDedup {
       // 110 s job, round 2). With the prune, the members are pinned: they
       // feed the doc-key prune AND the join probe, and recomputing them
       // would re-run the full window sort per consumer
-      val prune = cfg.verifyPrune && !prefilter
+      val prune = cfg.verifyPrune && marked.isEmpty
       val probe = if (prune) hashRuns.localCheckpoint(true) else hashRuns
       val vb = if (!prune) corpus(src, unit)
         else pruneToKeys(corpus(src, unit), "vk", probe.select(col("k").as("ck")), pin = false)
@@ -406,28 +417,11 @@ object SubstringDedup {
 
   /** Full pipeline: docs(k, text) -> remove_ranges(k, s, e), unclipped
     * byte offsets (the reference's remove_ranges file, h:294-297): the
-    * sort-scan with byte verification of candidates when
-    * cfg.verifyBytes.
+    * byte-unit spine's dropped members, coalesced. Token and id ranges
+    * name their unit: `removeRanges(docs, Tokens(rev) | Ids(rev), cfg)`.
     */
   def removeRanges(docs: DataFrame, cfg: Config): DataFrame =
     removeRanges(docs, Bytes, cfg)
-
-  /** Token-unit remove ranges: docs(k, text) -> (k, s, e) in TOKEN
-    * offsets over the (optionally reversed) whitespace token stream --
-    * C2's find_remove_ranges for tokenized corpora, token-exact verified.
-    */
-  def removeRangesTokens(docs: DataFrame, minLenTok: Int,
-                         reversed: Boolean = false): DataFrame =
-    removeRanges(docs, Tokens(reversed), Config(minLenTok))
-
-  /** Pre-tokenized-id remove ranges: docs(k, tokens: array<int|long>) ->
-    * (k, s, e) in TOKEN offsets over the (optionally reversed) id stream
-    * -- C2's find_remove_ranges for already-tokenized corpora, the
-    * reference's production input shape, id-exact verified.
-    */
-  def removeRangesIds(docs: DataFrame, minLenTok: Int,
-                      reversed: Boolean = false): DataFrame =
-    removeRanges(docs, Ids(reversed), Config(minLenTok))
 
   /** Annotate mode: original rows + sa_remove_ranges (UTF-8-clipped),
     * sorted by range start; docs without duplicates get an empty array.
@@ -521,8 +515,8 @@ object SubstringDedup {
   /** Diagnostics (reference find_dup_ptrs, h:801-837): every member of a
     * duplicate group with dropped flag; the kept (first) one has
     * dropped=false. The spine itself (`members`), so it is exact under
-    * hash collisions with cfg.verifyBytes, and `removeRanges` is exactly
-    * its dropped rows, coalesced.
+    * hash collisions, and `removeRanges` is exactly its dropped rows,
+    * coalesced.
     */
   def dupPtrs(docs: DataFrame, cfg: Config): DataFrame =
     members(docs, Bytes, cfg)

@@ -64,6 +64,18 @@ object DedupTestOracle {
                        reversed: Boolean): Set[(Long, Long, Long)] =
     coalesce(dropped(bruteTokenMembers(docs, minLenTok, reversed)), minLenTok)
 
+  /** Exact Jaccard similarity of two SORTED distinct-hash arrays. */
+  def jaccard(a: Array[Long], b: Array[Long]): Double = {
+    if (a.isEmpty && b.isEmpty) return 0.0
+    var i = 0; var j = 0; var inter = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
+      else if (a(i) < b(j)) i += 1
+      else j += 1
+    }
+    inter.toDouble / (a.length + b.length - inter)
+  }
+
   /** Independent UTF-8 clip (reference write_back_to_jsonl_sharded.py:75-84
     * semantics, re-derived here so tests don't reuse the library's clip).
     */

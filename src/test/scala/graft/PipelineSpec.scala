@@ -48,6 +48,27 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(res.annotated.where(size($"sa_remove_ranges") > 0).count() > 0)
   }
 
+  test("staged pipeline: unstaged output, resumed rerun, a changed config computes its own") {
+    def out(res: DedupPipeline.Result) = (
+      res.clusters.as[(String, String)].collect().toSet,
+      res.annotated.select($"k", $"sa_remove_ranges").as[(Long, Seq[(Long, Long)])].collect().toMap)
+    val dir = java.nio.file.Files.createTempDirectory("graft_pipeline_stage").toString
+    def metricParts = new java.io.File(dir, "_metrics").listFiles().count(_.getName.startsWith("part-"))
+    val base = DedupPipeline.Config()
+    val changed = base.copy(minLen = 16, jaccThreshold = 0.3)
+    val unstaged = out(DedupPipeline.run(spark, images, base))
+    val unstagedChanged = out(DedupPipeline.run(spark, images, changed))
+    // the changed config shapes both the clusters and the annotations here
+    assert(unstagedChanged._1 != unstaged._1, "clusters")
+    assert(unstagedChanged._2 != unstaged._2, "annotations")
+    assert(out(DedupPipeline.run(spark, images, base, Some(dir))) == unstaged)
+    val computed = metricParts
+    assert(computed > 0)
+    assert(out(DedupPipeline.run(spark, images, base, Some(dir))) == unstaged)
+    assert(metricParts == computed, "a rerun on the same stageDir computes nothing")
+    assert(out(DedupPipeline.run(spark, images, changed, Some(dir))) == unstagedChanged)
+  }
+
   test("real decode: png phash identical, jpg phash hamming-close") {
     // the stored phash is what the Hamming stage and the pipeline tests
     // rely on: recomputing it from the decoded pixels must give the same

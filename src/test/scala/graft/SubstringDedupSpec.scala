@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.SubstringDedup
 import graft.functions.Utf8
 
-/** Differential tests: the substring-dedup spine (every unit and
-  * verification setting) against a brute-force reimplementation of the
-  * reference naive mode (cpp_engine_dedup.h:215-302) on small random
+/** Differential tests: the substring-dedup spine (every unit, with and
+  * without the verifier's doc-key prune) against a brute-force
+  * reimplementation of the reference naive mode
+  * (cpp_engine_dedup.h:215-302) on small random
   * corpora -- the same correctness strategy the reference itself uses
   * (naive vs parallel vs parallel_sharded, workflow_toy.sh:16-33).
   */
@@ -52,23 +53,23 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toSeq
   }
 
-  test("byte plans: verify x prune x minLen match brute force") {
-    // minLen 6 + verify takes the inline-verified run scan; minLen 40 +
-    // verify takes the key-join verifier, with and without the doc-key
-    // prune (the JSONL workflow's setting)
+  test("byte plans: prune x minLen match brute force") {
+    // minLen 6 takes the inline-verified run scan; minLen 40 takes the
+    // key-join verifier, with and without the doc-key prune (the JSONL
+    // workflow's setting)
     for (seed <- Seq(1, 2, 3); minLen <- Seq(6, 40)) {
       val docs = plantedDocs(seed, 25)
       val expected = bruteRanges(docs, minLen)
       assert(expected.nonEmpty, s"seed=$seed minLen=$minLen plants no duplicate")
       val df = spark_(docs)
-      for (verify <- Seq(true, false); prune <- Seq(false, true)) {
-        val cfg = SubstringDedup.Config(minLen, verifyBytes = verify, verifyPrune = prune)
+      for (prune <- Seq(false, true)) {
+        val cfg = SubstringDedup.Config(minLen, verifyPrune = prune)
         val got = SubstringDedup.removeRanges(df, cfg).as[(Long, Long, Long)].collect().toSet
-        assert(got == expected, s"seed=$seed minLen=$minLen verify=$verify prune=$prune")
+        assert(got == expected, s"seed=$seed minLen=$minLen prune=$prune")
         // dupPtrs is the spine removeRanges coalesces: the exact groups
         val ptrs = SubstringDedup.dupPtrs(df, cfg).as[(Long, Long, Boolean)].collect().toSet
         assert(ptrs == DedupTestOracle.bruteMembers(docs, minLen),
-          s"dupPtrs seed=$seed minLen=$minLen verify=$verify prune=$prune")
+          s"dupPtrs seed=$seed minLen=$minLen prune=$prune")
       }
     }
   }
@@ -107,10 +108,24 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val idsDf = wdocs.map { case (k, t) =>
       (k, t.split(' ').filter(_.nonEmpty).map(w => words.indexOf(w).toLong))
     }.toDF("k", "tokens")
+    // tokens holding NUL: a key that joined tokens with NUL called
+    // ["a\0b", "c"] and ["a", "b\0c"] equal (forward), and
+    // ["a\0b", "c"] and ["a", "b\0c"] again in the reversed streams of
+    // docs 3 and 4; docs 0 and 2 are the one real duplicate
+    val nul = Seq("a\u0000b c", "a b\u0000c", "a\u0000b c", "c a\u0000b", "b\u0000c a")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    // ids whose decimal forms concatenate alike: [1, 23] is not [12, 3]
+    val glued = Seq(Seq(1L, 23L), Seq(12L, 3L), Seq(1L, 23L), Seq(5L, 1L, 23L))
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
     for (rev <- Seq(false, true)) {
       val brute = DedupTestOracle.bruteTokenMembers(wdocs, 3, rev)
       check(s"tokens reversed=$rev", spark_(wdocs), SubstringDedup.Tokens(rev), 3, brute)
       check(s"ids reversed=$rev", idsDf, SubstringDedup.Ids(rev), 3, brute)
+      check(s"NUL tokens reversed=$rev", spark_(nul), SubstringDedup.Tokens(rev), 2,
+        DedupTestOracle.bruteTokenMembers(nul, 2, rev))
+      check(s"glued ids reversed=$rev", glued.toDF("k", "tokens"), SubstringDedup.Ids(rev), 2,
+        DedupTestOracle.members(glued.map { case (k, t) =>
+          (k, (if (rev) t.reverse else t).toIndexedSeq) }, 2))
     }
   }
 
@@ -133,7 +148,7 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(joins(SubstringDedup.dupPtrs(df, pruned)) == 1)
   }
 
-  test("byte prefilter edge cases: minLen 33..500 x verify match brute force") {
+  test("byte prefilter edge cases: minLen 33..500 match brute force") {
     val r = new scala.util.Random(17)
     // letters never repeat a 33-byte run by chance; `|` fences each plant
     def noise(len: Int) = (0 until len).map(_ => ('a' + r.nextInt(26)).toChar).mkString
@@ -167,12 +182,9 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
         val expected = bruteRanges(docs.filter(_._2 != null), minLen)
         if (name != "short and null docs")
           assert(expected.nonEmpty, s"$name minLen=$minLen plants no duplicate")
-        val df = spark_(docs)
-        for (verify <- Seq(true, false)) {
-          val got = SubstringDedup.removeRanges(df, SubstringDedup.Config(minLen, verifyBytes = verify))
-            .as[(Long, Long, Long)].collect().toSet
-          assert(got == expected, s"$name minLen=$minLen verify=$verify")
-        }
+        val got = SubstringDedup.removeRanges(spark_(docs), SubstringDedup.Config(minLen))
+          .as[(Long, Long, Long)].collect().toSet
+        assert(got == expected, s"$name minLen=$minLen")
       }
     }
   }
@@ -201,14 +213,15 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       (i.toLong, (0 until r.nextInt(30)).map(_ => words(r.nextInt(words.length))).mkString(" "))
     }
     val df = spark_(docs)
-    for (rev <- Seq(false, true); verify <- Seq(true, false); prune <- Seq(false, true)) {
-      val got = SubstringDedup.removeRanges(df, SubstringDedup.Tokens(rev),
-        SubstringDedup.Config(4, verify, prune)).as[(Long, Long, Long)].collect().toSet
-      assert(got == bruteTokenRanges(docs, 4, rev), s"reversed=$rev verify=$verify prune=$prune")
-      val ptrs = SubstringDedup.members(df, SubstringDedup.Tokens(rev),
-        SubstringDedup.Config(4, verify, prune)).as[(Long, Long, Boolean)].collect().toSet
+    for (rev <- Seq(false, true); prune <- Seq(false, true)) {
+      val cfg = SubstringDedup.Config(4, verifyPrune = prune)
+      val got = SubstringDedup.removeRanges(df, SubstringDedup.Tokens(rev), cfg)
+        .as[(Long, Long, Long)].collect().toSet
+      assert(got == bruteTokenRanges(docs, 4, rev), s"reversed=$rev prune=$prune")
+      val ptrs = SubstringDedup.members(df, SubstringDedup.Tokens(rev), cfg)
+        .as[(Long, Long, Boolean)].collect().toSet
       assert(ptrs == DedupTestOracle.bruteTokenMembers(docs, 4, rev),
-        s"members reversed=$rev verify=$verify prune=$prune")
+        s"members reversed=$rev prune=$prune")
     }
   }
 
@@ -226,17 +239,18 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val idsDf = docs.map { case (k, t) =>
       (k, t.split(' ').filter(_.nonEmpty).map(w => vocab(w).toLong))
     }.toDF("k", "tokens")
-    for (rev <- Seq(false, true); verify <- Seq(true, false)) {
+    for (rev <- Seq(false, true)) {
       val viaTokens = SubstringDedup.removeRanges(textDf, SubstringDedup.Tokens(rev),
-        SubstringDedup.Config(4, verify)).as[(Long, Long, Long)].collect().toSet
+        SubstringDedup.Config(4)).as[(Long, Long, Long)].collect().toSet
       for (prune <- Seq(false, true)) {
-        val viaIds = SubstringDedup.removeRanges(idsDf, SubstringDedup.Ids(rev),
-          SubstringDedup.Config(4, verify, prune)).as[(Long, Long, Long)].collect().toSet
-        assert(viaIds == viaTokens, s"reversed=$rev verify=$verify prune=$prune")
-        val ptrs = SubstringDedup.members(idsDf, SubstringDedup.Ids(rev),
-          SubstringDedup.Config(4, verify, prune)).as[(Long, Long, Boolean)].collect().toSet
+        val cfg = SubstringDedup.Config(4, verifyPrune = prune)
+        val viaIds = SubstringDedup.removeRanges(idsDf, SubstringDedup.Ids(rev), cfg)
+          .as[(Long, Long, Long)].collect().toSet
+        assert(viaIds == viaTokens, s"reversed=$rev prune=$prune")
+        val ptrs = SubstringDedup.members(idsDf, SubstringDedup.Ids(rev), cfg)
+          .as[(Long, Long, Boolean)].collect().toSet
         assert(ptrs == DedupTestOracle.bruteTokenMembers(docs, 4, rev),
-          s"members reversed=$rev verify=$verify prune=$prune")
+          s"members reversed=$rev prune=$prune")
       }
     }
     // ids ARE the content: two docs with different provenance but equal
@@ -245,7 +259,7 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val planted = Seq(
       (1L, run ++ Array(7L, 8L)),
       (2L, Array(9L) ++ run)).toDF("k", "tokens")
-    val got = SubstringDedup.removeRangesIds(planted, 6)
+    val got = SubstringDedup.removeRanges(planted, SubstringDedup.Ids(false), SubstringDedup.Config(6))
       .as[(Long, Long, Long)].collect().toSet
     assert(got == Set((2L, 1L, 7L)))
   }
@@ -256,7 +270,7 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     for (rev <- Seq(false, true)) {
       val ids = Seq((1L, Seq[java.lang.Long](7L, null, 8L, 9L))).toDF("k", "tokens")
       val e = intercept[Exception](
-        SubstringDedup.removeRangesIds(ids, 2, reversed = rev).collect())
+        SubstringDedup.removeRanges(ids, SubstringDedup.Ids(rev), SubstringDedup.Config(2)).collect())
       assert(messages(e).contains("graft_window_gen: null array element at index 1"),
         s"reversed=$rev: ${messages(e)}")
     }
@@ -440,13 +454,10 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val minLen = 8
     val expected = bruteRanges(docs, minLen)
     val df = spark_(docs)
-    for (verify <- Seq(true, false)) {
-      val cfg = SubstringDedup.Config(minLen, verifyBytes = verify)
-      val got = SubstringDedup.removeRanges(df, cfg).as[(Long, Long, Long)].collect().toSet
-      assert(got == expected, s"verify=$verify")
-      assert(SubstringDedup.dupPtrs(df, cfg).as[(Long, Long, Boolean)].collect().toSet ==
-        DedupTestOracle.bruteMembers(docs, minLen), s"dupPtrs verify=$verify")
-    }
+    val cfg = SubstringDedup.Config(minLen)
+    assert(SubstringDedup.removeRanges(df, cfg).as[(Long, Long, Long)].collect().toSet == expected)
+    assert(SubstringDedup.dupPtrs(df, cfg).as[(Long, Long, Boolean)].collect().toSet ==
+      DedupTestOracle.bruteMembers(docs, minLen), "dupPtrs")
 
     val annotated = SubstringDedup.annotate(df, SubstringDedup.Config(minLen))
     val byK = docs.toMap
