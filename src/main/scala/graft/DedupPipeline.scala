@@ -73,10 +73,7 @@ object DedupPipeline {
     // reads captions only, phash reads hashes only, exact reads bytes).
     // At 10^12 rows a full-payload checkpoint would be the bottleneck --
     // the two-column map is the only thing worth snapshotting.
-    val idMap = stage match {
-      case Some(s) => s.run("id_map")(StableIds.idMap(images, "image_id", "k"))
-      case None => StableIds.idMap(images, "image_id", "k")
-    }
+    val idMap = checkpointed("id_map")(StableIds.idMap(images, "image_id", "k"))
     // Explicit broadcast: the pinned map is RDD-backed (localCheckpoint),
     // so Catalyst sees no size statistics and would fall back to a
     // sort-merge join that shuffles the full payload at every consumer.

@@ -29,7 +29,8 @@ import graft.sources.Writeback
   *    offsets, README.md:109-113); mode "remove": rewrites `text` with
   *    duplicated spans cut out (write_back_to_jsonl_sharded.py:89-94).
   *  - output: one file per input file, same relative path, original line
-  *    order, chosen compression.
+  *    order, chosen compression. Two inputs that differ only in their
+  *    .gz / .zst extension are rejected, since they name one output file.
   *
   * Scale shape: files are STREAMED line by line through Hadoop input
   * streams (the reference's per-shard loop, indexing_v6_sharded.py:21-39),
@@ -48,6 +49,9 @@ object JsonlDedupJob {
     */
   val LinenumBits = 40
   val MaxFiles: Long = 1L << (63 - LinenumBits)
+
+  /** Plain files above this size are read in chunks of it (`readTree`). */
+  private val SplitBytes: Long = 256L << 20
 
   /** The reference's file-order key: relative path with "crawl="
     * stripped (indexing_v6_sharded.py:179).
@@ -192,10 +196,14 @@ object JsonlDedupJob {
     * as a string, `tokens` as array<bigint>); no schema is inferred.
     */
   def readTree(spark: SparkSession, inDir: String,
-               splitBytes: Long = 256L << 20,
-               requiredField: String = "text"): DataFrame = {
+               splitBytes: Long = SplitBytes,
+               requiredField: String = "text"): DataFrame =
+    readListed(spark, inDir, listTreeWithLen(spark, inDir), splitBytes, requiredField)
+
+  /** `readTree` over the listing `relLen` of `inDir` (`listTreeWithLen`). */
+  private def readListed(spark: SparkSession, inDir: String, relLen: Seq[(String, Long)],
+                         splitBytes: Long, requiredField: String): DataFrame = {
     import spark.implicits._
-    val relLen = listTreeWithLen(spark, inDir)
     val hadoopProps = graft.sources.HadoopConfs.snapshot(spark)
     // chunk table: whole-file units (end = -1) for compressed or small
     // files, [start, end) byte ranges for plain files above splitBytes.
@@ -317,9 +325,15 @@ object JsonlDedupJob {
     }
     // strip the input's compression extension: the sink appends the one
     // matching the CHOSEN output compression, so the tree mirrors exactly
-    // when in/out codecs agree and stays honest when they differ
-    val keyed = readTree(spark, inDir, requiredField = u.source)
-      .withColumn("path", regexp_replace(col("path"), "\\.(gz|zst)$", ""))
+    // when in/out codecs agree and stays honest when they differ. Inputs
+    // that differ only in that extension would write one file with their
+    // lines merged, so they fail here, before any job runs
+    val codecExt = "\\.(gz|zst)$"
+    val listed = listTreeWithLen(spark, inDir)
+    for ((out, ps) <- listed.map(_._1).groupBy(_.replaceAll(codecExt, "")))
+      require(ps.size == 1, s"input files ${ps.sorted.mkString(", ")} would all write $out")
+    val keyed = readListed(spark, inDir, listed, SplitBytes, u.source)
+      .withColumn("path", regexp_replace(col("path"), codecExt, ""))
 
     // stage name carries every parameter of the ranges: the (k,s,e)
     // schema is identical across units, orientations and minLens, so a

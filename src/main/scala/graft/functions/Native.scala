@@ -139,14 +139,13 @@ object NativeKernels {
   * `SpecificInternalRow` (primitive setters, zero per-row allocation) and
   * keeps the scan -> generate -> exchange pipeline in one visible plan.
   *
-  * Input modes, keyed by child type (the three SubstringDedup window
-  * units, all generated at its one `unitWindows` call site):
+  * Two input shapes, keyed by child type (SubstringDedup's one
+  * `unitWindows` call site generates every window unit through them):
   *  - binary: byte windows (unit Bytes)
-  *  - array<string>: whitespace tokens, each token 61-bit-hashed to a
-  *    digit (unit Tokens; `reversed` mirrors the stream)
-  *  - array<long>: pre-tokenized ids as digits (unit Ids; `reversed`
-  *    mirrors the stream)
-  * Null input (null text / null token array) generates nothing. A null
+  *  - array<bigint>: a digit stream -- pre-tokenized ids (unit Ids), or
+  *    whitespace tokens already hashed to digits by the built-in
+  *    `xxhash64` (unit Tokens); `reversed` mirrors the stream
+  * Null input (null text / null digit array) generates nothing. A null
   * ELEMENT of an array input is malformed data and fails the task with an
   * IllegalArgumentException naming the element index: it has no digit
   * (a null id is not id 0), and dropping it would shift every later
@@ -177,22 +176,15 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
       case BinaryType if reversed =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
           "reversed applies to token/id streams, not bytes")
-      case BinaryType | ArrayType(StringType, _) | ArrayType(LongType, _)
-          if withBytes && child.dataType != BinaryType =>
+      case ArrayType(LongType, _) if withBytes =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
           "withBytes applies to byte streams only")
-      case BinaryType | ArrayType(StringType, _) | ArrayType(LongType, _) =>
+      case BinaryType | ArrayType(LongType, _) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_window_gen takes binary, array<string> or array<long>, got $t")
+        s"graft_window_gen takes binary or array<bigint>, got $t")
     }
   override def prettyName: String = "graft_window_gen"
-
-  @transient private lazy val mode: Int = child.dataType match {
-    case BinaryType => 0
-    case ArrayType(StringType, _) => 1
-    case ArrayType(LongType, _) => 2
-  }
 
   /** Array index of the i-th stream element (mirrored when `reversed`),
     * rejecting a null element.
@@ -207,22 +199,9 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Iterator.empty
-    val (o1, o2) = mode match {
-      case 0 =>
-        PolyHash.windowHashes2(v.asInstanceOf[Array[Byte]], winLen)
-      case 1 =>
-        val a = v.asInstanceOf[ArrayData]
-        val n = a.numElements()
-        val digits = new Array[Long](n)
-        var i = 0
-        while (i < n) {
-          val b = a.getUTF8String(element(a, n, i)).getBytes
-          digits(i) = PolyHash.hash(b, 0, b.length, PolyHash.B1)
-          i += 1
-        }
-        PolyHash.windowHashesLongs2(digits, winLen)
-      case 2 =>
-        val a = v.asInstanceOf[ArrayData]
+    val (o1, o2) = v match {
+      case b: Array[Byte] => PolyHash.windowHashes2(b, winLen)
+      case a: ArrayData =>
         val n = a.numElements()
         val digits = new Array[Long](n)
         var i = 0
@@ -350,8 +329,8 @@ object GraftFunctions {
       org.apache.spark.sql.catalyst.expressions.Literal(minLen)))
 
   /** Window-frame generator column (use with multi-alias in a select:
-    * one (h1, h2, pos) row per window position of a binary / token-array /
-    * id-array column).
+    * one (h1, h2, pos) row per window position of a binary or
+    * array<bigint> column).
     */
   def windowGen(in: Column, winLen: Int, reversed: Boolean = false,
                 withBytes: Boolean = false): Column =

@@ -97,12 +97,13 @@ object SubstringDedup {
   case class Config(minLen: Int, verifyPrune: Boolean = false)
 
   /** The unit windows are counted in. For the spine it decides the
-    * per-doc sequence (`seq`, in original orientation), the exact window
-    * key (`key`), whether windows carry that key (`inlineKey`) and which
-    * docs can hold a run (`runDocs`); for the writeback, the annotation
-    * and the cut. `reversed` (token/id units): the reference's --reversed
-    * indexes the mirrored stream (suffix-vs-prefix duplication); windows
-    * are generated over the reversed sequence and `pos` reports the
+    * per-doc sequence (`seq`, in original orientation), what windows are
+    * hashed over (`stream`), the exact window key (`key`), whether
+    * windows carry that key (`inlineKey`) and which docs can hold a run
+    * (`runDocs`); for the writeback, the annotation and the cut.
+    * `reversed` (token/id units): the reference's --reversed indexes the
+    * mirrored stream (suffix-vs-prefix duplication); windows are
+    * generated over the reversed sequence and `pos` reports the
     * REVERSED-stream offset, so first-occurrence keep order matches the
     * reference's reversed scan.
     */
@@ -110,6 +111,10 @@ object SubstringDedup {
     def reversed: Boolean
     /** The doc as a sequence: binary (bytes) or an array (tokens, ids). */
     def seq: Column
+    /** What windows are generated over: `seq` itself when the generator
+      * reads it (bytes, ids), else its elements as digits.
+      */
+    def stream: Column = seq
     /** Exact key (binary) of the `len`-unit window at 0-based `pos` (a
       * column name) of the oriented sequence column named `s`: the digest
       * of its elements as strings joined by single spaces, as the DuckDB
@@ -181,13 +186,15 @@ object SubstringDedup {
   }
 
   /** Whitespace tokens of `text` (reference C2; split ' ' + drop empties).
-    * Each token's digit is the polyhash of its UTF-8 bytes: a pure
+    * Each token's digit is the built-in `xxhash64` of the token: a pure
     * function of the token, so no vocabulary table is built, broadcast or
-    * synchronized.
+    * synchronized. Equal digits only group windows; the exact key, the
+    * verifier and `cut` read the token strings.
     */
   private[graft] case class Tokens(reversed: Boolean) extends WindowUnit {
     val source = "text"
     def seq: Column = filter(split(col("text"), " "), t => t =!= "")
+    override def stream: Column = transform(seq, t => xxhash64(t))
     /** The surviving tokens re-joined with single spaces. */
     def cut(ranges: Column): Column = concat_ws(" ", kept(ranges))
   }
@@ -214,18 +221,18 @@ object SubstringDedup {
     unitWindows(docs, Bytes, minLen)
 
   /** The one window-generation call site: (h1, h2, k, pos[, x]) per in-doc
-    * window of `unit`. Native Generator (functions/Native.scala
-    * GraftWindowGen): zero per-position allocation and no typed
-    * serialization boundary -- null text (e.g. an image row with no
-    * caption) = no windows, same as a doc shorter than minLen (Generate
-    * outer=false drops the row). `withBytes` (byte unit only) also emits
+    * window of `unit`, generated over `unit.stream`. Native Generator
+    * (functions/Native.scala GraftWindowGen): zero per-position
+    * allocation and no typed serialization boundary -- null text (e.g. an
+    * image row with no caption) = no windows, same as a doc shorter than
+    * minLen (Generate outer=false drops the row). `withBytes` (byte unit only) also emits
     * each window's raw bytes as `x`.
     */
   private def unitWindows(docs: DataFrame, unit: WindowUnit, minLen: Int,
                           withBytes: Boolean = false): DataFrame = {
     val gen = Seq("h1", "h2", "pos") ++ (if (withBytes) Seq("x") else Nil)
     docs
-      .select(col("k").cast("long").as("k"), unit.seq.as("b"))
+      .select(col("k").cast("long").as("k"), unit.stream.as("b"))
       .select(col("k"),
         GraftFunctions.windowGen(col("b"), minLen, unit.reversed, withBytes).as(gen))
       .select((Seq("h1", "h2", "k") ++ gen.drop(2)).map(col): _*)

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.ConnectedComponents
 import graft.functions.StableIds
@@ -55,14 +57,50 @@ class GraphAndIdsSpec extends AnyFunSuite with SparkTestBase {
   test("stable ids: dense, ordered, partitioning-independent") {
     val r = new scala.util.Random(9)
     val keys = (0 until 500).map(_ => f"id${r.nextInt(1000000)}%07d").distinct
-    val sortedKeys = keys.sorted
-    val df = keys.toDF("image_id")
-    val a = StableIds.idMap(df.repartition(3), "image_id", "k")
-      .as[(String, Long)].collect().toMap
-    val b = StableIds.idMap(df.repartition(7), "image_id", "k")
-      .as[(String, Long)].collect().toMap
-    assert(a == b, "partitioning must not change ids")
-    assert(a.values.toSeq.sorted == (0L until keys.length.toLong))
-    assert(sortedKeys.zipWithIndex.forall { case (key, i) => a(key) == i.toLong })
+    // the driver-side sort every input must number as: ascending, nulls first
+    val nullsFirst: Ordering[Any] = (x, y) => (x, y) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+    }
+    val inputs: Seq[(String, DataFrame)] = Seq(
+      "unique keys" -> keys.toDF("image_id"),
+      "duplicate ids" -> Seq("b", "a", "b", "c", "a", "b").toDF("image_id"),
+      "null ids" -> Seq("b", null, "a", null, "c").toDF("image_id"),
+      "long ids" -> Seq(5L, -3L, 5L, Long.MaxValue, 0L, Long.MinValue).toDF("image_id"),
+      "empty frame" -> Seq.empty[String].toDF("image_id"),
+      // the test session runs 4 shuffle partitions
+      "fewer rows than partitions" -> Seq("z", "y").toDF("image_id"))
+    for ((name, df) <- inputs; parts <- Seq(3, 7)) {
+      val m = StableIds.idMap(df.repartition(parts), "image_id", "k")
+      assert(m.schema("image_id").dataType == df.schema("image_id").dataType, name)
+      val got = m.collect().map(r => (r.getLong(1), r.get(0))).sortBy(_._1)
+      assert(got.map(_._1).toSeq == (0L until got.length.toLong), s"$name: k not dense")
+      assert(got.map(_._2).toSeq == df.collect().map(_.get(0)).sorted(nullsFirst).toSeq,
+        s"$name over $parts partitions")
+    }
+    // two consumers of one map read the same pinned numbering
+    val m = StableIds.idMap(keys.toDF("image_id"), "image_id", "k")
+    val both = m.join(m.select(col("image_id"), col("k").as("k2")), "image_id")
+    assert(both.count() == keys.length && both.where(col("k") =!= col("k2")).isEmpty)
+  }
+
+  test("stable ids: the id map writes one shuffle") {
+    val sc = spark.sparkContext
+    val ids = spark.range(0, 20000, 1, 4).select(format_string("id%06d", col("id")).as("image_id"))
+    org.apache.spark.ListenerDrain(sc)
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffleStages.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(StableIds.idMap(ids, "image_id", "k").collect().length == 20000)
+      org.apache.spark.ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(shuffleStages.get == 1)
   }
 }

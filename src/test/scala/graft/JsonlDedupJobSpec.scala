@@ -587,6 +587,19 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
     assert(exchanges.isEmpty, df.queryExecution.executedPlan)
   }
 
+  test("run: inputs that differ only in codec extension fail before any job, naming both") {
+    val root = Files.createTempDirectory("graft_jsonl_collide")
+    writeGz(root.resolve("d/a.jsonl.gz"), Seq("""{"text": "the gzip copy"}"""))
+    writePlain(root.resolve("d/a.jsonl"), Seq("""{"text": "the plain copy"}"""))
+    writePlain(root.resolve("d/b.jsonl"), Seq("""{"text": "unrelated"}"""))
+    val out = Files.createTempDirectory("graft_jsonl_collide_out").resolve("o")
+    val e = intercept[IllegalArgumentException](
+      JsonlDedupJob.run(spark, root.toString, out.toString, minLen = 32))
+    assert(e.getMessage.contains("input files d/a.jsonl, d/a.jsonl.gz would all write d/a.jsonl"),
+      e.getMessage)
+    assert(!Files.exists(out))
+  }
+
   test("listTree orders by the reference key (crawl= stripped)") {
     val root = Files.createTempDirectory("graft_jsonl_order")
     for (p <- Seq("crawl=b/x.jsonl", "a0/y.jsonl", "crawl=a1/z.jsonl", "b1/w.jsonl"))
