@@ -74,7 +74,7 @@ object DedupPipeline {
     // At 10^12 rows a full-payload checkpoint would be the bottleneck --
     // the two-column map is the only thing worth snapshotting.
     val idMap = checkpointed("id_map")(StableIds.idMap(images, "image_id", "k"))
-    // Explicit broadcast: the pinned map is RDD-backed (localCheckpoint),
+    // Explicit broadcast: the map is RDD-backed (numbered over a pinned sort),
     // so Catalyst sees no size statistics and would fall back to a
     // sort-merge join that shuffles the full payload at every consumer.
     // At 10^12 rows the map is snapshot to a table instead (stageDir path)

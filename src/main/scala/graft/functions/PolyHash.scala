@@ -122,9 +122,10 @@ object PolyHash {
   /** Both bases' window hashes over a stream of LONG digits (token ids)
     * instead of bytes -- the token-unit generalization of windowHashes2
     * (the reference templates its engine over u8/u16/u32 units,
-    * cpp_engine_dedup.h:70-77; token ids here are 61-bit hashes so one
-    * code path covers any vocabulary size). Digits are reduced mod P;
-    * same rolling recurrence, O(1) per position.
+    * cpp_engine_dedup.h:70-77; token digits here are the built-in
+    * `xxhash64` of each token, so one code path covers any vocabulary
+    * size). Digits, negative ones included, are reduced mod P like any
+    * other long digit; same rolling recurrence, O(1) per position.
     */
   def windowHashesLongs2(digits: Array[Long], winLen: Int): (Array[Long], Array[Long]) = {
     val n = digits.length

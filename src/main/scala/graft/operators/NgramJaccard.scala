@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Shingles
 
@@ -51,17 +50,16 @@ object NgramJaccard {
   }
 
   /** Prefix table: each doc's (|d| - ceil(t*|d|) + 1) globally-rarest
-    * shingles -- the only ones that need indexing for threshold t. A
-    * shingle's document frequency is a window count over its partition of
-    * `sh` (each (k, sh) row is distinct per doc), so the exploded table is
-    * derived once; a viral shingle's rows meet in one task either way, and
-    * the window buffers them spillably.
+    * shingles -- the only ones that need indexing for threshold t.
     */
   private def prefixTable(sh: DataFrame, threshold: Double): DataFrame = {
-    val perDoc = Window.partitionBy("k")
-    sh.withColumn("df", count(lit(1)).over(Window.partitionBy("sh")))
-      .withColumn("rnk", row_number().over(perDoc.orderBy(col("df"), col("sh"))))
-      .withColumn("sz", count(lit(1)).over(perDoc))
+    val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
+    val byRarity = org.apache.spark.sql.expressions.Window
+      .partitionBy("k").orderBy(col("df"), col("sh"))
+    sh.join(dfreq, "sh")
+      .withColumn("rnk", row_number().over(byRarity))
+      .withColumn("sz", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("k")))
       // epsilon guards the exact-integer case: ceil(240.0000000003) would
       // otherwise shrink the prefix below the safe bound and lose recall.
       .where(col("rnk") <= col("sz") - ceil(col("sz") * threshold - 1e-9) + 1)

@@ -225,8 +225,8 @@ object SubstringDedup {
     * (functions/Native.scala GraftWindowGen): zero per-position
     * allocation and no typed serialization boundary -- null text (e.g. an
     * image row with no caption) = no windows, same as a doc shorter than
-    * minLen (Generate outer=false drops the row). `withBytes` (byte unit only) also emits
-    * each window's raw bytes as `x`.
+    * minLen (Generate outer=false drops the row). `withBytes` (byte unit
+    * only) also emits each window's raw bytes as `x`.
     */
   private def unitWindows(docs: DataFrame, unit: WindowUnit, minLen: Int,
                           withBytes: Boolean = false): DataFrame = {
